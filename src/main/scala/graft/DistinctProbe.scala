@@ -15,13 +15,11 @@ import graft.table.CowTable
   * hours while the fold stays at its small-table cost.
   *
   * `runMain graft.DistinctProbe [rowsCsv] [groups] [valsPerGroup]
-  *   [batchRows] [--ab]` — flags may appear in any position; `--ab`
-  * runs ONLY the supportIndexEntries A/B (it skips the default
-  * grow-sweep). Results recorded in BASELINE.md.
+  *   [batchRows]`. Results recorded in BASELINE.md.
   */
 object DistinctProbe {
 
-  /** The probe's shared row builder: hive-style date-ish partitions with
+  /** The probe's row builder: hive-style date-ish partitions with
     * BLOCK-local ids, so churn (low ids) lands in few partitions — the
     * realistic CDC shape (uniformly-spread churn would rewrite every
     * unit of a COW source each batch; that cost belongs to the source's
@@ -43,12 +41,11 @@ object DistinctProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val (flags, pos) = args.partition(_.startsWith("--"))
-    val sizes = (if (pos.length > 0) pos(0) else "2000000,8000000")
+    val sizes = (if (args.length > 0) args(0) else "2000000,8000000")
       .split(',').map(_.trim.toLong).toSeq
-    val groups = if (pos.length > 1) pos(1).toInt else 50
-    val valsPerGroup = if (pos.length > 2) pos(2).toInt else 2000
-    val batchRows = if (pos.length > 3) pos(3).toInt else 20000
+    val groups = if (args.length > 1) args(1).toInt else 50
+    val valsPerGroup = if (args.length > 2) args(2).toInt else 2000
+    val batchRows = if (args.length > 3) args(3).toInt else 20000
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -57,12 +54,6 @@ object DistinctProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    if (flags.contains("--ab")) {
-      // the A/B answers its own question; don't pay the grow-sweep first
-      abIndexSweep(spark, groups, valsPerGroup, batchRows)
-      spark.stop()
-      return
-    }
     sizes.foreach { rows =>
       val mk = slice(spark, rows, groups, valsPerGroup) _
       val src = new CowTable(spark,
@@ -97,55 +88,5 @@ object DistinctProbe {
         f"(churn=$batchRows, support=${groups * valsPerGroup}, exact)")
     }
     spark.stop()
-  }
-
-  /** Paired A/B of `supportIndexEntries` (the level-1 state key index)
-    * at the default probe shape: TWO MaintainedDistinct instances —
-    * index off vs on — track the SAME source and fold the SAME churn
-    * windows (the shared [[slice]] builder, so the shape cannot drift
-    * from the main sweep's), refreshed in ABBA order within each batch
-    * so host drift cancels (the BASELINE.md measurement protocol).
-    * Reported per arm: min refresh seconds across batches.
-    */
-  private def abIndexSweep(spark: SparkSession, groups: Int,
-      valsPerGroup: Int, batchRows: Int): Unit = {
-    val rows = 4000000L
-    val mk = slice(spark, rows, groups, valsPerGroup) _
-    val src = new CowTable(spark,
-      java.nio.file.Files.createTempDirectory("dprobe-ab-src").toString,
-      keyCols = Seq("k"), partitionCols = Seq("p"),
-      trackCommitVersions = true, fileIndexEntries = 100000)
-    src.bulkInsert(mk(0, rows, 0))
-    val off = new MaintainedDistinct(spark,
-      java.nio.file.Files.createTempDirectory("dprobe-ab-off").toString,
-      src, Seq("grp"), "v")
-    val on = new MaintainedDistinct(spark,
-      java.nio.file.Files.createTempDirectory("dprobe-ab-on").toString,
-      src, Seq("grp"), "v", supportIndexEntries = 100000)
-    off.refresh(); on.refresh() // seed both to the same head
-    val offT = scala.collection.mutable.Buffer.empty[Double]
-    val onT = scala.collection.mutable.Buffer.empty[Double]
-    (1 to 4).foreach { b =>
-      src.upsert(mk(b.toLong * batchRows, batchRows, b.toLong * 7919))
-      src.delete(mk(b.toLong * batchRows, batchRows / 10, 0))
-      def timed(md: MaintainedDistinct, sink: scala.collection.mutable
-          .Buffer[Double]): Unit = {
-        val t0 = System.nanoTime
-        md.refresh()
-        sink += (System.nanoTime - t0) / 1e9
-      }
-      if (b % 2 == 1) { timed(off, offT); timed(on, onT) }
-      else { timed(on, onT); timed(off, offT) }
-      val a = off.current.collect().map(r =>
-        r.getString(0) -> r.getLong(1)).toMap
-      val c = on.current.collect().map(r =>
-        r.getString(0) -> r.getLong(1)).toMap
-      require(a == c, s"A/B arms diverged at batch $b")
-    }
-    println(f"[dprobe-ab] rows=$rows churn=$batchRows " +
-      f"support=${groups * valsPerGroup} " +
-      f"idx_off_min=${offT.min}%.2fs idx_on_min=${onT.min}%.2fs " +
-      f"off=${offT.map(t => f"$t%.2f").mkString(",")} " +
-      f"on=${onT.map(t => f"$t%.2f").mkString(",")}")
   }
 }

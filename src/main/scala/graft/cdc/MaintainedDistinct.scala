@@ -65,19 +65,7 @@ final class MaintainedDistinct(
       * of the whole state; size it so support-rows/bucket stays a
       * comfortable file size (the usual numBuckets guidance).
       */
-    supportBuckets: Int = 16,
-    /** Per-file key-index entries for the state (0 = off). The support
-      * level is the many-group state this knob exists for — its key
-      * space is every live (group, value) pair — but measured at the
-      * probe's default shape (100k support rows, 16 buckets, 20k-row
-      * churn windows) the index LOSES ~2s/fold: a window's churn touches
-      * every bucket, so the point-read prune saves no scan while the
-      * index adds per-commit stats/bloom work and a probe job
-      * (DistinctProbe `--ab`, ABBA-paired; BASELINE.md round-23). Turn
-      * it on only when a window's churned (group, value) keys
-      * concentrate in a small fraction of the state's files.
-      */
-    supportIndexEntries: Int = 0) {
+    supportBuckets: Int = 16) {
 
   require(!groupCols.contains(valueCol),
     "valueCol must not also be a group column")
@@ -100,7 +88,7 @@ final class MaintainedDistinct(
     * merge identity, bucket routing and point reads are all null-safe.
     */
   val table = new CowTable(spark, s"$path/state", keyCols = pairCols :+ "lvl",
-    numBuckets = supportBuckets, fileIndexEntries = supportIndexEntries)
+    numBuckets = supportBuckets)
 
   private def T[X](tag: String)(f: => X): X = {
     val t0 = System.nanoTime(); val r = f

@@ -338,15 +338,17 @@ class CowTable(
       * [[changesSince]] can filter to exactly the changed rows.
       */
     val trackCommitVersions: Boolean = false,
-    /** Expected keys per file for the per-file record-key index
-      * (> 0 enables it; Hudi's `hoodie.index.bloom.num_entries` default is
-      * 60000). With the index on, every write records each new file's
-      * key-string range + bloom in the manifest, and merges read ONLY the
-      * files that can contain an incoming key — unmatched files are kept
-      * as-is instead of rewritten. At 100 TB this is the difference
-      * between rewrite cost scaling with partition size and scaling with
-      * the batch's actual file fan-out (Hudi's default BLOOM index
-      * semantics, which the reference's upserts implicitly use).
+    /** Per-file record-key index switch: any value > 0 turns it on (the
+      * value itself sizes nothing). With the index on, every write records
+      * each new file's key-string range + bloom in the manifest, and
+      * merges read ONLY the files that can contain an incoming key —
+      * unmatched files are kept as-is instead of rewritten. At 100 TB
+      * this is the difference between rewrite cost scaling with partition
+      * size and scaling with the batch's actual file fan-out (Hudi's
+      * default BLOOM index semantics, which the reference's upserts
+      * implicitly use). Each bloom (key and `bloomCols`) is sized to its
+      * own file's key count at [[CowTable.FileIndexFpp]]: files are
+      * immutable, so a pre-sized floor would only inflate the sidecars.
       */
     val fileIndexEntries: Int = 0,
     /** Columns to record per-file [min, max] ranges for (encoded
@@ -1979,13 +1981,13 @@ class CowTable(
     * still in page cache): group rows by source file, buffer the group's
     * encoded keys (bounded by one file's key set — the same order as the
     * bloom being built), then fold into (key min, key max, bloom sized to
-    * the file's ACTUAL key count). Sizing to the true count means a file
-    * larger than `fileIndexEntries` cannot silently degrade the
-    * false-positive rate (the classic mis-sizing footgun behind Hudi's
+    * the file's ACTUAL key count, [[CowTable.fileBloom]]). Sizing to the
+    * true count means no file can silently degrade the false-positive
+    * rate (the classic mis-sizing footgun behind Hudi's
     * `hoodie.index.bloom.num_entries` tuning: an overloaded bloom answers
     * "maybe" for everything and pruning quietly vanishes — measured: a
-    * 3.3x-overloaded bloom turned a 1-candidate probe into 7 candidates).
-    * `fileIndexEntries` acts as the sizing FLOOR (pre-sizes for growth).
+    * 3.3x-overloaded bloom turned a 1-candidate probe into 7 candidates),
+    * and no small file carries a bloom sized for rows it will never hold.
     * Commit-latency note: this used to be TWO jobs (a count pass sized
     * the blooms, a second pass filled them); buffering folds both into
     * one, which matters on commit-heavy IVM folds where every job round
@@ -1996,7 +1998,6 @@ class CowTable(
       schema: StructType, enc: Long): Map[String, FileStat] = {
     val rel = newFiles.valuesIterator.flatten.toSeq
     if (rel.isEmpty) return Map.empty
-    val floor = fileIndexEntries.toLong
     // stat columns present in this commit's schema ride the same pass
     val liveStats = statsCols.filter(c => schema.fieldNames.contains(c))
     val readSchema = StructType(
@@ -2047,13 +2048,10 @@ class CowTable(
           }
         }
         val nRows = keys.length.toLong
-        val expected = math.max(nRows, floor)
-        val bloom = org.apache.spark.util.sketch.BloomFilter
-          .create(expected, CowTable.FileIndexFpp)
+        val bloom = CowTable.fileBloom(nRows)
         keys.foreach(bloom.putString)
         val colBlooms = colVals.map { vs =>
-          val b = org.apache.spark.util.sketch.BloomFilter
-            .create(expected, CowTable.FileIndexFpp)
+          val b = CowTable.fileBloom(nRows)
           vs.foreach(b.putString)
           b
         }
@@ -2750,8 +2748,8 @@ class CowTable(
       val cols = keyStringExpr(enc, c => dataSchema(c).dataType) +:
         liveStats.map(c => encodeCol(c, dataSchema(c).dataType, enc))
       val bound = GraftWriteStats.resolveAndBind(spark, dataSchema, cols)
-      val tracker = new GraftKeyStatsJobTracker(bound, liveStats.size,
-        bloomIdx, fileIndexEntries.toLong, CowTable.FileIndexFpp)
+      val tracker =
+        new GraftKeyStatsJobTracker(bound, liveStats.size, bloomIdx)
       GraftWriteStats.write(outDf, dir.toString, dirColsAll, Seq(tracker))
       pendingKeyStats.set(Some(CowTable.PendingKeyStats(
         tracker.results, liveStats, bloomIdx.map(liveStats(_)).toSeq)))
@@ -4411,12 +4409,13 @@ object CowTable {
   /** Best-effort config reconstruction for PRE-round-7 manifests (no
     * recorded props): commit-version stamping shows in the recorded schema
     * (stamped tables always carry [[CommitVerCol]]); a maintained file
-    * index shows as non-empty fileStats (sizing floor falls back to Hudi's
-    * `hoodie.index.bloom.num_entries` default); statsCols are whatever
-    * columns the stats actually cover; bucket routing shows in the
-    * partition-key strings (`__bucket=N` path segments — observed max + 1,
-    * exact for any table whose bucket space is populated). clusterCols are
-    * unrecoverable (sort locality degrades gracefully; recluster restores).
+    * index shows as non-empty fileStats (recorded as a positive
+    * `fileIndexEntries`, which only switches the index on); statsCols
+    * are whatever columns the stats actually cover; bucket routing shows
+    * in the partition-key strings (`__bucket=N` path segments — observed
+    * max + 1, exact for any table whose bucket space is populated).
+    * clusterCols are unrecoverable (sort locality degrades gracefully;
+    * recluster restores).
     */
   private[graft] def inferProps(m: Manifest): TableProps = {
     val bucketVals = m.partitions.keysIterator
@@ -4578,6 +4577,16 @@ object CowTable {
     * only costs an unnecessary file read, never correctness).
     */
   val FileIndexFpp = 0.001
+
+  /** An empty per-file bloom (record key or a `bloomCols` column) sized
+    * to the file's own row count at [[FileIndexFpp]]. Data files are
+    * immutable, so there is no later growth to pre-size for; both stats
+    * passes (write tracker and read-back) build blooms here, which keeps
+    * their sidecars byte-identical.
+    */
+  def fileBloom(rows: Long): org.apache.spark.util.sketch.BloomFilter =
+    org.apache.spark.util.sketch.BloomFilter
+      .create(math.max(rows, 1L), FileIndexFpp)
 
   /** Manifest listings are basePath-relative — except in shallow clones
     * ([[CowTable.cloneTo]]), whose manifests reference the SOURCE table's

@@ -11,11 +11,18 @@ import graft.table.CowTable
   * term statistics live in two graft tables so a query touches only the
   * query terms' postings and a narrow doc-length table:
   *
-  *   - `postings/` — one row per (term, doc_id): `tf` + denormalized `dl`.
-  *     Record key (term, doc_id); term-clustered with term min/max stats
-  *     AND a term bloom sidecar, so [[CowTable.snapshotForValues]] prunes
-  *     the read to the files actually holding the query terms — at corpus
-  *     scale a query reads a few postings stripes, never the corpus.
+  *   - `postings/` — one row per (doc_id, term): `tf` + denormalized
+  *     `dl`. Record key (doc_id, term); term-clustered with term min/max
+  *     stats AND a term bloom sidecar, so [[CowTable.snapshotForValues]]
+  *     prunes the read to the files actually holding the query terms — at
+  *     corpus scale a query reads a few postings stripes, never the
+  *     corpus. The key LEADS with `doc_id` so ingest is append-shaped: a
+  *     batch of new (higher) doc ids falls outside every existing file's
+  *     key range, and the upsert keeps all old files and writes only the
+  *     batch (a term-led key spans every file's range, so each batch would
+  *     read and rewrite the whole postings table). Tables created with
+  *     the earlier (term, doc_id) order keep it (the key is read from the
+  *     manifest).
   *   - `doclens/` — one row per doc (`dl`), 2 longs/doc: serves N (exact
   *     from manifest row counts, zero data pages) and avgdl (one narrow
   *     scan; cacheable — it changes only on ingest).
@@ -42,7 +49,7 @@ final class Bm25Index(spark: SparkSession, path: String) {
     if (CowTable.existsAt(spark, p)) CowTable.open(spark, p) else create
 
   private def postingsTable(): CowTable = openOr(postingsPath)(
-    new CowTable(spark, postingsPath, keyCols = Seq("term", "doc_id"),
+    new CowTable(spark, postingsPath, keyCols = Seq("doc_id", "term"),
       clusterCols = Seq("term"), statsCols = Seq("term"),
       bloomCols = Seq("term"), fileIndexEntries = 100000))
 

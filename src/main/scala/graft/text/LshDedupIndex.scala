@@ -23,7 +23,18 @@ import graft.table.CowTable
   *   - exact-Jaccard verification of the surviving candidate pairs against
   *     the corpus table (point lookups by candidate doc id),
   *   - one upsert appending the batch's band rows (idempotent re-ingest:
-  *     (band, bh, doc_id) is the record key).
+  *     (doc_id, band, bh) is the record key).
+  *
+  * Key order: the record key LEADS with `doc_id`. The index's per-file
+  * key ranges follow that order, so a batch of new (higher) doc ids
+  * falls outside every existing file's [keyMin, keyMax]: the upsert's
+  * range prune keeps all old files and writes only the batch, instead of
+  * reading and rewriting the whole index each batch (a band- or
+  * hash-led key spans every file's range). Re-ingested ids still hit
+  * their files, so idempotence is unchanged. Read pruning is on `bh`
+  * (clusterCols/statsCols) and does not depend on the key order. Tables
+  * created with the earlier (band, bh, doc_id) order keep it: the key is
+  * read from the manifest.
   *
   * Measured (LshIngestProbe, BASELINE.md): a fixed 2k-doc batch ingests in
   * 5.4 / 6.2 / 10.4 s against 100k / 400k / 1.6M-doc corpora while the
@@ -54,7 +65,7 @@ final class LshDedupIndex(
     else None
 
   private def create(): CowTable = new CowTable(spark, path,
-    keyCols = Seq("band", "bh", "doc_id"),
+    keyCols = Seq("doc_id", "band", "bh"),
     clusterCols = Seq("bh"), statsCols = Seq("bh"),
     fileIndexEntries = 60000)
 

@@ -17,15 +17,20 @@ import scala.concurrent.duration.Duration
   * table the orphan still reads), burns executor slots during the
   * recovery, and buries its own failure in an unobserved Future. The
   * failure-path await uses `Await.ready` (not `result`), so the BODY's
-  * exception — the primary failure — is the one that propagates; a
-  * bg-side failure surfaces at the body's own awaiter call on the
-  * success path.
+  * exception — the primary failure — is the one that propagates. On the
+  * success path a bg-side failure ALWAYS propagates: at the body's own
+  * awaiter call, or after the body returns when the body never awaits
+  * (fire-and-overlap sites such as an index upsert under verification).
+  * A background failure is never dropped.
   */
 object Overlap {
   def withBg[A, B](bg: => A)(body: (() => A) => B): B = {
     implicit val ec: ExecutionContext = ExecutionContext.global
     val f = Future(blocking(bg))
-    try body(() => Await.result(f, Duration.Inf))
-    finally Await.ready(f, Duration.Inf)
+    val out =
+      try body(() => Await.result(f, Duration.Inf))
+      catch { case t: Throwable => Await.ready(f, Duration.Inf); throw t }
+    Await.result(f, Duration.Inf)
+    out
   }
 }

@@ -10,6 +10,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.sketch.BloomFilter
 
+import graft.table.CowTable
+
 /** Write-path file statistics collected DURING the write job — the
   * Delta/Hudi-style `WriteTaskStatsTracker` integration that lets the
   * graft table index (per-file key min/max + bloom + stats-column
@@ -49,9 +51,7 @@ case class GraftKeyFileStats(files: Seq[GraftFileKeyStat])
 class GraftKeyStatsTaskTracker(
     bound: Seq[Expression],
     nStats: Int,
-    bloomIdx: Array[Int],
-    floor: Long,
-    fpp: Double) extends WriteTaskStatsTracker {
+    bloomIdx: Array[Int]) extends WriteTaskStatsTracker {
 
   private final class FileState {
     var mn: String = null
@@ -99,11 +99,9 @@ class GraftKeyStatsTaskTracker(
 
   private def finalize(path: String, st: FileState): GraftFileKeyStat = {
     val nRows = st.keys.length.toLong
-    // sized to the file's ACTUAL key count with `floor` as the sizing
-    // minimum — identical to the read-back pass (an overloaded bloom
-    // answers "maybe" for everything and pruning silently vanishes)
-    val expected = math.max(nRows, floor)
-    val bloom = BloomFilter.create(expected, fpp)
+    // every bloom is sized to the file's own key count, exactly as the
+    // read-back pass sizes it (CowTable.fileBloom)
+    val bloom = CowTable.fileBloom(nRows)
     st.keys.foreach(bloom.putString)
     def bytesOf(b: BloomFilter): Array[Byte] = {
       val bos = new java.io.ByteArrayOutputStream()
@@ -111,7 +109,7 @@ class GraftKeyStatsTaskTracker(
       bos.toByteArray
     }
     val colBlooms = st.colVals.map { vs =>
-      val b = BloomFilter.create(expected, fpp)
+      val b = CowTable.fileBloom(nRows)
       vs.foreach(b.putString)
       bytesOf(b)
     }
@@ -134,13 +132,11 @@ class GraftKeyStatsTaskTracker(
 class GraftKeyStatsJobTracker(
     bound: Seq[Expression],
     nStats: Int,
-    bloomIdx: Array[Int],
-    floor: Long,
-    fpp: Double) extends WriteJobStatsTracker {
+    bloomIdx: Array[Int]) extends WriteJobStatsTracker {
   @transient private var collected: Seq[GraftFileKeyStat] = Nil
   def results: Seq[GraftFileKeyStat] = collected
   override def newTaskInstance(): WriteTaskStatsTracker =
-    new GraftKeyStatsTaskTracker(bound, nStats, bloomIdx, floor, fpp)
+    new GraftKeyStatsTaskTracker(bound, nStats, bloomIdx)
   override def processStats(stats: Seq[WriteTaskStats],
       jobCommitTime: Long): Unit =
     collected = stats.flatMap {

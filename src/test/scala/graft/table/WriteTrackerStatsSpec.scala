@@ -2,6 +2,7 @@ package graft.table
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Write-job stats tracker parity: the per-file key index entries the
   * WRITE JOB's tracker collects must be identical — manifest fields AND
@@ -33,6 +34,16 @@ class WriteTrackerStatsSpec extends SparkSpec {
       }.toMap
     }
     val trackerBytes = sidecars()
+    // every sidecar (key and column blooms) is sized to its own file's
+    // row count, never to the table's fileIndexEntries
+    recorded.foreach { case (f, st) =>
+      val want = BloomFilter.create(st.rows, CowTable.FileIndexFpp).bitSize()
+      (st.bloomRef +: st.colBloomRefs.values.toSeq).foreach { r =>
+        val got = BloomFilter.readFrom(
+          new java.io.ByteArrayInputStream(trackerBytes(r))).bitSize()
+        assert(got == want, s"bloom $r of $f (rows ${st.rows})")
+      }
+    }
     // read-back recompute overwrites the sidecars; entries must not move
     val recomputed = t.recomputeFileStatsForTest()
     assert(recomputed == recorded,
@@ -85,5 +96,20 @@ class WriteTrackerStatsSpec extends SparkSpec {
     t.upsert(Seq((7L, "up")).toDF("id", "v"))
     assertParity(t)
     assert(t.snapshot().count() == 200)
+  }
+
+  test("bloom sizes do not depend on fileIndexEntries") {
+    for (entries <- Seq(1, 100000)) {
+      val t = new CowTable(spark, tmpDir("wt-size"),
+        keyCols = Seq("id"), partitionCols = Seq("p"),
+        fileIndexEntries = entries, statsCols = Seq("fk"),
+        bloomCols = Seq("fk"))
+      t.bulkInsert((1 to 300).map(i => (i.toLong, s"p${i % 3}",
+        (i % 40).toLong)).toDF("id", "p", "fk"))
+      assertParity(t)
+      t.upsert((1 to 30).map(i => (i.toLong, s"p${i % 3}", 99L))
+        .toDF("id", "p", "fk"))
+      assertParity(t)
+    }
   }
 }

@@ -17,6 +17,15 @@ class Bm25IndexSpec extends SparkSpec {
     df.select("doc_id", "dl", "score", "rnk")
       .as[(Long, Long, Double, Int)].collect().sortBy(_._4).toSeq
 
+  /** (files_candidate, files_kept) of the table's newest commit and the
+    * file count of the one before it, from its history.
+    */
+  private def lastCommit(table: String): (Long, Long, Long) = {
+    val h = CowTable.open(spark, table).history()
+      .select("files", "metrics").as[(Long, Map[String, Long])].collect()
+    (h(0)._2("files_candidate"), h(0)._2("files_kept"), h(1)._1)
+  }
+
   test("index-served ranking equals the corpus-scan ranking exactly") {
     val path = tmpDir("bm25idx")
     val idx = new Bm25Index(spark, path)
@@ -33,6 +42,13 @@ class Bm25IndexSpec extends SparkSpec {
     val idx = new Bm25Index(spark, path)
     idx.ingest(docs.filter(col("doc_id") < 250))
     idx.ingest(docs.filter(col("doc_id") >= 250))
+    // append shape: the doc_id-led postings key puts the batch of higher
+    // ids outside every existing file's key range, so no file is read
+    // or rewritten
+    val (cand, kept, filesBefore) = lastCommit(s"$path/postings")
+    assert(cand == 0, "new ids must prune every existing postings file")
+    assert(kept == filesBefore && kept > 0,
+      s"every earlier file must be kept verbatim: kept $kept of $filesBefore")
     val expected = ranks(TextOps.bm25TopDocs(docs, terms))
     assert(ranks(idx.topDocs(terms)) == expected,
       "two-batch ingest must serve the same ranking as a full build")
@@ -41,6 +57,8 @@ class Bm25IndexSpec extends SparkSpec {
     val postingsBefore =
       CowTable.open(spark, s"$path/postings").snapshot().count()
     idx.ingest(docs.filter(col("doc_id") < 250))
+    assert(lastCommit(s"$path/postings")._1 > 0,
+      "re-ingested ids must read the files that hold them")
     assert(CowTable.open(spark, s"$path/postings").snapshot().count() ==
       postingsBefore, "re-ingest must not grow the postings table")
     assert(ranks(idx.topDocs(terms)) == expected,

@@ -2,6 +2,7 @@ package graft.text
 
 import graft.SparkSpec
 import graft.table.CowTable
+import graft.util.FailingLocalFs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,6 +17,15 @@ class LshDedupIndexSpec extends SparkSpec {
       greatest(col("doc_a"), col("doc_b")))
       .as[(Long, Long)].collect().toSet
 
+  /** (files_candidate, files_kept) of the index's newest commit and the
+    * file count of the one before it, from its history.
+    */
+  private def lastCommit(path: String): (Long, Long, Long) = {
+    val h = CowTable.open(spark, path).history()
+      .select("files", "metrics").as[(Long, Map[String, Long])].collect()
+    (h(0)._2("files_candidate"), h(0)._2("files_kept"), h(1)._1)
+  }
+
   test("incremental two-batch ingest equals the one-shot batch run") {
     val path = tmpDir("lshidx")
     val idx = new LshDedupIndex(spark, path)
@@ -23,6 +33,13 @@ class LshDedupIndexSpec extends SparkSpec {
     val b2 = docs.filter(col("doc_id") >= 250)
     val p1 = canon(idx.ingest(b1, docs, 8, 10))
     val p2 = canon(idx.ingest(b2, docs, 8, 10))
+    // append shape: the doc_id-led record key puts the batch of higher
+    // ids outside every existing file's key range, so no index file is
+    // read or rewritten
+    val (cand, kept, filesBefore) = lastCommit(path)
+    assert(cand == 0, "new ids must prune every existing index file")
+    assert(kept == filesBefore && kept > 0,
+      s"every earlier file must be kept verbatim: kept $kept of $filesBefore")
     assert((p1 & p2).isEmpty, "a pair must be reported by exactly one batch")
     val batch = canon(TextOps.lshNearDupPairs(docs, 3, 2, 8, 10))
     assert((p1 | p2) == batch,
@@ -140,11 +157,41 @@ class LshDedupIndexSpec extends SparkSpec {
     val rowsBefore = CowTable.open(spark, path).snapshot().count()
     val verBefore = CowTable.open(spark, path).manifest.version
     // same docs again: no self-pairs, and the upsert rewrites keys in
-    // place (record key = (band, bh, doc_id)) — index size is unchanged
+    // place (record key = (doc_id, band, bh)) — index size is unchanged
     val again = idx.ingest(b1, docs, 8, 10)
+    assert(lastCommit(path)._1 > 0,
+      "re-ingested ids must read the files that hold them")
     assert(again.filter(col("doc_a") === col("doc_b")).count() == 0)
     val after = CowTable.open(spark, path)
     assert(after.snapshot().count() == rowsBefore)
     assert(after.manifest.version > verBefore, "re-ingest still commits")
+  }
+
+  // The overlapped arrival-loop sites never await their background side;
+  // a failure there must still fail the call, or later batches would miss
+  // near-dups against a silently stale index.
+  test("ingest fails when its overlapped index upsert fails") {
+    val path = tmpDir("lshidx-bgfail")
+    val idx = new LshDedupIndex(spark, path)
+    idx.ingest(docs.filter(col("doc_id") < 250), docs, 8, 10)
+    val e = intercept[Throwable] {
+      FailingLocalFs.failingCreates(spark, _.contains(path)) {
+        idx.ingest(docs.filter(col("doc_id") >= 250), docs, 8, 10)
+      }
+    }
+    assert(FailingLocalFs.injected(e), s"unexpected failure: $e")
+  }
+
+  test("pipeline_e2e_incr fails when its background ANN ingest fails") {
+    // only the ANN chain's final codes upsert (commit 2 of the codes
+    // table) fails, after the semantic-drop set was handed to the body
+    val e = intercept[Throwable] {
+      FailingLocalFs.failingCreates(spark, p =>
+          p.contains("graft-pincr-ann") && p.contains("/codes/files/c2-")) {
+        graft.queries.QueryCatalog.queries("pipeline_e2e_incr")(spark, sf)
+          .collect()
+      }
+    }
+    assert(FailingLocalFs.injected(e), s"unexpected failure: $e")
   }
 }

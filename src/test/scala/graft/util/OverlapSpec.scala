@@ -18,6 +18,15 @@ class OverlapSpec extends AnyFunSuite {
     assert(e.getMessage == "bg boom")
   }
 
+  test("bg failure propagates even when the body never awaits it") {
+    val e = intercept[RuntimeException] {
+      Overlap.withBg[Int, String] { throw new RuntimeException("bg boom") } {
+        _ => "fg"
+      }
+    }
+    assert(e.getMessage == "bg boom")
+  }
+
   test("body failure propagates AND the bg work is awaited first") {
     // the orphan hazard this helper exists for: the body throwing must
     // not leave the background computation running detached
