@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-import graft.cdc.{CdcPipeline, TableConfig}
+import graft.cdc.{CdcPipeline, GoldenFixtures, TableConfig}
 
 /** Runnable end-to-end demo of the CDC engine's public API: replays the
   * reference's operational scenario (initial full load + incremental CDC
   * batch — SURVEY.md §3.2/§3.3) into a warehouse directory and prints the
-  * resulting snapshot state.
+  * resulting snapshot state. The inputs are the golden fixtures
+  * ([[graft.cdc.GoldenFixtures]]), written afresh by each run.
   *
   * Usage: `sbt "runMain graft.CdcDemo /tmp/graft-wh [controlFile.json]"`
   * Re-running against an existing warehouse exercises the incremental branch
@@ -21,14 +20,8 @@ object CdcDemo {
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--stream")) return streamMain(args.drop(1))
     val warehouse = args.headOption.getOrElse("/tmp/graft-warehouse")
-    val controlFile = args.lift(1).getOrElse(
-      "/root/reference/scripts/config/control_file.json")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-cdc-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val controlFile = args.lift(1).getOrElse(GoldenFixtures.controlFile)
+    val spark = GraftSession.builder(4).appName("graft-cdc-demo")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -38,10 +31,8 @@ object CdcDemo {
       s"partition=${cfg.partitionCols.mkString(",")} " +
       s"precombine=${cfg.precombineField}")
 
-    val fullLoad =
-      "/root/reference/lib/assets/data/measurement_data_fullload.parquet"
-    val cdcBatch =
-      "/root/reference/scripts/data/measurement_data_cdc.parquet"
+    val fullLoad = GoldenFixtures.fullLoad(spark)
+    val cdcBatch = GoldenFixtures.cdcBatch(spark)
 
     val s1 = pipe.run(cfg, pipe.readRaw(Seq(fullLoad)))
     println(s"[demo] run#1 (full load): $s1")
@@ -63,19 +54,13 @@ object CdcDemo {
     val root = args.headOption.getOrElse("/tmp/graft-stream-demo")
     val (raw, wh, ckpt) = (s"$root/raw", s"$root/wh", s"$root/ckpt")
     Files.createDirectories(Paths.get(raw))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-cdc-stream-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(4).appName("graft-cdc-stream-demo")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val cfg = TableConfig.fromFile(
-      "/root/reference/scripts/config/control_file.json").head
+    val cfg = TableConfig.fromFile(GoldenFixtures.controlFile).head
     val pipe = new CdcPipeline(spark, wh)
     val stream = new graft.streaming.CdcStream(spark, pipe, ckpt)
-    val cdcFile = "/root/reference/scripts/data/measurement_data_cdc.parquet"
+    val cdcFile = GoldenFixtures.cdcBatch(spark)
     val schema = spark.read.parquet(cdcFile).schema
     def pass(label: String): Unit = {
       stream.runAvailableNow(cfg, raw, schema)
@@ -83,8 +68,7 @@ object CdcDemo {
         pipe.tableFor(cfg).snapshot().count() else 0L
       println(s"[demo] $label -> table rows=$n")
     }
-    Files.copy(Paths.get(
-      "/root/reference/lib/assets/data/measurement_data_fullload.parquet"),
+    Files.copy(Paths.get(GoldenFixtures.fullLoad(spark)),
       Paths.get(s"$raw/full.parquet"), StandardCopyOption.REPLACE_EXISTING)
     pass("pass#1 (full load staged)")
     Files.copy(Paths.get(cdcFile), Paths.get(s"$raw/cdc.parquet"),

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Battery determinism sweep (round-8, verdict item 2): run every
   * `SparkEntry.queries` entry TWICE in one session — once with
@@ -23,15 +22,8 @@ import org.apache.spark.sql.SparkSession
 object DeterminismProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    // shuffle partitions are set per run below (5 vs 32)
+    val spark = GraftSession.builder(GraftSession.cpus(8)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).toSet)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan (and timing)
   * of selected catalog queries. `runMain graft.Explain <sfDir> q1 q2 ...`
   * (no names = all). Used to check pushdown/broadcast/codegen per operator.
@@ -11,15 +9,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else graft.queries.QueryCatalog.all.keys.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus(8)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage-level timing of the maintained_agg battery row's e2e build —
@@ -12,13 +11,7 @@ object IvmStageProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def time[T](tag: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Directional scale sweep for the heavy battery rows: measures each
@@ -32,14 +31,7 @@ object ScaleSweepProbe {
     // inflated size — the big leg reads multi-file temp parquet, so the
     // ScanPar gate passes through and parallel speedups are measurable
     // (the r13 scaling block showed sf0.1 alone cannot evidence them).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def tmp(tag: String) =
       java.nio.file.Files.createTempDirectory(s"graft-sweep-$tag").toString

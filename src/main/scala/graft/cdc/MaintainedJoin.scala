@@ -28,7 +28,8 @@ import graft.table.CowTable
   * The B-side probe is a point read through B's record-key file index
   * ([[CowTable.lookupByKeys]]); the view-side fk probe benefits from the
   * view table's `clusterCols`/`statsCols` on fk (set automatically).
-  * Service-layout guidance, measured in BASELINE.md (JoinViewProbe):
+  * Service-layout guidance, measured in BASELINE.md ("Round-8
+  * maintained-join-view probe"):
   * dim-dominated churn wants `recluster(fk)` (tightest fk stripes);
   * churn on BOTH sides wants `reclusterZOrder(aKey, fk)` — legal on the
   * fk-declared view via the manifest's unordered-file tracking, and it
@@ -66,8 +67,8 @@ final class MaintainedJoin(
     trackViewVersions: Boolean = false,
     /** Storage backing the VIEW: `"cow"` rewrites churned files in place
       * (read-optimal), `"mor"` appends churn as delta logs and defers the
-      * rewrite to compaction. Measured tradeoff (JoinViewProbe, 31.5M-row
-      * view, 256 files): scattered dim churn touches EVERY file — COW
+      * rewrite to compaction. Measured tradeoff (BASELINE.md, "Round-8
+      * maintained-join-view probe": 31.5M-row view, 256 files): scattered dim churn touches EVERY file — COW
       * rewrites all 256 (30s) where MOR appends one log run — so choose
       * `"mor"` when B-churn is uniform over the fk domain, `"cow"` when
       * churn is clustered or reads dominate. MOR implies version stamps.

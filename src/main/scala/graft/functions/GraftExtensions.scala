@@ -17,7 +17,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * — after which pure-SQL users can call them like built-ins
   * (`SELECT vec_dot(a, b) FROM ...`) with full codegen, no UDF overhead,
   * and no Scala API in sight. The imperative alternative for an existing
-  * session is [[VectorExpressions.registerAll]].
+  * session is [[VectorExpressions.registerAll]]. graft's own mains and
+  * specs get the extension from [[graft.GraftSession.builder]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

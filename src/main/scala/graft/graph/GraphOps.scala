@@ -118,9 +118,16 @@ object GraphOps {
       //     set restores the dense result (the oracle's
       //     `ids LEFT JOIN c_i` shape). Values are identical integer
       //     arithmetic throughout — the regime-equality spec pins this
-      //     against the giant path.
+      //     against the giant path;
+      //   - `ed` keeps only edges INTO out-degree nodes: a dst-only sink
+      //     is never ranked and never a source, so dropping its edges
+      //     changes no value, and every broadcast rank vector stays
+      //     within the gated `nV` instead of growing with the sinks.
       val ed = e.repartition(col("dst"))
-        .join(broadcast(deg), "src").persist()
+        .join(broadcast(deg), "src")
+        .join(broadcast(deg.select(col("src").as("dst"))), Seq("dst"),
+          "left_semi")
+        .persist()
       var rs = ed.select(col("dst").as("id"),
           expr(s"${init}L div deg").as("c"))
         .groupBy("id").agg(sum(col("c")).as("s"))

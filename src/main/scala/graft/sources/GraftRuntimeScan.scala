@@ -182,7 +182,6 @@ final class GraftRuntimeScan(
       .toSet
 
   override def filter(filters: Array[Filter]): Unit = {
-    val t0 = System.nanoTime
     var keep = files
     filters.foreach {
       case In(att, values) if values != null && !values.contains(null) =>
@@ -191,14 +190,11 @@ final class GraftRuntimeScan(
         keep = pruneByValues(keep, att, Seq(v))
       case _ => () // unknown shape: prune nothing
     }
-    val t1 = System.nanoTime
     if (keep.size < files.size) {
       GraftRuntimeScan.pruneLog.put(base, (files.size, keep.size))
       files = keep
       inner = rebuild(keep)
     }
-    GraftRuntimeScan.timingLog.put(base,
-      ((t1 - t0) / 1e6, (System.nanoTime - t1) / 1e6))
   }
 
   private def pruneByValues(
@@ -241,12 +237,7 @@ object GraftRuntimeScan {
   val MaxRuntimeValues = 8192
 
   /** (files before, files after) of the last runtime prune per table
-    * base path — diagnostic for probes and specs; driver-side only.
+    * base path — diagnostic for specs; driver-side only.
     */
   val pruneLog = new ConcurrentHashMap[String, (Int, Int)]()
-
-  /** (prune ms, rebuild ms) of the last runtime filter per table base
-    * path — diagnostic, driver-side only.
-    */
-  val timingLog = new ConcurrentHashMap[String, (Double, Double)]()
 }

@@ -27,13 +27,8 @@ import graft.table.CowTable
 object HiveSyncCheck {
 
   private def session(workDir: String): SparkSession =
-    SparkSession.builder()
-      .master("local[2]")
+    graft.GraftSession.builder(2)
       .appName("graft-hive-sync-check")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.warehouse.dir", s"$workDir/warehouse")
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$workDir/metastore_db;create=true")

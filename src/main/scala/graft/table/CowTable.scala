@@ -2725,7 +2725,6 @@ class CowTable(
       .get("spark.sql.maxConcurrentOutputFileWriters", "0").toInt > 0
     val tracked = collectKeyStats && fileIndexEntries > 0 &&
       !concurrentWriters &&
-      !sys.env.get("GRAFT_WRITE_TRACKER").contains("0") &&
       keyCols.forall(c => outDf.columns.contains(c))
     if (tracked) {
       // Index stats ride the WRITE JOB itself (per-row tracker, the
@@ -2734,8 +2733,9 @@ class CowTable(
       // IVM fold and every builder commit chain) disappears. The
       // tracker evaluates the SAME analyzer-resolved encode expressions
       // over the data-row layout (partition dir cols are stripped by
-      // the writer before newRow). GRAFT_WRITE_TRACKER=0 is the
-      // kill-switch back to the read-back pass.
+      // the writer before newRow). The read-back pass stays the
+      // fallback for concurrent-writer writes and for a stash that does
+      // not match the committed files.
       import org.apache.spark.sql.execution.datasources.{GraftKeyStatsJobTracker, GraftWriteStats}
       val enc =
         if (exists) manifest.keyEncoding else CowTable.CurrentKeyEncoding
@@ -4062,13 +4062,13 @@ object CowTable {
     * `logPartitions`, `fileStats`, `dvs`) into [[ManifestShardCount]]
     * content-addressed shard files under `_commits/shards/` — the
     * Iceberg manifest-list / Hudi metadata-table arrangement, sized for
-    * the honest limit ManifestProbe documented (~72 MB / 0.5 s
-    * single-thread parse at 200k files → a 100-TB table at 128 MB
-    * files ≈ 800k files needs the split). Below the threshold the
-    * monolithic single-file manifest is strictly better (one read, one
-    * write, human-greppable). A `var` so probes and specs exercise the
-    * sharded path at small sizes; every version self-describes, so
-    * mixed timelines read fine.
+    * the limit measured in BASELINE.md ("Round-8 manifest scalability
+    * probe": ~72 MB / 0.5 s single-thread parse at 200k files → a
+    * 100-TB table at 128 MB files ≈ 800k files needs the split). Below
+    * the threshold the monolithic single-file manifest is strictly
+    * better (one read, one write, human-greppable). A `var` so specs
+    * exercise the sharded path at small sizes; every version
+    * self-describes, so mixed timelines read fine.
     */
   @volatile var ManifestShardFileThreshold: Int = 50000
   val ManifestShardCount: Int = 32

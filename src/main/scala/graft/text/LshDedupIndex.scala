@@ -36,10 +36,11 @@ import graft.table.CowTable
   * created with the earlier (band, bh, doc_id) order keep it: the key is
   * read from the manifest.
   *
-  * Measured (LshIngestProbe, BASELINE.md): a fixed 2k-doc batch ingests in
-  * 5.4 / 6.2 / 10.4 s against 100k / 400k / 1.6M-doc corpora while the
-  * full rerun pays 3.1 / 5.4 / 12.2 s and keeps growing — the incremental
-  * path's growth term is the compact index scan, not the corpus text.
+  * Measured (BASELINE.md, "Round-11 incremental-dedup ingest probe"): a
+  * fixed 2k-doc batch ingests in 5.4 / 6.2 / 10.4 s against 100k / 400k /
+  * 1.6M-doc corpora while the full rerun pays 3.1 / 5.4 / 12.2 s and keeps
+  * growing — the incremental path's growth term is the compact index
+  * scan, not the corpus text.
   */
 final class LshDedupIndex(
     spark: SparkSession,

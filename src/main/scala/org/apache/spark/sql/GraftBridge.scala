@@ -10,9 +10,4 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Drain the listener bus (private[spark]) so probes reading
-    * accumulated task metrics see every finished task.
-    */
-  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
-    sc.listenerBus.waitUntilEmpty()
 }

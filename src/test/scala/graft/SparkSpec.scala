@@ -6,18 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one JVM-wide session). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the full extension surface (SQL functions + mutation statements)
-      // is active in every suite, exactly as a library user installs it
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    // the full extension surface (SQL functions + mutation statements)
+    // is active in every suite, exactly as a library user installs it
+    val s = GraftSession.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -13,11 +13,11 @@ import org.apache.spark.sql.functions._
 class GoldenScenarioSpec extends SparkSpec {
   import spark.implicits._
 
-  val fullLoad = "/root/reference/lib/assets/data/measurement_data_fullload.parquet"
-  val cdcBatch = "/root/reference/scripts/data/measurement_data_cdc.parquet"
+  lazy val fullLoad = GoldenFixtures.fullLoad(spark)
+  lazy val cdcBatch = GoldenFixtures.cdcBatch(spark)
 
   lazy val cfg = TableConfig.fromFile(
-    "/root/reference/scripts/config/control_file.json").head
+    GoldenFixtures.controlFile).head
 
   test("golden scenario: initial 100 + CDC 120 -> exactly 190 rows") {
     val wh = tmpDir("warehouse")

@@ -81,15 +81,12 @@ class IncrementalAggSpec extends SparkSpec {
 
   test("maintained view tracks the golden scenario through the pipeline") {
     val pipe = new CdcPipeline(spark, tmpDir("ivm-wh"))
-    val cfg = TableConfig.fromFile(
-      "/root/reference/scripts/config/control_file.json").head
+    val cfg = TableConfig.fromFile(GoldenFixtures.controlFile).head
     val vSpec = AggSpec(Seq("measurement_date"), "measurement_value")
     val view = new IncrementalAgg.MaintainedView(
       spark, tmpDir("ivm-view"), vSpec)
-    val fullLoad =
-      "/root/reference/lib/assets/data/measurement_data_fullload.parquet"
-    val cdcBatch =
-      "/root/reference/scripts/data/measurement_data_cdc.parquet"
+    val fullLoad = GoldenFixtures.fullLoad(spark)
+    val cdcBatch = GoldenFixtures.cdcBatch(spark)
 
     pipe.run(cfg, spark.read.parquet(fullLoad), preMergeHook = view.hook)
     view.commit(pipe.tableFor(cfg))
@@ -136,13 +133,11 @@ class IncrementalAggSpec extends SparkSpec {
 
   test("non-CDC incremental batch with duplicate keys keeps view exact") {
     val pipe = new CdcPipeline(spark, tmpDir("ivm-dup-wh"))
-    val cfg = TableConfig.fromFile(
-      "/root/reference/scripts/config/control_file.json").head
+    val cfg = TableConfig.fromFile(GoldenFixtures.controlFile).head
     val vSpec = AggSpec(Seq("measurement_date"), "measurement_value")
     val view = new IncrementalAgg.MaintainedView(
       spark, tmpDir("ivm-dup-view"), vSpec)
-    val full = spark.read.parquet(
-      "/root/reference/lib/assets/data/measurement_data_fullload.parquet")
+    val full = spark.read.parquet(GoldenFixtures.fullLoad(spark))
     pipe.run(cfg, full, preMergeHook = view.hook)
     view.commit(pipe.tableFor(cfg))
     // a non-CDC batch (no Op/transaction_id — replayed-full-load shape)

@@ -57,7 +57,7 @@ class TableConfigSpec extends AnyFunSuite {
 
   test("parses the actual reference control file") {
     val cfgs =
-      TableConfig.fromFile("/root/reference/scripts/config/control_file.json")
+      TableConfig.fromFile(GoldenFixtures.controlFile)
     assert(cfgs.nonEmpty)
     assert(cfgs.head.tableName.nonEmpty)
   }

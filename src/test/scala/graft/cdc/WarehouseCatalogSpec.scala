@@ -5,10 +5,9 @@ import graft.SparkSpec
 /** Cross-session table visibility: the persistent half of K6 catalog sync. */
 class WarehouseCatalogSpec extends SparkSpec {
 
-  private val fullLoad =
-    "/root/reference/lib/assets/data/measurement_data_fullload.parquet"
+  private lazy val fullLoad = GoldenFixtures.fullLoad(spark)
   private lazy val cfg = TableConfig.fromFile(
-    "/root/reference/scripts/config/control_file.json").head
+    GoldenFixtures.controlFile).head
 
   test("control-record render/parse round-trips every field") {
     val c = cfg.copy(storageType = "mor", cdcSplitUpsert = true,

@@ -100,6 +100,35 @@ class GraphOpsSpec extends SparkSpec {
     assert(bc == sh)
   }
 
+  test("pageRank: compact broadcasts stay within the gate on sink-heavy graphs") {
+    // 5 src nodes on a ring, each also feeding 20 dst-only sinks: the
+    // src count passes the compact gate (5 <= 5) while the distinct dst
+    // count (105) does not, so a rank vector holding the sinks would
+    // broadcast past the gate
+    val maxNodes = 5L
+    val edges = (0 until 5).flatMap { i =>
+      (s"s$i", s"s${(i + 1) % 5}") +:
+        (0 until 20).map(j => (s"s$i", s"k$i-$j"))
+    }.toDF("src", "dst")
+    val compact = GraphOps.pageRank(edges, 3, broadcastMaxNodes = maxNodes)
+    // collect THIS DataFrame (not an `.as[...]` copy, which would plan
+    // and run separately) so its executed plan carries the row metrics
+    val got = compact.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    object Plans extends org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper
+    val broadcastRows = Plans.collect(compact.queryExecution.executedPlan) {
+      case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
+        b.metrics("numOutputRows").value
+    }
+    assert(broadcastRows.nonEmpty, "compact regime must broadcast")
+    assert(broadcastRows.forall(_ <= maxNodes),
+      s"broadcast rows $broadcastRows exceed the gate $maxNodes")
+    val sh = GraphOps.pageRank(edges, 3, broadcastMaxNodes = 0)
+      .as[(String, Long)].collect().toMap
+    assert(got == sh && got.keySet == (0 until 5).map(i => s"s$i").toSet)
+    spark.catalog.clearCache()
+  }
+
   test("deep iteration: checkpointed lineage equals pure lineage") {
     val edges = (1 to 12).flatMap { i =>
       val hub = "h" + (i % 2)

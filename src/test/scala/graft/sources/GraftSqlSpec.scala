@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.cdc.GoldenFixtures
 import graft.table.{CowTable, MorTable}
 import org.apache.spark.sql.functions._
 
@@ -13,10 +14,8 @@ import org.apache.spark.sql.functions._
 class GraftSqlSpec extends SparkSpec {
   import spark.implicits._
 
-  private val fullLoad =
-    "/root/reference/lib/assets/data/measurement_data_fullload.parquet"
-  private val cdcBatch =
-    "/root/reference/scripts/data/measurement_data_cdc.parquet"
+  private lazy val fullLoad = GoldenFixtures.fullLoad(spark)
+  private lazy val cdcBatch = GoldenFixtures.cdcBatch(spark)
 
   /** The golden 190-row outcome, driven by one MERGE statement over the
     * W1-deduped CDC batch (Op routes deletes/updates/insert-gating).

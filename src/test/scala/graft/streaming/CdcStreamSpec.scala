@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.SparkSpec
-import graft.cdc.{CdcPipeline, TableConfig}
+import graft.cdc.{CdcPipeline, GoldenFixtures, TableConfig}
 import org.apache.spark.sql.functions._
 
 /** The reference's operational model (S2 job bookmarks) driven through
@@ -12,11 +12,10 @@ import org.apache.spark.sql.functions._
   */
 class CdcStreamSpec extends SparkSpec {
 
-  val fullLoad =
-    "/root/reference/lib/assets/data/measurement_data_fullload.parquet"
-  val cdcBatch = "/root/reference/scripts/data/measurement_data_cdc.parquet"
+  lazy val fullLoad = GoldenFixtures.fullLoad(spark)
+  lazy val cdcBatch = GoldenFixtures.cdcBatch(spark)
   lazy val cfg = TableConfig.fromFile(
-    "/root/reference/scripts/config/control_file.json").head
+    GoldenFixtures.controlFile).head
 
   test("bookmark semantics: two staged files, two incremental passes -> 190") {
     val raw = tmpDir("raw")

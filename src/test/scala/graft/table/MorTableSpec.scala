@@ -1,7 +1,7 @@
 package graft.table
 
 import graft.SparkSpec
-import graft.cdc.{CdcPipeline, TableConfig}
+import graft.cdc.{CdcPipeline, GoldenFixtures, TableConfig}
 import org.apache.spark.sql.functions._
 
 /** Merge-on-read semantics: log-append writes, `_ro`/`_rt` read modes,
@@ -214,11 +214,9 @@ class MorTableSpec extends SparkSpec {
   }
 
   test("golden scenario on MOR reaches 190 in _rt; _ro catches up at compaction") {
-    val fullLoad =
-      "/root/reference/lib/assets/data/measurement_data_fullload.parquet"
-    val cdcBatch = "/root/reference/scripts/data/measurement_data_cdc.parquet"
-    val cfg = TableConfig.fromFile(
-      "/root/reference/scripts/config/control_file.json").head
+    val fullLoad = GoldenFixtures.fullLoad(spark)
+    val cdcBatch = GoldenFixtures.cdcBatch(spark)
+    val cfg = TableConfig.fromFile(GoldenFixtures.controlFile).head
       .copy(storageType = "mor")
     val pipe = new CdcPipeline(spark, tmpDir("wh-mor"))
 

@@ -84,8 +84,9 @@ class WriteTrackerStatsSpec extends SparkSpec {
   }
 
   test("kill-switch falls back to the read-back pass with equal results") {
-    // GRAFT_WRITE_TRACKER=0 cannot be set per-test (env), so pin the
-    // fallback equivalence the other way: a table whose stash is
+    // The read-back pass runs only as a fallback (concurrent-writer
+    // writes, or a stash that does not match the committed files), so
+    // pin the equivalence the other way: a table whose stash is
     // discarded (file-set mismatch can't be forced here) is covered by
     // recomputeFileStatsForTest above; this test pins the unpartitioned
     // single-key shape end to end.
