@@ -1,6 +1,7 @@
 package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, when}
 import org.apache.spark.storage.StorageLevel
 
 import graft.table.{CowTable, MorTable}
@@ -20,13 +21,19 @@ final case class RunSummary(
   * equivalent of the reference's `process_raw_data`
   * (reference: processData.py:272-390).
   *
-  * Dataflow (initial): scan → lowercase (P1) → drop bookkeeping (P2) →
-  * empty-guard (M3) → bulk insert (K1).
+  * Dataflow (initial): scan → lowercase (P1) → empty-guard (M3) → drop
+  * bookkeeping (P2) → bulk insert (K1).
   * Dataflow (incremental): scan → lowercase → latest-per-key dedup (W1, BEFORE
   * Op routing — required for intra-batch insert-then-delete correctness,
-  * SURVEY.md §7.4) → route by Op (P3-P6) → upsert/insert/delete writes
-  * (K2/K4/K3), inserts+updates before deletes as the reference orders them
-  * (processData.py:348-382).
+  * SURVEY.md §7.4) → one aggregate of the routed counts (P3-P6) → writes:
+  *   - copy-on-write: ONE merge commit that upserts the non-D rows and
+  *     deletes the D rows (K2+K3), `op` steering the merge;
+  *   - merge-on-read: an upsert log append (K2), then a delete log append
+  *     (K3);
+  *   - `cdc_split_upsert`: insert append (K4), upsert of the U rows (K2),
+  *     then delete (K3).
+  * The two- and three-write shapes keep the reference's order, inserts and
+  * updates before deletes (processData.py:348-382).
   */
 final class CdcPipeline(spark: SparkSession, warehousePath: String) {
 
@@ -71,7 +78,7 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
     val df = CdcOps.lowercaseColumns(raw).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val n = df.count() // M2 (reference: processData.py:303)
-      if (df.isEmpty)    // M3 (reference: processData.py:305)
+      if (n == 0)        // M3 (reference: processData.py:305)
         return RunSummary(cfg.tableName, initialLoad = false, inputRows = 0)
       val table = tableFor(cfg)
       val summary =
@@ -92,9 +99,8 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
     */
   private def runInitial(
       cfg: TableConfig, table: CowTable, df: DataFrame, n: Long): RunSummary = {
-    val payload = CdcOps.dropBookkeeping(df)
-    if (!payload.isEmpty) // reference: processData.py:340
-      table.bulkInsert(payload, cfg.bulkInsertParallelism)
+    // the reference's emptiness guard (processData.py:340) is `run`'s n > 0
+    table.bulkInsert(CdcOps.dropBookkeeping(df), cfg.bulkInsertParallelism)
     RunSummary(cfg.tableName, initialLoad = true, inputRows = n, inserted = n)
   }
 
@@ -141,40 +147,55 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
     val latest =
       CdcOps.latestPerKey(df, cfg.pkCols).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var inserted = 0L; var upserted = 0L; var deleted = 0L
       preMergeHook(table,
         CdcOps.dropBookkeeping(CdcOps.nonDeletes(latest)),
         CdcOps.dropBookkeeping(CdcOps.deletes(latest)))
-      if (cfg.cdcSplitUpsert) {
-        // K4 — route pure inserts through the cheap append path
-        // (reference: processData.py:348-362).
-        val ins = CdcOps.dropBookkeeping(CdcOps.inserts(latest))
-        if (!ins.isEmpty) {
-          inserted = ins.count()
-          table.insertAppend(ins, cfg.bulkInsertParallelism)
-        }
-        val upd = CdcOps.dropBookkeeping(CdcOps.updates(latest))
-        if (!upd.isEmpty) {
-          upserted = upd.count()
-          table.upsert(upd, cfg.upsertParallelism)
-        }
-      } else {
-        // K2 — everything but deletes goes through the merge
-        // (reference: processData.py:365-374).
-        val upserts = CdcOps.dropBookkeeping(CdcOps.nonDeletes(latest))
-        if (!upserts.isEmpty) {
-          upserted = upserts.count()
-          table.upsert(upserts, cfg.upsertParallelism)
-        }
+      val c = CdcPipeline.OpCounts(latest)
+      if (cfg.cdcSplitUpsert || table.isInstanceOf[MorTable]) {
+        if (cfg.cdcSplitUpsert) {
+          // K4 — route pure inserts through the cheap append path
+          // (reference: processData.py:348-362)
+          if (c.inserts > 0)
+            table.insertAppend(CdcOps.dropBookkeeping(CdcOps.inserts(latest)),
+              cfg.bulkInsertParallelism)
+          if (c.updates > 0)
+            table.upsert(CdcOps.dropBookkeeping(CdcOps.updates(latest)),
+              cfg.upsertParallelism)
+        } else if (c.nonDeletes > 0)
+          // K2 as its own log append: MorTable.mergeInto compacts first,
+          // which would change the table's compaction cadence
+          table.upsert(CdcOps.dropBookkeeping(CdcOps.nonDeletes(latest)),
+            cfg.upsertParallelism)
+        // K3 — deletes last (reference: processData.py:377-382)
+        if (c.deletes > 0)
+          table.delete(CdcOps.dropBookkeeping(CdcOps.deletes(latest)),
+            cfg.upsertParallelism)
+      } else if (c.nonDeletes + c.deletes > 0) {
+        // K2 + K3 in ONE partition-scoped merge commit. The reference's
+        // upsert-then-delete pair (processData.py:365-382) rewrites the
+        // same partitions twice; after W1 no key is both upserted and
+        // deleted, so applying them together reaches the same state.
+        // `op` steers the merge and is never written. Null-op rows go
+        // first, as the three-valued Op filters drop them (inside the
+        // merge a null delete condition would fall through to update).
+        // D and not-D are disjoint: the incoming-only tombstone contract
+        // holds. A batch with nothing to apply publishes no version.
+        table.mergeInto(
+          latest.filter(col("op").isNotNull)
+            .drop(CdcOps.BookkeepingCols.filterNot(_ == "op"): _*),
+          cfg.upsertParallelism,
+          whenMatchedDelete = col("i.op") === "D",
+          insertCondition = col("i.op") =!= "D",
+          conditionCols = Seq("op"),
+          tombstonesFromIncoming = true,
+          extraMetrics = Map(
+            "cdc_upserted" -> c.nonDeletes, "cdc_deleted" -> c.deletes))
       }
-      // K3 — deletes last (reference: processData.py:377-382).
-      val dels = CdcOps.dropBookkeeping(CdcOps.deletes(latest))
-      if (!dels.isEmpty) {
-        deleted = dels.count()
-        table.delete(dels, cfg.upsertParallelism)
-      }
-      RunSummary(cfg.tableName, initialLoad = false, inputRows = n,
-        inserted = inserted, upserted = upserted, deleted = deleted)
+      val summary = RunSummary(cfg.tableName, initialLoad = false,
+        inputRows = n, deleted = c.deletes)
+      if (cfg.cdcSplitUpsert)
+        summary.copy(inserted = c.inserts, upserted = c.updates)
+      else summary.copy(upserted = c.nonDeletes)
     } finally latest.unpersist()
   }
 
@@ -221,4 +242,21 @@ object CdcPipeline {
     * pipeline can skip hook-only preparation work when nothing observes it.
     */
   val NoHook: (CowTable, DataFrame, DataFrame) => Unit = (_, _, _) => ()
+
+  /** Routed row counts of a W1-deduped batch, from ONE aggregate job.
+    * Null-`op` rows count nowhere, as the three-valued Op filters of
+    * [[CdcOps]] drop them; `nonDeletes` counts every non-null op but D.
+    */
+  private final case class OpCounts(
+      inserts: Long, updates: Long, nonDeletes: Long, deletes: Long)
+
+  private object OpCounts {
+    def apply(latest: DataFrame): OpCounts = {
+      val op = col("op")
+      val r = latest.agg(
+        count(when(op === "I", 1)), count(when(op === "U", 1)),
+        count(when(op =!= "D", 1)), count(when(op === "D", 1))).head()
+      OpCounts(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    }
+  }
 }

@@ -57,7 +57,8 @@ class WarehouseCatalog(spark: SparkSession, warehousePath: String) {
     * record in, and target the next version — rather than failing a run
     * whose table commit already succeeded. Conflict detection itself is
     * best-effort on local filesystems (POSIX rename(2) replaces silently;
-    * the exists() probe narrows but cannot close that window).
+    * the exists() probe narrows but cannot close that window). A record
+    * the catalog already holds unchanged publishes nothing.
     */
   def sync(cfg: TableConfig, maxAttempts: Int = 5): Unit = {
     var attempt = 0
@@ -80,7 +81,13 @@ class WarehouseCatalog(spark: SparkSession, warehousePath: String) {
   }
 
   protected def publishOnce(cfg: TableConfig): Unit = {
-    val others = tables().filterNot(c =>
+    val current = tables()
+    // re-syncing an unchanged record (every batch of a running job) is a
+    // no-op: no tmp write, rename or prune. Compared as stored, since the
+    // record round-trips through the control-file rendering.
+    if (current.contains(TableConfig.fromJValue(TableConfig.toJValue(cfg))))
+      return
+    val others = current.filterNot(c =>
       c.dbName == cfg.dbName && c.schemaName == cfg.schemaName &&
         c.tableName == cfg.tableName)
     val next = versions.lastOption.getOrElse(0L) + 1

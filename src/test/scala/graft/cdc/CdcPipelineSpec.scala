@@ -1,0 +1,114 @@
+package graft.cdc
+
+import graft.SparkSpec
+import graft.table.CowTable
+import org.apache.spark.sql.functions._
+
+/** How `CdcPipeline.run` commits an incremental batch: one merge commit per
+  * copy-on-write batch, an upsert log and a delete log per merge-on-read
+  * batch, and the same [[RunSummary]] counts as the reference's routing.
+  */
+class CdcPipelineSpec extends SparkSpec {
+  import spark.implicits._
+
+  private lazy val fullLoad = GoldenFixtures.fullLoad(spark)
+  private lazy val cdcBatch = GoldenFixtures.cdcBatch(spark)
+  private lazy val cfg = TableConfig.fromFile(
+    GoldenFixtures.controlFile).head
+
+  /** A pipeline over a fresh warehouse holding the golden full load, and
+    * the table version the load published.
+    */
+  private def loaded(c: TableConfig, tag: String): (CdcPipeline, Long) = {
+    val pipe = new CdcPipeline(spark, tmpDir(tag))
+    pipe.run(c, spark.read.parquet(fullLoad))
+    (pipe, pipe.tableFor(c).manifest.version)
+  }
+
+  /** (operation, metrics) of every version after `since`, oldest first. */
+  private def commitsAfter(t: CowTable, since: Long)
+      : Seq[(String, Map[String, Long])] =
+    t.history().filter(col("version") > since).orderBy("version")
+      .select("operation", "metrics").as[(String, Map[String, Long])]
+      .collect().toSeq
+
+  test("a COW batch of I/U/D rows publishes ONE merge version carrying " +
+      "the upsert/delete split") {
+    val (pipe, v0) = loaded(cfg, "wh-fused")
+    pipe.run(cfg, spark.read.parquet(cdcBatch))
+    val t = pipe.tableFor(cfg)
+    assert(t.snapshot().count() == 190)
+    val commits = commitsAfter(t, v0)
+    assert(commits.map(_._1) == Seq("merge"),
+      s"one commit per batch, got $commits")
+    val m = commits.head._2
+    assert(m.get("cdc_upserted").contains(100L) &&
+      m.get("cdc_deleted").contains(10L), s"metrics $m")
+  }
+
+  test("RunSummary counts follow the reference's routing on the golden " +
+      "batch (COW, cdc_split_upsert, MOR)") {
+    // 120 events; after W1: 90 I (ids 210-299), 10 U (100-109), 10 D
+    // (200-209, inserted then deleted within the batch)
+    val base = RunSummary(cfg.tableName, initialLoad = false,
+      inputRows = 120, deleted = 10)
+    Seq(
+      cfg -> base.copy(upserted = 100),
+      cfg.copy(cdcSplitUpsert = true) ->
+        base.copy(inserted = 90, upserted = 10),
+      cfg.copy(storageType = "mor") -> base.copy(upserted = 100)
+    ).zipWithIndex.foreach { case ((c, want), i) =>
+      val (pipe, _) = loaded(c, s"wh-summary-$i")
+      assert(pipe.run(c, spark.read.parquet(cdcBatch)) == want, s"for $c")
+    }
+  }
+
+  test("null-op rows neither insert nor delete; a batch of only null-op " +
+      "rows publishes no version") {
+    val c = TableConfig(dbName = "np", schemaName = "s", tableName = "t",
+      primaryKey = "id", partitionKey = "part", precombineField = "value",
+      glueJobName = "j")
+    val pipe = new CdcPipeline(spark, tmpDir("wh-nullop"))
+    pipe.run(c, Seq(("k1", "p0", 1.0), ("k2", "p0", 2.0))
+      .toDF("id", "part", "value"))
+    val t = pipe.tableFor(c)
+    def state = t.snapshot().select("id", "value")
+      .as[(String, Double)].collect().toMap
+    val s = pipe.run(c, Seq(
+      PropEv(null, "k1", "p0", 10.0, "000000001"), // stored: not touched
+      PropEv(null, "k3", "p0", 3.0, "000000002"),  // new: not inserted
+      PropEv("U", "k2", "p0", 20.0, "000000003")).toDF())
+    assert(s.upserted == 1 && s.deleted == 0, s"$s")
+    assert(state == Map("k1" -> 1.0, "k2" -> 20.0))
+    val v = t.manifest.version
+    val none = pipe.run(c, Seq(
+      PropEv(null, "k2", "p0", 0.0, "000000004")).toDF())
+    assert(none.upserted == 0 && none.deleted == 0, s"$none")
+    assert(t.manifest.version == v, "nothing to apply: no new version")
+    assert(state == Map("k1" -> 1.0, "k2" -> 20.0))
+  }
+
+  test("the change feed's tombstones at the merge version list the D keys") {
+    val (pipe, _) = loaded(cfg, "wh-feed")
+    pipe.run(cfg, spark.read.parquet(cdcBatch))
+    val t = pipe.tableFor(cfg)
+    // the pipeline's handle does not stamp commit versions, so read the
+    // feed's D source (tombstone files) directly
+    val feed = new CowTable(spark, t.basePath, t.keyCols, t.partitionCols) {
+      def deletedIds(v: Long): Set[String] =
+        tombstoneRows(manifest, v - 1, v).toSeq
+          .flatMap(_.select("measurement_id").as[String].collect()).toSet
+    }
+    assert(feed.deletedIds(t.manifest.version) ==
+      (200 to 209).map(i => s"MeasurementID-$i").toSet)
+  }
+
+  test("a MOR batch still publishes an upsert log and then a delete log") {
+    val mor = cfg.copy(storageType = "mor")
+    val (pipe, v0) = loaded(mor, "wh-mor")
+    pipe.run(mor, spark.read.parquet(cdcBatch))
+    val t = pipe.tableFor(mor)
+    assert(commitsAfter(t, v0).map(_._1) == Seq("log_upsert", "log_delete"))
+    assert(t.snapshot().count() == 190)
+  }
+}

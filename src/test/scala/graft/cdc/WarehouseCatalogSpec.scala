@@ -30,6 +30,22 @@ class WarehouseCatalogSpec extends SparkSpec {
       WarehouseCatalog.KeepVersions + 3)
   }
 
+  test("repeating an identical sync leaves the version files unchanged") {
+    val wh = tmpDir("wh-cat-same")
+    val cat = new WarehouseCatalog(spark, wh)
+    def files = new java.io.File(s"$wh/_catalog").listFiles()
+      .map(f => (f.getName, f.lastModified, f.length)).sorted.toSeq
+    cat.sync(cfg)
+    val before = files
+    cat.sync(cfg)
+    cat.sync(cfg)
+    assert(files == before, s"identical syncs must publish nothing: $files")
+    assert(cat.tables() == Seq(cfg))
+    cat.sync(cfg.copy(upsertParallelism = cfg.upsertParallelism + 1))
+    assert(files.count(_._1.matches("v\\d+\\.json")) == 2,
+      "a changed record still publishes")
+  }
+
   test("sync upserts by table identity") {
     val wh = tmpDir("wh-cat")
     val cat = new WarehouseCatalog(spark, wh)
