@@ -134,7 +134,7 @@ object ScaleSweepProbe {
     val rankBig = time(rank(true)); spark.catalog.clearCache()
     report("pagerank", rankBase, rankBig)
 
-    // ---- one IVM join+agg fold (the IvmStageProbe shape) ---------------
+    // ---- one IVM join+agg fold (the maintained_agg battery row shape) ---
     def ivmFold(big: Boolean): Double = {
       val o = (if (big) spark.read.parquet(ordersBig) else orders0)
         .select(col("o_orderkey"), col("o_custkey"),

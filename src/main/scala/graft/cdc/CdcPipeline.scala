@@ -144,13 +144,16 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
         upserted = n)
     }
     // W1 — collapse multiple events per key to the final one of the batch.
-    val latest =
-      CdcOps.latestPerKey(df, cfg.pkCols).persist(StorageLevel.MEMORY_AND_DISK)
+    // Routing time (W1 + the op counts) rides the COW merge commit's
+    // metrics as `phase_route_ms`.
+    val ph = new graft.util.Phases
+    val latest = ph("route")(CdcOps.latestPerKey(df, cfg.pkCols)
+      .persist(StorageLevel.MEMORY_AND_DISK))
     try {
       preMergeHook(table,
         CdcOps.dropBookkeeping(CdcOps.nonDeletes(latest)),
         CdcOps.dropBookkeeping(CdcOps.deletes(latest)))
-      val c = CdcPipeline.OpCounts(latest)
+      val c = ph("route")(CdcPipeline.OpCounts(latest))
       if (cfg.cdcSplitUpsert || table.isInstanceOf[MorTable]) {
         if (cfg.cdcSplitUpsert) {
           // K4 — route pure inserts through the cheap append path
@@ -188,7 +191,7 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
           insertCondition = col("i.op") =!= "D",
           conditionCols = Seq("op"),
           tombstonesFromIncoming = true,
-          extraMetrics = Map(
+          extraMetrics = ph.metrics ++ Map(
             "cdc_upserted" -> c.nonDeletes, "cdc_deleted" -> c.deletes))
       }
       val summary = RunSummary(cfg.tableName, initialLoad = false,

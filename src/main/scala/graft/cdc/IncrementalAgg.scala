@@ -43,12 +43,13 @@ object IncrementalAgg {
       .agg(count(lit(1)).as("cnt"), sum(dec(col(spec.valueCol))).as("total"))
 
   /** The delta of one CDC batch against the table state BEFORE the batch's
-    * merges. `upserts` are the deduped/precombined non-delete rows (new
+    * commit. `upserts` are the deduped/precombined non-delete rows (new
     * images), `deleteKeys` the deduped delete rows; `before` is the table
-    * handle still at the pre-batch version — call this BEFORE
-    * `upsert`/`delete`. The two sets may share keys: the delete wins,
-    * matching the pipeline's upsert-then-delete merge order. Output rows:
-    * groupCols..., `d_cnt`, `d_total`.
+    * handle still at the pre-batch version — call this BEFORE the batch
+    * is applied. [[CdcPipeline]] hands over disjoint sets (W1 keeps one
+    * event per key, applied in one merge); a caller that passes a key in
+    * both gets upsert-then-delete semantics: the delete wins. Output
+    * rows: groupCols..., `d_cnt`, `d_total`.
     */
   def delta(before: CowTable, upserts: DataFrame, deleteKeys: DataFrame,
       spec: AggSpec): DataFrame = {
@@ -56,9 +57,9 @@ object IncrementalAgg {
     // record identity is key + partition (the table's non-global index) —
     // every in-batch set operation below must respect it
     val idCols = before.mergeIdCols
-    // a record in BOTH sets is upserted then deleted within the batch (the
-    // pipeline merge order): its net contribution is -old only, so the
-    // upsert's +new must not count
+    // a record in BOTH sets is upserted then deleted within the batch:
+    // its net contribution is -old only, so the upsert's +new must not
+    // count
     val delProbe = deleteKeys.select(idCols.map(col): _*)
     val liveUpserts = upserts.join(delProbe,
       idCols.map(c => upserts(c) <=> delProbe(c)).reduce(_ && _),

@@ -195,15 +195,6 @@ final class MaintainedAgg(
     try out.write(txt.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Fold all source commits since the last refresh — or seed/reseed by
-    * recompute when the state doesn't exist or the mark fell behind
-    * retention. Returns the refreshed aggregate.
-    */
-  private def T[X](tag: String)(f: => X): X = {
-    val t0 = System.nanoTime(); val r = f
-    if (sys.env.contains("GRAFT_TRACE_MERGE"))
-      println(f"[matrace] $tag%-12s ${(System.nanoTime()-t0)/1e9}%6.2fs")
-    r }
   /** Seed/reseed frame + the mark it must claim: the snapshot is PINNED
     * at the version the mark records. Seeding from an unpinned
     * `snapshot()` while stamping an earlier head would let a source
@@ -254,14 +245,19 @@ final class MaintainedAgg(
     if (mark != sinceVer) return refresh()
     if (mark == headVer) return current
     try {
-      val feed = T("feed-mem")(rowFilter.map(ub.filter).getOrElse(ub)
+      val ph = new graft.util.Phases
+      val feed = ph("feed")(rowFilter.map(ub.filter).getOrElse(ub)
         .localCheckpoint(false))
-      foldWindow(feed, headVer)
+      foldWindow(feed, headVer, ph)
     } catch {
       case t if scala.util.control.NonFatal(t) => refresh()
     }
   }
 
+  /** Fold all source commits since the last refresh — or seed/reseed by
+    * recompute when the state doesn't exist or the mark fell behind
+    * retention. Returns the refreshed aggregate.
+    */
   def refresh(): DataFrame = {
     lastFoldFeed = None // a stale window never survives a new refresh
     val head = src.manifest.version
@@ -281,12 +277,14 @@ final class MaintainedAgg(
     // checkpoint round. Everything multi-consumer below stays EAGER: a
     // lazy checkpoint referenced twice inside one job computes its
     // subtree twice (measured slower, not faster).
+    val ph = new graft.util.Phases
     val feed =
       try {
         val f0 = src.changeFeedWithPreimages(mark, head)
         // filtered aggregates: U adds iff the new image passes, B
         // retracts iff the old image passed — one row-level filter
-        T("feed")(rowFilter.map(f0.filter).getOrElse(f0).localCheckpoint(false))
+        ph("feed")(rowFilter.map(f0.filter).getOrElse(f0)
+          .localCheckpoint(false))
       } catch {
         // mark aged out of the source's retained timeline (driver-side
         // manifest miss) or a data file already cleaned at DataFrame
@@ -304,7 +302,7 @@ final class MaintainedAgg(
     // as a driver-side manifest miss. Safe: the fold is a single commit,
     // so a caught crash left no partial state behind, and the reseed
     // overwrite is correct from any prior state.
-    try foldWindow(feed, head)
+    try foldWindow(feed, head, ph)
     catch {
       case t: Throwable if MaintainedJoin.sourceRetentionRace(t,
           Seq(src.basePath), table.basePath) =>
@@ -315,9 +313,11 @@ final class MaintainedAgg(
   }
 
   /** Apply one change-feed window to the state as a single merge commit
-    * (updates + deletes + mark advance atomically).
+    * (updates + deletes + mark advance atomically), which also records
+    * the fold's phase timings.
     */
-  private def foldWindow(feed: DataFrame, head: Long): DataFrame = {
+  private def foldWindow(feed: DataFrame, head: Long,
+      ph: graft.util.Phases): DataFrame = {
     // internal aliases are _ma_-reserved: a GROUP column may legitimately
     // be named "v"/"w" (e.g. MaintainedDistinct's support level groups by
     // the value column)
@@ -361,7 +361,7 @@ final class MaintainedAgg(
     // untouched groups are simply not part of the merge.
     val ((delta, deltaEmpty), (affected, touchedKeys)) =
       graft.util.Overlap.withBg(
-      T("delta"){
+      ph("delta"){
         val d0 = signed.groupBy(g.map(col): _*)
           .agg(dAggs.head, dAggs.tail: _*).localCheckpoint()
         (d0, d0.isEmpty)
@@ -369,7 +369,7 @@ final class MaintainedAgg(
       // the lookup's probe routing doubles as the merge's touched-keys
       // hint: every merge output group (next/gone) comes from the probed
       // churn groups, so the probe's unit set is a sound superset
-      val aff = T("affected") {
+      val aff = ph("affected") {
         val (rows, tk) = table.lookupByKeysTouched(
           feed.filter(col(ct).isin("U", "B"))
             .select(g.map(col): _*).distinct())
@@ -377,8 +377,8 @@ final class MaintainedAgg(
       }
       (d(), aff)
     }
-    val marksM = Map(Mark -> head)
-    if (T("gate-delta")(deltaEmpty)) {
+    def marksM = Map(Mark -> head) ++ ph.metrics
+    if (deltaEmpty) {
       // stamp-filtered feed held nothing: still advance the ledger
       // (the concurrently point-read state subset is simply unused)
       val verBefore = table.manifest.version
@@ -423,9 +423,9 @@ final class MaintainedAgg(
         max(col(s"max_$c")).as(s"max_$c")))
     // Groups whose count reaches zero are dropped (fully retracted) —
     // same contract as IncrementalAgg.apply.
-    val nextBase = T("nextBase")(affSide.unionByName(deltaSide)
+    val nextBase = affSide.unionByName(deltaSide)
       .groupBy(g.map(col): _*).agg(fusedAggs.head, fusedAggs.tail: _*)
-      .filter(col("cnt") =!= 0))
+      .filter(col("cnt") =!= 0)
     // The final state is NOT checkpointed at all: its single consumer is
     // the merge commit's input, which mergeInto persist()s before its
     // first job — the blocks materialize exactly once there either way,
@@ -449,7 +449,8 @@ final class MaintainedAgg(
       .select(g.map(c => affected(c).as(c)): _*)
     val next =
       if (minMaxCols.isEmpty) nextBase
-      else T("extremes")(withExtremes(nextBase, delta, head, affected))
+      else ph("extremes")(withExtremes(nextBase, delta, head, affected,
+        ph))
     // ONE commit applies updates + deletes + the mark advance
     // atomically — a two-commit fold could crash with the mark already
     // advanced and the deletes lost, and (unlike MaintainedJoin's image
@@ -544,10 +545,10 @@ final class MaintainedAgg(
     * shrink a bound).
     */
   private def withExtremes(nextBase: DataFrame, delta: DataFrame,
-      head: Long, st: DataFrame): DataFrame = {
+      head: Long, st: DataFrame, ph: graft.util.Phases): DataFrame = {
     // hit groups: a retracted image TIES a stored extreme
     val hitCond = g.map(c => delta(c) <=> st(c)).reduce(_ && _)
-    val hits = T("ext-hits-plan")(delta.join(st, hitCond, "inner")
+    val hits = delta.join(st, hitCond, "inner")
       .filter(minMaxCols.map(c =>
           delta(s"r_min_$c") === st(s"min_$c") ||
           delta(s"r_max_$c") === st(s"max_$c"))
@@ -555,12 +556,12 @@ final class MaintainedAgg(
       // LAZY: in the common no-hit window the isEmpty gate below scans
       // every partition (finding nothing) and IS the materialization —
       // an eager checkpoint would be a redundant extra job
-      .select(g.map(c => delta(c).as(c)): _*).localCheckpoint(false))
+      .select(g.map(c => delta(c).as(c)): _*).localCheckpoint(false)
 
     // ONE probe job doubles as the emptiness gate AND the repair read's
     // bounded value collect (single group column): the separate
     // isEmpty-then-collect pair was two jobs over the same tiny frame
-    val hitVals: Either[Boolean, Seq[Any]] = T("ext-hits-gate")(
+    val hitVals: Either[Boolean, Seq[Any]] = ph("ext_hits_gate")(
       if (g.size == 1)
         Right(hits.limit(MaintainedAgg.MaxRepairGroups + 1)
           .collect().map(_.get(0)).toSeq)

@@ -90,12 +90,6 @@ final class MaintainedDistinct(
   val table = new CowTable(spark, s"$path/state", keyCols = pairCols :+ "lvl",
     numBuckets = supportBuckets)
 
-  private def T[X](tag: String)(f: => X): X = {
-    val t0 = System.nanoTime(); val r = f
-    if (sys.env.contains("GRAFT_TRACE_MERGE"))
-      println(f"[mdtrace] $tag%-12s ${(System.nanoTime()-t0)/1e9}%6.2fs")
-    r }
-
   private lazy val vType =
     src.snapshot().schema(valueCol).dataType
 
@@ -143,8 +137,9 @@ final class MaintainedDistinct(
     // lazy checkpoint: the feed's blocks materialize inside the first
     // consuming job and are shared by the concurrent delta/point-read
     // scans (block computation is single-flighted by the block manager)
+    val ph = new graft.util.Phases
     val feed =
-      try T("feed")(
+      try ph("feed")(
         src.changeFeedWithPreimages(mark, head).localCheckpoint(false))
       catch {
         case t: Throwable if t.isInstanceOf[IllegalArgumentException] ||
@@ -154,7 +149,7 @@ final class MaintainedDistinct(
           table.overwrite(seedDf, extraMetrics = Map(Mark -> h))
           return current
       }
-    try foldWindow(feed, head)
+    try foldWindow(feed, head, ph)
     catch {
       case t: Throwable if MaintainedJoin.sourceRetentionRace(t,
           Seq(src.basePath), table.basePath) =>
@@ -165,9 +160,11 @@ final class MaintainedDistinct(
   }
 
   /** Apply one change-feed window to BOTH levels as a single merge commit
-    * (updates + deletes + mark advance atomically).
+    * (updates + deletes + mark advance atomically), which also records
+    * the fold's phase timings.
     */
-  private def foldWindow(feed: DataFrame, head: Long): DataFrame = {
+  private def foldWindow(feed: DataFrame, head: Long,
+      ph: graft.util.Phases): DataFrame = {
     val ub = feed.filter(col(ct).isin("U", "B"))
     val signed = ub.select((pairCols.map(col) :+
       when(col(ct) === "U", 1L).otherwise(-1L).as("_md_w")): _*)
@@ -178,7 +175,7 @@ final class MaintainedDistinct(
     // churned (g, v) pairs at lvl 1 plus their groups' (g, null) rollup
     // rows at lvl 2 — bucket/file-index pruned, churn-proportional.
     val ((d1, d1Empty), (aff, touchedKeys)) = graft.util.Overlap.withBg(
-      T("delta") {
+      ph("delta") {
         val d0 = signed.groupBy(pairCols.map(col): _*)
           .agg(sum(col("_md_w")).as("d_cnt")).localCheckpoint()
         (d0, d0.isEmpty)
@@ -192,15 +189,15 @@ final class MaintainedDistinct(
       // the lookup's probe routing doubles as the merge's touched-keys
       // hint: every merge output key (next/gone, both levels) comes from
       // the probed churn, so the probe's bucket set is a sound superset
-      val a = T("affected") {
+      val a = ph("affected") {
         val (rows, tk) =
           table.lookupByKeysTouched(keys1.unionByName(keys2))
         (rows.select(stateCols.map(col): _*).localCheckpoint(), tk)
       }
       (d(), a)
     }
-    val marks = Map(Mark -> head)
-    if (T("gate-delta")(d1Empty)) {
+    val marks = Map(Mark -> head) ++ ph.metrics
+    if (d1Empty) {
       // stamp-filtered feed held nothing: still advance the ledger
       table.delete(table.snapshot().limit(0), extraMetrics = marks)
       return current

@@ -189,8 +189,10 @@ final class MaintainedJoin(
     // side plans on a background thread while the A side plans inline
     // (Overlap.withBg: the bg side is awaited even when the inline side
     // throws, so no detached planning races the reseed below)
+    // fold phase timings ride the fold commit's metrics
+    val ph = new graft.util.Phases
     val windows =
-      try T("feeds"){
+      try ph("feeds"){
         Some(graft.util.Overlap.withBg(
           if (sb < eb) Some(b.changeFeed(sb, eb).localCheckpoint(false))
           else None) { fb =>
@@ -217,7 +219,7 @@ final class MaintainedJoin(
         // route it to the same reseed path as a driver-side manifest miss.
         // Reseed is a full overwrite from the current sources, so it is
         // correct even if fold already committed part of its work.
-        try fold(feedA, feedB, ea, eb)
+        try fold(feedA, feedB, ea, eb, ph)
         catch {
           case t: Throwable if MaintainedJoin.sourceRetentionRace(t,
               Seq(a.basePath, b.basePath), table.basePath) =>
@@ -238,13 +240,8 @@ final class MaintainedJoin(
     current
   }
 
-  private def T[X](tag: String)(f: => X): X = {
-    val t0 = System.nanoTime(); val r = f
-    if (sys.env.contains("GRAFT_TRACE_MERGE"))
-      println(f"[mjtrace] $tag%-14s ${(System.nanoTime()-t0)/1e9}%6.2fs")
-    r }
   private def fold(feedA: Option[DataFrame], feedB: Option[DataFrame],
-      ea: Long, eb: Long): DataFrame = {
+      ea: Long, eb: Long, ph: graft.util.Phases): DataFrame = {
     val ct = CowTable.ChangeTypeCol
     // --- A-side churn: authoritative new images + deletes
     val upsA = feedA.map(_.filter(col(ct) === "U")
@@ -268,7 +265,7 @@ final class MaintainedJoin(
     // --- B-side churn: view rows whose fk hits a changed B identity.
     // The view holds every A row (left-outer), so this finds them ALL —
     // including rows a new B key now matches for the first time.
-    val hitByB = withAWarm { feedB.map { fb => T("hitByB"){
+    val hitByB = withAWarm { feedB.map { fb => ph("hit_by_b"){
       val bIds = fb.select(b.mergeIdCols.map(col): _*).distinct()
       val viewRows = viewRowsForBIds(bIds)
       val cond = on.map { case (f, k) => viewRows(f) <=> bIds(k) }
@@ -296,7 +293,7 @@ final class MaintainedJoin(
       case (Some(u), None) => Some(u)
       case (None, Some(h)) => Some(h)
       case (None, None) => None
-    }).map { aff => T("affected-ck"){
+    }).map { aff => ph("affected"){
       (delAck match {
         case Some(d) =>
           val dIds = d.select(a.mergeIdCols.map(col): _*)
@@ -306,15 +303,17 @@ final class MaintainedJoin(
         case None => aff
       }).localCheckpoint()
     }}
-    val marksM = Map(MarkA -> ea, MarkB -> eb)
     // the two emptiness gates probe INDEPENDENT frames (the checkpointed
     // affected images; the cached feed's delete slice) — run them
     // concurrently, one job round instead of two
     val (hasUps, hasDel) = graft.util.Overlap.withBg(
-      T("gate-ups")(affected.exists(!_.isEmpty))) { up =>
-      val hd = T("gate-del")(delAck.exists(!_.isEmpty))
+      ph("gate_ups")(affected.exists(!_.isEmpty))) { up =>
+      val hd = ph("gate_del")(delAck.exists(!_.isEmpty))
       (up(), hd)
     }
+    // the marks advance with the fold's last commit, which also records
+    // the fold phases timed up to it
+    def marksM = Map(MarkA -> ea, MarkB -> eb) ++ ph.metrics
     // re-joined new images for the affected A rows (lazy: only built when
     // the fold has upserts)
     def upImages(): DataFrame = {
@@ -340,7 +339,7 @@ final class MaintainedJoin(
       // replay-on-stale-marks still holds and stays idempotent). MOR
       // views keep the two-commit path: their upsert/delete are pure log
       // appends, while mergeInto would force a compaction first.
-      val up = T("upImages")(upImages()).withColumn("__mj_op", lit("U"))
+      val up = ph("up_images")(upImages()).withColumn("__mj_op", lit("U"))
       val dn = delPadded(org.apache.spark.sql.types.StructType(
           up.schema.fields.filterNot(_.name == "__mj_op")))
         .withColumn("__mj_op", lit("D"))
@@ -348,12 +347,12 @@ final class MaintainedJoin(
       // on incoming rows — the incoming-only tombstone pass applies
       // (deleted source-A keys are essentially always present in a
       // left-outer view, so its over-approximation never materializes)
-      T("mergeInto")(table.mergeInto(up.unionByName(dn),
+      table.mergeInto(up.unionByName(dn),
         whenMatchedDelete = col("i.__mj_op") === "D",
         insertCondition = col("i.__mj_op") =!= "D",
         conditionCols = Seq("__mj_op"),
         tombstonesFromIncoming = true,
-        extraMetrics = marksM))
+        extraMetrics = marksM)
     } else {
       // Only the LAST commit of the fold advances the marks: a crash
       // after an earlier commit leaves the marks behind, so the next

@@ -3396,13 +3396,6 @@ object QueryCatalog {
         val embs = t(s, d, "embeddings")
         def tmp(tag: String) = java.nio.file.Files
           .createTempDirectory(s"graft-pincr-$tag").toString
-        var t0 = System.nanoTime()
-        def mark(tag: String): Unit = {
-          val t1 = System.nanoTime()
-          if (sys.env.contains("GRAFT_TRACE_MERGE"))
-            System.err.println(f"[pincr] $tag%-14s ${(t1 - t0) / 1e9}%.2fs")
-          t0 = t1
-        }
         // stages 1+2 on the full corpus frame; each arrival batch slices
         // it. Persisted: feeds both batch sinks and both LSH ingests.
         val pdocs = raw.select(col("doc_id"),
@@ -3416,7 +3409,6 @@ object QueryCatalog {
           new graft.table.CowTable(s, lakePath, keyCols = Seq("doc_id")))
         val lsh = new graft.text.LshDedupIndex(s, tmp("lsh"), 3, 2)
         def lake() = s.read.format("graft").load(lakePath)
-        mark("setup")
         // The semantic-dedup chain (ANN build → check → ingest) and the
         // batch-1 arrival chain (lake upsert → LSH ingest) commit to
         // DISJOINT tables and share only read-only inputs — they run as
@@ -3430,18 +3422,9 @@ object QueryCatalog {
         val dropSemP = scala.concurrent.Promise[DataFrame]()
         val (p1, p2) = graft.util.Overlap.withBg {
           try {
-            var ta = System.nanoTime()
-            def amark(tag: String): Unit = {
-              val t1 = System.nanoTime()
-              if (sys.env.contains("GRAFT_TRACE_MERGE"))
-                System.err.println(
-                  f"[pincr] $tag%-14s ${(t1 - ta) / 1e9}%.2fs (bg)")
-              ta = t1
-            }
             // semantic dedup-on-arrival: batch 1 seeds the ANN index;
             // batch 2's embeddings are checked and flagged ids dropped
             ann.build(embs.filter(col("vec_id") < 250))
-            amark("ann.build")
             val ds = ann.nearDupCheck(
                 embs.filter(col("vec_id") >= 250)
                   .select("vec_id", "embedding"),
@@ -3451,10 +3434,8 @@ object QueryCatalog {
               .filter(!col("keep")).select("vec_id").persist()
             ds.count() // materialize BEFORE publishing: b2 broadcasts it
             dropSemP.success(ds)
-            amark("nearDupCheck")
             ann.ingest(embs.filter(col("vec_id") >= 250)
               .join(broadcast(ds), Seq("vec_id"), "left_anti"))
-            amark("ann.ingest")
           } catch {
             // a failed chain must fail b2's Await too, not hang it
             case e: Throwable => dropSemP.tryFailure(e); throw e
@@ -3462,9 +3443,7 @@ object QueryCatalog {
         } { _ =>
           require(sink.applyBatch(b1, 0L),
             "pipeline_e2e_incr: batch 1 must apply")
-          mark("applyBatch b1")
           val r1 = lsh.ingest(b1, lake(), 8, 10)
-          mark("lsh.ingest b1")
           val dropSem = scala.concurrent.Await.result(
             dropSemP.future, scala.concurrent.duration.Duration.Inf)
           val b2 = pdocs.filter(col("doc_id") >= 250)
@@ -3472,12 +3451,9 @@ object QueryCatalog {
               Seq("doc_id"), "left_anti")
           require(sink.applyBatch(b2, 1L),
             "pipeline_e2e_incr: batch 2 must apply")
-          mark("applyBatch b2")
           val r2 = lsh.ingest(b2, lake(), 8, 10)
-          mark("lsh.ingest b2")
           require(!sink.applyBatch(b1, 0L),
             "pipeline_e2e_incr: replayed batch 1 must be ledger-skipped")
-          mark("replay skip")
           (r1, r2)
         }
         // stage 3 survivorship from the ACCUMULATED pair set

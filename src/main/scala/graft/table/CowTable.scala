@@ -392,17 +392,6 @@ class CowTable(
   // CowTable.ensureFieldIdConfs — a no-op for everything else)
   CowTable.ensureFieldIdConfs(spark)
 
-  /** Env-gated per-stage commit timing (GRAFT_TRACE_MERGE=1) — the
-    * attribution tool behind the IVM fold latency work; zero cost when
-    * the variable is unset.
-    */
-  private def traceMerge[X](tag: String)(f: => X): X = {
-    val t0 = System.nanoTime(); val r = f
-    if (sys.env.contains("GRAFT_TRACE_MERGE"))
-      println(f"[mctrace] $tag%-12s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-    r
-  }
-
   /** Key-hash bucket expression (numBuckets > 0): Hudi-file-group-style
     * sub-partitioning. Records hash-route to a stable bucket, so a merge
     * rewrites only the buckets that contain matched keys — at 100 TB the
@@ -787,10 +776,7 @@ class CowTable(
       : (DataFrame, Set[String]) = {
     val probed = touchedPartitionKeys(probe)
     val existing = probed.intersect(m.partitions.keySet)
-    val (candFiles, _) =
-      if (fileIndexEntries > 0) pruneCandidateFiles(m, existing, probe)
-      else (existing.toSeq.sorted.flatMap(k =>
-        m.partitions.getOrElse(k, Nil)), Map.empty[String, Seq[String]])
+    val (candFiles, _) = pruneCandidateFiles(m, existing, probe)
     // Identity is NON-GLOBAL (key + partition, matching the merge scope):
     // when the probe carries the partition columns, they join too —
     // otherwise a record key present in two touched partitions would match
@@ -1227,12 +1213,9 @@ class CowTable(
     val v = m.version + 1
     val incoming = df.persist()
     try {
-      val touched = traceMerge("touched")(touchedPartitionKeys(incoming))
+      val touched = touchedPartitionKeys(incoming)
         .intersect(m.partitions.keySet)
-      val (candFiles, _) =
-        if (fileIndexEntries > 0) pruneCandidateFiles(m, touched, incoming)
-        else (touched.toSeq.sorted.flatMap(k =>
-          m.partitions.getOrElse(k, Nil)), Map.empty[String, Seq[String]])
+      val (candFiles, _) = pruneCandidateFiles(m, touched, incoming)
       val probeKeys =
         incoming.select(mergeIdCols.map(col): _*).distinct()
       val (newDvs, dvRefs, dvRows) = markDvPositions(m, v, candFiles,
@@ -1449,12 +1432,9 @@ class CowTable(
       CdcOps.precombine(incoming0, mergeIdCols, precombineField)
     else incoming0).persist()
     try {
-      val touched = traceMerge("touched")(touchedPartitionKeys(incoming))
-      val existing = touched.intersect(m.partitions.keySet)
-      val (candFiles, _) =
-        if (fileIndexEntries > 0) pruneCandidateFiles(m, existing, incoming)
-        else (existing.toSeq.sorted.flatMap(k =>
-          m.partitions.getOrElse(k, Nil)), Map.empty[String, Seq[String]])
+      val existing =
+        touchedPartitionKeys(incoming).intersect(m.partitions.keySet)
+      val (candFiles, _) = pruneCandidateFiles(m, existing, incoming)
       val probeKeys =
         incoming.select(mergeIdCols.map(col): _*).distinct()
       val (newDvs, dvRefs, dvRows) = markDvPositions(m, v, candFiles,
@@ -1737,12 +1717,15 @@ class CowTable(
     val incoming = (if (precombineField.nonEmpty)
       CdcOps.precombine(incoming0, mergeIdCols, precombineField)
     else incoming0).persist()
+    // phase timings ride this commit's metrics; manifest publish and
+    // clean() run at or after the publish, so they cannot be recorded
+    val ph = new graft.util.Phases
     try {
       // with a hint, the incoming plan is NOT materialized here — its
       // persist fills inside the first consuming job (the background
       // tombstone pass / the write), overlapped instead of paying a
       // dedicated blocking job round over the merge input's full plan
-      val touched = traceMerge("touched")(
+      val touched = ph("touched")(
         touchedHint.getOrElse(touchedPartitionKeys(incoming)))
       val rewritten = touched.intersect(m.partitions.keySet)
       // File-level pruning (record-key index on): within the touched
@@ -1750,10 +1733,8 @@ class CowTable(
       // key are read and rewritten; the rest are KEPT verbatim. Sound
       // because blooms have no false negatives — a kept file provably
       // holds no incoming key, so the anti-join/merge result is identical.
-      val (candFiles, keptListing) = traceMerge("prune")(
-        if (fileIndexEntries > 0) pruneCandidateFiles(m, rewritten, incoming)
-        else (rewritten.toSeq.sorted.flatMap(k =>
-          m.partitions.getOrElse(k, Nil)), Map.empty[String, Seq[String]]))
+      val (candFiles, keptListing) =
+        ph("prune")(pruneCandidateFiles(m, rewritten, incoming))
       // tombstone passes that re-evaluate `cur` (a second join over the
       // candidate read): persist it so the replay comes from cache
       // instead of re-reading + re-shuffling the pruned files — bounded
@@ -1765,21 +1746,17 @@ class CowTable(
       val merged = merge(cur, incoming)
       def tombstonePass(): Map[String, Seq[String]] = tombstoneKeys match {
         case Some(keysOf) =>
-          val fls = traceMerge("tombstones")(
+          val fls = ph("tombstones")(
             writeTombstones(keysOf(cur, incoming), v))
           if (fls.isEmpty) m.tombstones
           else m.tombstones + (v.toString -> fls)
         case None => m.tombstones
       }
       def statsPass(newFiles: Map[String, Seq[String]])
-          : Map[String, FileStat] =
-        traceMerge("stats")(if (fileIndexEntries > 0)
-          takePendingStats(newFiles).getOrElse {
-            if (sys.env.contains("GRAFT_TRACE_MERGE"))
-              System.err.println("[mctrace] stats FELL BACK to read-back")
-            collectFileStats(newFiles, evolved, m.keyEncoding)
-          }
-        else Map.empty[String, FileStat])
+          : (Map[String, FileStat], Map[String, Long]) =
+        ph("stats")(if (fileIndexEntries > 0)
+          newFileStats(newFiles, evolved, m.keyEncoding)
+        else (Map.empty[String, FileStat], Map.empty[String, Long]))
       // Commit latency is a chain of small job rounds; the two passes
       // around the write have no ordering constraint on it, so overlap
       // whatever independence allows:
@@ -1792,15 +1769,15 @@ class CowTable(
       //   - a cur-rejoining tombstone pass stays AFTER the write (the
       //     write job is what warms cur's cache) and overlaps the
       //     file-stats scan of the just-written files instead.
-      val (newFiles, newStats, newTombstones) =
+      val (newFiles, (newStats, statsMetrics), newTombstones) =
         if (tombstoneKeys.isDefined && !tombstonesUseCur)
           graft.util.Overlap.withBg(tombstonePass()) { nt =>
-            val nf = traceMerge("write")(writeCommit(merged, v, parallelism,
+            val nf = ph("write")(writeCommit(merged, v, parallelism,
               idSchema = evolved))
             (nf, statsPass(nf), nt())
           }
         else {
-          val nf = traceMerge("write")(writeCommit(merged, v, parallelism,
+          val nf = ph("write")(writeCommit(merged, v, parallelism,
             idSchema = evolved))
           val (st, nt) = graft.util.Overlap.withBg(statsPass(nf)) { stF =>
             (stF(), tombstonePass())
@@ -1821,7 +1798,7 @@ class CowTable(
           ("files_candidate" -> candFiles.size.toLong) +
           ("files_kept" ->
             keptListing.valuesIterator.map(_.size.toLong).sum) ++
-          extraMetrics)
+          statsMetrics ++ ph.metrics ++ extraMetrics)
       val withStats =
         if (fileIndexEntries <= 0) next
         else {
@@ -1830,8 +1807,8 @@ class CowTable(
           next.copy(fileStats = (next.fileStats ++ newStats)
             .filter { case (f, _) => live(f) })
         }
-      traceMerge("manifest")(writeManifest(withStats))
-      traceMerge("clean")(clean())
+      writeManifest(withStats)
+      clean()
       } finally if (curCached) cur.unpersist()
     } finally incoming.unpersist()
   }
@@ -1874,6 +1851,9 @@ class CowTable(
     *   2. BLOOM phase — only the range-survivors' sidecar blooms are
     *      loaded (lazily; bytes proportional to files we might read
     *      anyway, not to the table) and probed the same way.
+    * With the index off on this handle (`fileIndexEntries <= 0`) or no
+    * indexed file among `parts`, every file is a candidate, in sorted
+    * partition order, and nothing is kept.
     */
   private def pruneCandidateFiles(
       m: Manifest, parts: Set[String], incoming: DataFrame)
@@ -1883,7 +1863,8 @@ class CowTable(
     val indexed = files.collect {
       case (_, f) if m.fileStats.contains(f) => f
     }
-    if (indexed.isEmpty) return (files.map(_._2), Map.empty)
+    if (fileIndexEntries <= 0 || indexed.isEmpty)
+      return (files.map(_._2), Map.empty)
     import spark.implicits._
     // NO key-side distinct and NO persist: the per-partition hit-set
     // already dedups file answers (duplicate keys only re-probe an array),
@@ -1969,12 +1950,25 @@ class CowTable(
       schema: StructType): Manifest = {
     if (fileIndexEntries <= 0) return m
     val live: Set[String] = m.partitions.valuesIterator.flatten.toSet
-    val fresh = takePendingStats(newFiles)
-      .getOrElse(collectFileStats(newFiles, schema, m.keyEncoding))
+    val (fresh, statsMetrics) =
+      newFileStats(newFiles, schema, m.keyEncoding)
     val stats = (m.fileStats ++ fresh)
       .filter { case (f, _) => live(f) }
-    m.copy(fileStats = stats)
+    m.copy(fileStats = stats, metrics = m.metrics ++ statsMetrics)
   }
+
+  /** Index entries for a commit's new files: the write tracker's stash,
+    * else the read-back pass — a fallback the commit records as
+    * `stats_readback = 1` in its metrics (the second value).
+    */
+  private def newFileStats(newFiles: Map[String, Seq[String]],
+      schema: StructType, enc: Long)
+      : (Map[String, FileStat], Map[String, Long]) =
+    takePendingStats(newFiles) match {
+      case Some(st) => (st, Map.empty)
+      case None => (collectFileStats(newFiles, schema, enc),
+        Map("stats_readback" -> 1L))
+    }
 
   /** ONE distributed pass over freshly written files (KEY COLUMNS ONLY —
     * column-pruned parquet reads of data this commit just wrote, typically
@@ -2816,20 +2810,13 @@ class CowTable(
       }
       if (matched.exists(_.isEmpty) || p.stats.size != want.size) None
       else {
-        // single build shared by the traced and untraced paths (r13
-        // ADVICE: the duplicated call invited drift under future edits)
-        val t0 = System.nanoTime()
-        val r = Some(buildFileStats(
+        Some(buildFileStats(
           matched.iterator.flatten.filter(_._2.numRows > 0L).map {
             case (w, s) =>
               (w, s.keyMin, s.keyMax, s.bloomBytes, s.statMins,
                 s.statMaxs, s.numRows, s.colBloomBytes)
           },
           p.liveStats, p.bloomColNames))
-        if (sys.env.contains("GRAFT_TRACE_MERGE"))
-          System.err.println(f"[mctrace] stats-build    " +
-            f"${(System.nanoTime() - t0) / 1e9}%.2fs files=${want.size}")
-        r
       }
     }
   }

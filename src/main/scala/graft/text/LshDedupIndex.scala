@@ -105,24 +105,14 @@ final class LshDedupIndex(
     * batch chained into the same component. `maxBucket = 0` keeps the
     * exact enumeration the index specs certify against the batch run.
     */
-  /** Env-gated per-stage ingest timing (GRAFT_TRACE_MERGE=1), the same
-    * attribution tool as CowTable's [mctrace].
-    */
-  private def trace[T](tag: String)(body: => T): T =
-    if (sys.env.contains("GRAFT_TRACE_MERGE")) {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(
-        f"[lshtrace] $tag%-14s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    } else body
-
   def ingest(
       newDocs: DataFrame,
       corpusText: DataFrame,
       num: Int,
       den: Int,
       maxBucket: Int = 0): DataFrame = {
+    // probe and candidate phases ride the index upsert's commit metrics
+    val ph = new graft.util.Phases
     val nb = nb0(newDocs)
     // Bounded probe (r14): the IN-list drives min/max + bloom FILE pruning
     // of the index, but collecting it is O(batch × bands) driver memory —
@@ -133,7 +123,7 @@ final class LshDedupIndex(
     // partially-matching files are dropped by the (band, bh) candidate
     // joins below either way.
     val bhD = nb.select("bh").distinct()
-    val bhSample = trace("band+collect")(
+    val bhSample = ph("band_collect")(
       bhD.limit(maxProbeInList + 1).collect().map(_.getLong(0)).toSeq)
     val existing = open() match {
       case Some(t) if bhSample.length <= maxProbeInList =>
@@ -174,15 +164,15 @@ final class LshDedupIndex(
     // only the index). The pin also replaces the r13 persist: the two
     // verify consumers read the same blocks, distributed, never the
     // driver.
-    val candC = trace("cand-pin")(cand.localCheckpoint())
+    val candC = ph("cand_pin")(cand.localCheckpoint())
     val batchRows = nb.select(col("band"), col("bh"), col("doc_id"))
     val verified = graft.util.Overlap.withBg {
-      trace("index-upsert")(open() match {
-        case Some(t) => t.upsert(batchRows)
-        case None => create().bulkInsert(batchRows)
-      })
+      open() match {
+        case Some(t) => t.upsert(batchRows, extraMetrics = ph.metrics)
+        case None => create().bulkInsert(batchRows, extraMetrics = ph.metrics)
+      }
     } { _ =>
-      trace("verify")(verify(candC, corpusText, num, den))
+      verify(candC, corpusText, num, den)
     }
     nb.unpersist()
     verified
@@ -203,8 +193,6 @@ final class LshDedupIndex(
   private def verify(
       candC: DataFrame, corpusText: DataFrame,
       num: Int, den: Int): DataFrame = {
-    if (sys.env.contains("GRAFT_TRACE_MERGE"))
-      System.err.println(s"[lshtrace] cand-pairs      ${candC.count()}")
     val ids = candC
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .distinct()

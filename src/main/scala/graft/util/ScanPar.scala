@@ -46,12 +46,15 @@ object ScanPar {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** A silently-disabled floor is undiagnosable (r13 ADVICE): when the
-    * gate skips on an exception, say so once per site at debug level.
+    * gate skips on an exception, warn once per site in Spark's log.
     */
+  private val log =
+    org.apache.logging.log4j.LogManager.getLogger("graft.util.ScanPar")
+  private val warnedSites = java.util.concurrent.ConcurrentHashMap
+    .newKeySet[String]()
   private def skipped(where: String, e: Throwable): Unit =
-    if (sys.env.contains("GRAFT_TRACE_MERGE"))
-      System.err.println(
-        s"[scanpar] gate skipped ($where): ${e.getClass.getSimpleName}")
+    if (warnedSites.add(where))
+      log.warn(s"scan-parallelism gate skipped ($where): $e")
 
   def apply(df: DataFrame, keys: Column*): DataFrame = {
     val spark = df.sparkSession

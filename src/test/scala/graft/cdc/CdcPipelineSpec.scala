@@ -46,6 +46,23 @@ class CdcPipelineSpec extends SparkSpec {
       m.get("cdc_deleted").contains(10L), s"metrics $m")
   }
 
+  test("the merge version records the batch's phase timings; a later " +
+      "commit does not inherit them") {
+    val (pipe, v0) = loaded(cfg, "wh-phases")
+    pipe.run(cfg, spark.read.parquet(cdcBatch))
+    val t = pipe.tableFor(cfg)
+    val Seq((op, m)) = commitsAfter(t, v0)
+    assert(op == "merge")
+    Seq("route", "touched", "prune", "write", "tombstones", "stats")
+      .map(p => s"phase_${p}_ms")
+      .foreach(k => assert(m.get(k).exists(_ >= 0L), s"$k in $m"))
+    val v1 = t.manifest.version
+    t.analyze()
+    val later = commitsAfter(t, v1)
+    assert(later.map(_._1) == Seq("analyze") &&
+      !later.head._2.keys.exists(_.startsWith("phase_")), s"$later")
+  }
+
   test("RunSummary counts follow the reference's routing on the golden " +
       "batch (COW, cdc_split_upsert, MOR)") {
     // 120 events; after W1: 90 I (ids 210-299), 10 U (100-109), 10 D

@@ -61,6 +61,26 @@ class MaintainedAggSpec extends SparkSpec {
     assert(state(ma.refresh()) == oracle(src))
   }
 
+  test("the fold commit records the fold's phase timings") {
+    val src = new CowTable(spark, tmpDir("ma-ph-src"), keyCols = Seq("k"),
+      precombineField = "v", trackCommitVersions = true)
+    src.bulkInsert(rows(("a", "g1", 1), ("b", "g2", 2)))
+    val ma = new MaintainedAgg(spark, tmpDir("ma-ph-st"), src,
+      AggSpec(Seq("grp"), "v"))
+    ma.refresh()
+    val v0 = ma.table.manifest.version
+    src.upsert(rows(("a", "g2", 5), ("c", "g3", 3)))
+    ma.refresh()
+    val folds = ma.table.history().filter(col("version") > v0)
+      .select("metrics").as[Map[String, Long]].collect().toSeq
+    assert(folds.size == 1, s"one fold commit, got $folds")
+    // fold phases, then the merge commit's own
+    Seq("feed", "delta", "affected", "touched", "prune", "write")
+      .map(p => s"phase_${p}_ms")
+      .foreach(k => assert(folds.head.get(k).exists(_ >= 0L),
+        s"$k in ${folds.head}"))
+  }
+
   test("star-schema chain: fact x dim -> maintained join -> maintained agg") {
     val fact = new CowTable(spark, tmpDir("ma2-f"), keyCols = Seq("k"),
       precombineField = "v", trackCommitVersions = true)

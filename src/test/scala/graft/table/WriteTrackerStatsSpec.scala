@@ -85,16 +85,23 @@ class WriteTrackerStatsSpec extends SparkSpec {
 
   test("kill-switch falls back to the read-back pass with equal results") {
     // The read-back pass runs only as a fallback (concurrent-writer
-    // writes, or a stash that does not match the committed files), so
-    // pin the equivalence the other way: a table whose stash is
-    // discarded (file-set mismatch can't be forced here) is covered by
-    // recomputeFileStatsForTest above; this test pins the unpartitioned
-    // single-key shape end to end.
+    // writes, or a stash that does not match the committed files).
+    // Concurrent-writer mode forces it here; the commit records the
+    // fallback as `stats_readback = 1`, a tracked commit records nothing.
     val t = new CowTable(spark, tmpDir("wt2"), keyCols = Seq("id"),
       fileIndexEntries = 50)
     t.bulkInsert((1 to 200).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
     assertParity(t)
     t.upsert(Seq((7L, "up")).toDF("id", "v"))
+    assertParity(t)
+    assert(!t.manifest.metrics.contains("stats_readback"),
+      s"tracked commit: ${t.manifest.metrics}")
+    val conf = "spark.sql.maxConcurrentOutputFileWriters"
+    spark.conf.set(conf, "2")
+    try t.upsert(Seq((8L, "up2")).toDF("id", "v"))
+    finally spark.conf.unset(conf)
+    assert(t.manifest.metrics.get("stats_readback").contains(1L),
+      s"fallback commit: ${t.manifest.metrics}")
     assertParity(t)
     assert(t.snapshot().count() == 200)
   }
