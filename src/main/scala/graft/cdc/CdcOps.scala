@@ -50,11 +50,22 @@ object CdcOps {
       df: DataFrame,
       keyCols: Seq[String],
       orderCol: String = "transaction_id",
+      tieBreak: Seq[Column] = Nil): DataFrame =
+    rankPerKey(df, keyCols, orderCol, tieBreak).filter(col(SeqByPk) === 1)
+
+  /** W1's ranking without its filter: every event, with `seq_by_pk` = 1
+    * on the final event of its key. One frame then yields both the raw
+    * event count and the deduped batch (`seq_by_pk` = 1).
+    */
+  def rankPerKey(
+      df: DataFrame,
+      keyCols: Seq[String],
+      orderCol: String = "transaction_id",
       tieBreak: Seq[Column] = Nil): DataFrame = {
     val w = Window
       .partitionBy(keyCols.map(col): _*)
       .orderBy(col(orderCol).desc +: tieBreak: _*)
-    df.withColumn(SeqByPk, row_number().over(w)).filter(col(SeqByPk) === 1)
+    df.withColumn(SeqByPk, row_number().over(w))
   }
 
   /** W1 as a single aggregation: `max_by(row, order)` per key. Semantically

@@ -1,7 +1,7 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, when}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, collect_set, count, lit, when}
 import org.apache.spark.storage.StorageLevel
 
 import graft.table.{CowTable, MorTable}
@@ -21,13 +21,18 @@ final case class RunSummary(
   * equivalent of the reference's `process_raw_data`
   * (reference: processData.py:272-390).
   *
-  * Dataflow (initial): scan → lowercase (P1) → empty-guard (M3) → drop
-  * bookkeeping (P2) → bulk insert (K1).
-  * Dataflow (incremental): scan → lowercase → latest-per-key dedup (W1, BEFORE
-  * Op routing — required for intra-batch insert-then-delete correctness,
-  * SURVEY.md §7.4) → one aggregate of the routed counts (P3-P6) → writes:
+  * Dataflow (initial): scan → lowercase (P1) → count (M2) → empty-guard
+  * (M3) → drop bookkeeping (P2) → bulk insert (K1).
+  * Dataflow (incremental): scan → lowercase → latest-per-key ranking (W1,
+  * BEFORE Op routing — required for intra-batch insert-then-delete
+  * correctness, SURVEY.md §7.4), persisted → ONE route aggregate over the
+  * ranked batch: the raw event count (M2, for the empty-guard M3), the
+  * routed counts of the rank-1 survivors (P3-P6) and the rewrite units
+  * they touch → writes:
   *   - copy-on-write: ONE merge commit that upserts the non-D rows and
-  *     deletes the D rows (K2+K3), `op` steering the merge;
+  *     deletes the D rows (K2+K3), `op` steering the merge; it takes the
+  *     aggregate's units, its D count and W1's one-row-per-key guarantee
+  *     instead of re-deriving them;
   *   - merge-on-read: an upsert log append (K2), then a delete log append
   *     (K3);
   *   - `cdc_split_upsert`: insert append (K4), upsert of the U rows (K2),
@@ -62,36 +67,44 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
   /** Process one raw batch (full-load or CDC parquet already read into `raw`).
     * Mirrors processData.py:272-390 minus the AWS plumbing. Every
     * successful write re-syncs the session catalog view (K6 — the
-    * reference's per-write hive sync, processData.py:160-169).
-    */
-  /** `preMergeHook` (optional) observes the batch's FINAL routed images —
+    * reference's per-write hive sync, processData.py:160-169); an empty
+    * batch writes nothing and syncs nothing.
+    *
+    * `preMergeHook` (optional) observes the batch's FINAL routed images —
     * (table-before-merges, deduped non-delete rows, deduped delete rows) —
     * before any merge commits, the interception point incremental-view
     * maintenance needs ([[IncrementalAgg.MaintainedView]]). Not invoked on
-    * initial loads (views seed from the loaded table instead).
+    * initial loads (views seed from the loaded table instead) nor on
+    * empty batches.
     */
   def run(cfg: TableConfig, raw: DataFrame,
       preMergeHook: (CowTable, DataFrame, DataFrame) => Unit =
         CdcPipeline.NoHook): RunSummary = {
-    // P1 + persist: the source feeds several consumers (count, routing
-    // branches) — cache it once (reference: processData.py:301).
-    val df = CdcOps.lowercaseColumns(raw).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = df.count() // M2 (reference: processData.py:303)
-      if (n == 0)        // M3 (reference: processData.py:305)
-        return RunSummary(cfg.tableName, initialLoad = false, inputRows = 0)
-      val table = tableFor(cfg)
-      val summary =
-        if (!table.exists) runInitial(cfg, table, df, n)
-        else runIncremental(cfg, table, df, n, preMergeHook)
-      if (table.exists) {
-        table.registerView(viewName(cfg))
-        // K6 persistent half: record the table in the warehouse catalog so
-        // later sessions can re-attach it (the reference's Glue sync).
-        new WarehouseCatalog(spark, warehousePath).sync(cfg)
+    val df = CdcOps.lowercaseColumns(raw)
+    val table = tableFor(cfg)
+    val existed = table.exists
+    val summary =
+      if (existed && CdcPipeline.cdcShaped(df))
+        runIncremental(cfg, table, df, preMergeHook)
+      else {
+        // persist: the count and the write both read the source
+        // (reference: processData.py:301)
+        val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val n = cached.count() // M2 (reference: processData.py:303)
+          if (n == 0)            // M3 (reference: processData.py:305)
+            RunSummary(cfg.tableName, initialLoad = false, inputRows = 0)
+          else if (!existed) runInitial(cfg, table, cached, n)
+          else runUpsertAll(cfg, table, cached, n, preMergeHook)
+        } finally cached.unpersist()
       }
-      summary
-    } finally df.unpersist()
+    if (summary.inputRows > 0) {
+      table.registerView(viewName(cfg))
+      // K6 persistent half: record the table in the warehouse catalog so
+      // later sessions can re-attach it (the reference's Glue sync).
+      new WarehouseCatalog(spark, warehousePath).sync(cfg)
+    }
+    summary
   }
 
   /** Initial/full load: no dedup (full loads assumed clean), bulk insert
@@ -104,13 +117,36 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
     RunSummary(cfg.tableName, initialLoad = true, inputRows = n, inserted = n)
   }
 
+  /** A batch WITHOUT CDC columns arriving at an existing table — e.g. a
+    * full-load file replayed after the bookmark state was lost — is a pure
+    * upsert of all rows, making re-runs idempotent. Robustness beyond the
+    * reference, which assumes incremental batches are always CDC-shaped
+    * and would fail analysis otherwise.
+    */
+  private def runUpsertAll(
+      cfg: TableConfig, table: CowTable, df: DataFrame, n: Long,
+      preMergeHook: (CowTable, DataFrame, DataFrame) => Unit): RunSummary = {
+    val payload0 = CdcOps.dropBookkeeping(df)
+    // The hook must observe the images the merge will ACTUALLY apply:
+    // mergeCommit precombines duplicate keys (greatest wins), so a raw
+    // payload with in-batch duplicates would make a MaintainedView count
+    // +1/+value per duplicate while the table keeps one row per key.
+    // Only paid when a hook is installed — mergeCommit runs the same
+    // precombine anyway, so without an observer the pass here would be
+    // a wasted second shuffle+sort over the batch.
+    val payload =
+      if ((preMergeHook ne CdcPipeline.NoHook) &&
+          table.precombineField.nonEmpty)
+        CdcOps.precombine(payload0, table.mergeIdCols,
+          table.precombineField)
+      else payload0
+    preMergeHook(table, payload, payload.limit(0))
+    table.upsert(payload, cfg.upsertParallelism)
+    RunSummary(cfg.tableName, initialLoad = false, inputRows = n,
+      upserted = n)
+  }
+
   /** Incremental CDC batch (reference: processData.py:313-388).
-    *
-    * Robustness beyond the reference (which assumes incremental batches are
-    * always CDC-shaped and would fail analysis otherwise): a batch WITHOUT
-    * CDC columns arriving at an existing table — e.g. a full-load file
-    * replayed after the bookmark state was lost — is treated as a pure
-    * upsert of all rows, making re-runs idempotent.
     *
     * CAUTION (faithful to the reference, SURVEY.md §7.4): when the CDC
     * columns are PRESENT but null — e.g. a full-load file read through a
@@ -120,60 +156,44 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
     * incremental pass (their natural order) to avoid the trap.
     */
   private def runIncremental(
-      cfg: TableConfig, table: CowTable, df: DataFrame, n: Long,
+      cfg: TableConfig, table: CowTable, df: DataFrame,
       preMergeHook: (CowTable, DataFrame, DataFrame) => Unit): RunSummary = {
-    val cols = df.columns.toSet
-    if (!cols.contains("op") || !cols.contains("transaction_id")) {
-      val payload0 = CdcOps.dropBookkeeping(df)
-      // The hook must observe the images the merge will ACTUALLY apply:
-      // mergeCommit precombines duplicate keys (greatest wins), so a raw
-      // payload with in-batch duplicates would make a MaintainedView count
-      // +1/+value per duplicate while the table keeps one row per key.
-      // Only paid when a hook is installed — mergeCommit runs the same
-      // precombine anyway, so without an observer the pass here would be
-      // a wasted second shuffle+sort over the batch.
-      val payload =
-        if ((preMergeHook ne CdcPipeline.NoHook) &&
-            table.precombineField.nonEmpty)
-          CdcOps.precombine(payload0, table.mergeIdCols,
-            table.precombineField)
-        else payload0
-      preMergeHook(table, payload, payload.limit(0))
-      table.upsert(payload, cfg.upsertParallelism)
-      return RunSummary(cfg.tableName, initialLoad = false, inputRows = n,
-        upserted = n)
-    }
-    // W1 — collapse multiple events per key to the final one of the batch.
-    // Routing time (W1 + the op counts) rides the COW merge commit's
-    // metrics as `phase_route_ms`.
-    val ph = new graft.util.Phases
-    val latest = ph("route")(CdcOps.latestPerKey(df, cfg.pkCols)
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    // W1 — rank each key's events; rank 1 is the final one of the batch.
+    // The ranked frame is persisted: the route aggregate fills it and
+    // every later consumer reads its survivors. The aggregate's time
+    // rides the COW merge commit's metrics as `phase_route_ms`.
+    val ranked = CdcOps.rankPerKey(df, cfg.pkCols)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
+      val ph = new graft.util.Phases
+      val r = ph("route")(
+        CdcPipeline.Route(ranked, table.unitKey(df.schema)))
+      if (r.events == 0) // M3 (reference: processData.py:305)
+        return RunSummary(cfg.tableName, initialLoad = false, inputRows = 0)
+      val latest = ranked.filter(col(CdcOps.SeqByPk) === 1)
       preMergeHook(table,
         CdcOps.dropBookkeeping(CdcOps.nonDeletes(latest)),
         CdcOps.dropBookkeeping(CdcOps.deletes(latest)))
-      val c = ph("route")(CdcPipeline.OpCounts(latest))
       if (cfg.cdcSplitUpsert || table.isInstanceOf[MorTable]) {
         if (cfg.cdcSplitUpsert) {
           // K4 — route pure inserts through the cheap append path
           // (reference: processData.py:348-362)
-          if (c.inserts > 0)
+          if (r.inserts > 0)
             table.insertAppend(CdcOps.dropBookkeeping(CdcOps.inserts(latest)),
               cfg.bulkInsertParallelism)
-          if (c.updates > 0)
+          if (r.updates > 0)
             table.upsert(CdcOps.dropBookkeeping(CdcOps.updates(latest)),
               cfg.upsertParallelism)
-        } else if (c.nonDeletes > 0)
+        } else if (r.nonDeletes > 0)
           // K2 as its own log append: MorTable.mergeInto compacts first,
           // which would change the table's compaction cadence
           table.upsert(CdcOps.dropBookkeeping(CdcOps.nonDeletes(latest)),
             cfg.upsertParallelism)
         // K3 — deletes last (reference: processData.py:377-382)
-        if (c.deletes > 0)
+        if (r.deletes > 0)
           table.delete(CdcOps.dropBookkeeping(CdcOps.deletes(latest)),
             cfg.upsertParallelism)
-      } else if (c.nonDeletes + c.deletes > 0) {
+      } else if (r.nonDeletes + r.deletes > 0) {
         // K2 + K3 in ONE partition-scoped merge commit. The reference's
         // upsert-then-delete pair (processData.py:365-382) rewrites the
         // same partitions twice; after W1 no key is both upserted and
@@ -182,7 +202,10 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
         // first, as the three-valued Op filters drop them (inside the
         // merge a null delete condition would fall through to update).
         // D and not-D are disjoint: the incoming-only tombstone contract
-        // holds. A batch with nothing to apply publishes no version.
+        // holds. The route aggregate already knows what the merge would
+        // otherwise re-derive: the touched units, that W1 left one row
+        // per key, and how many rows delete. A batch with nothing to
+        // apply publishes no version.
         table.mergeInto(
           latest.filter(col("op").isNotNull)
             .drop(CdcOps.BookkeepingCols.filterNot(_ == "op"): _*),
@@ -192,14 +215,17 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
           conditionCols = Seq("op"),
           tombstonesFromIncoming = true,
           extraMetrics = ph.metrics ++ Map(
-            "cdc_upserted" -> c.nonDeletes, "cdc_deleted" -> c.deletes))
+            "cdc_upserted" -> r.nonDeletes, "cdc_deleted" -> r.deletes),
+          touchedKeys = Some(r.units),
+          incomingUnique = true,
+          incomingDeletes = Some(r.deletes))
       }
       val summary = RunSummary(cfg.tableName, initialLoad = false,
-        inputRows = n, deleted = c.deletes)
+        inputRows = r.events, deleted = r.deletes)
       if (cfg.cdcSplitUpsert)
-        summary.copy(inserted = c.inserts, upserted = c.updates)
-      else summary.copy(upserted = c.nonDeletes)
-    } finally latest.unpersist()
+        summary.copy(inserted = r.inserts, upserted = r.updates)
+      else summary.copy(upserted = r.nonDeletes)
+    } finally ranked.unpersist()
   }
 
   /** Entry point A — the reference's `main()`: fetch the job's control
@@ -246,20 +272,32 @@ object CdcPipeline {
     */
   val NoHook: (CowTable, DataFrame, DataFrame) => Unit = (_, _, _) => ()
 
-  /** Routed row counts of a W1-deduped batch, from ONE aggregate job.
-    * Null-`op` rows count nowhere, as the three-valued Op filters of
-    * [[CdcOps]] drop them; `nonDeletes` counts every non-null op but D.
+  /** Whether a batch carries the CDC columns the incremental routing
+    * needs (column names already lowercased).
     */
-  private final case class OpCounts(
-      inserts: Long, updates: Long, nonDeletes: Long, deletes: Long)
+  private def cdcShaped(df: DataFrame): Boolean =
+    Set("op", "transaction_id").subsetOf(df.columns.toSet)
 
-  private object OpCounts {
-    def apply(latest: DataFrame): OpCounts = {
+  /** The routing facts of a W1-ranked batch, from ONE aggregate job: the
+    * raw event count (every ranked row) and, over the W1 survivors, the
+    * routed row counts and the rewrite units their non-null-op rows touch
+    * (`unitKey` values; bounded by unit cardinality). Null-`op` rows count
+    * nowhere, as the three-valued Op filters of [[CdcOps]] drop them;
+    * `nonDeletes` counts every non-null op but D.
+    */
+  private final case class Route(events: Long, inserts: Long, updates: Long,
+      nonDeletes: Long, deletes: Long, units: Set[String])
+
+  private object Route {
+    def apply(ranked: DataFrame, unitKey: Column): Route = {
       val op = col("op")
-      val r = latest.agg(
-        count(when(op === "I", 1)), count(when(op === "U", 1)),
-        count(when(op =!= "D", 1)), count(when(op === "D", 1))).head()
-      OpCounts(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+      val last = col(CdcOps.SeqByPk) === 1
+      def rows(c: Column) = count(when(last && c, 1))
+      val r = ranked.agg(count(lit(1)), rows(op === "I"), rows(op === "U"),
+        rows(op =!= "D"), rows(op === "D"),
+        collect_set(when(last && op.isNotNull, unitKey))).head()
+      Route(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getSeq[String](5).toSet)
     }
   }
 }

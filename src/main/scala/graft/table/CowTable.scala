@@ -397,8 +397,8 @@ class CowTable(
     * rewrites only the buckets that contain matched keys — at 100 TB the
     * rewrite unit drops from whole partitions to partition/numBuckets.
     */
-  private def bucketExpr: org.apache.spark.sql.Column =
-    pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets.toLong))
+  private def bucketExpr(keys: Seq[Column]): Column =
+    pmod(xxhash64(keys: _*), lit(numBuckets.toLong))
 
   protected def dirColsAll: Seq[String] =
     partitionCols.map(dirCol) ++
@@ -1045,7 +1045,8 @@ class CowTable(
     *
     * `upsert` ≡ `mergeInto(df)` with defaults; `delete` ≡ always-delete
     * with no insert. Same exactness rules as every merge: intra-batch
-    * duplicates precombine first, schema evolution is additive.
+    * duplicates precombine first (unless the caller vouches there are
+    * none, `incomingUnique`), schema evolution is additive.
     */
   def mergeInto(df: DataFrame, parallelism: Int = 0,
       whenMatchedDelete: Column = lit(false),
@@ -1084,7 +1085,20 @@ class CowTable(
         * incoming is a heavy fold plan whose keys the caller already
         * probed (the IVM point-read folds).
         */
-      touchedKeys: Option[Set[String]] = None): Unit = {
+      touchedKeys: Option[Set[String]] = None,
+      /** The caller guarantees `df` holds at most one row per
+        * [[mergeIdCols]] identity (a CDC batch after its latest-per-key
+        * dedup): the merge skips its precombine window (unless its
+        * schema evolution changes an identity column's type) and the
+        * incoming-only tombstone keys skip their `distinct()`.
+        */
+      incomingUnique: Boolean = false,
+      /** With `tombstonesFromIncoming`: the caller-known number of
+        * incoming rows the delete condition selects. `Some(0)` skips the
+        * tombstone pass; `Some(n > 0)` skips its emptiness probe job.
+        * Ignored without `tombstonesFromIncoming`.
+        */
+      incomingDeletes: Option[Long] = None): Unit = {
     // matched-delete keys become change-feed tombstones; skipped when the
     // delete branch is the literal-false default (no second join pass).
     // The tombstone pass re-joins cur×incoming, so mergeCommit caches the
@@ -1101,12 +1115,16 @@ class CowTable(
     }
     val deletedKeys: Option[(DataFrame, DataFrame) => DataFrame] =
       if (!mayDelete) None
-      else if (tombstonesFromIncoming) Some { (_, incoming) =>
-        // i.*-only condition: evaluate it on the incoming batch alone
-        // (resolution fails loudly if the caller's condition references
-        // c.*) — no stored-side join, no candidate-read cache
-        incoming.alias("i").filter(whenMatchedDelete)
-          .select(mergeIdCols.map(col): _*).distinct()
+      else if (tombstonesFromIncoming) {
+        if (incomingDeletes.contains(0L)) None
+        else Some { (_, incoming) =>
+          // i.*-only condition: evaluate it on the incoming batch alone
+          // (resolution fails loudly if the caller's condition references
+          // c.*) — no stored-side join, no candidate-read cache
+          val keys = incoming.alias("i").filter(whenMatchedDelete)
+            .select(mergeIdCols.map(col): _*)
+          if (incomingUnique) keys else keys.distinct()
+        }
       }
       else Some { (cur, incoming) =>
         val c = cur.withColumn("_c_present", lit(true)).alias("c")
@@ -1119,7 +1137,9 @@ class CowTable(
     mergeCommit(df, parallelism, "merge", extraMetrics,
       excludeCols = conditionCols, tombstoneKeys = deletedKeys,
       tombstonesUseCur = !tombstonesFromIncoming,
-      touchedHint = touchedKeys) {
+      touchedHint = touchedKeys, precombined = incomingUnique,
+      tombstonesNonEmpty =
+        tombstonesFromIncoming && incomingDeletes.exists(_ > 0L)) {
       (cur, incoming) =>
       val outCols = incoming.columns.toIndexedSeq
         .filterNot(conditionCols.contains) // padded/evolved schema
@@ -1696,7 +1716,11 @@ class CowTable(
       tombstonesUseCur: Boolean = true,
       // caller-supplied touched partition/bucket keys (must be a SUPERSET
       // of the incoming batch's — see mergeInto's touchedKeys)
-      touchedHint: Option[Set[String]] = None)(
+      touchedHint: Option[Set[String]] = None,
+      // `df` is already one row per identity (mergeInto's incomingUnique)
+      precombined: Boolean = false,
+      // the tombstone key frame is known to hold a row: no probe job
+      tombstonesNonEmpty: Boolean = false)(
       merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     // pad() null-fills absent columns for additive evolution — but a batch
     // MISSING its record-key columns would merge as null-keyed garbage;
@@ -1714,7 +1738,11 @@ class CowTable(
     val padTarget = StructType(evolved.fields ++
       stamped.schema.fields.filter(f => excludeCols.contains(f.name)))
     val incoming0 = pad(stamped, padTarget)
-    val incoming = (if (precombineField.nonEmpty)
+    // a unique batch stays unique through pad unless a cast of an
+    // identity column could map two values to one
+    val unique = precombined && mergeIdCols.forall(c => stamped.schema
+      .find(_.name == c).forall(_.dataType == evolved(c).dataType))
+    val incoming = (if (precombineField.nonEmpty && !unique)
       CdcOps.precombine(incoming0, mergeIdCols, precombineField)
     else incoming0).persist()
     // phase timings ride this commit's metrics; manifest publish and
@@ -1747,7 +1775,7 @@ class CowTable(
       def tombstonePass(): Map[String, Seq[String]] = tombstoneKeys match {
         case Some(keysOf) =>
           val fls = ph("tombstones")(
-            writeTombstones(keysOf(cur, incoming), v))
+            writeTombstones(keysOf(cur, incoming), v, tombstonesNonEmpty))
           if (fls.isEmpty) m.tombstones
           else m.tombstones + (v.toString -> fls)
         case None => m.tombstones
@@ -2590,25 +2618,45 @@ class CowTable(
       else lit(null).cast(f.dataType).as(f.name, f.metadata)): _*)
   }
 
-  /** Distinct partition values of the incoming batch, as manifest keys.
-    * Collects only partition VALUES (bounded by partition cardinality) —
-    * never data rows.
+  /** Distinct rewrite units ([[unitKeyExpr]]) of the incoming batch, as
+    * manifest keys. Collects only unit keys (bounded by unit cardinality)
+    * — never data rows.
     */
-  protected def touchedPartitionKeys(incoming: DataFrame): Set[String] = {
-    if (partitionCols.isEmpty && numBuckets == 0) return Set("")
-    val sel = partitionCols.map(c => col(c).cast("string")) ++
-      (if (numBuckets > 0) Seq(bucketExpr.cast("string")) else Nil)
-    incoming.select(sel.toIndexedSeq: _*).distinct().collect().iterator
-      .map { r =>
-        val parts = partitionCols.zipWithIndex.map { case (c, i) =>
-          val v = if (r.isNullAt(i)) HiveDefaultPartition else r.getString(i)
-          s"$c=$v"
-        }
-        val bucket =
-          if (numBuckets > 0) Seq(s"$BucketCol=${r.getString(partitionCols.length)}")
-          else Nil
-        (parts ++ bucket).mkString("/")
-      }.toSet
+  private[table] def touchedPartitionKeys(incoming: DataFrame): Set[String] =
+    if (partitionCols.isEmpty && numBuckets == 0) Set("")
+    else incoming.select(unitKeyExpr(col)).distinct().collect()
+      .iterator.map(_.getString(0)).toSet
+
+  /** Each row's rewrite unit as its manifest key: `c=v` per partition
+    * column (a null value as [[HiveDefaultPartition]]), then
+    * `__bucket=b` on a bucketed table, joined by `/`; "" on an
+    * unpartitioned, unbucketed table. `typed` yields each unit column.
+    */
+  private def unitKeyExpr(typed: String => Column): Column = {
+    val parts = partitionCols.map(c => concat(lit(s"$c="),
+      coalesce(typed(c).cast("string"), lit(HiveDefaultPartition))))
+    val bucket =
+      if (numBuckets == 0) Nil
+      else Seq(concat(lit(s"$BucketCol="),
+        bucketExpr(keyCols.map(typed)).cast("string")))
+    if (parts.isEmpty && bucket.isEmpty) lit("")
+    else concat_ws("/", parts ++ bucket: _*)
+  }
+
+  /** The rewrite unit of a row of a frame with schema `in`, as a merge of
+    * that frame writes it: unit columns cast to the merge's evolved types
+    * (a bucket hashes the key's typed value), absent ones null. Its
+    * distinct values over a merge batch are exactly the [[mergeInto]]
+    * `touchedKeys` set the merge would compute itself. Reads the
+    * manifest's schema; the table must exist.
+    */
+  def unitKey(in: StructType): Column = {
+    val unitCols = (partitionCols ++ keyCols).toSet
+    val ev = evolveSchema(manifest,
+      StructType(in.filter(f => unitCols(f.name))))
+    unitKeyExpr(c =>
+      (if (in.fieldNames.contains(c)) col(c) else lit(null))
+        .cast(ev(c).dataType))
   }
 
   /** Write one commit's data under `files/c{v}` and return the partition →
@@ -2678,7 +2726,8 @@ class CowTable(
       withChecks(CowTable.reapplyFieldIds(df, idSchema)))(
       (d, c) => d.withColumn(dirCol(c), col(c)))
     val dup =
-      if (numBuckets > 0) dup0.withColumn(dirCol(BucketCol), bucketExpr)
+      if (numBuckets > 0)
+        dup0.withColumn(dirCol(BucketCol), bucketExpr(keyCols.map(col)))
       else dup0
     // Shuffle-parallelism knob from table config (reference:
     // hoodie.*.shuffle.parallelism, processData.py:194,202,208). Partitioned
@@ -2825,7 +2874,8 @@ class CowTable(
     * the deleting commit's stamp) under a per-attempt unique `files/t{v}-*`
     * dir; returns basePath-relative paths (empty when no keys).
     */
-  protected def writeTombstones(keys: DataFrame, v: Long): Seq[String] = {
+  protected def writeTombstones(keys: DataFrame, v: Long,
+      knownNonEmpty: Boolean = false): Seq[String] = {
     val stamped =
       if (keys.columns.contains(CommitVerCol)) keys
       else keys.withColumn(CommitVerCol, lit(v))
@@ -2839,8 +2889,9 @@ class CowTable(
     // (tombstone key frames derive from mergeCommit's persisted frames),
     // stops at the first row, and runs in the same overlapped slot, so
     // the non-empty case pays one cheap background job and the empty
-    // case never touches the filesystem at all.
-    if (stamped.isEmpty) return Nil
+    // case never touches the filesystem at all. A caller that knows the
+    // frame holds a row skips the probe.
+    if (!knownNonEmpty && stamped.isEmpty) return Nil
     val dir = new Path(basePath,
       s"files/t$v-${java.util.UUID.randomUUID.toString.take(8)}")
     // failure path deletes the partially-written dir: tombstone dirs are

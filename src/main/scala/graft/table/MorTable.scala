@@ -117,11 +117,14 @@ class MorTable(
       conditionCols: Seq[String] = Nil,
       tombstonesFromIncoming: Boolean = false,
       extraMetrics: Map[String, Long] = Map.empty,
-      touchedKeys: Option[Set[String]] = None): Unit = {
+      touchedKeys: Option[Set[String]] = None,
+      incomingUnique: Boolean = false,
+      incomingDeletes: Option[Long] = None): Unit = {
     compactLogs(parallelism)
     super.mergeInto(df, parallelism, whenMatchedDelete, whenMatchedUpdate,
       insertUnmatched, insertCondition, conditionCols,
-      tombstonesFromIncoming, extraMetrics, touchedKeys)
+      tombstonesFromIncoming, extraMetrics, touchedKeys, incomingUnique,
+      incomingDeletes)
   }
 
   private def logAppend(df: DataFrame, parallelism: Int, op: String,

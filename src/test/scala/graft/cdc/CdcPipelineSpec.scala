@@ -2,6 +2,7 @@ package graft.cdc
 
 import graft.SparkSpec
 import graft.table.CowTable
+import org.apache.spark.JobCount
 import org.apache.spark.sql.functions._
 
 /** How `CdcPipeline.run` commits an incremental batch: one merge commit per
@@ -118,6 +119,73 @@ class CdcPipelineSpec extends SparkSpec {
     }
     assert(feed.deletedIds(t.manifest.version) ==
       (200 to 209).map(i => s"MeasurementID-$i").toSet)
+  }
+
+  test("the golden batch stays within its Spark job budget (COW 11, " +
+      "MOR 8)") {
+    // Measured counts; every added job round fails this. Before the
+    // one-aggregate routing the batch ran 16 (COW) and 11 (MOR) jobs.
+    Seq(cfg -> 11, cfg.copy(storageType = "mor") -> 8).foreach {
+      case (c, budget) =>
+        val (pipe, _) = loaded(c, s"wh-jobs-${c.storageType}")
+        val batch = spark.read.parquet(cdcBatch)
+        val (s, jobs) = JobCount(spark.sparkContext)(pipe.run(c, batch))
+        assert(s.inputRows == 120)
+        assert(jobs <= budget, s"${c.storageType}: $jobs jobs > $budget")
+    }
+  }
+
+  test("a bucketed batch touching the null partition applies exactly and " +
+      "rewrites only its touched units") {
+    val hive = CowTable.HiveDefaultPartition
+    val c = TableConfig(dbName = "bk", schemaName = "s", tableName = "t",
+      primaryKey = "id", partitionKey = "part", precombineField = "value",
+      glueJobName = "j", numBuckets = 4)
+    val pipe = new CdcPipeline(spark, tmpDir("wh-bucket-null"))
+    // k40 is alone in p5, so only its D touches that unit
+    val init = (0 until 20).map(i =>
+      (s"k$i", if (i % 4 == 0) null else s"p${i % 2}", i.toDouble)) :+
+      (("k40", "p5", 40.0))
+    pipe.run(c, init.toDF("id", "part", "value"))
+    val t = pipe.tableFor(c)
+    val before = t.manifest
+    val batch = Seq(
+      PropEv("U", "k0", null, 100.0, "000000001"),
+      PropEv("D", "k4", null, 4.0, "000000002"),
+      PropEv("U", "k1", "p1", 101.0, "000000003"),
+      PropEv("I", "k30", null, 30.0, "000000004"),
+      PropEv("I", "k31", "p9", 31.0, "000000005"),
+      PropEv("I", "k32", "p0", 32.0, "000000006"),
+      PropEv("D", "k32", "p0", 32.0, "000000007"),
+      PropEv("U", "k2", "p0", 50.0, "000000008"),
+      PropEv("U", "k2", "p0", 52.0, "000000009"),
+      PropEv(null, "k3", "p1", 0.0, "000000010"),
+      PropEv("D", "k40", "p5", 40.0, "000000011"))
+    val s = pipe.run(c, batch.toDF())
+    assert(s.inputRows == batch.size && s.upserted == 5 && s.deleted == 3,
+      s"$s")
+    // the replay model: the last event per key, D removes, null op ignored
+    val latest = batch.groupBy(_.id).values.map(_.maxBy(_.transaction_id))
+      .filter(_.op != null)
+    val want = latest.foldLeft(init.map(r => r._1 -> (r._2, r._3)).toMap) {
+      (m, e) => if (e.op == "D") m - e.id else m + (e.id -> (e.part, e.value))
+    }
+    val got = t.snapshot().select("id", "part", "value")
+      .as[(String, String, Double)].collect()
+    assert(got.map(_._1).distinct.length == got.length,
+      s"duplicate keys: ${got.toSeq.sortBy(_._1)}")
+    assert(got.map(r => r._1 -> (r._2, r._3)).toMap == want)
+    // the units the batch's routed rows fall in (Hudi-style key-hash
+    // buckets), of which the pre-existing ones are rewritten
+    val touched = latest.toSeq.map(e => (e.id, e.part)).toDF("id", "part")
+      .select(col("part"), pmod(xxhash64(col("id")), lit(4L)))
+      .as[(String, Long)].collect()
+      .map { case (p, b) => s"part=${Option(p).getOrElse(hive)}/__bucket=$b" }
+      .toSet.intersect(before.partitions.keySet)
+    assert(touched.exists(_.startsWith(s"part=$hive/")))
+    val Seq((op, m)) = commitsAfter(t, before.version)
+    assert(op == "merge" &&
+      m.get("units_rewritten").contains(touched.size.toLong), s"$m")
   }
 
   test("a MOR batch still publishes an upsert log and then a delete log") {

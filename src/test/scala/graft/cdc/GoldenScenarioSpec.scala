@@ -1,6 +1,7 @@
 package graft.cdc
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end replay of the reference's own operational validation scenario
@@ -93,10 +94,33 @@ class GoldenScenarioSpec extends SparkSpec {
     val wh = tmpDir("warehouse")
     val pipe = new CdcPipeline(spark, wh)
     pipe.run(cfg, spark.read.parquet(fullLoad))
+    val table = pipe.tableFor(cfg)
+    def catalogVersions = new java.io.File(s"$wh/_catalog").list()
+      .filter(_.matches("v\\d+\\.json")).sorted.toSeq
+    val (v0, cat0) = (table.manifest.version, catalogVersions)
+    // a hook-carrying run: the hook sees only the table's columns, and
+    // nothing at all for an empty batch
+    val view = new IncrementalAgg.MaintainedView(spark, tmpDir("agg"),
+      IncrementalAgg.AggSpec(Seq("measurement_date"), "measurement_value"))
+    val seen = scala.collection.mutable.Buffer.empty[Set[String]]
+    val hook: (graft.table.CowTable, DataFrame, DataFrame) => Unit =
+      (t, ups, dels) => {
+        seen += ups.columns.toSet += dels.columns.toSet
+        view.hook(t, ups, dels)
+      }
     val empty = spark.read.parquet(cdcBatch).limit(0)
-    val s = pipe.run(cfg, empty)
+    val s = pipe.run(cfg, empty, preMergeHook = hook)
     assert(s.inputRows == 0)
-    assert(pipe.tableFor(cfg).snapshot().count() == 100)
+    assert(seen.isEmpty, "no hook call for an empty batch")
+    assert(table.manifest.version == v0, "no version for an empty batch")
+    assert(catalogVersions == cat0, "no catalog version for an empty batch")
+    assert(table.snapshot().count() == 100)
+    view.commit(table)
+    pipe.run(cfg, spark.read.parquet(cdcBatch), preMergeHook = hook)
+    val cols = table.snapshot().columns.toSet
+    assert(seen.nonEmpty && seen.forall(_ == cols), s"$seen vs $cols")
+    view.commit(table)
+    assert(view.current.agg(sum("cnt")).head().getLong(0) == 190)
   }
 
   test("recursive multi-path raw scan skips missing candidate paths") {

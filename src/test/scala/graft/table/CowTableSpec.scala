@@ -155,6 +155,44 @@ class CowTableSpec extends SparkSpec {
     assert(t.snapshot().count() == 1)
   }
 
+  test("unitKey's distinct values are touchedPartitionKeys and the " +
+      "written units") {
+    val hive = CowTable.HiveDefaultPartition
+    def check(t: CowTable, df: org.apache.spark.sql.DataFrame,
+        want: Set[String]): Unit = {
+      t.bulkInsert(df)
+      val viaExpr = df.select(collect_set(t.unitKey(df.schema))).head()
+        .getSeq[String](0).toSet
+      assert(viaExpr == t.touchedPartitionKeys(df), s"${t.partitionCols}")
+      assert(viaExpr == t.manifest.partitions.keySet, s"${t.partitionCols}")
+      if (want.nonEmpty) assert(viaExpr == want)
+    }
+    check(new CowTable(spark, tmpDir("cow"), keyCols = Seq("id")),
+      Seq(("a", 1.0), ("b", 2.0)).toDF("id", "v"), Set(""))
+    check(new CowTable(spark, tmpDir("cow"), keyCols = Seq("id"),
+        partitionCols = Seq("p", "q")),
+      Seq(("a", "p1", 1, 1.0), ("b", "p1", 2, 2.0), ("c", "p2", 1, 3.0))
+        .toDF("id", "p", "q", "v"),
+      Set("p=p1/q=1", "p=p1/q=2", "p=p2/q=1"))
+    check(freshTable(),
+      Seq(("a", Some("p1"), 1.0), ("b", None, 2.0)).toDF("id", "p", "v"),
+      Set("p=p1", s"p=$hive"))
+    val bucketed = (1 to 40).map(i =>
+      (i.toLong, if (i % 5 == 0) None else Some(s"p${i % 2}"), i.toDouble))
+      .toDF("id", "p", "v")
+    val tb = new CowTable(spark, tmpDir("cow"), keyCols = Seq("id"),
+      partitionCols = Seq("p"), numBuckets = 4)
+    check(tb, bucketed, Set.empty)
+    assert(tb.manifest.partitions.keySet.exists(_.startsWith(s"p=$hive/")))
+    // an int-keyed batch against long keys: each row's bucket hashes the
+    // key as the merge writes it (long), not as the batch carries it
+    val ints = bucketed.withColumn("id", col("id").cast("int"))
+    def units(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id").cast("long"), tb.unitKey(df.schema))
+        .as[(Long, String)].collect().toMap
+    assert(units(ints) == units(bucketed))
+  }
+
   test("cleaner retains keepCommits manifests and live data dirs") {
     val t = new CowTable(spark, tmpDir("cow"), keyCols = Seq("id"),
       partitionCols = Seq("p"), precombineField = "v", keepCommits = 3)
