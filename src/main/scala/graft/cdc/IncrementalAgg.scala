@@ -121,8 +121,10 @@ object IncrementalAgg {
         else Some(delta(t, ups, dels, spec).localCheckpoint())
     }
 
-    /** Fold the captured delta (or seed by recompute) and persist. Returns
-      * the updated aggregate state.
+    /** Fold the captured delta (or seed by recompute) and persist — ONE
+      * commit: updated groups and vanished groups land together, so a
+      * crash cannot leave vanished groups at stale counts. Returns the
+      * updated aggregate state.
       */
     def commit(source: CowTable): DataFrame = {
       val next = pending match {
@@ -133,14 +135,9 @@ object IncrementalAgg {
       pending = None
       if (!table.exists) table.bulkInsert(next)
       else {
-        val gone = current.select(spec.groupCols.map(col): _*)
-          .except(next.select(spec.groupCols.map(col): _*))
-        table.upsert(next)
-        if (!gone.isEmpty)
-          // delete needs the full row shape; count/sum values are ignored
-          table.delete(gone
-            .withColumn("cnt", lit(0L))
-            .withColumn("total", lit(null).cast(next.schema("total").dataType)))
+        val g = spec.groupCols.map(col)
+        FeedView.commitFold(table, Some(next),
+          Some(current.select(g: _*).except(next.select(g: _*))), Map.empty)
       }
       current
     }

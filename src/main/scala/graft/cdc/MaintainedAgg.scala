@@ -30,13 +30,10 @@ import graft.table.CowTable
   * the window end) — so the repair cost scales with the hit groups'
   * stripes, not the table.
   *
-  * The high-water mark (last folded source version) rides the aggregate
-  * table's own commit metrics (monotone — survives service commits), the
-  * same exactly-once ledger as [[MaintainedJoin]]; the whole fold
-  * (updates + vanished-group deletes + mark) lands in ONE `mergeInto`
-  * commit, so there is no crash window where the mark outruns the state.
-  * A mark that ages out of the source's retained timeline reseeds by
-  * full recompute.
+  * Seeding, the mark, reseed-on-retention-race and the fold commit are
+  * the shared [[FeedView]] protocol: the whole fold (updates +
+  * vanished-group deletes + mark) lands in ONE `mergeInto` commit, so
+  * there is no crash window where the mark outruns the state.
   *
   * vs [[IncrementalAgg.MaintainedView]]: that form captures deltas inside
   * the CDC pipeline's pre-merge hook (no stamps needed on the source);
@@ -70,8 +67,9 @@ final class MaintainedAgg(
       */
     rowFilter: Option[Column] = None,
     /** Stamp the STATE table's own commits so it can feed further
-      * consumers — the [[MaintainedJoin]] `trackViewVersions` analog;
-      * what [[MaintainedDistinct]] stacks on.
+      * consumers (a stacked [[MaintainedAgg]] or [[MaintainedJoin]], a
+      * table stream, [[CowTable.changeFeed]] readers) — the
+      * [[MaintainedJoin]] `trackViewVersions` analog.
       */
     trackStateVersions: Boolean = false,
     /** Key-hash buckets for the STATE table. Essential when the state is
@@ -92,7 +90,8 @@ final class MaintainedAgg(
       * the default stays off for small states, where the merge's extra
       * prune probe job outweighs the scan it saves.
       */
-    stateIndexEntries: Int = 0) {
+    stateIndexEntries: Int = 0)
+  extends FeedView(Seq(MaintainedAgg.SrcVersionMark -> src)) {
 
   require(src.trackCommitVersions,
     "MaintainedAgg sources must track commit versions (change feeds)")
@@ -110,7 +109,6 @@ final class MaintainedAgg(
   private[graft] def aggTracksSquares: Boolean = trackSquares
   private[graft] def hasRowFilter: Boolean = rowFilter.nonEmpty
 
-  private val Mark = MaintainedAgg.SrcVersionMark
   private val ct = CowTable.ChangeTypeCol
   private val g = spec.groupCols
 
@@ -141,7 +139,7 @@ final class MaintainedAgg(
       .cast(org.apache.spark.sql.types.DecimalType(38, 12))
   }
 
-  /** The full aggregate state of `df` from scratch (seed/reseed path and
+  /** The full aggregate state of `df` from scratch (the seed frame and
     * the recompute oracle for tests).
     */
   def recompute(df0: DataFrame): DataFrame = {
@@ -178,7 +176,7 @@ final class MaintainedAgg(
     * registry is per-process; the sidecar is the durable record (the
     * catalog-of-MV-definitions a warehouse engine keeps).
     */
-  private def writeMvSidecar(): Unit = {
+  override protected def seeded(): Unit = {
     def js(s: String) = "\"" + s.replace("\\", "\\\\")
       .replace("\"", "\\\"") + "\""
     def arr(xs: Seq[String]) = xs.map(js).mkString("[", ",", "]")
@@ -195,129 +193,22 @@ final class MaintainedAgg(
     try out.write(txt.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Seed/reseed frame + the mark it must claim: the snapshot is PINNED
-    * at the version the mark records. Seeding from an unpinned
-    * `snapshot()` while stamping an earlier head would let a source
-    * commit that lands mid-(re)seed be present in the seeded state AND
-    * folded again by the next refresh — and agg deltas are not
-    * replay-idempotent (double-count). Pins at the NOW-current head (the
-    * newest version is always inside retention).
+  protected def seedFrame(heads: Seq[Long]): DataFrame =
+    recompute(src.snapshotAt(heads.head))
+
+  /** Filtered aggregates: U adds iff the new image passes, B retracts iff
+    * the old image passed — one row-level filter.
     */
-  private def pinnedRecompute(): (DataFrame, Long) = {
-    val h = src.manifest.version
-    (recompute(src.snapshotAt(h)), h)
+  protected def feedOf(s: CowTable, from: Long, to: Long): DataFrame = {
+    val f = s.changeFeedWithPreimages(from, to)
+    rowFilter.map(f.filter).getOrElse(f)
   }
 
-  /** The last successful fold's OWN change-feed window, for STACKED
-    * consumers (a second MaintainedAgg fed by this one's state table —
-    * [[MaintainedDistinct]]'s level 2): `(stateVersionBefore,
-    * stateVersionAfter, U∪B rows)`. The frame is exactly the U/B subset
-    * `changeFeedWithPreimages(before, after)` on the state table would
-    * return — U = the fold's written next-state rows (the only rows
-    * stamped with the new version), B = the fold's point-read preimages
-    * (`affected` covers every touched-or-deleted stored group) — derived
-    * from the fold's already-checkpointed churn frames, so a consumer
-    * that takes it skips re-reading the just-written files AND the
-    * preimage point-read. D rows are omitted: the feed-fold algebra is
-    * "+U, −B, ignore D" (a delete's retraction rides its B row). None
-    * whenever the incremental feed does not exist: seed, reseed, no-op
-    * refresh, or a failed fold. Consumers MUST verify their mark equals
-    * `stateVersionBefore` and fall back to the table feed otherwise —
-    * [[refreshFromFeed]] does.
-    */
-  private[cdc] var lastFoldFeed: Option[(Long, Long, DataFrame)] = None
-
-  /** [[refresh]] for a stacked consumer, taking the upstream state
-    * table's window feed directly from [[lastFoldFeed]] instead of
-    * re-reading it from disk. Safe by construction: the in-memory path
-    * engages only when this aggregate's mark equals the window's start
-    * version (anything else — lag from a crash between the two levels'
-    * folds, a reseeded upstream, a no-op — falls back to the plain
-    * table-feed [[refresh]], which is always correct), and any failure
-    * inside the in-memory fold falls back the same way (the fold is one
-    * atomic commit, so a crash leaves no partial state).
-    */
-  private[cdc] def refreshFromFeed(ub: DataFrame, sinceVer: Long,
-      headVer: Long): DataFrame = {
-    lastFoldFeed = None
-    if (!table.exists) return refresh()
-    val mark = table.manifest.metrics.getOrElse(Mark, 0L)
-    if (mark != sinceVer) return refresh()
-    if (mark == headVer) return current
-    try {
-      val ph = new graft.util.Phases
-      val feed = ph("feed")(rowFilter.map(ub.filter).getOrElse(ub)
-        .localCheckpoint(false))
-      foldWindow(feed, headVer, ph)
-    } catch {
-      case t if scala.util.control.NonFatal(t) => refresh()
-    }
-  }
-
-  /** Fold all source commits since the last refresh — or seed/reseed by
-    * recompute when the state doesn't exist or the mark fell behind
-    * retention. Returns the refreshed aggregate.
-    */
-  def refresh(): DataFrame = {
-    lastFoldFeed = None // a stale window never survives a new refresh
-    val head = src.manifest.version
-    if (!table.exists) {
-      val (seedDf, h) = pinnedRecompute()
-      table.bulkInsert(seedDf, extraMetrics = Map(Mark -> h))
-      writeMvSidecar()
-      return current
-    }
-    val mark = table.manifest.metrics.getOrElse(Mark, 0L)
-    if (mark == head) return current
-    // LAZY localCheckpoint(false) on the feed: it has exactly ONE
-    // consumer (the delta aggregation below — the extremes algebra rides
-    // the delta since it carries per-group insert/retraction min/max),
-    // so the lazy form truncates lineage like the eager one but
-    // materializes INSIDE the delta job instead of paying a dedicated
-    // checkpoint round. Everything multi-consumer below stays EAGER: a
-    // lazy checkpoint referenced twice inside one job computes its
-    // subtree twice (measured slower, not faster).
-    val ph = new graft.util.Phases
-    val feed =
-      try {
-        val f0 = src.changeFeedWithPreimages(mark, head)
-        // filtered aggregates: U adds iff the new image passes, B
-        // retracts iff the old image passed — one row-level filter
-        ph("feed")(rowFilter.map(f0.filter).getOrElse(f0)
-          .localCheckpoint(false))
-      } catch {
-        // mark aged out of the source's retained timeline (driver-side
-        // manifest miss) or a data file already cleaned at DataFrame
-        // construction: reseed
-        case t: Throwable if t.isInstanceOf[IllegalArgumentException] ||
-            MaintainedJoin.sourceRetentionRace(t,
-              Seq(src.basePath), table.basePath) =>
-          val (seedDf, h) = pinnedRecompute()
-          table.overwrite(seedDf, extraMetrics = Map(Mark -> h))
-          return current
-      }
-    // the lazily-checkpointed feed reads its data files inside the fold's
-    // jobs; a retention clean racing the fold surfaces there as a
-    // (Spark-wrapped) FileNotFoundException — route it to the same reseed
-    // as a driver-side manifest miss. Safe: the fold is a single commit,
-    // so a caught crash left no partial state behind, and the reseed
-    // overwrite is correct from any prior state.
-    try foldWindow(feed, head, ph)
-    catch {
-      case t: Throwable if MaintainedJoin.sourceRetentionRace(t,
-          Seq(src.basePath), table.basePath) =>
-        val (seedDf, h) = pinnedRecompute()
-        table.overwrite(seedDf, extraMetrics = Map(Mark -> h))
-        current
-    }
-  }
-
-  /** Apply one change-feed window to the state as a single merge commit
-    * (updates + deletes + mark advance atomically), which also records
-    * the fold's phase timings.
-    */
-  private def foldWindow(feed: DataFrame, head: Long,
-      ph: graft.util.Phases): DataFrame = {
+  /** One change-feed window's next state and vanished groups. */
+  protected def fold(feeds: Seq[Option[DataFrame]], heads: Seq[Long],
+      ph: graft.util.Phases): FeedView.Fold = {
+    val feed = feeds.head.get
+    val head = heads.head
     // internal aliases are _ma_-reserved: a GROUP column may legitimately
     // be named "v"/"w" (e.g. MaintainedDistinct's support level groups by
     // the value column)
@@ -377,22 +268,9 @@ final class MaintainedAgg(
       }
       (d(), aff)
     }
-    def marksM = Map(Mark -> head) ++ ph.metrics
-    if (deltaEmpty) {
-      // stamp-filtered feed held nothing: still advance the ledger
-      // (the concurrently point-read state subset is simply unused)
-      val verBefore = table.manifest.version
-      table.delete(current.limit(0), extraMetrics = marksM)
-      // the ledger-advance commit carries an EMPTY window: hand stacked
-      // consumers the empty feed so they advance without a disk read.
-      // Claim the window ONLY if our commit is exactly verBefore+1 — a
-      // concurrent OCC writer landing first would otherwise hide its
-      // window inside ours (see the mergeInto handoff below).
-      if (table.manifest.version == verBefore + 1)
-        lastFoldFeed = Some((verBefore, verBefore + 1,
-          current.limit(0).withColumn(ct, lit("U").cast("string"))))
-      return current
-    }
+    // stamp-filtered feed held nothing: only the ledger advances (the
+    // concurrently point-read state subset is simply unused)
+    if (deltaEmpty) return FeedView.Empty
     // FUSED next state: counts, sums AND the optimistic min/max fold all
     // ride ONE union + aggregation. least(stored_min, inserted_min) over
     // a full-outer group join is exactly min() over the two sides
@@ -451,75 +329,13 @@ final class MaintainedAgg(
       if (minMaxCols.isEmpty) nextBase
       else ph("extremes")(withExtremes(nextBase, delta, head, affected,
         ph))
-    // ONE commit applies updates + deletes + the mark advance
-    // atomically — a two-commit fold could crash with the mark already
-    // advanced and the deletes lost, and (unlike MaintainedJoin's image
-    // folds) an agg delta re-applied on replay would double-count.
-    val goneBase = {
-      val b = goneKeys
-        .withColumn("cnt", lit(0L))
-        .withColumn("total", lit(null).cast(next.schema("total").dataType))
-      if (trackSquares)
-        b.withColumn("total_sq",
-          lit(null).cast(next.schema("total_sq").dataType))
-      else b
-    }
-    val gone = minMaxCols.foldLeft(goneBase) { (df, c) =>
-        df.withColumn(s"min_$c",
-            lit(null).cast(next.schema(s"min_$c").dataType))
-          .withColumn(s"max_$c",
-            lit(null).cast(next.schema(s"max_$c").dataType))
-      }
-      .withColumn("_ma_del", lit(true))
     // the delete branch is ALWAYS routed (no vanished-group pre-gate):
-    // the incoming-only tombstone pass is a filter + distinct over the
-    // already-cached merge input, run on a background thread UNDER the
-    // commit's write job — so discovering "no gone groups" there costs
-    // zero wall time, where the old pre-gate spent a dedicated
-    // emptiness-probe JOB on every fold (fully sequential in the
-    // no-extremes fold, which has no planning work to hide it behind).
-    // writeTombstones records nothing when the key set turns out empty
-    // (footer row-count guard). Routed by one flag column, so
-    // delete/insert conditions are disjoint — the incoming-only
-    // tombstone pass applies (and gone keys are stored groups by
-    // construction, so it never over-approximates here).
-    val verBefore = table.manifest.version
-    table.mergeInto(next.withColumn("_ma_del", lit(false))
-        .unionByName(gone),
-      whenMatchedDelete = col("i._ma_del"),
-      insertCondition = !col("i._ma_del"),
-      conditionCols = Seq("_ma_del"),
-      tombstonesFromIncoming = true,
-      extraMetrics = marksM,
-      touchedKeys = Some(touchedKeys))
-    // Window feed for stacked consumers (see [[lastFoldFeed]]): U rows
-    // are exactly the merge's incoming next-state rows (the only rows
-    // the new version stamps; the gone branch writes tombstones, not
-    // data), B rows are exactly the point-read preimages (`affected` =
-    // every churned STORED group = next's updated groups ∪ the gone
-    // groups). Both sides derive from checkpointed churn frames, so a
-    // consumer evaluating this never touches the just-written files.
-    // Claim the window ONLY if our commit is exactly verBefore+1: under
-    // OCC a concurrent writer's rebased commit could land between our
-    // mergeInto and this manifest read, and a (verBefore, laterVersion)
-    // claim would silently swallow that foreign window — the version
-    // check routes that case to the table-feed fallback, which reads
-    // both windows. And only when extremes are OFF: with minMaxCols a
-    // tie-hit window's `next` embeds withExtremes' authoritative source
-    // re-aggregation, so a stacked consumer evaluating the handoff would
-    // re-run source-reading jobs at its own fold time — correct, but
-    // breaking this feed's "already checkpointed, no source reads" cost
-    // contract and racing source retention. The only current consumer
-    // (MaintainedDistinct's count level) never tracks extremes; an
-    // extremes-tracking upstream simply routes consumers to the
-    // table-feed path, which reads the committed window.
-    if (minMaxCols.isEmpty && table.manifest.version == verBefore + 1)
-      lastFoldFeed = Some((verBefore, verBefore + 1,
-        next.select(stateCols.map(col): _*)
-          .withColumn(ct, lit("U").cast("string"))
-          .unionByName(affected.select(stateCols.map(col): _*)
-            .withColumn(ct, lit("B").cast("string")))))
-    current
+    // the commit's incoming-only tombstone pass runs UNDER its write job
+    // and discovers "no gone groups" at zero wall time, where a pre-gate
+    // would spend a dedicated emptiness-probe job on every fold. Gone keys
+    // are stored groups by construction, so the pass never
+    // over-approximates here.
+    FeedView.Fold(Some(next), Some(goneKeys), Some(touchedKeys))
   }
 
   /** Repair the fused state's min/max where optimism can't answer.

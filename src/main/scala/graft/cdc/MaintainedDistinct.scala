@@ -65,7 +65,8 @@ final class MaintainedDistinct(
       * of the whole state; size it so support-rows/bucket stays a
       * comfortable file size (the usual numBuckets guidance).
       */
-    supportBuckets: Int = 16) {
+    supportBuckets: Int = 16)
+  extends FeedView(Seq(MaintainedAgg.SrcVersionMark -> src)) {
 
   require(!groupCols.contains(valueCol),
     "valueCol must not also be a group column")
@@ -75,7 +76,6 @@ final class MaintainedDistinct(
   require(src.trackCommitVersions,
     "MaintainedDistinct sources must track commit versions (change feeds)")
 
-  private val Mark = MaintainedAgg.SrcVersionMark
   private val ct = CowTable.ChangeTypeCol
   private val g = groupCols
   private val pairCols = groupCols :+ valueCol
@@ -93,79 +93,33 @@ final class MaintainedDistinct(
   private lazy val vType =
     src.snapshot().schema(valueCol).dataType
 
-  /** Seed frame (BOTH levels, one bulkInsert) + the pinned mark — same
-    * pinning argument as [[MaintainedAgg]]'s seed: stamping an earlier
-    * head while seeding from an unpinned snapshot would double-fold a
-    * mid-seed source commit.
-    */
-  private def pinnedSeed(): (DataFrame, Long) = {
-    val h = src.manifest.version
+  /** Seed frame: BOTH levels, one bulkInsert. */
+  protected def seedFrame(heads: Seq[Long]): DataFrame = {
     // eager checkpoint: the support seed feeds BOTH the lvl-1 branch and
     // the rollup aggregation — lazy/no checkpoint would re-run the
     // source scan + pair aggregation once per branch inside the seed's
     // write job
-    val sup = src.snapshotAt(h)
+    val sup = src.snapshotAt(heads.head)
       .groupBy(pairCols.map(col): _*).agg(count(lit(1)).as("cnt"))
       .localCheckpoint()
     val cts = sup.filter(col(valueCol).isNotNull)
       .groupBy(g.map(col): _*)
       .agg(count(lit(1)).as("cnt"), sum(col("cnt")).as("vcnt"))
-    val seed = sup
-      .withColumn("lvl", lit(1)).withColumn("vcnt", lit(null).cast("long"))
+    sup.withColumn("lvl", lit(1)).withColumn("vcnt", lit(null).cast("long"))
       .select(stateCols.map(col): _*)
       .unionByName(cts
         .withColumn(valueCol, lit(null).cast(vType))
         .withColumn("lvl", lit(2))
         .select(stateCols.map(col): _*))
-    (seed, h)
   }
 
-  /** Fold all source commits since the last refresh — or seed/reseed by
-    * recompute when the state doesn't exist or the mark fell behind the
-    * source's retained timeline. ONE commit per refresh. Returns
-    * [[current]].
-    */
-  def refresh(): DataFrame = {
-    val head = src.manifest.version
-    if (!table.exists) {
-      val (seedDf, h) = pinnedSeed()
-      table.bulkInsert(seedDf, extraMetrics = Map(Mark -> h))
-      return current
-    }
-    val mark = table.manifest.metrics.getOrElse(Mark, 0L)
-    if (mark == head) return current
-    // lazy checkpoint: the feed's blocks materialize inside the first
-    // consuming job and are shared by the concurrent delta/point-read
-    // scans (block computation is single-flighted by the block manager)
-    val ph = new graft.util.Phases
-    val feed =
-      try ph("feed")(
-        src.changeFeedWithPreimages(mark, head).localCheckpoint(false))
-      catch {
-        case t: Throwable if t.isInstanceOf[IllegalArgumentException] ||
-            MaintainedJoin.sourceRetentionRace(t,
-              Seq(src.basePath), table.basePath) =>
-          val (seedDf, h) = pinnedSeed()
-          table.overwrite(seedDf, extraMetrics = Map(Mark -> h))
-          return current
-      }
-    try foldWindow(feed, head, ph)
-    catch {
-      case t: Throwable if MaintainedJoin.sourceRetentionRace(t,
-          Seq(src.basePath), table.basePath) =>
-        val (seedDf, h) = pinnedSeed()
-        table.overwrite(seedDf, extraMetrics = Map(Mark -> h))
-        current
-    }
-  }
+  protected def feedOf(s: CowTable, from: Long, to: Long): DataFrame =
+    s.changeFeedWithPreimages(from, to)
 
-  /** Apply one change-feed window to BOTH levels as a single merge commit
-    * (updates + deletes + mark advance atomically), which also records
-    * the fold's phase timings.
-    */
-  private def foldWindow(feed: DataFrame, head: Long,
-      ph: graft.util.Phases): DataFrame = {
-    val ub = feed.filter(col(ct).isin("U", "B"))
+  /** One change-feed window's effect on BOTH levels (one commit). */
+  protected def fold(feeds: Seq[Option[DataFrame]], heads: Seq[Long],
+      ph: graft.util.Phases): FeedView.Fold = {
+    val ub = feeds.head.get.filter(col(ct).isin("U", "B"))
     val signed = ub.select((pairCols.map(col) :+
       when(col(ct) === "U", 1L).otherwise(-1L).as("_md_w")): _*)
     // The delta aggregation and the two-level state point-read are
@@ -196,12 +150,8 @@ final class MaintainedDistinct(
       }
       (d(), a)
     }
-    val marks = Map(Mark -> head) ++ ph.metrics
-    if (d1Empty) {
-      // stamp-filtered feed held nothing: still advance the ledger
-      table.delete(table.snapshot().limit(0), extraMetrics = marks)
-      return current
-    }
+    // stamp-filtered feed held nothing: only the ledger advances
+    if (d1Empty) return FeedView.Empty
     // aff is an EAGER checkpoint; the level slices are trivial filters
     // over its in-memory blocks, so multi-consumer reuse costs nothing
     val aff1 = aff.filter(col("lvl") === 1)
@@ -246,32 +196,14 @@ final class MaintainedDistinct(
       .filter(aff2("cnt") + d2("d_cnt") === 0)
       .select(g.map(c => aff2(c).as(c)): _*)
     // ---- one commit: both levels' upserts + deletes + the mark -----------
-    val nullLong = lit(null).cast("long")
-    val inc1 = next1
-      .withColumn("lvl", lit(1)).withColumn("vcnt", nullLong)
-      .withColumn("_md_del", lit(false))
-    val del1 = gone1
-      .withColumn("lvl", lit(1)).withColumn("cnt", lit(0L))
-      .withColumn("vcnt", nullLong).withColumn("_md_del", lit(true))
-    val inc2 = next2
-      .withColumn(valueCol, lit(null).cast(vType)).withColumn("lvl", lit(2))
-      .withColumn("_md_del", lit(false))
-    val del2 = gone2
-      .withColumn(valueCol, lit(null).cast(vType)).withColumn("lvl", lit(2))
-      .withColumn("cnt", lit(0L)).withColumn("vcnt", nullLong)
-      .withColumn("_md_del", lit(true))
-    val outCols = stateCols :+ "_md_del"
-    val incoming = Seq(inc1, del1, inc2, del2)
-      .map(_.select(outCols.map(col): _*))
-      .reduce(_ unionByName _)
-    table.mergeInto(incoming,
-      whenMatchedDelete = col("i._md_del"),
-      insertCondition = !col("i._md_del"),
-      conditionCols = Seq("_md_del"),
-      tombstonesFromIncoming = true,
-      extraMetrics = marks,
-      touchedKeys = Some(touchedKeys))
-    current
+    val nullV = lit(null).cast(vType)
+    FeedView.Fold(
+      Some(next1.withColumn("lvl", lit(1)).unionByName(
+        next2.withColumn(valueCol, nullV).withColumn("lvl", lit(2)),
+        allowMissingColumns = true)),
+      Some(gone1.withColumn("lvl", lit(1)).unionByName(
+        gone2.withColumn(valueCol, nullV).withColumn("lvl", lit(2)))),
+      Some(touchedKeys))
   }
 
   /** groupCols..., `distinct_cnt` (= COUNT(DISTINCT valueCol)),

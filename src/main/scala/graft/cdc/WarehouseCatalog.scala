@@ -75,7 +75,8 @@ class WarehouseCatalog(spark: SparkSession, warehousePath: String) {
         // stale version number.
         case e: VersionTakenException if attempt < maxAttempts =>
           // another writer took our version slot: re-read and re-merge
-          System.err.println(s"[catalog] publish conflict, retrying: ${e.getMessage}")
+          WarehouseCatalog.log.warn(
+            s"catalog publish conflict, retrying: ${e.getMessage}")
       }
     }
   }
@@ -136,6 +137,9 @@ object WarehouseCatalog {
     */
   final class VersionTakenException(msg: String)
     extends IllegalStateException(msg)
+
+  private val log = org.apache.logging.log4j.LogManager.getLogger(
+    "graft.cdc.WarehouseCatalog")
 
   private val VersionName = "v(\\d+)\\.json".r
   /** Catalog versions retained (mirrors manifest retention). */

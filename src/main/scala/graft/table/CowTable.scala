@@ -774,21 +774,21 @@ class CowTable(
     */
   protected def lookupInTouched(m: Manifest, probe: DataFrame)
       : (DataFrame, Set[String]) = {
-    val probed = touchedPartitionKeys(probe)
+    require(partitionCols.forall(probe.columns.contains),
+      s"key lookup probe must carry the partition columns $partitionCols; " +
+        s"got ${probe.columns.toSeq}")
+    val probed = touchedPartitionKeys(probe, m.schema)
     val existing = probed.intersect(m.partitions.keySet)
     val (candFiles, _) = pruneCandidateFiles(m, existing, probe)
     // Identity is NON-GLOBAL (key + partition, matching the merge scope):
-    // when the probe carries the partition columns, they join too —
-    // otherwise a record key present in two touched partitions would match
-    // rows the caller's partition never touched (e.g. IncrementalAgg would
+    // a record key present in two touched partitions must not match rows
+    // the caller's partition never touched (e.g. IncrementalAgg would
     // retract an image the merge did not replace).
-    val idCols = (keyCols ++
-      partitionCols.filter(probe.columns.contains)).distinct
     val stored = readFiles(m, candFiles)
-    val probeKeys = probe.select(idCols.map(col): _*).distinct()
+    val probeKeys = probe.select(mergeIdCols.map(col): _*).distinct()
     // null-safe: null partition values (hive default partition) must match
     (stored.join(probeKeys,
-      idCols.map(c => stored(c) <=> probeKeys(c)).reduce(_ && _),
+      mergeIdCols.map(c => stored(c) <=> probeKeys(c)).reduce(_ && _),
       "left_semi"), probed)
   }
 
@@ -1099,6 +1099,7 @@ class CowTable(
         * Ignored without `tombstonesFromIncoming`.
         */
       incomingDeletes: Option[Long] = None): Unit = {
+    compactBeforeRewrite(parallelism)
     // matched-delete keys become change-feed tombstones; skipped when the
     // delete branch is the literal-false default (no second join pass).
     // The tombstone pass re-joins cur×incoming, so mergeCommit caches the
@@ -1172,7 +1173,8 @@ class CowTable(
     * Implemented as a full-outer merge with per-column coalesce — one
     * shuffle, same partition/bucket-scoped rewrite as the full upsert.
     */
-  def upsertPartial(df: DataFrame, parallelism: Int = 0): Unit =
+  def upsertPartial(df: DataFrame, parallelism: Int = 0): Unit = {
+    compactBeforeRewrite(parallelism)
     mergeCommit(df, parallelism, "upsert_partial") { (cur, incoming) =>
       val payload = cur.columns.filterNot(mergeIdCols.contains).toIndexedSeq
       val cond = mergeIdCols
@@ -1182,6 +1184,13 @@ class CowTable(
           coalesce(col(s"i.$c"), col(s"c.$c")).as(c)) ++ payload.map(c =>
           coalesce(col(s"i.$c"), col(s"c.$c")).as(c)): _*)
     }
+  }
+
+  /** Runs before a merge that reads stored values ([[mergeInto]],
+    * [[upsertPartial]]); a no-op here, [[MorTable]] folds its pending
+    * delta logs first.
+    */
+  protected def compactBeforeRewrite(parallelism: Int): Unit = ()
 
   /** K3 — keyed delete: stored rows matching incoming record keys are
     * removed (Hudi `EmptyHoodieRecordPayload` tombstone semantics,
@@ -1233,7 +1242,7 @@ class CowTable(
     val v = m.version + 1
     val incoming = df.persist()
     try {
-      val touched = touchedPartitionKeys(incoming)
+      val touched = touchedPartitionKeys(incoming, m.schema)
         .intersect(m.partitions.keySet)
       val (candFiles, _) = pruneCandidateFiles(m, touched, incoming)
       val probeKeys =
@@ -1453,7 +1462,8 @@ class CowTable(
     else incoming0).persist()
     try {
       val existing =
-        touchedPartitionKeys(incoming).intersect(m.partitions.keySet)
+        touchedPartitionKeys(incoming, evolved)
+          .intersect(m.partitions.keySet)
       val (candFiles, _) = pruneCandidateFiles(m, existing, incoming)
       val probeKeys =
         incoming.select(mergeIdCols.map(col): _*).distinct()
@@ -1754,7 +1764,7 @@ class CowTable(
       // tombstone pass / the write), overlapped instead of paying a
       // dedicated blocking job round over the merge input's full plan
       val touched = ph("touched")(
-        touchedHint.getOrElse(touchedPartitionKeys(incoming)))
+        touchedHint.getOrElse(touchedPartitionKeys(incoming, evolved)))
       val rewritten = touched.intersect(m.partitions.keySet)
       // File-level pruning (record-key index on): within the touched
       // units, only files whose key range + bloom can contain an incoming
@@ -2618,21 +2628,28 @@ class CowTable(
       else lit(null).cast(f.dataType).as(f.name, f.metadata)): _*)
   }
 
-  /** Distinct rewrite units ([[unitKeyExpr]]) of the incoming batch, as
-    * manifest keys. Collects only unit keys (bounded by unit cardinality)
-    * — never data rows.
+  /** Distinct rewrite units of `incoming`, as manifest keys, with its
+    * unit columns typed as in `types` ([[unitKeyExpr]]). Collects only unit
+    * keys (bounded by unit cardinality) — never data rows.
     */
-  private[table] def touchedPartitionKeys(incoming: DataFrame): Set[String] =
+  private[table] def touchedPartitionKeys(incoming: DataFrame,
+      types: StructType): Set[String] =
     if (partitionCols.isEmpty && numBuckets == 0) Set("")
-    else incoming.select(unitKeyExpr(col)).distinct().collect()
-      .iterator.map(_.getString(0)).toSet
+    else incoming.select(unitKeyExpr(incoming.schema, types)).distinct()
+      .collect().iterator.map(_.getString(0)).toSet
 
   /** Each row's rewrite unit as its manifest key: `c=v` per partition
     * column (a null value as [[HiveDefaultPartition]]), then
     * `__bucket=b` on a bucketed table, joined by `/`; "" on an
-    * unpartitioned, unbucketed table. `typed` yields each unit column.
+    * unpartitioned, unbucketed table. Each unit column of the frame
+    * (schema `in`) is cast to its type in `types`, absent ones null: a
+    * bucket hashes the key's value as the table stores it, whatever type
+    * the frame carries it in.
     */
-  private def unitKeyExpr(typed: String => Column): Column = {
+  private def unitKeyExpr(in: StructType, types: StructType): Column = {
+    def typed(c: String): Column =
+      (if (in.fieldNames.contains(c)) col(c) else lit(null))
+        .cast(types(c).dataType)
     val parts = partitionCols.map(c => concat(lit(s"$c="),
       coalesce(typed(c).cast("string"), lit(HiveDefaultPartition))))
     val bucket =
@@ -2652,11 +2669,8 @@ class CowTable(
     */
   def unitKey(in: StructType): Column = {
     val unitCols = (partitionCols ++ keyCols).toSet
-    val ev = evolveSchema(manifest,
-      StructType(in.filter(f => unitCols(f.name))))
-    unitKeyExpr(c =>
-      (if (in.fieldNames.contains(c)) col(c) else lit(null))
-        .cast(ev(c).dataType))
+    unitKeyExpr(in, evolveSchema(manifest,
+      StructType(in.filter(f => unitCols(f.name)))))
   }
 
   /** Write one commit's data under `files/c{v}` and return the partition →

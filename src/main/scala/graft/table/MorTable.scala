@@ -96,35 +96,13 @@ class MorTable(
       extraMetrics: Map[String, Long] = Map.empty): Unit =
     logAppend(df, parallelism, LogDelete, extraMetrics)
 
-  /** Partial-column upsert needs the stored values to coalesce against, so
-    * it cannot be expressed as a pure log append: compact pending logs
-    * first, then run the COW full-outer merge against clean base files.
+  /** Partial-column upserts and conditional merges read stored values
+    * (the coalesce; `c.*` conditions), so they cannot be pure log
+    * appends: compact pending logs first and merge against clean base
+    * files.
     */
-  override def upsertPartial(df: DataFrame, parallelism: Int = 0): Unit = {
-    compactLogs(parallelism)
-    super.upsertPartial(df, parallelism)
-  }
-
-  /** Conditional merge reads stored values (its conditions reference
-    * `c.*`), so like [[upsertPartial]] it compacts pending logs first and
-    * merges against clean base files.
-    */
-  override def mergeInto(df: DataFrame, parallelism: Int = 0,
-      whenMatchedDelete: org.apache.spark.sql.Column = lit(false),
-      whenMatchedUpdate: org.apache.spark.sql.Column = lit(true),
-      insertUnmatched: Boolean = true,
-      insertCondition: org.apache.spark.sql.Column = lit(true),
-      conditionCols: Seq[String] = Nil,
-      tombstonesFromIncoming: Boolean = false,
-      extraMetrics: Map[String, Long] = Map.empty,
-      touchedKeys: Option[Set[String]] = None,
-      incomingUnique: Boolean = false,
-      incomingDeletes: Option[Long] = None): Unit = {
-    compactLogs(parallelism)
-    super.mergeInto(df, parallelism, whenMatchedDelete, whenMatchedUpdate,
-      insertUnmatched, insertCondition, conditionCols,
-      tombstonesFromIncoming, extraMetrics, touchedKeys, incomingUnique,
-      incomingDeletes)
+  override protected def compactBeforeRewrite(parallelism: Int): Unit = {
+    compactLogs(parallelism); ()
   }
 
   private def logAppend(df: DataFrame, parallelism: Int, op: String,

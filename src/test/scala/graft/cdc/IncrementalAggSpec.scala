@@ -1,5 +1,7 @@
 package graft.cdc
 
+import org.apache.spark.JobCount
+
 import graft.SparkSpec
 import graft.table.CowTable
 import IncrementalAgg.AggSpec
@@ -106,6 +108,30 @@ class IncrementalAggSpec extends SparkSpec {
       .recompute(pipe.tableFor(cfg).snapshot(), vSpec).collect()
       .map(r => r.get(0).toString -> ((r.getLong(1), r.getDecimal(2))))
     assert(afterCdc.toMap == expect.toMap)
+  }
+
+  test("a commit where a group vanishes is one version within its job " +
+      "budget") {
+    val t = new CowTable(spark, tmpDir("ivm-one"), keyCols = Seq("id"),
+      precombineField = "v")
+    val spec = AggSpec(Seq("p"), "v")
+    t.bulkInsert(rows(Seq(("a", "g1", 1.0), ("b", "g2", 2.0))))
+    val view = new IncrementalAgg.MaintainedView(spark, tmpDir("ivm-one-v"),
+      spec)
+    view.commit(t)
+    val ups = rows(Seq(("a", "g1", 3.0)))
+    val dels = rows(Seq(("b", "g2", 0.0)))
+    view.hook(t, ups, dels)
+    t.upsert(ups)
+    t.delete(dels)
+    val v0 = view.table.manifest.version
+    val (_, jobs) = JobCount(spark.sparkContext)(view.commit(t))
+    // g2 vanishes in the same commit that updates g1 (measured 12 jobs;
+    // the upsert-then-delete form took 16 jobs and two versions)
+    assert(view.table.manifest.version == v0 + 1)
+    assert(jobs <= 12, s"$jobs jobs > 12")
+    assert(collectAgg(view.current) == Map("g1" -> ((1L,
+      new java.math.BigDecimal("3.000000")))))
   }
 
   test("retraction respects key+partition identity across partitions") {

@@ -390,15 +390,11 @@ class MaintainedAggSpec extends SparkSpec {
     }
   }
 
-  test("stacked aggs: in-memory window handoff equals the table feed " +
-      "and refuses a lagging consumer") {
-    // Generic two-level stacking over lastFoldFeed/refreshFromFeed (the
-    // object-store optimization: a stacked consumer skips re-reading the
-    // just-written state files and the preimage point-read). Level 1
-    // counts (grp, v) pair multiplicities; level 2 counts level-1 rows
-    // per grp. The in-memory path must equal the table-feed path, and a
-    // consumer whose mark lags the handoff window (a crash between the
-    // levels' folds) must fall back to the table feed and still be exact.
+  test("stacked aggs fed by table commits stay exact after a lag") {
+    // Level 1 counts (grp, v) pair multiplicities; level 2 counts level-1
+    // rows per grp, folding level 1's own state-table commits. A level 2
+    // that lags level 1 (a crash between the levels' refreshes) folds
+    // every pending window on its next refresh and is still exact.
     val src = new CowTable(spark, tmpDir("sk-src"), keyCols = Seq("k"),
       precombineField = "v", trackCommitVersions = true)
     src.bulkInsert(rows(("a", "g1", 1), ("b", "g1", 1), ("c", "g2", 3)))
@@ -409,34 +405,23 @@ class MaintainedAggSpec extends SparkSpec {
     def l2Oracle(): Map[String, (Long, Double)] = state(
       IncrementalAgg.recompute(l1.table.snapshot(),
         AggSpec(Seq("grp"), "cnt")))
-    def refreshStacked(): Unit = {
-      l1.refresh()
-      l1.lastFoldFeed match {
-        case Some((since, head, ub)) => l2.refreshFromFeed(ub, since, head)
-        case None => l2.refresh()
-      }
-    }
-    refreshStacked() // seeds: no handoff, table path
+    def refreshStacked(): Unit = { l1.refresh(); l2.refresh(); () }
+    refreshStacked() // seeds
     assert(state(l2.current) == l2Oracle())
 
-    // plain fold window → the handoff engages (assert it existed)
     src.upsert(rows(("d", "g1", 9), ("b", "g2", 3)))
-    l1.refresh()
-    assert(l1.lastFoldFeed.nonEmpty, "plain fold must hand off")
-    val (since, head, ub) = l1.lastFoldFeed.get
-    l2.refreshFromFeed(ub, since, head)
+    refreshStacked()
     assert(state(l2.current) == l2Oracle())
 
-    // crash-lag: level 1 folds a window ALONE, more churn lands, the
-    // next handoff's start is ahead of level 2's mark → must fall back
-    // to the table feed and fold BOTH pending windows
+    // crash-lag: level 1 folds a window ALONE, more churn lands, and the
+    // next stacked refresh folds BOTH pending level-1 commits into level 2
     src.upsert(rows(("e", "g3", 4)))
     l1.refresh() // level 2 skipped ("crash")
     src.delete(rows(("c", "g2", 0)))
     refreshStacked()
     assert(state(l2.current) == l2Oracle())
 
-    // and a subsequent clean handoff window stays exact
+    // and a subsequent window stays exact
     src.upsert(rows(("f", "g1", 7)))
     refreshStacked()
     assert(state(l2.current) == l2Oracle())

@@ -178,11 +178,11 @@ class MaintainedJoinSpec extends SparkSpec {
     val fnf = new java.io.FileNotFoundException("gone.parquet")
     val wrapped = new RuntimeException("job aborted",
       new RuntimeException("stage failure", fnf))
-    assert(MaintainedJoin.retentionRace(wrapped))
-    assert(!MaintainedJoin.retentionRace(new RuntimeException("other")))
+    assert(FeedView.retentionRace(wrapped))
+    assert(!FeedView.retentionRace(new RuntimeException("other")))
     // self-referential cause chains terminate
     val self = new RuntimeException("self")
-    assert(!MaintainedJoin.retentionRace(self))
+    assert(!FeedView.retentionRace(self))
   }
 
   test("sourceRetentionRace: own-table missing files crash, source " +
@@ -192,18 +192,18 @@ class MaintainedJoinSpec extends SparkSpec {
     val srcs = Seq("/wh/src_a", "/wh/src_b")
     val own = "/wh/view"
     // a source's cleaned file: retention race -> reseed
-    assert(MaintainedJoin.sourceRetentionRace(
+    assert(FeedView.sourceRetentionRace(
       fnf("File /wh/src_a/files/v3-x.parquet does not exist"), srcs, own))
     // the VIEW's own file going missing is NOT a retention race — the
     // refresh must fail loudly instead of degrading to silent reseeds
-    assert(!MaintainedJoin.sourceRetentionRace(
+    assert(!FeedView.sourceRetentionRace(
       fnf("File /wh/view/files/v7-y.parquet does not exist"), srcs, own))
     // no path in the message (executor-wrapped causes): conservative
     // resilient default, reseed
-    assert(MaintainedJoin.sourceRetentionRace(
+    assert(FeedView.sourceRetentionRace(
       fnf("raced data file"), srcs, own))
     // non-missing-file failures never reseed
-    assert(!MaintainedJoin.sourceRetentionRace(
+    assert(!FeedView.sourceRetentionRace(
       new RuntimeException("other"), srcs, own))
   }
 

@@ -163,7 +163,8 @@ class CowTableSpec extends SparkSpec {
       t.bulkInsert(df)
       val viaExpr = df.select(collect_set(t.unitKey(df.schema))).head()
         .getSeq[String](0).toSet
-      assert(viaExpr == t.touchedPartitionKeys(df), s"${t.partitionCols}")
+      assert(viaExpr == t.touchedPartitionKeys(df, t.manifest.schema),
+        s"${t.partitionCols}")
       assert(viaExpr == t.manifest.partitions.keySet, s"${t.partitionCols}")
       if (want.nonEmpty) assert(viaExpr == want)
     }
@@ -191,6 +192,20 @@ class CowTableSpec extends SparkSpec {
       df.select(col("id").cast("long"), tb.unitKey(df.schema))
         .as[(Long, String)].collect().toMap
     assert(units(ints) == units(bucketed))
+  }
+
+  test("int probes of a bucketed long key route to the stored buckets") {
+    val t = new CowTable(spark, tmpDir("cow"), keyCols = Seq("id"),
+      numBuckets = 4, deleteVectors = true)
+    t.bulkInsert((1 to 40).map(i => (i.toLong, i.toDouble)).toDF("id", "v"))
+    val probe = Seq(7, 18, 33).toDF("id")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").as[Long].collect().toSet
+    assert(ids(t.lookupByKeys(probe)) == Set(7L, 18L, 33L))
+    assert(ids(t.lookupByKeysTouched(probe)._1) == Set(7L, 18L, 33L))
+    t.deleteVectored(probe)
+    assert(ids(t.snapshot()) == (1 to 40).map(_.toLong).toSet --
+      Set(7L, 18L, 33L))
   }
 
   test("cleaner retains keepCommits manifests and live data dirs") {
