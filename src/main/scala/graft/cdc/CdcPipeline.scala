@@ -29,12 +29,11 @@ final case class RunSummary(
   * ranked batch: the raw event count (M2, for the empty-guard M3), the
   * routed counts of the rank-1 survivors (P3-P6) and the rewrite units
   * they touch → writes:
-  *   - copy-on-write: ONE merge commit that upserts the non-D rows and
-  *     deletes the D rows (K2+K3), `op` steering the merge; it takes the
-  *     aggregate's units, its D count and W1's one-row-per-key guarantee
-  *     instead of re-deriving them;
-  *   - merge-on-read: an upsert log append (K2), then a delete log append
-  *     (K3);
+  *   - by default ONE [[CowTable.applyChanges]] call with the non-D rows as
+  *     upserts and the D rows as deletes (K2+K3), plus the aggregate's
+  *     units, its D count and W1's one-row-per-key guarantee as hints. The
+  *     table picks the plan: on copy-on-write one merge commit, on
+  *     merge-on-read an upsert log append, then a delete log append;
   *   - `cdc_split_upsert`: insert append (K4), upsert of the U rows (K2),
   *     then delete (K3).
   * The two- and three-write shapes keep the reference's order, inserts and
@@ -161,7 +160,7 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
     // W1 — rank each key's events; rank 1 is the final one of the batch.
     // The ranked frame is persisted: the route aggregate fills it and
     // every later consumer reads its survivors. The aggregate's time
-    // rides the COW merge commit's metrics as `phase_route_ms`.
+    // rides the metrics of applyChanges' (last) commit as `phase_route_ms`.
     val ranked = CdcOps.rankPerKey(df, cfg.pkCols)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -171,55 +170,34 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
       if (r.events == 0) // M3 (reference: processData.py:305)
         return RunSummary(cfg.tableName, initialLoad = false, inputRows = 0)
       val latest = ranked.filter(col(CdcOps.SeqByPk) === 1)
-      preMergeHook(table,
-        CdcOps.dropBookkeeping(CdcOps.nonDeletes(latest)),
-        CdcOps.dropBookkeeping(CdcOps.deletes(latest)))
-      if (cfg.cdcSplitUpsert || table.isInstanceOf[MorTable]) {
-        if (cfg.cdcSplitUpsert) {
-          // K4 — route pure inserts through the cheap append path
-          // (reference: processData.py:348-362)
-          if (r.inserts > 0)
-            table.insertAppend(CdcOps.dropBookkeeping(CdcOps.inserts(latest)),
-              cfg.bulkInsertParallelism)
-          if (r.updates > 0)
-            table.upsert(CdcOps.dropBookkeeping(CdcOps.updates(latest)),
-              cfg.upsertParallelism)
-        } else if (r.nonDeletes > 0)
-          // K2 as its own log append: MorTable.mergeInto compacts first,
-          // which would change the table's compaction cadence
-          table.upsert(CdcOps.dropBookkeeping(CdcOps.nonDeletes(latest)),
+      val upserts = CdcOps.dropBookkeeping(CdcOps.nonDeletes(latest))
+      val deletes = CdcOps.dropBookkeeping(CdcOps.deletes(latest))
+      preMergeHook(table, upserts, deletes)
+      if (cfg.cdcSplitUpsert) {
+        // K4 — route pure inserts through the cheap append path
+        // (reference: processData.py:348-362)
+        if (r.inserts > 0)
+          table.insertAppend(CdcOps.dropBookkeeping(CdcOps.inserts(latest)),
+            cfg.bulkInsertParallelism)
+        if (r.updates > 0)
+          table.upsert(CdcOps.dropBookkeeping(CdcOps.updates(latest)),
             cfg.upsertParallelism)
         // K3 — deletes last (reference: processData.py:377-382)
-        if (r.deletes > 0)
-          table.delete(CdcOps.dropBookkeeping(CdcOps.deletes(latest)),
-            cfg.upsertParallelism)
-      } else if (r.nonDeletes + r.deletes > 0) {
-        // K2 + K3 in ONE partition-scoped merge commit. The reference's
-        // upsert-then-delete pair (processData.py:365-382) rewrites the
-        // same partitions twice; after W1 no key is both upserted and
-        // deleted, so applying them together reaches the same state.
-        // `op` steers the merge and is never written. Null-op rows go
-        // first, as the three-valued Op filters drop them (inside the
-        // merge a null delete condition would fall through to update).
-        // D and not-D are disjoint: the incoming-only tombstone contract
-        // holds. The route aggregate already knows what the merge would
-        // otherwise re-derive: the touched units, that W1 left one row
-        // per key, and how many rows delete. A batch with nothing to
-        // apply publishes no version.
-        table.mergeInto(
-          latest.filter(col("op").isNotNull)
-            .drop(CdcOps.BookkeepingCols.filterNot(_ == "op"): _*),
+        if (r.deletes > 0) table.delete(deletes, cfg.upsertParallelism)
+      } else if (r.nonDeletes + r.deletes > 0)
+        // K2 + K3 in one call; the table picks the plan. W1 left one row
+        // per key, so no key is on both sides (the disjointness contract),
+        // and the route aggregate knows the touched units and the delete
+        // count. A batch with nothing to apply publishes no version.
+        table.applyChanges(
+          Option.when(r.nonDeletes > 0)(upserts),
+          Option.when(r.deletes > 0)(deletes),
           cfg.upsertParallelism,
-          whenMatchedDelete = col("i.op") === "D",
-          insertCondition = col("i.op") =!= "D",
-          conditionCols = Seq("op"),
-          tombstonesFromIncoming = true,
           extraMetrics = ph.metrics ++ Map(
             "cdc_upserted" -> r.nonDeletes, "cdc_deleted" -> r.deletes),
           touchedKeys = Some(r.units),
           incomingUnique = true,
           incomingDeletes = Some(r.deletes))
-      }
       val summary = RunSummary(cfg.tableName, initialLoad = false,
         inputRows = r.events, deleted = r.deletes)
       if (cfg.cdcSplitUpsert)

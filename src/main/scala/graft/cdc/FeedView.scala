@@ -1,9 +1,8 @@
 package graft.cdc
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-import graft.table.{CowTable, MorTable}
+import graft.table.CowTable
 
 /** The refresh protocol every feed-driven maintained view shares
   * ([[MaintainedJoin]], [[MaintainedAgg]], [[MaintainedDistinct]]); a view
@@ -23,8 +22,11 @@ import graft.table.{CowTable, MorTable}
   *     replay-idempotent);
   *   - returns [[current]] when every mark is at its source's head;
   *   - otherwise builds each lagging source's lazily checkpointed feed,
-  *     folds the window and commits it ([[FeedView.commitFold]]: one
-  *     commit on a COW view table);
+  *     folds the window and lands it with ONE
+  *     [[graft.table.CowTable.applyChanges]] call carrying the marks: the
+  *     view table picks the plan (one commit on COW; an upsert then a
+  *     delete log append on MOR, the marks on the last; a ledger-only
+  *     commit for an empty window);
   *   - reseeds (an `overwrite` pinned at the then-current heads) when a
   *     mark fell out of a source's retained timeline or a retention clean
   *     raced the fold — the same contract as a streaming source falling
@@ -116,8 +118,9 @@ abstract class FeedView(
         // FileNotFoundException
         try {
           val f = fold(w, heads, ph)
-          FeedView.commitFold(table, f.next, f.gone,
-            marksAt(heads) ++ ph.metrics, f.touchedKeys)
+          table.applyChanges(f.next, f.gone,
+            extraMetrics = marksAt(heads) ++ ph.metrics,
+            touchedKeys = f.touchedKeys)
         } catch { case t: Throwable if raced(t) => reseed() }
     }
     current
@@ -132,60 +135,17 @@ abstract class FeedView(
 }
 
 object FeedView {
-  /** One fold window's effect on the view table: `next` rows to upsert
-    * (None: none), `gone` identities to delete (None: none; Some may still
-    * turn out empty) and, optionally, a superset of the rewrite units both
-    * touch ([[CowTable.lookupByKeysTouched]]'s probe set).
+  /** One fold window's effect on the view table, the arguments of its
+    * [[CowTable.applyChanges]]: `next` rows to upsert (None: none), `gone`
+    * identities to delete (None: none; Some may still turn out empty),
+    * disjoint from `next`, and, optionally, a superset of the rewrite
+    * units both touch ([[CowTable.lookupByKeysTouched]]'s probe set).
     */
   final case class Fold(next: Option[DataFrame], gone: Option[DataFrame],
       touchedKeys: Option[Set[String]] = None)
 
   /** Empty window: no upserts, no deletes — only the ledger advances. */
   val Empty: Fold = Fold(None, None)
-
-  /** Routing flag of the fold commit's merge input. */
-  private val DelCol = "_fv_del"
-
-  /** Land a fold window in `table`, with `marks` in the metrics of its
-    * last commit.
-    *
-    *   - Upserts AND deletes on COW: ONE `mergeInto` routed by a delete
-    *     flag, so updates, deletes and the mark advance are atomic (a
-    *     crash cannot land between them, and an agg delta replayed after
-    *     a lost half would double-count). The flag makes the delete and
-    *     insert conditions disjoint on incoming rows, so the incoming-only
-    *     tombstone pass applies. `gone` rows carry identity only; the
-    *     other columns ride as typed nulls.
-    *   - One side only: one `upsert` or `delete` commit. Its anti-join can
-    *     broadcast the incoming side where the routed merge's full outer
-    *     join cannot (one Spark job fewer on a small window).
-    *   - Both sides on MOR: upserts and deletes are pure log appends,
-    *     where `mergeInto` would compact the logs first — so an upsert
-    *     append, then a delete append, and only the LAST carries the
-    *     marks: a crash after the first leaves the marks behind and the
-    *     next refresh replays the window (image folds are idempotent).
-    *   - An empty window commits nothing but the ledger advance.
-    */
-  def commitFold(table: CowTable, next: Option[DataFrame],
-      gone: Option[DataFrame], marks: Map[String, Long],
-      touchedKeys: Option[Set[String]] = None): Unit = (next, gone) match {
-    case (None, None) =>
-      table.delete(table.snapshot().limit(0), extraMetrics = marks)
-    case (Some(n), Some(d)) if !table.isInstanceOf[MorTable] =>
-      table.mergeInto(
-        n.withColumn(DelCol, lit(false)).unionByName(
-          d.withColumn(DelCol, lit(true)), allowMissingColumns = true),
-        whenMatchedDelete = col(s"i.$DelCol"),
-        insertCondition = !col(s"i.$DelCol"),
-        conditionCols = Seq(DelCol),
-        tombstonesFromIncoming = true,
-        extraMetrics = marks,
-        touchedKeys = touchedKeys)
-    case _ =>
-      next.foreach(table.upsert(_,
-        extraMetrics = if (gone.isEmpty) marks else Map.empty))
-      gone.foreach(table.delete(_, extraMetrics = marks))
-  }
 
   /** True when the throwable (or any nested cause — executor failures
     * arrive Spark-wrapped) is a missing-data-file error, the signature of

@@ -136,8 +136,8 @@ object IncrementalAgg {
       if (!table.exists) table.bulkInsert(next)
       else {
         val g = spec.groupCols.map(col)
-        FeedView.commitFold(table, Some(next),
-          Some(current.select(g: _*).except(next.select(g: _*))), Map.empty)
+        table.applyChanges(Some(next),
+          Some(current.select(g: _*).except(next.select(g: _*))))
       }
       current
     }

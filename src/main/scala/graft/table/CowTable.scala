@@ -458,15 +458,22 @@ class CowTable(
   }
 
   /** Current snapshot as a DataFrame (Hudi snapshot query equivalent). */
-  def snapshot(): DataFrame = { val m = manifest; readFiles(m, m.baseFiles) }
+  def snapshot(): DataFrame = { val m = manifest; readSnapshot(m, m.baseFiles) }
 
   /** Time travel: the table exactly as of `version` (any retained commit —
     * Hudi's "as.of.instant" queries; retention bounds how far back).
     */
   def snapshotAt(version: Long): DataFrame = {
     val m = manifestAt(version)
-    readFiles(m, m.baseFiles)
+    readSnapshot(m, m.baseFiles)
   }
+
+  /** The snapshot of `m` restricted to the base files `files`, the read
+    * every snapshot query shares; [[MorTable]] merges the pending delta
+    * logs in.
+    */
+  protected def readSnapshot(m: Manifest, files: Seq[String]): DataFrame =
+    readFiles(m, files)
 
   /** Incremental query: rows changed after `sinceVersion` (Hudi
     * incremental-query shape). Only files added by later commits are read;
@@ -768,7 +775,7 @@ class CowTable(
   /** [[lookupIn]] that ALSO returns the probe's partition/bucket key set
     * (pre-intersection — every unit a probe key routes to, stored or
     * not). Point-read callers that go on to MERGE a batch whose keys are
-    * a subset of the probe reuse it as [[mergeInto]]'s `touchedKeys`
+    * a subset of the probe reuse it as [[applyChanges]]' `touchedKeys`
     * hint, skipping the merge's own touched-keys job over the (usually
     * far heavier) incoming plan.
     */
@@ -1004,10 +1011,97 @@ class CowTable(
     */
   def upsert(df: DataFrame, parallelism: Int = 0,
       extraMetrics: Map[String, Long] = Map.empty): Unit =
-    mergeCommit(df, parallelism, "upsert", extraMetrics) { (cur, incoming) =>
-      cur.join(incoming, idMatch(cur, incoming), "left_anti")
-        .unionByName(incoming)
+    applyChanges(Some(df), None, parallelism, extraMetrics)
+
+  /** K3 — keyed delete: stored rows matching incoming record keys are
+    * removed (Hudi `EmptyHoodieRecordPayload` tombstone semantics,
+    * reference: processData.py:376-382, delete config :215-218).
+    */
+  def delete(df: DataFrame, parallelism: Int = 0,
+      extraMetrics: Map[String, Long] = Map.empty): Unit =
+    applyChanges(None, Some(df), parallelism, extraMetrics)
+
+  /** K2+K3 — one batch's keyed changes: `upserts` replace or insert rows
+    * by record identity, `deletes` remove the stored rows with their
+    * identities. The table picks the plan from the sides present
+    * ([[MorTable]] also from its storage type):
+    *
+    *   - upserts only: stored anti-join incoming, union incoming;
+    *   - deletes only: stored anti-join incoming ([[deleteVectored]] on a
+    *     `deleteVectors` table);
+    *   - both: ONE full-outer merge commit routed by an engine-owned flag
+    *     column, so updates, deletes and `extraMetrics` (a view's ledger
+    *     marks) land atomically;
+    *   - neither: a metadata-only commit carrying `extraMetrics`, no job.
+    *
+    * Contract: upsert and delete identities are DISJOINT (a CDC batch
+    * after its latest-per-key dedup; a view fold's next and vanished
+    * rows). Every delete identity becomes a change-feed tombstone, held or
+    * not (preimage feeds drop absent keys at their join; image folds treat
+    * D as drop-if-present). `deletes` needs the identity columns only.
+    *
+    * Hints the caller vouches for, each skipping work of the commit:
+    *   - `touchedKeys`: a SUPERSET of the rewrite units both sides touch
+    *     ([[unitKey]] values, or [[lookupByKeysTouched]]'s probe set over
+    *     every changed key) — no touched-units job materializing the full
+    *     incoming plan in a blocking round of its own;
+    *   - `incomingUnique`: at most one row per [[mergeIdCols]] identity —
+    *     no precombine window (unless schema evolution changes an identity
+    *     column's type), no tombstone `distinct()`;
+    *   - `incomingDeletes`: the row count of `deletes` — `Some(0)` records
+    *     no tombstone, `Some(n > 0)` skips the tombstone emptiness probe.
+    */
+  def applyChanges(upserts: Option[DataFrame], deletes: Option[DataFrame],
+      parallelism: Int = 0, extraMetrics: Map[String, Long] = Map.empty,
+      touchedKeys: Option[Set[String]] = None,
+      incomingUnique: Boolean = false,
+      incomingDeletes: Option[Long] = None): Unit = {
+    // the delete identities, read off the incoming side alone: no
+    // stored-side join, no candidate-read cache
+    def tombstones(deleted: DataFrame => DataFrame)
+        : Option[(DataFrame, DataFrame) => DataFrame] =
+      if (incomingDeletes.contains(0L)) None
+      else Some { (_, incoming) =>
+        val keys = deleted(incoming).select(mergeIdCols.map(col): _*)
+        if (incomingUnique) keys else keys.distinct()
+      }
+    def commit(df: DataFrame, opName: String, excludeCols: Seq[String] = Nil,
+        tombstoneKeys: Option[(DataFrame, DataFrame) => DataFrame] = None)(
+        merge: (DataFrame, DataFrame) => DataFrame): Unit =
+      mergeCommit(df, parallelism, opName, extraMetrics, excludeCols,
+        tombstoneKeys, tombstonesUseCur = false, touchedHint = touchedKeys,
+        precombined = incomingUnique,
+        tombstonesNonEmpty = incomingDeletes.exists(_ > 0L))(merge)
+    (upserts, deletes) match {
+      case (None, None) =>
+        val m = manifest
+        writeManifest(m.copy(version = m.version + 1, operation = "ledger",
+          metrics = extraMetrics))
+        clean()
+      case (Some(u), None) =>
+        commit(u, "upsert") { (cur, incoming) =>
+          cur.join(incoming, idMatch(cur, incoming), "left_anti")
+            .unionByName(incoming)
+        }
+      case (None, Some(d)) if deleteVectors =>
+        deleteVectored(d, extraMetrics, parallelism)
+      case (None, Some(d)) =>
+        commit(d, "delete", tombstoneKeys = tombstones(identity)) {
+          (cur, incoming) =>
+          val probe = incoming.select(mergeIdCols.map(col): _*)
+          cur.join(probe, idMatch(cur, probe), "left_anti")
+        }
+      case (Some(u), Some(d)) =>
+        val del = col(s"i.$ChangeDelCol")
+        commit(u.withColumn(ChangeDelCol, lit(false)).unionByName(
+            d.withColumn(ChangeDelCol, lit(true)), allowMissingColumns = true),
+          "merge", excludeCols = Seq(ChangeDelCol),
+          tombstoneKeys = tombstones(_.filter(col(ChangeDelCol))))(
+          routedMerge(whenMatchedDelete = del, whenMatchedUpdate = lit(true),
+            insertUnmatched = true, insertCondition = !del,
+            conditionCols = Seq(ChangeDelCol)))
     }
+  }
 
   /** Record identity for merges: (record key, partition value) — Hudi's
     * non-global index, matching [[MorTable]]'s read-time merge. Joining on
@@ -1043,10 +1137,12 @@ class CowTable(
     *     whenMatchedUpdate = col("i.ts") > col("c.ts"))
     * }}}
     *
-    * `upsert` ≡ `mergeInto(df)` with defaults; `delete` ≡ always-delete
-    * with no insert. Same exactness rules as every merge: intra-batch
-    * duplicates precombine first (unless the caller vouches there are
-    * none, `incomingUnique`), schema evolution is additive.
+    * Deleted keys become change-feed tombstones only where a stored row
+    * matched (the candidate read is re-joined), so a D is never recorded
+    * for a key the table did not hold. Same exactness rules as every
+    * merge: intra-batch duplicates precombine first, schema evolution is
+    * additive. A batch of keyed upserts and deletes with disjoint
+    * identities is [[applyChanges]], whose plan is cheaper.
     */
   def mergeInto(df: DataFrame, parallelism: Int = 0,
       whenMatchedDelete: Column = lit(false),
@@ -1061,44 +1157,7 @@ class CowTable(
         * steer the merge without evolving the table.
         */
       conditionCols: Seq[String] = Nil,
-      /** OPT-IN fast tombstone pass: record change-feed tombstones for
-        * EVERY incoming key satisfying `whenMatchedDelete` (which must
-        * then reference `i.*` only), without re-joining against the
-        * stored side — the same over-approximate contract as [[delete]]
-        * (a D may be recorded for a key the table never held; preimage
-        * feeds drop absent keys at the join, and image-fold consumers
-        * treat D as drop-if-present). Skips the candidate-read cache and
-        * the cur×incoming tombstone re-join — one fewer churn-sized job
-        * on the commit's latency chain. Callers must guarantee the
-        * delete and insert conditions are DISJOINT on incoming rows
-        * (e.g. routed by one op column): an unmatched row that both
-        * inserts and tombstones would poison downstream image folds.
-        */
-      tombstonesFromIncoming: Boolean = false,
-      extraMetrics: Map[String, Long] = Map.empty,
-      /** Caller-supplied touched partition/bucket key set — MUST be a
-        * SUPERSET of the batch's own ([[lookupByKeysTouched]] over a key
-        * probe covering every incoming key qualifies; extra keys only
-        * cost an idempotent rewrite of their units). Skips the merge's
-        * touched-keys job, which would otherwise materialize the full
-        * incoming plan in a dedicated blocking round — the win when the
-        * incoming is a heavy fold plan whose keys the caller already
-        * probed (the IVM point-read folds).
-        */
-      touchedKeys: Option[Set[String]] = None,
-      /** The caller guarantees `df` holds at most one row per
-        * [[mergeIdCols]] identity (a CDC batch after its latest-per-key
-        * dedup): the merge skips its precombine window (unless its
-        * schema evolution changes an identity column's type) and the
-        * incoming-only tombstone keys skip their `distinct()`.
-        */
-      incomingUnique: Boolean = false,
-      /** With `tombstonesFromIncoming`: the caller-known number of
-        * incoming rows the delete condition selects. `Some(0)` skips the
-        * tombstone pass; `Some(n > 0)` skips its emptiness probe job.
-        * Ignored without `tombstonesFromIncoming`.
-        */
-      incomingDeletes: Option[Long] = None): Unit = {
+      extraMetrics: Map[String, Long] = Map.empty): Unit = {
     compactBeforeRewrite(parallelism)
     // matched-delete keys become change-feed tombstones; skipped when the
     // delete branch is the literal-false default (no second join pass).
@@ -1116,17 +1175,6 @@ class CowTable(
     }
     val deletedKeys: Option[(DataFrame, DataFrame) => DataFrame] =
       if (!mayDelete) None
-      else if (tombstonesFromIncoming) {
-        if (incomingDeletes.contains(0L)) None
-        else Some { (_, incoming) =>
-          // i.*-only condition: evaluate it on the incoming batch alone
-          // (resolution fails loudly if the caller's condition references
-          // c.*) — no stored-side join, no candidate-read cache
-          val keys = incoming.alias("i").filter(whenMatchedDelete)
-            .select(mergeIdCols.map(col): _*)
-          if (incomingUnique) keys else keys.distinct()
-        }
-      }
       else Some { (cur, incoming) =>
         val c = cur.withColumn("_c_present", lit(true)).alias("c")
         val i = incoming.withColumn("_i_present", lit(true)).alias("i")
@@ -1136,35 +1184,40 @@ class CowTable(
           .select(mergeIdCols.map(k => col(s"c.$k").as(k)): _*).distinct()
       }
     mergeCommit(df, parallelism, "merge", extraMetrics,
-      excludeCols = conditionCols, tombstoneKeys = deletedKeys,
-      tombstonesUseCur = !tombstonesFromIncoming,
-      touchedHint = touchedKeys, precombined = incomingUnique,
-      tombstonesNonEmpty =
-        tombstonesFromIncoming && incomingDeletes.exists(_ > 0L)) {
-      (cur, incoming) =>
-      val outCols = incoming.columns.toIndexedSeq
-        .filterNot(conditionCols.contains) // padded/evolved schema
-      val c = cur.withColumn("_c_present", lit(true)).alias("c")
-      val i = incoming.withColumn("_i_present", lit(true)).alias("i")
-      val cond = mergeIdCols
-        .map(k => col(s"c.$k") <=> col(s"i.$k")).reduce(_ && _)
-      val matched =
-        col("c._c_present").isNotNull && col("i._i_present").isNotNull
-      // route each joined row to the side that survives (or drop it)
-      val take = when(matched,
-          when(whenMatchedDelete, lit("drop"))
-            .otherwise(when(whenMatchedUpdate, lit("i")).otherwise(lit("c"))))
-        .otherwise(when(col("c._c_present").isNotNull, lit("c"))
-          .otherwise(if (insertUnmatched)
-            when(insertCondition, lit("i")).otherwise(lit("drop"))
-          else lit("drop")))
-      c.join(i, cond, "full_outer")
-        .withColumn("_take", take)
-        .filter(col("_take") =!= "drop")
-        .select(outCols.map(k =>
-          when(col("_take") === "i", col(s"i.$k"))
-            .otherwise(col(s"c.$k")).as(k)): _*)
-    }
+      excludeCols = conditionCols, tombstoneKeys = deletedKeys)(
+      routedMerge(whenMatchedDelete, whenMatchedUpdate, insertUnmatched,
+        insertCondition, conditionCols))
+  }
+
+  /** The full-outer merge plan behind [[mergeInto]] and the mixed
+    * [[applyChanges]]: every joined row is routed to the side that
+    * survives, or dropped.
+    */
+  private def routedMerge(whenMatchedDelete: Column,
+      whenMatchedUpdate: Column, insertUnmatched: Boolean,
+      insertCondition: Column, conditionCols: Seq[String])(
+      cur: DataFrame, incoming: DataFrame): DataFrame = {
+    val outCols = incoming.columns.toIndexedSeq
+      .filterNot(conditionCols.contains) // padded/evolved schema
+    val c = cur.withColumn("_c_present", lit(true)).alias("c")
+    val i = incoming.withColumn("_i_present", lit(true)).alias("i")
+    val cond = mergeIdCols
+      .map(k => col(s"c.$k") <=> col(s"i.$k")).reduce(_ && _)
+    val matched =
+      col("c._c_present").isNotNull && col("i._i_present").isNotNull
+    val take = when(matched,
+        when(whenMatchedDelete, lit("drop"))
+          .otherwise(when(whenMatchedUpdate, lit("i")).otherwise(lit("c"))))
+      .otherwise(when(col("c._c_present").isNotNull, lit("c"))
+        .otherwise(if (insertUnmatched)
+          when(insertCondition, lit("i")).otherwise(lit("drop"))
+        else lit("drop")))
+    c.join(i, cond, "full_outer")
+      .withColumn("_take", take)
+      .filter(col("_take") =!= "drop")
+      .select(outCols.map(k =>
+        when(col("_take") === "i", col(s"i.$k"))
+          .otherwise(col(s"c.$k")).as(k)): _*)
   }
 
   /** Partial-column upsert: like [[upsert]], but incoming NULLs mean "keep
@@ -1191,22 +1244,6 @@ class CowTable(
     * delta logs first.
     */
   protected def compactBeforeRewrite(parallelism: Int): Unit = ()
-
-  /** K3 — keyed delete: stored rows matching incoming record keys are
-    * removed (Hudi `EmptyHoodieRecordPayload` tombstone semantics,
-    * reference: processData.py:376-382, delete config :215-218).
-    */
-  def delete(df: DataFrame, parallelism: Int = 0,
-      extraMetrics: Map[String, Long] = Map.empty): Unit =
-    if (deleteVectors) deleteVectored(df, extraMetrics, parallelism)
-    else mergeCommit(df, parallelism, "delete", extraMetrics,
-      tombstoneKeys = Some((_, incoming) =>
-        incoming.select(mergeIdCols.map(col): _*).distinct()),
-      tombstonesUseCur = false) {
-      (cur, incoming) =>
-      val probe = incoming.select(mergeIdCols.map(col): _*)
-      cur.join(probe, idMatch(cur, probe), "left_anti")
-    }
 
   /** K3 via DELETION VECTORS (the Delta DV / Iceberg position-delete
     * analog): record the matched rows' (file, row position) pairs in a
@@ -1721,13 +1758,13 @@ class CowTable(
       // mergeIdCols frame) — recorded as change-feed tombstones
       tombstoneKeys: Option[(DataFrame, DataFrame) => DataFrame] = None,
       // false when the tombstone function does not re-evaluate `cur`
-      // (delete(): keys come from the incoming batch; mergeInto(): keys
-      // come from its own persisted routed join) — skips the cur cache
+      // (applyChanges: keys come from the incoming batch) — skips the cur
+      // cache
       tombstonesUseCur: Boolean = true,
       // caller-supplied touched partition/bucket keys (must be a SUPERSET
-      // of the incoming batch's — see mergeInto's touchedKeys)
+      // of the incoming batch's — see applyChanges' touchedKeys)
       touchedHint: Option[Set[String]] = None,
-      // `df` is already one row per identity (mergeInto's incomingUnique)
+      // `df` is already one row per identity (applyChanges' incomingUnique)
       precombined: Boolean = false,
       // the tombstone key frame is known to hold a row: no probe job
       tombstonesNonEmpty: Boolean = false)(
@@ -1798,12 +1835,11 @@ class CowTable(
       // Commit latency is a chain of small job rounds; the two passes
       // around the write have no ordering constraint on it, so overlap
       // whatever independence allows:
-      //   - an INCOMING-ONLY tombstone pass (delete(); mergeInto with
-      //     tombstonesFromIncoming) reads nothing the write produces and
-      //     nothing the write warms — it runs on a background thread
-      //     UNDER the write job (its UUID-suffixed file is orphaned,
-      //     never visible, if the write throws — same class as the
-      //     failed write's own files);
+      //   - an INCOMING-ONLY tombstone pass (applyChanges) reads nothing
+      //     the write produces and nothing the write warms — it runs on a
+      //     background thread UNDER the write job (its UUID-suffixed file
+      //     is orphaned, never visible, if the write throws — same class
+      //     as the failed write's own files);
       //   - a cur-rejoining tombstone pass stays AFTER the write (the
       //     write job is what warms cur's cache) and overlaps the
       //     file-stats scan of the just-written files instead.
@@ -2188,7 +2224,7 @@ class CowTable(
     */
   def snapshotForRange(column: String, lo: Any, hi: Any): DataFrame = {
     val m = manifest
-    readFiles(m,
+    readSnapshot(m,
       CowTable.filesForRange(spark, m, column, Some(lo), Some(hi)))
   }
 
@@ -2202,7 +2238,7 @@ class CowTable(
     */
   def snapshotForValues(column: String, values: Seq[Any]): DataFrame = {
     val m = manifest
-    readFiles(m,
+    readSnapshot(m,
       CowTable.filesForValues(spark, m, column, values, basePath))
   }
 
@@ -2240,7 +2276,7 @@ class CowTable(
   def snapshotForValuesAt(
       version: Long, column: String, values: Seq[Any]): DataFrame = {
     val m = manifestAt(version)
-    readFiles(m,
+    readSnapshot(m,
       CowTable.filesForValues(spark, m, column, values, basePath))
   }
 
@@ -2663,7 +2699,7 @@ class CowTable(
   /** The rewrite unit of a row of a frame with schema `in`, as a merge of
     * that frame writes it: unit columns cast to the merge's evolved types
     * (a bucket hashes the key's typed value), absent ones null. Its
-    * distinct values over a merge batch are exactly the [[mergeInto]]
+    * distinct values over a merge batch are exactly the [[applyChanges]]
     * `touchedKeys` set the merge would compute itself. Reads the
     * manifest's schema; the table must exist.
     */
@@ -4604,6 +4640,10 @@ object CowTable {
   val MonotoneMarkPrefix = "mark_"
   /** Change-feed row type column: "U" (upsert image) | "D" (delete). */
   val ChangeTypeCol = "_graft_change_type"
+  /** Routing flag of [[CowTable.applyChanges]]' mixed merge input: true
+    * on the delete side. Steers the merge and is never written.
+    */
+  private val ChangeDelCol = "_graft_change_del"
 
   /** Row filter for incremental reads over files ADDED in (since, asOf]:
     * `stamp > since` separates changed rows from carried-over unchanged

@@ -11,12 +11,12 @@ import graft.cdc.CdcOps
 /** Merge-on-read table: the MOR storage type the reference selects via
   * `hudi_storage_type` (reference: processData.py:150-155, 220-221).
   *
-  * Write path: [[upsert]]/[[delete]] APPEND small delta-log parquet files
-  * (payload + `_graft_log_op` U/D + the `_graft_commit_version` stamp)
-  * instead of rewriting base files — the write amplification of a COW merge
-  * (read + anti-join + rewrite of every touched partition) drops to one
-  * append, which is what makes MOR the right storage type for hot,
-  * frequently-updated tables at scale.
+  * Write path: [[applyChanges]] ([[upsert]]/[[delete]]) APPENDS small
+  * delta-log parquet files (payload + `_graft_log_op` U/D + the
+  * `_graft_commit_version` stamp) instead of rewriting base files — the
+  * write amplification of a COW merge (read + anti-join + rewrite of
+  * every touched partition) drops to one append, which is what makes MOR
+  * the right storage type for hot, frequently-updated tables at scale.
   *
   * Read paths, named after the reference's `_ro`/`_rt` Hive tables
   * (processData.py:131-132):
@@ -72,29 +72,34 @@ class MorTable(
 
   // ------------------------------------------------------------- write path
 
-  /** K2 on MOR: append an upsert delta log (no base rewrite). Cold-start
+  /** K2/K3 on MOR: upserts and deletes APPEND delta logs (no base
+    * rewrite) — an upsert log, then a delete log, with `extraMetrics` only
+    * on the last, so a crash between them leaves the metrics (a view's
+    * ledger marks) behind and a replay re-applies the window. Cold-start
     * exception: a table with NO files at all (DDL-created empty) has
-    * nothing to merge against, so the first batch writes BASE files —
+    * nothing to merge against, so its first upserts write BASE files —
     * the read-optimized view starts non-empty instead of hiding the
-    * initial data behind the compaction cadence.
+    * initial data behind the compaction cadence. A call with neither side
+    * is the ledger commit of [[CowTable.applyChanges]] and counts no delta
+    * commit. The hints are not needed: an append reads no stored row.
     */
-  override def upsert(df: DataFrame, parallelism: Int = 0,
-      extraMetrics: Map[String, Long] = Map.empty): Unit = {
-    val m = manifest
-    if (m.files.isEmpty) {
-      // intra-batch conflict resolution still applies on the cold start
-      val incoming =
-        if (precombineField.nonEmpty)
-          CdcOps.precombine(df, mergeIdCols, precombineField)
-        else df
-      insertAppend(incoming, parallelism, extraMetrics)
-    } else logAppend(df, parallelism, LogUpsert, extraMetrics)
+  override def applyChanges(upserts: Option[DataFrame],
+      deletes: Option[DataFrame], parallelism: Int = 0,
+      extraMetrics: Map[String, Long] = Map.empty,
+      touchedKeys: Option[Set[String]] = None,
+      incomingUnique: Boolean = false,
+      incomingDeletes: Option[Long] = None): Unit = {
+    if (upserts.isEmpty && deletes.isEmpty)
+      return super.applyChanges(None, None, extraMetrics = extraMetrics)
+    upserts.foreach { df =>
+      val metrics =
+        if (deletes.isEmpty) extraMetrics else Map.empty[String, Long]
+      if (manifest.files.isEmpty)
+        insertAppend(precombined(df), parallelism, metrics)
+      else logAppend(df, parallelism, LogUpsert, metrics)
+    }
+    deletes.foreach(logAppend(_, parallelism, LogDelete, extraMetrics))
   }
-
-  /** K3 on MOR: append delete tombstones (no base rewrite). */
-  override def delete(df: DataFrame, parallelism: Int = 0,
-      extraMetrics: Map[String, Long] = Map.empty): Unit =
-    logAppend(df, parallelism, LogDelete, extraMetrics)
 
   /** Partial-column upserts and conditional merges read stored values
     * (the coalesce; `c.*` conditions), so they cannot be pure log
@@ -105,18 +110,19 @@ class MorTable(
     compactLogs(parallelism); ()
   }
 
+  /** Intra-batch conflict resolution, as on the COW write path. */
+  private def precombined(df: DataFrame): DataFrame =
+    if (precombineField.isEmpty) df
+    else CdcOps.precombine(df, mergeIdCols, precombineField)
+
   private def logAppend(df: DataFrame, parallelism: Int, op: String,
-      extraMetrics: Map[String, Long] = Map.empty): Unit = {
+      extraMetrics: Map[String, Long]): Unit = {
     val m = manifest
     val v = m.version + 1
     val stamped = stamp(df, v)
     val evolved = evolveSchema(m, stamped.schema)
     val incoming0 = pad(stamped, evolved)
-    // Same intra-batch conflict resolution as the COW write path.
-    val incoming =
-      if (op == LogUpsert && precombineField.nonEmpty)
-        CdcOps.precombine(incoming0, mergeIdCols, precombineField)
-      else incoming0
+    val incoming = if (op == LogUpsert) precombined(incoming0) else incoming0
     // delta logs never receive FileStats — skip the key-stats tracker
     val newLogs = writeCommit(incoming.withColumn(LogOpCol, lit(op)), v,
       parallelism, idSchema = evolved, collectKeyStats = false)
@@ -137,29 +143,41 @@ class MorTable(
     */
   def readOptimized(): DataFrame = readFiles(manifest, manifest.baseFiles)
 
-  /** `_rt` — read-time merged current state. */
-  def realtime(): DataFrame = realtimeFrom(manifest)
+  /** `_rt` — read-time merged current state: Hudi's MOR snapshot query,
+    * so every snapshot read ([[snapshot]], [[snapshotAt]], the
+    * data-skipping `snapshotFor*` scans) is merged the same way.
+    */
+  def realtime(): DataFrame = snapshot()
 
   /** Time travel on the merged view (any retained commit). */
-  def realtimeAt(version: Long): DataFrame = realtimeFrom(manifestAt(version))
+  def realtimeAt(version: Long): DataFrame = snapshotAt(version)
 
-  /** MOR snapshot == Hudi's MOR snapshot query == the realtime view. */
-  override def snapshot(): DataFrame = realtime()
+  /** Every snapshot read is merged: `files` selects BASE files only (a
+    * data-skipping scan's stats superset — a pruned base row cannot match
+    * the probe), and every pending log stays in the merge.
+    */
+  override protected def readSnapshot(m: Manifest,
+      files: Seq[String]): DataFrame =
+    if (m.logPartitions.isEmpty) readFiles(m, files)
+    else mergedRead(m, m.partitions.keySet ++ m.logPartitions.keySet,
+      files.toSet)
 
-  override def snapshotAt(version: Long): DataFrame = realtimeAt(version)
-
-  private def realtimeFrom(m: Manifest): DataFrame = {
-    if (m.logPartitions.isEmpty) return readFiles(m, m.baseFiles)
-    val logged = m.logPartitions.keySet
-    // Partitions without pending logs need no merge: pass through pruned.
-    val untouched = readFiles(m,
-      (m.partitions -- logged).toSeq.sortBy(_._1).flatMap(_._2))
-    val touchedBase = readFiles(m,
-      logged.toSeq.sorted.flatMap(k => m.partitions.getOrElse(k, Nil)))
-    val logs = readLogs(m, logged)
-    untouched.unionByName(
-      mergeBaseWithLogs(m, touchedBase, logs).select(
-        m.schema.fieldNames.toIndexedSeq.map(col): _*))
+  /** The merged read of a unit set, behind every MOR read path: the
+    * base files of `units` that pass `keep`, where a unit with pending
+    * logs merges latest-commit-wins with ALL of them (log rows are
+    * unindexed, so `keep` never drops one; a log winner whose base row was
+    * filtered out still surfaces on its own) and a unit without logs
+    * passes through unmerged. Files in sorted unit order.
+    */
+  private def mergedRead(m: Manifest, units: Set[String],
+      keep: String => Boolean = _ => true): DataFrame = {
+    val logged = m.logPartitions.keySet & units
+    def base(us: Set[String]) = readFiles(m, us.toSeq.sorted
+      .flatMap(k => m.partitions.getOrElse(k, Nil)).filter(keep))
+    if (logged.isEmpty) base(units)
+    else base(units -- logged).unionByName(
+      mergeBaseWithLogs(m, base(logged), readLogs(m, logged))
+        .select(m.schema.fieldNames.toIndexedSeq.map(col): _*))
   }
 
   private def readLogs(m: Manifest, partKeys: Set[String]): DataFrame =
@@ -293,11 +311,6 @@ class MorTable(
     shapeFeed(ups, Some(dels), cur.schema)
   }
 
-  /** Value-set skipping on MOR: prune BASE files by stats (superset
-    * contract holds — a pruned base row cannot match the probe), but keep
-    * ALL pending logs in the merge (log rows are unindexed; a log winner
-    * whose base row was pruned still surfaces on its own).
-    */
   /** MOR-aware [[CowTable.diff]]: a log append changes rows WITHOUT
     * touching base files, so the COW file-set comparison would miss
     * unmerged deltas. Units whose (base files, log files) signature
@@ -317,50 +330,7 @@ class MorTable(
     val units = (m1.partitions.keySet ++ m2.partitions.keySet ++
       m1.logPartitions.keySet ++ m2.logPartitions.keySet)
       .filter(k => sig(m1, k) != sig(m2, k))
-    diffFrames(realtimeUnits(m1, units), realtimeUnits(m2, units), m1, m2)
-  }
-
-  /** [[realtimeFrom]] restricted to a unit subset: base files of those
-    * units, merged with their pending logs.
-    */
-  private def realtimeUnits(m: Manifest, units: Set[String]): DataFrame = {
-    val logged = m.logPartitions.keySet & units
-    val untouched = readFiles(m, (units -- logged).toSeq.sorted
-      .flatMap(k => m.partitions.getOrElse(k, Nil)))
-    if (logged.isEmpty) untouched
-    else {
-      val touchedBase = readFiles(m,
-        logged.toSeq.sorted.flatMap(k => m.partitions.getOrElse(k, Nil)))
-      untouched.unionByName(
-        mergeBaseWithLogs(m, touchedBase, readLogs(m, logged)).select(
-          m.schema.fieldNames.toIndexedSeq.map(col): _*))
-    }
-  }
-
-  override def snapshotForValues(
-      column: String, values: Seq[Any]): DataFrame =
-    morSnapshotForValues(manifest, column, values)
-
-  override def snapshotForValuesAt(
-      version: Long, column: String, values: Seq[Any]): DataFrame =
-    morSnapshotForValues(manifestAt(version), column, values)
-
-  private def morSnapshotForValues(
-      m: Manifest, column: String, values: Seq[Any]): DataFrame = {
-    val cand =
-      CowTable.filesForValues(spark, m, column, values, basePath).toSet
-    if (m.logPartitions.isEmpty) return readFiles(m, m.baseFiles.filter(cand))
-    val logged = m.logPartitions.keySet
-    val untouched = readFiles(m,
-      (m.partitions -- logged).toSeq.sortBy(_._1).flatMap(_._2)
-        .filter(cand))
-    val touchedBase = readFiles(m,
-      logged.toSeq.sorted.flatMap(k => m.partitions.getOrElse(k, Nil))
-        .filter(cand))
-    val logs = readLogs(m, logged)
-    untouched.unionByName(
-      mergeBaseWithLogs(m, touchedBase, logs).select(
-        m.schema.fieldNames.toIndexedSeq.map(col): _*))
+    diffFrames(mergedRead(m1, units), mergedRead(m2, units), m1, m2)
   }
 
   /** Preimages on MOR must merge delta logs — unmerged log rows are

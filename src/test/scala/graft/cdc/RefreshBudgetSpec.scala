@@ -89,6 +89,42 @@ class RefreshBudgetSpec extends SparkSpec {
       maxJobs = 26, commits = 1)
   }
 
+  test("a refresh over a source commit that changes no rows is one " +
+      "ledger commit") {
+    val s = src(tmpDir("rb-l-s"), "k", "v")
+    s.bulkInsert(Seq(("a", "g1", 1.0), ("b", "g2", 5.0)).toDF("k", "grp", "v"))
+    s.upsert(Seq(("c", "g1", 3.0)).toDF("k", "grp", "v"))
+    val ma = new MaintainedAgg(spark, tmpDir("rb-l-v"), s,
+      AggSpec(Seq("grp"), "v"))
+    ma.refresh()
+    // the compaction rewrites files but no row: the fold window is empty
+    // and only the marks advance, in a metadata-only commit
+    assert(s.compact(maxFilesPerUnit = 0))
+    assertBudget("agg ledger", cost(ma.table)(ma.refresh()),
+      maxJobs = 5, commits = 1)
+    assert(ma.table.manifest.operation == "ledger")
+    assert(ma.current.collect().toSet ==
+      ma.recompute(s.snapshot()).collect().toSet)
+  }
+
+  test("a MOR view's ledger commit counts no delta commit") {
+    val a = src(tmpDir("rb-lm-a"), "k", "v")
+    val b = src(tmpDir("rb-lm-b"), "cust", "seg")
+    a.bulkInsert(aRows(("o1", "c1", 10), ("o2", "c2", 20)))
+    a.upsert(aRows(("o3", "c1", 30)))
+    b.bulkInsert(bRows(("c1", "gold"), ("c2", "silver")))
+    val mj = new MaintainedJoin(spark, tmpDir("rb-lm-v"), a, b,
+      on = Seq("cust" -> "cust"), viewStorage = "mor")
+    mj.refresh()
+    val deltaCommits = mj.table.manifest.deltaCommits
+    assert(a.compact(maxFilesPerUnit = 0))
+    assertBudget("join mor ledger", cost(mj.table)(mj.refresh()),
+      maxJobs = 4, commits = 1)
+    assert(mj.table.manifest.operation == "ledger")
+    assert(mj.table.manifest.deltaCommits == deltaCommits)
+    assert(mj.current.collect().toSet == mj.recompute().collect().toSet)
+  }
+
   test("MaintainedDistinct refresh") {
     val s = src(tmpDir("rb-d-s"), "k", "val")
     s.bulkInsert(Seq(("a", "g1", "x"), ("b", "g1", "y"), ("c", "g2", "x"))

@@ -58,15 +58,13 @@ class ChangeFeedSpec extends SparkSpec {
     val t = new CowTable(spark, tmpDir("cf-merge-inc"), keyCols = Seq("id"),
       trackCommitVersions = true)
     t.bulkInsert(Seq(("k1", 1.0), ("k2", 2.0)).toDF("id", "v"))
-    // k3 is delete-routed but was never stored: the fast pass records its
-    // D anyway — exactly what delete() does for absent incoming keys
-    t.mergeInto(
-      Seq(("k1", -1.0, "D"), ("k3", -3.0, "D"), ("k2", 22.0, "U"),
-        ("k9", 9.0, "U")).toDF("id", "v", "op"),
-      whenMatchedDelete = col("i.op") === "D",
-      insertCondition = col("i.op") =!= "D",
-      conditionCols = Seq("op"),
-      tombstonesFromIncoming = true)
+    // k3 is deleted but was never stored: the incoming-only tombstone
+    // pass records its D anyway — exactly what delete() does for absent
+    // incoming keys
+    t.applyChanges(
+      Some(Seq(("k2", 22.0), ("k9", 9.0)).toDF("id", "v")),
+      Some(Seq(("k1", -1.0), ("k3", -3.0)).toDF("id", "v")))
+    assert(t.manifest.operation == "merge", "one routed merge commit")
     // state identical to the join-checked tombstone pass
     assert(t.snapshot().select("id", "v").as[(String, Double)].collect()
       .toSet == Set(("k2", 22.0), ("k9", 9.0)))
@@ -87,17 +85,14 @@ class ChangeFeedSpec extends SparkSpec {
     val t = new CowTable(spark, tmpDir("cf-merge-zero"), keyCols = Seq("id"),
       trackCommitVersions = true)
     t.bulkInsert(Seq(("k1", 1.0), ("k2", 2.0)).toDF("id", "v"))
-    // delete branch routed but no incoming row takes it — the common IVM
-    // fold window. Spark still writes partition 0's (empty) part file,
-    // so the guard must count rows, not files: a recorded zero-row
-    // tombstone would flip every downstream feed window onto the D-union
-    // path and accrete a junk file per fold.
-    t.mergeInto(
-      Seq(("k2", 22.0, "U"), ("k9", 9.0, "U")).toDF("id", "v", "op"),
-      whenMatchedDelete = col("i.op") === "D",
-      insertCondition = col("i.op") =!= "D",
-      conditionCols = Seq("op"),
-      tombstonesFromIncoming = true)
+    // a delete side that turns out empty — the common IVM fold window.
+    // Spark still writes partition 0's (empty) part file, so the guard
+    // must count rows, not files: a recorded zero-row tombstone would
+    // flip every downstream feed window onto the D-union path and accrete
+    // a junk file per fold.
+    t.applyChanges(
+      Some(Seq(("k2", 22.0), ("k9", 9.0)).toDF("id", "v")),
+      Some(spark.emptyDataset[(String, Double)].toDF("id", "v")))
     assert(t.manifest.tombstones.isEmpty,
       "no manifest tombstone entry for a zero-key delete branch")
     assert(feed(t, 1L, 2L) == Set(

@@ -39,6 +39,19 @@ class DeletionVectorSpec extends SparkSpec {
     assert(t.fastCount().contains(297L))
   }
 
+  test("applyChanges with deletes only takes the vectored path") {
+    val t = mkTable(tmpDir("dv-apply"))
+    t.bulkInsert(rows(30).toDF("id", "p", "ts", "v"), parallelism = 2)
+    val before = t.manifest
+    t.applyChanges(None, Some(Seq(("k0001", "p1"), ("k0002", "p2"))
+      .toDF("id", "p")), extraMetrics = Map("mark_x" -> 1L))
+    val m = t.manifest
+    assert(m.operation == "delete_vectored")
+    assert(m.partitions == before.partitions, "no data file rewritten")
+    assert(m.metrics.get("mark_x").contains(1L))
+    assert(t.snapshot().count() == 28)
+  }
+
   test("relocated table keeps its deletion vectors effective") {
     val dir = tmpDir("dv-move")
     val t = mkTable(dir)

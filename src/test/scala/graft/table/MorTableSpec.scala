@@ -69,6 +69,59 @@ class MorTableSpec extends SparkSpec {
     assert(t.snapshot().count() == 3)
   }
 
+  test("applyChanges: two log appends with the metrics on the last; a " +
+      "cold start writes base files; an empty call counts no delta commit") {
+    val t = freshTable()
+    t.bulkInsert(rows((1, "a", "p1", 1), (2, "b", "p1", 1), (3, "c", "p2", 1)))
+    val v0 = t.manifest.version
+    t.applyChanges(Some(rows((2, "b2", "p1", 2), (4, "d", "p2", 2))),
+      Some(rows((1, "a", "p1", 3))), extraMetrics = Map("mark_x" -> 7L))
+    assert(t.manifest.version == v0 + 2 && t.manifest.deltaCommits == 2)
+    assert(t.manifestAt(v0 + 1).operation == "log_upsert")
+    assert(!t.manifestAt(v0 + 1).metrics.contains("mark_x"),
+      "a crash after the first append must leave the metrics behind")
+    assert(t.manifest.operation == "log_delete")
+    assert(t.manifest.metrics.get("mark_x").contains(7L))
+    assert(t.realtime().select("id", "v").as[(Int, String)].collect().toMap ==
+      Map(2 -> "b2", 3 -> "c", 4 -> "d"))
+    // neither side: one metadata-only commit, no log, no delta commit
+    val files = t.manifest.files
+    t.applyChanges(None, None, extraMetrics = Map("mark_x" -> 8L))
+    assert(t.manifest.version == v0 + 3 && t.manifest.deltaCommits == 2)
+    assert(t.manifest.operation == "ledger" && t.manifest.files == files)
+    assert(t.manifest.metrics.get("mark_x").contains(8L))
+
+    // cold start: a table with no files yet takes its upserts as BASE
+    // files (precombined), the deletes as a log
+    val c = freshTable()
+    c.createEmpty(rows((1, "a", "p1", 1)).schema)
+    c.applyChanges(Some(rows((1, "a", "p1", 1), (1, "a2", "p1", 2),
+      (2, "b", "p2", 1))), Some(rows((2, "b", "p2", 3))))
+    assert(c.manifestAt(2L).operation == "insert_append")
+    assert(c.readOptimized().select("id", "v").as[(Int, String)].collect()
+      .toMap == Map(1 -> "a2", 2 -> "b"))
+    assert(c.manifest.operation == "log_delete")
+    assert(c.realtime().select("id", "v").as[(Int, String)].collect()
+      .toMap == Map(1 -> "a2"))
+  }
+
+  test("data-skipping snapshot scans merge the pending logs") {
+    val t = new MorTable(spark, tmpDir("mor-skip"), Seq("id"), Seq("p"),
+      precombineField = "seq", compactEvery = 0, statsCols = Seq("id"))
+    t.bulkInsert(rows((1, "a", "p1", 1), (2, "b", "p1", 1), (3, "c", "p2", 1)))
+    t.upsert(rows((2, "b2", "p1", 2)))
+    t.delete(rows((3, "c", "p2", 3)))
+    def ids(df: org.apache.spark.sql.DataFrame, keep: Set[Int]) =
+      df.select("id", "v").as[(Int, String)].collect()
+        .filter(r => keep(r._1)).toMap
+    assert(ids(t.snapshotForRange("id", 1, 3), Set(1, 2, 3)) ==
+      Map(1 -> "a", 2 -> "b2"))
+    assert(ids(t.snapshotForValues("id", Seq(2, 3)), Set(2, 3)) ==
+      Map(2 -> "b2"))
+    assert(ids(t.snapshotForValuesAt(2L, "id", Seq(2, 3)), Set(2, 3)) ==
+      Map(2 -> "b2", 3 -> "c"))
+  }
+
   test("upsert after delete re-inserts the key (commit order wins)") {
     val t = freshTable()
     t.bulkInsert(rows((1, "a", "p1", 1)))
