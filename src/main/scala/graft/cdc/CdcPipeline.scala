@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, collect_set, count, lit, when}
 import org.apache.spark.storage.StorageLevel
 
-import graft.table.{CowTable, MorTable}
+import graft.table.{CowTable, TableProps}
 
 /** Outcome summary of one pipeline run (the reference only logs counts —
   * processData.py:303,351,362,366 — we return them).
@@ -50,12 +50,9 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
     * copy-on-write.
     */
   def tableFor(cfg: TableConfig): CowTable =
-    if (cfg.storageType == "mor")
-      new MorTable(spark, tablePath(cfg), cfg.pkCols, cfg.partitionCols,
-        cfg.precombineField, numBuckets = cfg.numBuckets)
-    else
-      new CowTable(spark, tablePath(cfg), cfg.pkCols, cfg.partitionCols,
-        cfg.precombineField, numBuckets = cfg.numBuckets)
+    CowTable.create(spark, tablePath(cfg), cfg.pkCols, cfg.partitionCols,
+      cfg.precombineField, cfg.storageType,
+      TableProps(numBuckets = cfg.numBuckets))
 
   /** Session view name for a table — the `dl_<db>_<schema>.<table>` catalog
     * identity of the reference's hive sync, flattened for temp-view rules.

@@ -79,18 +79,7 @@ final class MaintainedAgg(
       * maintenance cost degenerates to state size. Bucketed, a fold
       * rewrites only the buckets its delta touches.
       */
-    stateBuckets: Int = 0,
-    /** Per-file group-key index entries for the STATE table (0 = off).
-      * The fold's point read of the churned groups ([[CowTable
-      * .lookupByKeys]]) and the merge's candidate pruning both use it —
-      * at many-group scale ([[MaintainedDistinct]]'s support level) this
-      * is what keeps a fold's reads churn-proportional instead of
-      * state-proportional. Write-side cost is near zero now that index
-      * stats ride the commit's own write job (the write-tracker path);
-      * the default stays off for small states, where the merge's extra
-      * prune probe job outweighs the scan it saves.
-      */
-    stateIndexEntries: Int = 0)
+    stateBuckets: Int = 0)
   extends FeedView(Seq(MaintainedAgg.SrcVersionMark -> src)) {
 
   require(src.trackCommitVersions,
@@ -98,8 +87,7 @@ final class MaintainedAgg(
 
   /** The aggregate state table, keyed by the group columns. */
   val table = new CowTable(spark, aggPath, keyCols = spec.groupCols,
-    trackCommitVersions = trackStateVersions, numBuckets = stateBuckets,
-    fileIndexEntries = stateIndexEntries)
+    trackCommitVersions = trackStateVersions, numBuckets = stateBuckets)
 
   // registration surface for the automatic materialized-view rewrite
   // (graft.sources.MvRegistry.register(this))

@@ -3,7 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.table.CowTable
+import graft.table.{CowTable, TableProps}
 
 /** Incrementally maintained LEFT-OUTER enrichment join: a materialized
   * `A LEFT JOIN B ON A.fk = B.id` stored as its own [[CowTable]], kept
@@ -97,14 +97,10 @@ final class MaintainedJoin(
   /** The view table: keyed by A's merge identity, fk-clustered so B-churn
     * probes prune files after a recluster service pass.
     */
-  val table: CowTable =
-    if (viewStorage == "mor")
-      new graft.table.MorTable(spark, viewPath, keyCols = a.mergeIdCols,
-        clusterCols = fkCols, fileIndexEntries = 60000, statsCols = fkCols)
-    else
-      new CowTable(spark, viewPath, keyCols = a.mergeIdCols,
-        clusterCols = fkCols, fileIndexEntries = 60000, statsCols = fkCols,
-        trackCommitVersions = trackViewVersions)
+  val table: CowTable = CowTable.create(spark, viewPath,
+    keyCols = a.mergeIdCols, storageType = viewStorage,
+    props = TableProps(clusterCols = fkCols, fileIndex = true,
+      statsCols = fkCols, trackCommitVersions = trackViewVersions))
 
   /** The maintained join as stored (A columns, then B payload columns). */
   def current: DataFrame = {

@@ -299,7 +299,7 @@ object QueryCatalog {
         java.nio.file.Files.createTempDirectory("graft-dvdel").toString
       val tbl = new graft.table.CowTable(s, path,
         keyCols = Seq("c_custkey"), partitionCols = Seq("seg"),
-        fileIndexEntries = 1000, deleteVectors = true)
+        fileIndex = true, deleteVectors = true)
       tbl.bulkInsert(cust.filter(col("c_custkey") <= 2000), parallelism = 4)
       val before = tbl.manifest.partitions
       tbl.delete(cust.filter(col("c_custkey") <= 2000 &&
@@ -960,7 +960,7 @@ object QueryCatalog {
       val tbl = new graft.table.CowTable(s,
         java.nio.file.Files.createTempDirectory("graft-metaagg").toString,
         keyCols = Seq("l_orderkey", "l_linenumber"),
-        fileIndexEntries = 10000)
+        fileIndex = true)
       // core-count write fan-out (r13): the single-row-group source scan
       // would otherwise funnel the 600k-row write AND the delete's
       // subsequent read+rewrite through one task; files ∝ cores keeps the
@@ -1070,7 +1070,7 @@ object QueryCatalog {
       val path =
         java.nio.file.Files.createTempDirectory("graft-dpp").toString
       val tbl = new graft.table.CowTable(s, path, keyCols = Seq("event_id"),
-        fileIndexEntries = 4096, statsCols = Seq("event_id"))
+        fileIndex = true, statsCols = Seq("event_id"))
       val maxId = ev.agg(max(col("event_id"))).head().getLong(0)
       val q = math.max((maxId + 1) / 4, 1L)
       Seq(0L, q, 2 * q, 3 * q, maxId + 1).sliding(2).zipWithIndex.foreach {

@@ -59,7 +59,7 @@ final class AnnIndex(spark: SparkSession, path: String,
   private def codesTable(): CowTable = openOr(codesPath)(
     new CowTable(spark, codesPath, keyCols = Seq("vec_id"),
       clusterCols = Seq("centroid_id"), statsCols = Seq("centroid_id"),
-      fileIndexEntries = 100000))
+      fileIndex = true))
 
   def exists: Boolean =
     CowTable.existsAt(spark, coarsePath) && CowTable.existsAt(spark, pqPath)

@@ -18,7 +18,7 @@ import org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
 import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructField}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.table.{CowTable, MorTable}
+import graft.table.CowTable
 
 /** Name-based SQL catalog over a warehouse directory of graft tables —
   * the piece that makes the SQL surface complete without temp views:
@@ -39,16 +39,21 @@ import graft.table.{CowTable, MorTable}
   *
   * Layout: `warehouse/<namespace...>/<table>` — each table directory is a
   * normal graft table (`_commits/` timeline), interchangeable with the
-  * path-based API. Table properties at creation: `keyCols` (required),
-  * `partitionCols` (or `PARTITIONED BY` identity transforms),
-  * `precombineField`, `storageType` ('cow' | 'mor'),
-  * `trackCommitVersions`, `numBuckets`, `fileIndexEntries`, `statsCols`.
-  * Time travel maps `VERSION AS OF v` onto the retained commit timeline
-  * and `TIMESTAMP AS OF t` onto manifest commit times (newest commit at
-  * or before t). Schema changes ride the table format's additive
-  * evolution on write, plus explicit `ALTER TABLE ADD COLUMNS` /
-  * `ALTER COLUMN ... TYPE` safe widening as metadata-only commits;
-  * lossy DDL (DROP/RENAME COLUMN) is intentionally unsupported (loudly).
+  * path-based API. Table properties at creation, TBLPROPERTIES or
+  * OPTIONS (the names a first `write`/`writeStream` to a path takes):
+  * `keyCols` (required), `partitionCols` (or `PARTITIONED BY` identity
+  * transforms), `precombineField`, `storageType` ('cow' | 'mor') and
+  * every [[graft.table.TableProps]] field ([[graft.table.TableProps.parse]]:
+  * `keepCommits`, `numBuckets`, `clusterCols`, `trackCommitVersions`,
+  * `fileIndex`, `statsCols`, `bloomCols`, `compactEvery`,
+  * `checkConstraints`, `deleteVectors`). Time travel maps
+  * `VERSION AS OF v` onto the retained commit timeline and
+  * `TIMESTAMP AS OF t` onto manifest commit times (newest commit at or
+  * before t). Schema changes ride the table format's additive evolution
+  * on write, plus the metadata-only DDL of [[alterTable]]: `ADD
+  * COLUMNS`, `ALTER COLUMN ... TYPE` safe widening, `DROP COLUMN`,
+  * `RENAME COLUMN` (field-id-stamped tables) and `SET TBLPROPERTIES`
+  * ([[graft.table.CowTable.alterProps]]).
   *
   * MOR tables serve the READ-OPTIMIZED view through SQL (Hudi `_ro`
   * semantics, same contract as the path source): log appends become
@@ -140,60 +145,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   override def createTable(ident: Identifier, info: TableInfo): Table = {
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    val props = info.properties().asScala
-    def prop(key: String): Option[String] = props.collectFirst {
-      // DDL OPTIONS arrive prefixed, TBLPROPERTIES arrive bare
-      case (k, v) if k.equalsIgnoreCase(key) ||
-        k.equalsIgnoreCase(TableCatalog.OPTION_PREFIX + key) => v
+    // identity PARTITIONED BY transforms win over a partitionCols property
+    val partitionCols = info.partitions().toSeq.map {
+      case t if t.name == "identity" =>
+        t.references()(0).fieldNames.mkString(".")
+      case other => throw new UnsupportedOperationException(
+        s"graft tables partition by identity columns only, got $other")
     }
-    def propList(key: String): Seq[String] =
-      prop(key).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Nil)
-    val keyCols = propList("keyCols")
-    // constraint expressions contain commas (function calls): split the
-    // property on ';' instead of the generic list separator
-    val checks = prop("checkConstraints")
-      .map(_.split(';').map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-    require(keyCols.nonEmpty,
-      "CREATE TABLE ... USING graft needs TBLPROPERTIES ('keyCols'='...')")
-    val partitionCols = {
-      val fromTransforms = info.partitions().toSeq.map {
-        case t if t.name == "identity" =>
-          t.references()(0).fieldNames.mkString(".")
-        case other => throw new UnsupportedOperationException(
-          s"graft tables partition by identity columns only, got $other")
-      }
-      if (fromTransforms.nonEmpty) fromTransforms else propList("partitionCols")
-    }
-    val base = tablePath(ident).toString
-    require(!prop("deleteVectors").exists(_.toBoolean) ||
-      !prop("storageType").contains("mor"),
-      "deleteVectors is COW-only (MOR deletes are already log appends)")
-    val t =
-      if (prop("storageType").contains("mor"))
-        new MorTable(spark, base, keyCols, partitionCols,
-          prop("precombineField").getOrElse(""),
-          numBuckets = prop("numBuckets").map(_.toInt).getOrElse(0),
-          fileIndexEntries =
-            prop("fileIndexEntries").map(_.toInt).getOrElse(0),
-          statsCols = propList("statsCols"),
-          clusterCols = propList("clusterCols"),
-          bloomCols = propList("bloomCols"),
-          checkConstraints = checks)
-      else
-        new CowTable(spark, base, keyCols, partitionCols,
-          prop("precombineField").getOrElse(""),
-          numBuckets = prop("numBuckets").map(_.toInt).getOrElse(0),
-          trackCommitVersions =
-            prop("trackCommitVersions").exists(_.toBoolean),
-          fileIndexEntries =
-            prop("fileIndexEntries").map(_.toInt).getOrElse(0),
-          statsCols = propList("statsCols"),
-          clusterCols = propList("clusterCols"),
-          bloomCols = propList("bloomCols"),
-          checkConstraints = checks,
-          deleteVectors = prop("deleteVectors").exists(_.toBoolean))
+    val t = CowTable.openOrCreate(spark, tablePath(ident).toString,
+      info.properties().asScala.toMap, partitionCols)
     t.createEmpty(info.schema())
     loadTable(ident)
   }

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -234,8 +236,10 @@ object GraftDataSource {
   * semantics), routed to [[graft.table.CowTable.upsert]] or, when the
   * manifest records `storageType=mor`, to the log-append write path of
   * [[graft.table.MorTable]]. Overwrite is a full-replace commit
-  * ([[graft.table.CowTable.overwrite]]). Creating a new table reads
-  * `keyCols`/`partitionCols`/`precombineField`/`storageType` options.
+  * ([[graft.table.CowTable.overwrite]]). Creating a new table takes the
+  * creation options of CREATE TABLE (`keyCols`, `partitionCols`,
+  * `storageType`, `numBuckets`, `fileIndex`, ... —
+  * [[graft.table.CowTable.openOrCreate]]).
   * ACCEPT_ANY_SCHEMA: the table layer's own additive schema evolution
   * (`evolveSchema`/`pad`) validates incoming columns instead of Spark's
   * by-name output resolution, which cannot know about evolution.
@@ -370,22 +374,8 @@ private[sources] class GraftWritableTable(
                   data: org.apache.spark.sql.DataFrame,
                   overwriteIgnored: Boolean): Unit = {
                 val spark = data.sparkSession
-                val t =
-                  if (CowTable.existsAt(spark, base))
-                    CowTable.open(spark, base)
-                  else {
-                    def opt(k: String) = Option(options.get(k))
-                    val keys = opt("keyCols")
-                      .map(_.split(',').map(_.trim).toSeq)
-                      .getOrElse(throw new IllegalArgumentException(
-                        "creating a graft table needs option(\"keyCols\", ...)"))
-                    val parts = opt("partitionCols")
-                      .map(_.split(',').map(_.trim).toSeq).getOrElse(Nil)
-                    val pre = opt("precombineField").getOrElse("")
-                    if (opt("storageType").contains("mor"))
-                      new graft.table.MorTable(spark, base, keys, parts, pre)
-                    else new CowTable(spark, base, keys, parts, pre)
-                  }
+                val t = CowTable.openOrCreate(spark, base,
+                  options.asCaseSensitiveMap.asScala.toMap)
                 // SQL `INSERT INTO ... VALUES` arrives with positional
                 // column names (col1, col2, ...) because ACCEPT_ANY_SCHEMA
                 // skips Spark's by-name output resolution. Positional

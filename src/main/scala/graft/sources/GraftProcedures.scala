@@ -237,7 +237,7 @@ private[sources] object GraftProcedures {
       (_, _) => Nil,
       runTable = Some { (t, _) =>
         val m = t.manifest
-        val p = m.props.getOrElse(graft.table.CowTable.inferProps(m))
+        val p = m.tableProps
         val schema = StructType(Seq(
           StructField("location", StringType, nullable = false),
           StructField("storage_type", StringType, nullable = false),

@@ -150,7 +150,7 @@ private[sources] class GraftScanBuilder(
         GraftBucketScan(
           scan.asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScan],
           n, m.keyCols,
-          clusterCols = m.props.map(_.clusterCols).getOrElse(Nil),
+          clusterCols = m.tableProps.clusterCols,
           unorderedFiles = m.unorderedFiles)
       // plain data scan: advertise runtime (DPP-style) file pruning.
       // Skipped when an aggregate was pushed (the scan's row shape is

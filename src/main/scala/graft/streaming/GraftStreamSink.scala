@@ -34,8 +34,8 @@ import graft.table.CowTable
   * not a silent full-table rewrite per trigger.
   *
   * The table is created by the first batch when absent, from the same
-  * creation options the batch writer takes (`keyCols`, `partitionCols`,
-  * `precombineField`, `storageType`).
+  * creation options the batch writer and CREATE TABLE take
+  * ([[graft.table.CowTable.openOrCreate]]).
   */
 final class GraftStreamSink(
     spark: SparkSession,
@@ -48,22 +48,8 @@ final class GraftStreamSink(
       "use update/append (keyed upsert), a MaintainedAgg, or foreachBatch " +
       "with overwrite")
 
-  private def opt(k: String): Option[String] =
-    parameters.collectFirst { case (kk, v) if kk.equalsIgnoreCase(k) => v }
-
-  private val sink = new GraftSink(() =>
-    if (CowTable.existsAt(spark, path)) CowTable.open(spark, path)
-    else {
-      val keys = opt("keyCols").map(_.split(',').map(_.trim).toSeq)
-        .getOrElse(throw new IllegalArgumentException(
-          "creating a graft table needs option(\"keyCols\", ...)"))
-      val parts = opt("partitionCols")
-        .map(_.split(',').map(_.trim).toSeq).getOrElse(Nil)
-      val pre = opt("precombineField").getOrElse("")
-      if (opt("storageType").contains("mor"))
-        new graft.table.MorTable(spark, path, keys, parts, pre)
-      else new CowTable(spark, path, keys, parts, pre)
-    })
+  private val sink =
+    new GraftSink(() => CowTable.openOrCreate(spark, path, parameters))
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     // detach from the incremental plan (see GraftStreamShim) — the merge

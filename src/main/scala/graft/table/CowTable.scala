@@ -76,7 +76,7 @@ final case class Manifest(
       */
     keyEncoding: Long = 1L,
     /** Creation-time physical configuration (buckets, clustering, commit
-      * stamping, index sizing). Persisted so [[CowTable.open]] reconstructs
+      * stamping, index switch). Persisted so [[CowTable.open]] reconstructs
       * the table EXACTLY as created: without it, a table opened by path
       * silently stopped stamping commit versions and maintaining its file
       * index (incremental readers then lose rows written through the
@@ -169,6 +169,14 @@ final case class Manifest(
   def schema: StructType =
     org.apache.spark.sql.types.DataType.fromJson(schemaJson)
       .asInstanceOf[StructType]
+  /** The table's creation config: the recorded [[props]], or the
+    * best-effort [[CowTable.inferProps]] reconstruction on a pre-round-7
+    * manifest that records none.
+    */
+  def tableProps: TableProps = props match {
+    case Some(p) => p
+    case None => CowTable.inferProps(this)
+  }
   /** All live data files — base AND delta logs (cleaner keys off this). */
   def files: Seq[String] =
     (partitions.valuesIterator ++ logPartitions.valuesIterator).flatten.toSeq
@@ -246,19 +254,63 @@ final class ConcurrentWriteException(msg: String)
 /** Creation-time table configuration recorded in every manifest (round 7+).
   * Mirrors the [[CowTable]] constructor knobs that change WRITE behavior —
   * the ones a path-only `open()` cannot see and must not lose.
-  * `compactEvery` is MOR-only (ignored on COW).
+  * `compactEvery` is MOR-only (ignored on COW). Every handle is built from
+  * one through [[CowTable.create]].
   */
 final case class TableProps(
     keepCommits: Int = 10,
     numBuckets: Int = 0,
     clusterCols: Seq[String] = Nil,
     trackCommitVersions: Boolean = false,
-    fileIndexEntries: Int = 0,
+    fileIndex: Boolean = false,
     statsCols: Seq[String] = Nil,
     compactEvery: Int = 20,
     bloomCols: Seq[String] = Nil,
     checkConstraints: Seq[String] = Nil,
     deleteVectors: Boolean = false)
+
+object TableProps {
+  /** The one string-option parser of table config — CREATE TABLE
+    * TBLPROPERTIES/OPTIONS, a first `write`/`writeStream` to a path
+    * ([[CowTable.openOrCreate]]) and [[CowTable.alterProps]]. Keys match
+    * case-insensitively, bare or with DDL OPTIONS' `option.` prefix; an
+    * absent key keeps `base`'s value. Lists split on `,`, except
+    * `checkConstraints` on `;` (expressions hold commas). A legacy integer
+    * `fileIndexEntries` reads as `fileIndex = (value > 0)`.
+    */
+  def parse(options: Map[String, String],
+      base: TableProps = TableProps()): TableProps = {
+    def get(k: String) = option(options, k).map(_.trim)
+    def int(k: String, cur: Int) = get(k).fold(cur)(_.toInt)
+    def bool(k: String, cur: Boolean) = get(k).fold(cur)(_.toBoolean)
+    def list(k: String, cur: Seq[String], sep: Char = ',') =
+      listOption(options, k, sep).getOrElse(cur)
+    TableProps(
+      keepCommits = int("keepCommits", base.keepCommits),
+      numBuckets = int("numBuckets", base.numBuckets),
+      clusterCols = list("clusterCols", base.clusterCols),
+      trackCommitVersions =
+        bool("trackCommitVersions", base.trackCommitVersions),
+      fileIndex = bool("fileIndex",
+        get("fileIndexEntries").fold(base.fileIndex)(_.toInt > 0)),
+      statsCols = list("statsCols", base.statsCols),
+      compactEvery = int("compactEvery", base.compactEvery),
+      bloomCols = list("bloomCols", base.bloomCols),
+      checkConstraints = list("checkConstraints", base.checkConstraints, ';'),
+      deleteVectors = bool("deleteVectors", base.deleteVectors))
+  }
+
+  /** Option `k`, matched as [[parse]] matches keys. */
+  private[table] def option(options: Map[String, String],
+      k: String): Option[String] = options.collectFirst {
+    case (kk, v) if kk.equalsIgnoreCase(k) ||
+      kk.equalsIgnoreCase("option." + k) => v
+  }
+
+  private[table] def listOption(options: Map[String, String], k: String,
+      sep: Char = ','): Option[Seq[String]] =
+    option(options, k).map(_.split(sep).map(_.trim).filter(_.nonEmpty).toSeq)
+}
 
 final case class FileStat(keyMin: String, keyMax: String, bloomRef: String,
     /** Optional per-column [min, max] (encoded order-preserving strings)
@@ -338,8 +390,9 @@ class CowTable(
       * [[changesSince]] can filter to exactly the changed rows.
       */
     val trackCommitVersions: Boolean = false,
-    /** Per-file record-key index switch: any value > 0 turns it on (the
-      * value itself sizes nothing). With the index on, every write records
+    /** Per-file record-key index switch (table property `fileIndex`; a
+      * legacy integer `fileIndexEntries` reads as `> 0`). With the index
+      * on, every write records
       * each new file's key-string range + bloom in the manifest, and
       * merges read ONLY the files that can contain an incoming key —
       * unmatched files are kept as-is instead of rewritten. At 100 TB
@@ -350,11 +403,11 @@ class CowTable(
       * own file's key count at [[CowTable.FileIndexFpp]]: files are
       * immutable, so a pre-sized floor would only inflate the sidecars.
       */
-    val fileIndexEntries: Int = 0,
+    val fileIndex: Boolean = false,
     /** Columns to record per-file [min, max] ranges for (encoded
       * order-preserving, alongside the record-key index) — enables
       * [[snapshotForRange]] file-level data skipping. Only effective with
-      * `fileIndexEntries > 0` (the stats ride the same index pass).
+      * `fileIndex` on (the stats ride the same index pass).
       */
     val statsCols: Seq[String] = Nil,
     /** `statsCols` members to ALSO build per-file sidecar BLOOMS for:
@@ -407,6 +460,9 @@ class CowTable(
   private val hadoopConf: Configuration =
     spark.sparkContext.hadoopConfiguration
   protected def fs: FileSystem = new Path(basePath).getFileSystem(hadoopConf)
+  /** `basePath` fully qualified — the root absolute file refs use. */
+  private def qualifiedBase: String =
+    fs.makeQualified(new Path(basePath)).toString.stripSuffix("/")
   private def commitsDir = new Path(basePath, "_commits")
   /** Commit data directory. The random token makes CONCURRENT writers'
     * directories distinct: two writers racing toward the same version
@@ -937,7 +993,7 @@ class CowTable(
     numBuckets = numBuckets,
     clusterCols = clusterCols,
     trackCommitVersions = trackCommitVersions,
-    fileIndexEntries = fileIndexEntries,
+    fileIndex = fileIndex,
     statsCols = statsCols,
     compactEvery = inlineCompactEvery,
     bloomCols = bloomCols,
@@ -1785,10 +1841,7 @@ class CowTable(
     val padTarget = StructType(evolved.fields ++
       stamped.schema.fields.filter(f => excludeCols.contains(f.name)))
     val incoming0 = pad(stamped, padTarget)
-    // a unique batch stays unique through pad unless a cast of an
-    // identity column could map two values to one
-    val unique = precombined && mergeIdCols.forall(c => stamped.schema
-      .find(_.name == c).forall(_.dataType == evolved(c).dataType))
+    val unique = precombined && uniqueThroughPad(stamped.schema, evolved)
     val incoming = (if (precombineField.nonEmpty && !unique)
       CdcOps.precombine(incoming0, mergeIdCols, precombineField)
     else incoming0).persist()
@@ -1829,7 +1882,7 @@ class CowTable(
       }
       def statsPass(newFiles: Map[String, Seq[String]])
           : (Map[String, FileStat], Map[String, Long]) =
-        ph("stats")(if (fileIndexEntries > 0)
+        ph("stats")(if (fileIndex)
           newFileStats(newFiles, evolved, m.keyEncoding)
         else (Map.empty[String, FileStat], Map.empty[String, Long]))
       // Commit latency is a chain of small job rounds; the two passes
@@ -1874,7 +1927,7 @@ class CowTable(
             keptListing.valuesIterator.map(_.size.toLong).sum) ++
           statsMetrics ++ ph.metrics ++ extraMetrics)
       val withStats =
-        if (fileIndexEntries <= 0) next
+        if (!fileIndex) next
         else {
           val live: Set[String] =
             next.partitions.valuesIterator.flatten.toSet
@@ -1925,7 +1978,7 @@ class CowTable(
     *   2. BLOOM phase — only the range-survivors' sidecar blooms are
     *      loaded (lazily; bytes proportional to files we might read
     *      anyway, not to the table) and probed the same way.
-    * With the index off on this handle (`fileIndexEntries <= 0`) or no
+    * With `fileIndex` off on this handle, or with no
     * indexed file among `parts`, every file is a candidate, in sorted
     * partition order, and nothing is kept.
     */
@@ -1937,7 +1990,7 @@ class CowTable(
     val indexed = files.collect {
       case (_, f) if m.fileStats.contains(f) => f
     }
-    if (fileIndexEntries <= 0 || indexed.isEmpty)
+    if (!fileIndex || indexed.isEmpty)
       return (files.map(_._2), Map.empty)
     import spark.implicits._
     // NO key-side distinct and NO persist: the per-partition hit-set
@@ -2022,7 +2075,7 @@ class CowTable(
       m: Manifest,
       newFiles: Map[String, Seq[String]],
       schema: StructType): Manifest = {
-    if (fileIndexEntries <= 0) return m
+    if (!fileIndex) return m
     val live: Set[String] = m.partitions.valuesIterator.flatten.toSet
     val (fresh, statsMetrics) =
       newFileStats(newFiles, schema, m.keyEncoding)
@@ -2384,7 +2437,7 @@ class CowTable(
     val dropLower = dropCols.map(_.toLowerCase)
     require(dropLower.distinct.size == dropLower.size,
       s"ALTER TABLE: duplicate dropped column among $dropCols")
-    val p = m.props.getOrElse(CowTable.inferProps(m))
+    val p = m.tableProps
     dropCols.foreach { n =>
       val f = byLower.getOrElse(n.toLowerCase,
         throw new IllegalArgumentException(s"ALTER TABLE: no such column $n"))
@@ -2504,7 +2557,7 @@ class CowTable(
       s"RENAME COLUMN: column $to already exists")
     require(!m.droppedCols.contains(to.toLowerCase),
       s"RENAME COLUMN: $to was dropped and not yet purged")
-    val p = m.props.getOrElse(CowTable.inferProps(m))
+    val p = m.tableProps
     p.checkConstraints.foreach { c =>
       val refs = spark.sessionState.sqlParser.parseExpression(c).collect {
         case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -2574,8 +2627,9 @@ class CowTable(
 
   /** Metadata-only table-property change (SQL `ALTER TABLE SET
     * TBLPROPERTIES`): updates the MUTABLE knobs — `keepCommits`,
-    * `compactEvery`, `fileIndexEntries`, `statsCols`, `bloomCols`,
-    * `checkConstraints` — in one props-only commit, and returns a NEW
+    * `compactEvery`, `fileIndex` (legacy `fileIndexEntries`), `statsCols`,
+    * `bloomCols`, `checkConstraints`, `deleteVectors` — parsed by
+    * [[TableProps.parse]] in one props-only commit, and returns a NEW
     * handle configured with them (the commit is written BY that handle,
     * so the manifest's healed props are the new ones; the single-writer
     * model means callers reopen after DDL — a stale handle's next write
@@ -2592,8 +2646,9 @@ class CowTable(
     * violates.
     */
   def alterProps(updates: Map[String, String]): CowTable = {
-    val allowed = Set("keepCommits", "compactEvery", "fileIndexEntries",
-      "statsCols", "bloomCols", "checkConstraints", "deleteVectors")
+    val allowed = Set("keepCommits", "compactEvery", "fileIndex",
+      "fileIndexEntries", "statsCols", "bloomCols", "checkConstraints",
+      "deleteVectors")
     val bad = updates.keys.filterNot(k =>
       allowed.exists(_.equalsIgnoreCase(k)))
     require(bad.isEmpty,
@@ -2601,34 +2656,15 @@ class CowTable(
         s"not alterable (mutable: ${allowed.mkString(", ")}) — keys, " +
         "partitioning, buckets, clustering and storage type are fixed " +
         "by the files already written")
-    def get(k: String): Option[String] =
-      updates.collectFirst { case (kk, v) if kk.equalsIgnoreCase(k) => v }
-    def list(k: String, cur: Seq[String], sep: Char = ','): Seq[String] =
-      get(k).map(_.split(sep).map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(cur)
     val m = manifest
-    val p0 = currentProps
-    val p = p0.copy(
-      keepCommits = get("keepCommits").map(_.toInt)
-        .getOrElse(p0.keepCommits),
-      compactEvery = get("compactEvery").map(_.toInt)
-        .getOrElse(p0.compactEvery),
-      fileIndexEntries = get("fileIndexEntries").map(_.toInt)
-        .getOrElse(p0.fileIndexEntries),
-      statsCols = list("statsCols", p0.statsCols),
-      bloomCols = list("bloomCols", p0.bloomCols),
-      checkConstraints =
-        list("checkConstraints", p0.checkConstraints, sep = ';'),
-      // toggling the delete ROUTING is safe either way: existing
-      // vectors keep applying at read until a rewrite/compaction folds
-      // them, regardless of how future deletes commit
-      deleteVectors = get("deleteVectors").map(_.toBoolean)
-        .getOrElse(p0.deleteVectors))
+    // toggling deleteVectors (the delete ROUTING) is safe either way:
+    // existing vectors keep applying at read until a rewrite/compaction
+    // folds them, regardless of how future deletes commit
+    val p = TableProps.parse(updates, base = currentProps)
     require(p.bloomCols.forall(p.statsCols.contains),
       s"bloomCols must be a subset of statsCols " +
         s"(${p.bloomCols} vs ${p.statsCols})")
-    require(!p.deleteVectors || storageTypeName == "cow",
-      "deleteVectors is COW-only (MOR deletes are already log appends)")
+    val dest = CowTable.openWithProps(spark, basePath, m, p)
     // Delta ADD CONSTRAINT semantics: a new constraint must already hold
     // over the stored data, or the DDL refuses — otherwise reads would
     // serve rows the table's own contract forbids
@@ -2644,12 +2680,17 @@ class CowTable(
         s"cannot add CHECK constraint [$c]: $violations stored rows " +
           "violate it")
     }
-    val dest = CowTable.openWithProps(spark, basePath, m, p)
     dest.writeManifest(m.copy(version = m.version + 1,
       operation = "alter_props",
       metrics = Map("props_changed" -> updates.size.toLong)))
     dest
   }
+
+  /** A unique batch stays so through [[pad]] unless an identity is cast. */
+  protected def uniqueThroughPad(stamped: StructType,
+      evolved: StructType): Boolean =
+    mergeIdCols.forall(c => stamped.find(_.name == c)
+      .forall(_.dataType == evolved(c).dataType))
 
   /** Conform a frame to the target schema: order columns, cast to stored
     * types, null-fill columns the frame lacks (absent payload columns in
@@ -2816,7 +2857,7 @@ class CowTable(
     // pass instead; correctness is identical either way.
     val concurrentWriters = spark.conf
       .get("spark.sql.maxConcurrentOutputFileWriters", "0").toInt > 0
-    val tracked = collectKeyStats && fileIndexEntries > 0 &&
+    val tracked = collectKeyStats && fileIndex &&
       !concurrentWriters &&
       keyCols.forall(c => outDf.columns.contains(c))
     if (tracked) {
@@ -3678,43 +3719,11 @@ class CowTable(
     val src = version.map(manifestAt).getOrElse(manifest)
     require(!CowTable.existsAt(spark, destPath),
       s"cloneTo: a table already exists at $destPath")
-    val absBase = fs.makeQualified(new Path(basePath)).toString
-      .stripSuffix("/")
-    def abs(f: String) =
-      if (CowTable.isAbsoluteRef(f)) f else s"$absBase/$f"
-    def absL(m: Map[String, Seq[String]]) =
-      m.map { case (k, v) => k -> v.map(abs) }
-    val p = src.props.getOrElse(CowTable.inferProps(src))
-    val dest: CowTable =
-      if (src.storageType == "mor")
-        new MorTable(spark, destPath, src.keyCols, src.partitionCols,
-          src.precombineField, keepCommits = p.keepCommits,
-          numBuckets = p.numBuckets, clusterCols = p.clusterCols,
-          compactEvery = p.compactEvery,
-          fileIndexEntries = p.fileIndexEntries, statsCols = p.statsCols,
-          bloomCols = p.bloomCols, checkConstraints = p.checkConstraints)
-      else
-        new CowTable(spark, destPath, src.keyCols, src.partitionCols,
-          src.precombineField, keepCommits = p.keepCommits,
-          numBuckets = p.numBuckets, clusterCols = p.clusterCols,
-          trackCommitVersions = p.trackCommitVersions,
-          fileIndexEntries = p.fileIndexEntries, statsCols = p.statsCols,
-          bloomCols = p.bloomCols, checkConstraints = p.checkConstraints,
-          deleteVectors = p.deleteVectors)
-    dest.writeManifest(src.copy(
-      partitions = absL(src.partitions),
-      logPartitions = absL(src.logPartitions),
-      // DV map keys must keep matching the (absolutized) listing entries,
-      // and the sidecars are shared by reference like the data files; the
-      // stored positions carry the SOURCE files' scan paths, which is
-      // exactly what the clone keeps reading
-      dvs = src.dvs.map { case (f, e) =>
-        abs(f) -> e.copy(files = e.files.map(abs)) },
-      fileStats = src.fileStats.map { case (f, st) =>
-        abs(f) -> st.copy(bloomRef = abs(st.bloomRef),
-          colBloomRefs = st.colBloomRefs.map {
-            case (c, r) => c -> abs(r) })
-      },
+    val dest = CowTable.openWithProps(spark, destPath, src, src.tableProps)
+    // the DV sidecars are shared by reference like the data files; the
+    // stored positions carry the SOURCE files' scan paths, which is
+    // exactly what the clone keeps reading
+    dest.writeManifest(CowTable.rerooted(src, qualifiedBase).copy(
       tombstones = Map.empty,
       drops = Map.empty,
       operation = "clone",
@@ -3766,20 +3775,8 @@ class CowTable(
         s"publish aborted: $basePath advanced to v$head since the " +
           s"staging clone was taken at v$base — re-stage from the " +
           "current head (no lost update)")
-    val stagingBase = staging.fs
-      .makeQualified(new Path(staging.basePath)).toString.stripSuffix("/")
-    def abs(f: String) =
-      if (CowTable.isAbsoluteRef(f)) f else s"$stagingBase/$f"
-    def absL(m: Map[String, Seq[String]]) =
-      m.map { case (k, v) => k -> v.map(abs) }
-    writeManifest(sm.copy(
+    writeManifest(CowTable.rerooted(sm, staging.qualifiedBase).copy(
       version = base + 1,
-      partitions = absL(sm.partitions),
-      logPartitions = absL(sm.logPartitions),
-      fileStats = sm.fileStats.map { case (f, st) =>
-        abs(f) -> st.copy(bloomRef = abs(st.bloomRef),
-          colBloomRefs = st.colBloomRefs.map { case (c, r) => c -> abs(r) })
-      },
       tombstones = Map.empty,
       drops = Map.empty,
       operation = "publish",
@@ -4469,39 +4466,93 @@ object CowTable {
     */
   def open(spark: SparkSession, basePath: String): CowTable = {
     val m = openManifest(spark, basePath)
-    openWithProps(spark, basePath, m, m.props.getOrElse(inferProps(m)))
+    openWithProps(spark, basePath, m, m.tableProps)
   }
 
-  /** [[open]]'s constructor dispatch with EXPLICIT props — the piece
-    * [[CowTable.alterProps]] reuses to build the post-DDL handle.
+  /** [[open]] with EXPLICIT props — the post-DDL handle of
+    * [[CowTable.alterProps]] and friends, and a clone's first writer.
     */
   private[table] def openWithProps(spark: SparkSession, basePath: String,
-      m: Manifest, p: TableProps): CowTable = {
-    if (m.storageType == "mor")
-      new MorTable(spark, basePath, m.keyCols, m.partitionCols,
-        m.precombineField, keepCommits = p.keepCommits,
-        numBuckets = p.numBuckets, clusterCols = p.clusterCols,
-        compactEvery = p.compactEvery,
-        fileIndexEntries = p.fileIndexEntries, statsCols = p.statsCols,
-        bloomCols = p.bloomCols, checkConstraints = p.checkConstraints)
-    else
-      new CowTable(spark, basePath, m.keyCols, m.partitionCols,
-        m.precombineField, keepCommits = p.keepCommits,
-        numBuckets = p.numBuckets, clusterCols = p.clusterCols,
-        trackCommitVersions = p.trackCommitVersions,
-        fileIndexEntries = p.fileIndexEntries, statsCols = p.statsCols,
-        bloomCols = p.bloomCols, checkConstraints = p.checkConstraints,
-        deleteVectors = p.deleteVectors)
+      m: Manifest, p: TableProps): CowTable =
+    create(spark, basePath, m.keyCols, m.partitionCols, m.precombineField,
+      m.storageType, p)
+
+  /** The one handle factory: a [[MorTable]] for storage type `mor`
+    * (which always stamps commit versions), a [[CowTable]] otherwise.
+    */
+  def create(spark: SparkSession, basePath: String, keyCols: Seq[String],
+      partitionCols: Seq[String] = Nil, precombineField: String = "",
+      storageType: String = "cow",
+      props: TableProps = TableProps()): CowTable = {
+    import props._
+    if (storageType.equalsIgnoreCase("mor")) {
+      require(!deleteVectors,
+        "deleteVectors is COW-only (MOR deletes are already log appends)")
+      new MorTable(spark, basePath, keyCols, partitionCols, precombineField,
+        keepCommits = keepCommits, numBuckets = numBuckets,
+        clusterCols = clusterCols, compactEvery = compactEvery,
+        fileIndex = fileIndex, statsCols = statsCols, bloomCols = bloomCols,
+        checkConstraints = checkConstraints)
+    } else
+      new CowTable(spark, basePath, keyCols, partitionCols, precombineField,
+        keepCommits = keepCommits, numBuckets = numBuckets,
+        clusterCols = clusterCols, trackCommitVersions = trackCommitVersions,
+        fileIndex = fileIndex, statsCols = statsCols, bloomCols = bloomCols,
+        checkConstraints = checkConstraints, deleteVectors = deleteVectors)
+  }
+
+  /** [[open]] the table at `basePath`, or, when none exists, [[create]]
+    * one from string options (a first `write`/`writeStream` to a path,
+    * CREATE TABLE): `keyCols` (required), `partitionCols` (unless given,
+    * as a PARTITIONED BY clause gives them), `precombineField`,
+    * `storageType` and every [[TableProps.parse]] key.
+    */
+  def openOrCreate(spark: SparkSession, basePath: String,
+      options: Map[String, String],
+      partitionCols: Seq[String] = Nil): CowTable =
+    if (existsAt(spark, basePath)) open(spark, basePath)
+    else {
+      def opt(k: String) = TableProps.option(options, k)
+      val keys = TableProps.listOption(options, "keyCols").getOrElse(Nil)
+      require(keys.nonEmpty,
+        "creating a graft table needs the keyCols option (or property)")
+      create(spark, basePath, keys, if (partitionCols.nonEmpty)
+          partitionCols
+        else TableProps.listOption(options, "partitionCols").getOrElse(Nil),
+        opt("precombineField").getOrElse(""),
+        opt("storageType").getOrElse("cow"), TableProps.parse(options))
+    }
+
+  /** `m` with every relative file reference — listings, index entries
+    * and bloom sidecars, deletion vectors and their sidecars, z-order
+    * marks — made absolute under `qualifiedBase`, so ANOTHER table can
+    * adopt it ([[CowTable.cloneTo]], [[CowTable.publishFrom]]).
+    */
+  private def rerooted(m: Manifest, qualifiedBase: String): Manifest = {
+    def abs(f: String) =
+      if (isAbsoluteRef(f)) f else s"$qualifiedBase/$f"
+    def absL(l: Map[String, Seq[String]]) =
+      l.map { case (k, v) => k -> v.map(abs) }
+    m.copy(
+      partitions = absL(m.partitions),
+      logPartitions = absL(m.logPartitions),
+      fileStats = m.fileStats.map { case (f, st) =>
+        abs(f) -> st.copy(bloomRef = abs(st.bloomRef),
+          colBloomRefs = st.colBloomRefs.map { case (c, r) => c -> abs(r) })
+      },
+      dvs = m.dvs.map { case (f, e) =>
+        abs(f) -> e.copy(files = e.files.map(abs)) },
+      unorderedFiles = m.unorderedFiles.map(abs))
   }
 
   /** Best-effort config reconstruction for PRE-round-7 manifests (no
     * recorded props): commit-version stamping shows in the recorded schema
     * (stamped tables always carry [[CommitVerCol]]); a maintained file
-    * index shows as non-empty fileStats (recorded as a positive
-    * `fileIndexEntries`, which only switches the index on); statsCols
-    * are whatever columns the stats actually cover; bucket routing shows
-    * in the partition-key strings (`__bucket=N` path segments — observed
-    * max + 1, exact for any table whose bucket space is populated).
+    * index shows as non-empty fileStats (recorded as `fileIndex` on);
+    * statsCols are whatever columns the stats actually cover; bucket
+    * routing shows in the partition-key strings (`__bucket=N` path
+    * segments — observed max + 1, exact for any table whose bucket space
+    * is populated).
     * clusterCols are unrecoverable (sort locality degrades gracefully;
     * recluster restores).
     */
@@ -4512,7 +4563,7 @@ object CowTable {
     TableProps(
       numBuckets = if (bucketVals.isEmpty) 0 else bucketVals.max + 1,
       trackCommitVersions = m.schema.fieldNames.contains(CommitVerCol),
-      fileIndexEntries = if (m.fileStats.nonEmpty) 60000 else 0,
+      fileIndex = m.fileStats.nonEmpty,
       statsCols = m.fileStats.valuesIterator
         .flatMap(_.colStats.keysIterator).toSeq.distinct.sorted)
   }
@@ -5235,7 +5286,7 @@ object CowTable {
           "numBuckets" -> JInt(p.numBuckets),
           "clusterCols" -> JArray(p.clusterCols.toList.map(JString(_))),
           "trackCommitVersions" -> JBool(p.trackCommitVersions),
-          "fileIndexEntries" -> JInt(p.fileIndexEntries),
+          "fileIndex" -> JBool(p.fileIndex),
           "statsCols" -> JArray(p.statsCols.toList.map(JString(_))),
           "compactEvery" -> JInt(p.compactEvery),
           "bloomCols" -> (if (p.bloomCols.isEmpty) JNothing
@@ -5368,7 +5419,10 @@ object CowTable {
           clusterCols = strs(o \ "clusterCols"),
           trackCommitVersions = (o \ "trackCommitVersions") match {
             case JBool(b) => b; case _ => false },
-          fileIndexEntries = long(o \ "fileIndexEntries", 0L).toInt,
+          // a pre-switch manifest's integer entry count reads as `> 0`
+          fileIndex = (o \ "fileIndex") match {
+            case JBool(b) => b
+            case _ => long(o \ "fileIndexEntries", 0L) > 0 },
           statsCols = strs(o \ "statsCols"),
           compactEvery = long(o \ "compactEvery", 20L).toInt,
           bloomCols = strs(o \ "bloomCols"),

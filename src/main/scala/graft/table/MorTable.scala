@@ -54,13 +54,13 @@ class MorTable(
       * reference's `hoodie.compact.inline=false` mode, :152).
       */
     val compactEvery: Int = 20,
-    fileIndexEntries: Int = 0,
+    fileIndex: Boolean = false,
     statsCols: Seq[String] = Nil,
     bloomCols: Seq[String] = Nil,
     checkConstraints: Seq[String] = Nil)
   extends CowTable(spark, basePath, keyCols, partitionCols, precombineField,
     keepCommits, numBuckets, clusterCols, trackCommitVersions = true,
-    fileIndexEntries = fileIndexEntries, statsCols = statsCols,
+    fileIndex = fileIndex, statsCols = statsCols,
     bloomCols = bloomCols, checkConstraints = checkConstraints) {
 
   import CowTable._
@@ -81,7 +81,8 @@ class MorTable(
     * the read-optimized view starts non-empty instead of hiding the
     * initial data behind the compaction cadence. A call with neither side
     * is the ledger commit of [[CowTable.applyChanges]] and counts no delta
-    * commit. The hints are not needed: an append reads no stored row.
+    * commit. `incomingUnique` skips the upsert log's precombine window;
+    * the other hints are not needed: an append reads no stored row.
     */
   override def applyChanges(upserts: Option[DataFrame],
       deletes: Option[DataFrame], parallelism: Int = 0,
@@ -95,8 +96,8 @@ class MorTable(
       val metrics =
         if (deletes.isEmpty) extraMetrics else Map.empty[String, Long]
       if (manifest.files.isEmpty)
-        insertAppend(precombined(df), parallelism, metrics)
-      else logAppend(df, parallelism, LogUpsert, metrics)
+        insertAppend(precombined(df, incomingUnique), parallelism, metrics)
+      else logAppend(df, parallelism, LogUpsert, metrics, incomingUnique)
     }
     deletes.foreach(logAppend(_, parallelism, LogDelete, extraMetrics))
   }
@@ -110,19 +111,23 @@ class MorTable(
     compactLogs(parallelism); ()
   }
 
-  /** Intra-batch conflict resolution, as on the COW write path. */
-  private def precombined(df: DataFrame): DataFrame =
-    if (precombineField.isEmpty) df
+  /** Intra-batch conflict resolution, as on the COW write path; none for a
+    * batch the caller vouches is one row per identity (`unique`).
+    */
+  private def precombined(df: DataFrame, unique: Boolean): DataFrame =
+    if (precombineField.isEmpty || unique) df
     else CdcOps.precombine(df, mergeIdCols, precombineField)
 
   private def logAppend(df: DataFrame, parallelism: Int, op: String,
-      extraMetrics: Map[String, Long]): Unit = {
+      extraMetrics: Map[String, Long], unique: Boolean = false): Unit = {
     val m = manifest
     val v = m.version + 1
     val stamped = stamp(df, v)
     val evolved = evolveSchema(m, stamped.schema)
     val incoming0 = pad(stamped, evolved)
-    val incoming = if (op == LogUpsert) precombined(incoming0) else incoming0
+    val incoming = if (op != LogUpsert) incoming0
+      else precombined(incoming0,
+        unique && uniqueThroughPad(stamped.schema, evolved))
     // delta logs never receive FileStats — skip the key-stats tracker
     val newLogs = writeCommit(incoming.withColumn(LogOpCol, lit(op)), v,
       parallelism, idSchema = evolved, collectKeyStats = false)

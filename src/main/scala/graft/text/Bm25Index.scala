@@ -51,7 +51,7 @@ final class Bm25Index(spark: SparkSession, path: String) {
   private def postingsTable(): CowTable = openOr(postingsPath)(
     new CowTable(spark, postingsPath, keyCols = Seq("doc_id", "term"),
       clusterCols = Seq("term"), statsCols = Seq("term"),
-      bloomCols = Seq("term"), fileIndexEntries = 100000))
+      bloomCols = Seq("term"), fileIndex = true))
 
   private def doclensTable(): CowTable = openOr(doclensPath)(
     new CowTable(spark, doclensPath, keyCols = Seq("doc_id")))

@@ -67,8 +67,7 @@ final class LshDedupIndex(
 
   private def create(): CowTable = new CowTable(spark, path,
     keyCols = Seq("doc_id", "band", "bh"),
-    clusterCols = Seq("bh"), statsCols = Seq("bh"),
-    fileIndexEntries = 60000)
+    clusterCols = Seq("bh"), statsCols = Seq("bh"), fileIndex = true)
 
   /** (doc_id, band, bh): one scalar 60-bit bucket hash per signature band
     * — the banded-struct bucket of [[TextOps.minhashCandidatePairs]]

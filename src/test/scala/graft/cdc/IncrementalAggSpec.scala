@@ -26,7 +26,7 @@ class IncrementalAggSpec extends SparkSpec {
     val rnd = new scala.util.Random(42)
     val t = new CowTable(spark, tmpDir("ivm"), keyCols = Seq("id"),
       partitionCols = Seq("p"), precombineField = "v",
-      fileIndexEntries = 1000)
+      fileIndex = true)
     val spec = AggSpec(Seq("p"), "v")
     def part(i: Int) = s"p${i % 3}"
     t.bulkInsert(rows((0 until 60).map(i =>

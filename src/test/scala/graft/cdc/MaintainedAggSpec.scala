@@ -124,7 +124,7 @@ class MaintainedAggSpec extends SparkSpec {
   test("min/max maintenance: optimistic fold + repair on extreme loss") {
     val src = new CowTable(spark, tmpDir("ma4-src"), keyCols = Seq("k"),
       precombineField = "v", trackCommitVersions = true,
-      fileIndexEntries = 1000, statsCols = Seq("grp"))
+      fileIndex = true, statsCols = Seq("grp"))
     src.bulkInsert(rows(("a", "g1", 5), ("b", "g1", 1), ("c", "g1", 9),
       ("d", "g2", 4)))
     val ma = new MaintainedAgg(spark, tmpDir("ma4-st"), src,

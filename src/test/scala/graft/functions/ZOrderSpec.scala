@@ -158,7 +158,7 @@ class ZOrderSpec extends SparkSpec {
   test("reclusterZOrder over three columns rewrites and stays exact") {
     val dir = tmpDir("z3-tbl")
     val t = new graft.table.CowTable(spark, dir, keyCols = Seq("id"),
-      fileIndexEntries = 1000, statsCols = Seq("x", "y", "w"))
+      fileIndex = true, statsCols = Seq("x", "y", "w"))
     val rows = (0 until 4096).map { i =>
       (i.toLong, (i % 16).toLong, ((i / 16) % 16).toLong,
         ((i / 256) % 16).toLong)

@@ -20,7 +20,7 @@ class AggPushdownSpec extends SparkSpec {
 
   private def mkTable(dir: String, index: Boolean): CowTable = {
     val t = new CowTable(spark, tmpDir(dir), Seq("id"), Seq("p"),
-      fileIndexEntries = if (index) 1000 else 0)
+      fileIndex = index)
     t.bulkInsert((1 to 100).map(i => (i, i * 2L, s"p${i % 3}"))
       .toDF("id", "v", "p"))
     t
@@ -103,7 +103,7 @@ class AggPushdownSpec extends SparkSpec {
     assert(plain.fastCount().isEmpty)
     // MOR with pending delta logs -> unknown until compaction
     val mor = new MorTable(spark, tmpDir("fastcount-mor"), Seq("id"),
-      fileIndexEntries = 1000, compactEvery = 0)
+      fileIndex = true, compactEvery = 0)
     mor.bulkInsert(Seq((1, "a")).toDF("id", "v"))
     assert(mor.fastCount() == Some(1L))
     mor.upsert(Seq((2, "b")).toDF("id", "v")) // pending log

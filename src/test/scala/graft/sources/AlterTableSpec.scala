@@ -112,7 +112,7 @@ class AlterTableSpec extends SparkSpec {
     val dir = tmpDir("alter-stats")
     val t = new CowTable(spark, dir, keyCols = Seq("id"),
       partitionCols = Seq("p"),
-      fileIndexEntries = 1 << 20, statsCols = Seq("n"))
+      fileIndex = true, statsCols = Seq("n"))
     t.bulkInsert(Seq((1L, "a", 10), (2L, "b", 20)).toDF("id", "p", "n"))
     t.alterSchema(widenCols = Seq("n" -> LongType))
     // stats recorded as int encode identically to long probes: the
@@ -159,13 +159,20 @@ class AlterTableSpec extends SparkSpec {
 
     // retention + index knobs stick and persist through open()
     spark.sql("""ALTER TABLE acat.lake.sp SET TBLPROPERTIES (
-      'keepCommits'='25', 'fileIndexEntries'='1000',
+      'keepCommits'='25', 'fileIndex'='true',
       'statsCols'='v', 'bloomCols'='v')""")
     val re = CowTable.open(spark, s"$wh/lake/sp")
-    assert(re.keepCommits == 25 && re.fileIndexEntries == 1000 &&
+    assert(re.keepCommits == 25 && re.fileIndex &&
       re.statsCols == Seq("v") && re.bloomCols == Seq("v"),
-      s"props: ${re.keepCommits}/${re.fileIndexEntries}/${re.statsCols}")
+      s"props: ${re.keepCommits}/${re.fileIndex}/${re.statsCols}")
     assert(re.manifest.operation == "alter_props")
+    // the legacy integer spelling of the switch still reads as `> 0`
+    spark.sql("""ALTER TABLE acat.lake.sp SET TBLPROPERTIES (
+      'fileIndex'='false')""")
+    assert(!CowTable.open(spark, s"$wh/lake/sp").fileIndex)
+    spark.sql("""ALTER TABLE acat.lake.sp SET TBLPROPERTIES (
+      'fileIndexEntries'='1000')""")
+    assert(CowTable.open(spark, s"$wh/lake/sp").fileIndex)
     // a write through the reopened handle builds the new index
     spark.sql("INSERT INTO acat.lake.sp VALUES (2, 2.0)")
     val st = CowTable.open(spark, s"$wh/lake/sp").manifest.fileStats
@@ -214,7 +221,7 @@ class AlterTableSpec extends SparkSpec {
     init()
     spark.sql("""CREATE TABLE acat.lake.pp (id BIGINT, p STRING,
       v DOUBLE) USING graft PARTITIONED BY (p)
-      TBLPROPERTIES ('keyCols'='id', 'fileIndexEntries'='1000')""")
+      TBLPROPERTIES ('keyCols'='id', 'fileIndex'='true')""")
     spark.sql("INSERT INTO acat.lake.pp VALUES " +
       "(1, 'a', 1.0), (2, 'a', 2.0), (3, 'b', 3.0)")
     val rows = spark.sql(
@@ -231,7 +238,7 @@ class AlterTableSpec extends SparkSpec {
     init()
     spark.sql("""CREATE TABLE acat.lake.ds (id BIGINT, p STRING,
       v DOUBLE) USING graft PARTITIONED BY (p)
-      TBLPROPERTIES ('keyCols'='id', 'fileIndexEntries'='1000')""")
+      TBLPROPERTIES ('keyCols'='id', 'fileIndex'='true')""")
     spark.sql("INSERT INTO acat.lake.ds VALUES " +
       "(1, 'a', 1.0), (2, 'a', 2.0), (3, 'b', 3.0)")          // v1
     spark.sql("INSERT INTO acat.lake.ds VALUES (4, 'b', 4.0)") // v2: p=b
@@ -412,7 +419,7 @@ class AlterTableSpec extends SparkSpec {
   test("DROP COLUMN guards: keyed/cluster/constraint columns refuse, " +
     "stats columns unlist") {
     val t = new CowTable(spark, tmpDir("drop-guard"), keyCols = Seq("id"),
-      fileIndexEntries = 100, statsCols = Seq("v", "w"),
+      fileIndex = true, statsCols = Seq("v", "w"),
       checkConstraints = Seq("v >= 0"))
     t.bulkInsert(Seq((1L, 2.0, 3.0, "x")).toDF("id", "v", "w", "tag"))
     intercept[IllegalArgumentException] {

@@ -15,7 +15,7 @@ class CatalogSyncSpec extends SparkSpec {
   private def mk(dir: String, partitioned: Boolean = true): CowTable = {
     val t = new CowTable(spark, dir, keyCols = Seq("id"),
       partitionCols = if (partitioned) Seq("p") else Nil,
-      fileIndexEntries = 1000)
+      fileIndex = true)
     t.bulkInsert((0 until 60).map(i => (i.toLong, s"p${i % 3}", i * 10L))
       .toDF("id", "p", "v"), parallelism = 2)
     t

@@ -15,7 +15,7 @@ class DvReadRuleSpec extends SparkSpec {
   private def mkDvTable(dir: String): CowTable = {
     val t = new CowTable(spark, dir, keyCols = Seq("id"),
       partitionCols = Seq("p"), precombineField = "ts",
-      fileIndexEntries = 1000, deleteVectors = true)
+      fileIndex = true, deleteVectors = true)
     t.bulkInsert((0 until 200)
       .map(i => (f"k$i%04d", s"p${i % 2}", 1L, i.toDouble))
       .toDF("id", "p", "ts", "v"), parallelism = 4)

@@ -119,6 +119,19 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(t.snapshotAt(1).count() == 2, "overwritten version time-travels")
   }
 
+  test("a first write creates the table with every creation option") {
+    val path = tmpDir("dsv2-props")
+    Seq((1, 1.0), (2, 2.0)).toDF("id", "v").write.format("graft")
+      .option("keyCols", "id").option("numBuckets", "4")
+      .option("fileIndex", "true")
+      .mode("append").save(path)
+    val m = CowTable.open(spark, path).manifest
+    val p = m.props.get
+    assert(p.numBuckets == 4 && p.fileIndex, s"props: $p")
+    assert(m.fileStats.keySet == m.baseFiles.toSet,
+      "the index is maintained from the first write")
+  }
+
   test("writes route to the manifest's storage type: MOR stays log-append") {
     val path = tmpDir("dsv2-mor")
     Seq((1, 1.0), (2, 2.0)).toDF("id", "v").write.format("graft")
@@ -176,7 +189,7 @@ class GraftDataSourceSpec extends SparkSpec {
   test("pushed-down filters skip files automatically (no options)") {
     val path = tmpDir("dsv2-autoskip")
     val t = new CowTable(spark, path, keyCols = Seq("id"),
-      fileIndexEntries = 1000, statsCols = Seq("ts"))
+      fileIndex = true, statsCols = Seq("ts"))
     def batch(lo: Int, hi: Int) = (lo until hi)
       .map(i => (i.toLong, java.sql.Timestamp.valueOf(
         f"2024-01-${i / 100 + 1}%02d 00:00:00"), i.toDouble))
@@ -238,7 +251,7 @@ class GraftDataSourceSpec extends SparkSpec {
     // fk values interleave mod 4 across three files: every file's
     // [min, max] covers the whole domain — only the bloom can prune
     val t = new CowTable(spark, path, keyCols = Seq("id"),
-      fileIndexEntries = 1000, statsCols = Seq("fk"),
+      fileIndex = true, statsCols = Seq("fk"),
       bloomCols = Seq("fk"))
     def batch(res: Int) = (0 until 100)
       .map(i => ((i * 4 + res).toLong, (i * 4 + res).toLong, 1.0))
@@ -298,7 +311,7 @@ class GraftDataSourceSpec extends SparkSpec {
   test("rangeColumn options skip files at the source level") {
     val path = tmpDir("dsv2-range")
     val t = new CowTable(spark, path, keyCols = Seq("id"),
-      fileIndexEntries = 1000, statsCols = Seq("ts"))
+      fileIndex = true, statsCols = Seq("ts"))
     def batch(lo: Int, hi: Int) = (lo until hi)
       .map(i => (i.toLong, java.sql.Timestamp.valueOf(
         f"2024-01-${i / 100 + 1}%02d 00:00:00"), i.toDouble))
@@ -337,7 +350,7 @@ class GraftDataSourceSpec extends SparkSpec {
   test("scan statistics report exact numRows from the manifest") {
     val path = tmpDir("dsv2-stats")
     val t = new CowTable(spark, path, keyCols = Seq("id"),
-      fileIndexEntries = 1000)
+      fileIndex = true)
     t.bulkInsert((0 until 500).map(i => (i.toLong, i.toDouble))
       .toDF("id", "v"), parallelism = 4)
     val df = spark.read.format("graft").load(path)

@@ -17,7 +17,7 @@ class GraftDppSpec extends SparkSpec {
     */
   private def clusteredFact(): CowTable = {
     val t = new CowTable(spark, tmpDir("dpp-fact"), keyCols = Seq("id"),
-      fileIndexEntries = 1000, statsCols = Seq("k"))
+      fileIndex = true, statsCols = Seq("k"))
     def stripe(lo: Int) = (lo until lo + 10)
       .map(i => (i.toLong, i.toLong, i * 2.0)).toDF("id", "k", "v")
     t.bulkInsert(stripe(0), parallelism = 1)
@@ -75,7 +75,7 @@ class GraftDppSpec extends SparkSpec {
     // NO statsCols: the join is on the table's single-column key, so the
     // file index (range + sidecar bloom) carries the runtime prune
     val t = new CowTable(spark, tmpDir("dpp-key"), keyCols = Seq("id"),
-      fileIndexEntries = 1000)
+      fileIndex = true)
     def stripe(lo: Int) = (lo until lo + 10)
       .map(i => (i.toLong, i * 2.0)).toDF("id", "v")
     t.bulkInsert(stripe(0), parallelism = 1)

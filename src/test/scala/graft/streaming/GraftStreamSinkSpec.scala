@@ -49,6 +49,25 @@ class GraftStreamSinkSpec extends SparkSpec {
     assert(CowTable.open(spark, path).manifest.version == vBefore)
   }
 
+  test("a first stream batch creates the table with every creation option") {
+    val src = tmpDir("wsp-src")
+    val path = tmpDir("wsp-table")
+    Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v")
+      .write.mode("append").parquet(src)
+    val q = spark.readStream.schema(spark.read.parquet(src).schema)
+      .parquet(src)
+      .writeStream.format("graft")
+      .option("checkpointLocation", tmpDir("wsp-ckpt"))
+      .option("keyCols", "id").option("numBuckets", "4")
+      .option("fileIndex", "true")
+      .outputMode("update")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start(path)
+    q.awaitTermination()
+    val p = CowTable.open(spark, path).manifest.props.get
+    assert(p.numBuckets == 4 && p.fileIndex, s"props: $p")
+  }
+
   test("windowed stream aggregation converges through update-mode upsert") {
     val src = tmpDir("wsa-src")
     val path = tmpDir("wsa-table")

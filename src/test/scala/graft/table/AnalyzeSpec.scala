@@ -11,7 +11,7 @@ class AnalyzeSpec extends SparkSpec {
 
   private def mk(dir: String): CowTable = {
     val t = new CowTable(spark, dir, keyCols = Seq("id"),
-      fileIndexEntries = 1000)
+      fileIndex = true)
     t.bulkInsert((1L to 1000L).map(i =>
         (i, s"cat${i % 7}", if (i % 10 == 0) null else s"v$i"))
       .toDF("id", "cat", "v"), parallelism = 4)

@@ -205,7 +205,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("lookupByKeysAt returns the images a historical version stored") {
     val t = new CowTable(spark, tmpDir("cf-lka"), keyCols = Seq("id"),
-      trackCommitVersions = true, fileIndexEntries = 1000)
+      trackCommitVersions = true, fileIndex = true)
     t.bulkInsert((1 to 50).map(i => (s"k$i", i * 1.0)).toDF("id", "v"))
     t.upsert(Seq(("k7", 700.0)).toDF("id", "v"))
     t.delete(Seq(("k9", 0.0)).toDF("id", "v"))

@@ -27,7 +27,7 @@ class CloneSpec extends SparkSpec {
   test("clone reads the source's data without copying a single file") {
     val src = new CowTable(spark, tmpDir("cl-src"), keyCols = Seq("id"),
       partitionCols = Seq("p"), trackCommitVersions = true,
-      fileIndexEntries = 1000, statsCols = Seq("fk"),
+      fileIndex = true, statsCols = Seq("fk"),
       bloomCols = Seq("fk"))
     src.bulkInsert((0 until 200)
       .map(i => (i.toLong, if (i % 2 == 0) "a" else "b", i.toLong))
@@ -124,5 +124,21 @@ class CloneSpec extends SparkSpec {
     spark.sql("INSERT INTO clcat.lake.dev VALUES (3, 3.0)")
     assert(spark.sql("SELECT count(*) FROM clcat.lake.src")
       .as[Long].head() == 2L, "source unaffected by clone writes")
+  }
+
+  test("clone keeps the z-order marks of the files it references") {
+    val src = new CowTable(spark, tmpDir("cl-z"), keyCols = Seq("k"),
+      numBuckets = 2, clusterCols = Seq("k"))
+    src.bulkInsert((1L to 200L).map(k => (k, (k % 7) * 1.0)).toDF("k", "v"))
+    assert(src.reclusterZOrder("k", "v", parallelism = 2))
+    val marks = src.manifest.unorderedFiles
+    assert(marks.nonEmpty, "the z-order rewrite marks its files")
+    val clone = src.cloneTo(tmpDir("cl-z-dst"))
+    val cm = clone.manifest
+    // the marks follow the listing into the clone's absolute refs, so the
+    // bucket scan still claims no order for the z-ordered files
+    assert(cm.unorderedFiles.size == marks.size &&
+      cm.unorderedFiles.toSet == cm.baseFiles.toSet,
+      s"clone marks ${cm.unorderedFiles} vs source $marks")
   }
 }

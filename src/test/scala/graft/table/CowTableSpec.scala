@@ -386,13 +386,13 @@ class CowTableSpec extends SparkSpec {
     val t = new CowTable(spark, dir, keyCols = Seq("id"),
       partitionCols = Seq("p"), precombineField = "v",
       keepCommits = 7, numBuckets = 4, trackCommitVersions = true,
-      fileIndexEntries = 500, statsCols = Seq("v2"))
+      fileIndex = true, statsCols = Seq("v2"))
     t.bulkInsert((0 until 40)
       .map(i => (s"k$i", s"p${i % 2}", i.toDouble, i.toLong))
       .toDF("id", "p", "v", "v2"))
     val m1 = t.manifest
     assert(m1.props.contains(TableProps(keepCommits = 7, numBuckets = 4,
-      trackCommitVersions = true, fileIndexEntries = 500,
+      trackCommitVersions = true, fileIndex = true,
       statsCols = Seq("v2"), compactEvery = 0)))
     assert(CowTable.parseManifest(CowTable.renderManifest(m1)) == m1)
 
@@ -416,15 +416,37 @@ class CowTableSpec extends SparkSpec {
   test("inferProps reconstructs legacy manifests without a props record") {
     val dir = tmpDir("cow-legacy")
     val t = new CowTable(spark, dir, keyCols = Seq("id"),
-      numBuckets = 3, trackCommitVersions = true, fileIndexEntries = 500,
+      numBuckets = 3, trackCommitVersions = true, fileIndex = true,
       statsCols = Seq("v"))
     t.bulkInsert((0 until 30).map(i => (s"k$i", i.toDouble)).toDF("id", "v"))
     val legacy = t.manifest.copy(props = None) // pre-round-7 manifest shape
     val p = CowTable.inferProps(legacy)
     assert(p.trackCommitVersions, "CommitVerCol in schema implies tracking")
-    assert(p.fileIndexEntries > 0, "fileStats imply an index")
+    assert(p.fileIndex, "fileStats imply an index")
     assert(p.statsCols == Seq("v"))
     assert(p.numBuckets == 3, s"bucket count from partition keys: $p")
+  }
+
+  test("a manifest's legacy integer fileIndexEntries opens as the switch") {
+    for ((entries, on) <- Seq(500 -> true, 0 -> false)) {
+      val dir = tmpDir("cow-legacy-index")
+      val t = new CowTable(spark, dir, keyCols = Seq("id"), fileIndex = true)
+      t.bulkInsert(Seq(("a", 1.0)).toDF("id", "v"))
+      // through the Hadoop FS, which keeps the checksum sidecar current
+      val f = new org.apache.hadoop.fs.Path(dir,
+        s"_commits/v${t.manifest.version}.json")
+      val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val in = fs.open(f)
+      val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      val legacy = txt.replaceAll("\"fileIndex\"\\s*:\\s*true",
+        s"\"fileIndexEntries\" : $entries")
+      assert(legacy != txt, "the manifest records the switch")
+      val out = fs.create(f, true)
+      try out.write(legacy.getBytes("UTF-8")) finally out.close()
+      val o = CowTable.open(spark, dir)
+      assert(o.fileIndex == on && o.manifest.tableProps.fileIndex == on,
+        s"fileIndexEntries = $entries")
+    }
   }
 
   test("manifest render/parse round-trip") {

@@ -14,7 +14,7 @@ class DeletionVectorSpec extends SparkSpec {
   private def mkTable(dir: String, buckets: Int = 0): CowTable =
     new CowTable(spark, dir, keyCols = Seq("id"),
       partitionCols = Seq("p"), precombineField = "ts",
-      fileIndexEntries = 1000, trackCommitVersions = true,
+      fileIndex = true, trackCommitVersions = true,
       numBuckets = buckets, deleteVectors = true)
 
   private def rows(n: Int): Seq[(String, String, Long, Double)] =
@@ -244,7 +244,7 @@ class DeletionVectorSpec extends SparkSpec {
     def seed(dir: String, dv: Boolean): CowTable = {
       val t = new CowTable(spark, dir, keyCols = Seq("id"),
         partitionCols = Seq("p"), precombineField = "ts",
-        fileIndexEntries = 1000, trackCommitVersions = true,
+        fileIndex = true, trackCommitVersions = true,
         deleteVectors = dv)
       t.bulkInsert(rows(120).toDF("id", "p", "ts", "v"), parallelism = 4)
       t

@@ -3,7 +3,7 @@ package graft.table
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Per-file record-key index (`fileIndexEntries > 0`): key-range + bloom
+/** Per-file record-key index (`fileIndex = true`): key-range + bloom
   * pruning of merge reads — the Hudi default-BLOOM-index semantics.
   */
 class FileIndexSpec extends SparkSpec {
@@ -23,7 +23,7 @@ class FileIndexSpec extends SparkSpec {
     val plain = drive(new CowTable(spark, tmpDir("fi"), keyCols = Seq("id"),
       partitionCols = Seq("p")))
     val indexed = drive(new CowTable(spark, tmpDir("fi"), keyCols = Seq("id"),
-      partitionCols = Seq("p"), fileIndexEntries = 1000))
+      partitionCols = Seq("p"), fileIndex = true))
     assert(indexed == plain)
     assert(indexed("k5") == 500.0 && !indexed.contains("k10"))
   }
@@ -33,7 +33,7 @@ class FileIndexSpec extends SparkSpec {
     // even keys, file B odd keys — their lexicographic ranges overlap
     // almost completely, so only the bloom phase can tell them apart.
     val t = new CowTable(spark, tmpDir("fi"), keyCols = Seq("id"),
-      fileIndexEntries = 1000)
+      fileIndex = true)
     t.bulkInsert((0 until 100 by 2).map(i => (f"k$i%03d", i.toDouble))
       .toDF("id", "v"), parallelism = 1)
     t.insertAppend((1 until 100 by 2).map(i => (f"k$i%03d", i.toDouble))
@@ -60,7 +60,7 @@ class FileIndexSpec extends SparkSpec {
     // ranges OVERLAP lexically ("150" < "99"); fixed-width ranges are
     // disjoint, so the range phase prunes numeric block probes correctly
     val t = new CowTable(spark, tmpDir("fi-enc"), keyCols = Seq("id"),
-      fileIndexEntries = 1000)
+      fileIndex = true)
     t.bulkInsert(spark.range(0, 100).toDF("id"), parallelism = 1)
     t.insertAppend(spark.range(100, 200).toDF("id"), parallelism = 1)
     val m = t.manifest
@@ -86,7 +86,7 @@ class FileIndexSpec extends SparkSpec {
 
   test("snapshotForRange skips files outside a stat column's range") {
     val t = new CowTable(spark, tmpDir("fi-skip"), keyCols = Seq("id"),
-      fileIndexEntries = 1000, statsCols = Seq("ts"))
+      fileIndex = true, statsCols = Seq("ts"))
     def batch(lo: Int, hi: Int) = (lo until hi)
       .map(i => (i.toLong, java.sql.Timestamp.valueOf(
         f"2024-01-${i / 100 + 1}%02d 00:00:00"), i.toDouble))
@@ -123,7 +123,7 @@ class FileIndexSpec extends SparkSpec {
 
   test("snapshotForValues skips files whose stat range misses every value") {
     val t = new CowTable(spark, tmpDir("fi-vals"), keyCols = Seq("id"),
-      fileIndexEntries = 1000, statsCols = Seq("fk"))
+      fileIndex = true, statsCols = Seq("fk"))
     def batch(lo: Int, hi: Int) = (lo until hi)
       .map(i => (i.toLong, i.toLong, i.toDouble)).toDF("id", "fk", "v")
     // four appends -> four files with disjoint fk ranges
@@ -145,7 +145,7 @@ class FileIndexSpec extends SparkSpec {
 
     // MOR: pruned base still merges ALL pending logs
     val mt = new MorTable(spark, tmpDir("fi-vals-mor"), keyCols = Seq("id"),
-      compactEvery = 0, fileIndexEntries = 1000, statsCols = Seq("fk"))
+      compactEvery = 0, fileIndex = true, statsCols = Seq("fk"))
     mt.bulkInsert(batch(0, 100), parallelism = 1)
     mt.insertAppend(batch(100, 200), parallelism = 1)
     // log rows: update fk=42's value, and a NEW key with fk=5000
@@ -162,7 +162,7 @@ class FileIndexSpec extends SparkSpec {
     // interleaved fk values: every file's [min, max] spans ~the whole
     // domain, so range stats keep everything — only the bloom can prune
     val t = new CowTable(spark, tmpDir("fi-cbloom"), keyCols = Seq("id"),
-      fileIndexEntries = 1000, statsCols = Seq("fk"),
+      fileIndex = true, statsCols = Seq("fk"),
       bloomCols = Seq("fk"))
     def batch(res: Int) = (0 until 100)
       .map(i => ((i * 8 + res).toLong, (i * 8 + res).toLong, 1.0))
@@ -203,7 +203,7 @@ class FileIndexSpec extends SparkSpec {
     // [9.5, 10.5]. v3's sign-flip bits encoding prunes CORRECTLY; legacy
     // encodings (enc <= 2) must not prune doubles at all.
     val t = new CowTable(spark, tmpDir("fi-dbl"), keyCols = Seq("id"),
-      fileIndexEntries = 1000, statsCols = Seq("v"))
+      fileIndex = true, statsCols = Seq("v"))
     t.bulkInsert(Seq((1L, 10.2), (2L, 10.9)).toDF("id", "v"),
       parallelism = 1)
     t.insertAppend(Seq((3L, 2.0), (4L, 3.0)).toDF("id", "v"),
@@ -250,7 +250,7 @@ class FileIndexSpec extends SparkSpec {
 
   test("decimal stats columns prune ranges exactly (v3 unscaled encoding)") {
     val t = new CowTable(spark, tmpDir("fi-dec"), keyCols = Seq("id"),
-      fileIndexEntries = 1000, statsCols = Seq("price"))
+      fileIndex = true, statsCols = Seq("price"))
     // money-typed: decimal(12,2), inside the unscaled-long encoding range
     def batch(rows: (Long, String)*) = rows.toSeq.toDF("id", "p0")
       .select(col("id"), col("p0").cast("decimal(12,2)").as("price"))
@@ -268,7 +268,7 @@ class FileIndexSpec extends SparkSpec {
 
   test("lookupByKeys reads only index-matching files") {
     val t = new CowTable(spark, tmpDir("fi"), keyCols = Seq("id"),
-      fileIndexEntries = 1000)
+      fileIndex = true)
     t.bulkInsert((0 until 100 by 2).map(i => (f"k$i%03d", i.toDouble))
       .toDF("id", "v"), parallelism = 1)
     t.insertAppend((1 until 100 by 2).map(i => (f"k$i%03d", i.toDouble))
@@ -286,7 +286,7 @@ class FileIndexSpec extends SparkSpec {
 
   test("kept files retain their index entries; rewritten files get fresh ones") {
     val t = new CowTable(spark, tmpDir("fi"), keyCols = Seq("id"),
-      fileIndexEntries = 1000)
+      fileIndex = true)
     t.bulkInsert((0 until 50).map(i => (f"a$i%02d", i.toDouble))
       .toDF("id", "v"), parallelism = 1)
     t.insertAppend((0 until 50).map(i => (f"z$i%02d", i.toDouble))
@@ -330,7 +330,7 @@ class FileIndexSpec extends SparkSpec {
     // random keys make every file's range span the key space — the index
     // caveat. With numBuckets, a lookup consults only its bucket's blooms.
     val t = new CowTable(spark, tmpDir("fi-bucket"), keyCols = Seq("k"),
-      numBuckets = 4, fileIndexEntries = 1000)
+      numBuckets = 4, fileIndex = true)
     def slice(a: Int) = spark.range(200)
       .select(xxhash64(col("id") + lit(a * 200L)).as("k"),
         col("id").cast("double").as("v"))
@@ -360,7 +360,7 @@ class FileIndexSpec extends SparkSpec {
 
   test("composite keys index on the joint key string") {
     val t = new CowTable(spark, tmpDir("fi"), keyCols = Seq("id", "sub"),
-      fileIndexEntries = 1000)
+      fileIndex = true)
     t.bulkInsert(Seq(("a", "1", 1.0), ("a", "2", 2.0), ("b", "1", 3.0))
       .toDF("id", "sub", "v"), parallelism = 1)
     t.upsert(Seq(("a", "2", 20.0)).toDF("id", "sub", "v"))

@@ -31,7 +31,7 @@ class ManifestShardSpec extends SparkSpec {
   test("sharded write/read round-trips transparently") {
     withThreshold(4) {
       val t = new CowTable(spark, tmpDir("shard-rt"), keyCols = Seq("id"),
-        partitionCols = Seq("p"), fileIndexEntries = 100)
+        partitionCols = Seq("p"), fileIndex = true)
       t.bulkInsert((0 until 120).map(i => (i.toLong, s"p${i % 5}", i * 2L))
         .toDF("id", "p", "v"), parallelism = 4)
       val m = t.manifest
@@ -57,7 +57,7 @@ class ManifestShardSpec extends SparkSpec {
     withThreshold(4) {
       val t = new CowTable(spark, tmpDir("shard-reuse"),
         keyCols = Seq("id"), partitionCols = Seq("p"),
-        fileIndexEntries = 100)
+        fileIndex = true)
       t.bulkInsert((0 until 200).map(i => (i.toLong, s"p${i % 8}", i * 2L))
         .toDF("id", "p", "v"), parallelism = 4)
       val before = t.manifest.shardRefs.toSet

@@ -2,6 +2,7 @@ package graft.table
 
 import graft.SparkSpec
 import graft.cdc.{CdcPipeline, GoldenFixtures, TableConfig}
+import org.apache.spark.QueryPlans
 import org.apache.spark.sql.functions._
 
 /** Merge-on-read semantics: log-append writes, `_ro`/`_rt` read modes,
@@ -138,6 +139,26 @@ class MorTableSpec extends SparkSpec {
     // one upsert batch, two rows for key 1: seq=9 must win over seq=5
     t.upsert(rows((1, "low", "p1", 5), (1, "high", "p1", 9)))
     assert(t.realtime().select("v").as[String].collect().toSeq == Seq("high"))
+  }
+
+  test("applyChanges with incomingUnique writes the upsert log without " +
+      "a precombine window") {
+    def windows(unique: Boolean): Int = {
+      val t = freshTable()
+      t.bulkInsert(rows((1, "a", "p1", 1), (2, "b", "p2", 1)))
+      val (_, plans) = QueryPlans(spark)(t.applyChanges(
+        Some(rows((1, "a2", "p1", 2), (3, "c", "p2", 2))), None,
+        incomingUnique = unique))
+      assert(t.manifest.operation == "log_upsert")
+      assert(t.realtime().select("id", "v").as[(Int, String)].collect()
+        .toMap == Map(1 -> "a2", 2 -> "b", 3 -> "c"))
+      plans.map(_.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+      }.size).sum
+    }
+    assert(windows(unique = false) == 1, "the log write precombines")
+    assert(windows(unique = true) == 0,
+      "a batch the caller vouches unique skips the window")
   }
 
   test("compactLogs folds logs into base and resets MOR state") {

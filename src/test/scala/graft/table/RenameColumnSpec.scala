@@ -42,7 +42,7 @@ class RenameColumnSpec extends SparkSpec {
 
   test("rename re-keys per-file stats so skipping keeps pruning") {
     val t = new CowTable(spark, tmpDir("ren-stats"), keyCols = Seq("id"),
-      fileIndexEntries = 100, statsCols = Seq("k"))
+      fileIndex = true, statsCols = Seq("k"))
     def stripe(lo: Int) = (lo until lo + 10)
       .map(i => (i.toLong, i.toLong)).toDF("id", "k")
     t.bulkInsert(stripe(0), parallelism = 1)

@@ -170,7 +170,7 @@ class TableOpsPropertySpec extends SparkSpec {
   test("COW: random op sequences equal the model replay at every step") {
     drive(new CowTable(spark, tmpDir("props-cow"), keyCols = Seq("id"),
       partitionCols = Seq("part"), precombineField = "v",
-      fileIndexEntries = 1000, trackCommitVersions = true),
+      fileIndex = true, trackCommitVersions = true),
       seed = 11, nOps = 22)
   }
 
@@ -188,7 +188,7 @@ class TableOpsPropertySpec extends SparkSpec {
     CowTable.ManifestShardFileThreshold = 3
     try drive(new CowTable(spark, tmpDir("props-cow-shard"),
       keyCols = Seq("id"), partitionCols = Seq("part"),
-      precombineField = "v", fileIndexEntries = 1000,
+      precombineField = "v", fileIndex = true,
       trackCommitVersions = true), seed = 13, nOps = 22)
     finally CowTable.ManifestShardFileThreshold = old
   }

@@ -13,7 +13,7 @@ class TableServicesSpec extends SparkSpec {
 
   test("recluster makes file key ranges disjoint and keeps data identical") {
     val t = new CowTable(spark, tmpDir("svc"), keyCols = Seq("id"),
-      fileIndexEntries = 1000)
+      fileIndex = true)
     // shuffled insert across 4 tasks: every file spans ~the whole key range
     val keys = new scala.util.Random(7).shuffle((0 until 400).toVector)
     t.bulkInsert(keys.map(i => (f"k$i%03d", i.toDouble)).toDF("id", "v"),
@@ -44,7 +44,7 @@ class TableServicesSpec extends SparkSpec {
 
   test("recluster respects partition dirs") {
     val t = new CowTable(spark, tmpDir("svc-part"), keyCols = Seq("id"),
-      partitionCols = Seq("p"), fileIndexEntries = 1000)
+      partitionCols = Seq("p"), fileIndex = true)
     t.bulkInsert((0 until 200).map(i => (f"k$i%03d", s"p${i % 2}", i.toDouble))
       .toDF("id", "p", "v"), parallelism = 4)
     val snap0 = t.snapshot().as[(String, String, Double)].collect().toSet
@@ -57,7 +57,7 @@ class TableServicesSpec extends SparkSpec {
 
   test("reclusterZOrder prunes range scans on BOTH axes; data identical") {
     val t = new CowTable(spark, tmpDir("svc-z"), keyCols = Seq("id"),
-      fileIndexEntries = 1000, statsCols = Seq("a", "b"))
+      fileIndex = true, statsCols = Seq("a", "b"))
     // two independent axes: a = 0..799 in order, b = a fixed-seed shuffle
     val rnd = new scala.util.Random(11)
     val bs = rnd.shuffle((0 until 800).toVector)
@@ -99,7 +99,7 @@ class TableServicesSpec extends SparkSpec {
   test("reclusterZOrder rejects non-numeric axes and no-ops on empty") {
     import org.apache.spark.sql.types._
     val t = new CowTable(spark, tmpDir("svc-z-bad"), keyCols = Seq("id"),
-      fileIndexEntries = 1000, statsCols = Seq("a"))
+      fileIndex = true, statsCols = Seq("a"))
     t.createEmpty(StructType(Seq(
       StructField("id", StringType), StructField("a", LongType),
       StructField("b", StringType), StructField("v", DoubleType))))
@@ -115,7 +115,7 @@ class TableServicesSpec extends SparkSpec {
 
   test("compactBySize folds only small-file debris, keeps big files") {
     val t = new CowTable(spark, tmpDir("szc"), keyCols = Seq("id"),
-      partitionCols = Seq("p"), fileIndexEntries = 1000)
+      partitionCols = Seq("p"), fileIndex = true)
     // one big-ish initial file per partition...
     t.bulkInsert((0 until 4000).map(i => (s"k$i", s"p${i % 2}", i.toDouble))
       .toDF("id", "p", "v"), parallelism = 1)

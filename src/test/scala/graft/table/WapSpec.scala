@@ -99,4 +99,35 @@ class WapSpec extends SparkSpec {
     other.bulkInsert(Seq(("a", 1.0)).toDF("id", "v"))
     intercept[IllegalArgumentException] { main.publishFrom(other) }
   }
+
+  test("a staging vectored delete in an inherited file survives publish") {
+    val main = new CowTable(spark, tmpDir("wap-dv-main"),
+      keyCols = Seq("id"), partitionCols = Seq("p"), deleteVectors = true)
+    def df(rows: Seq[(String, String, Double)]) = rows.toDF("id", "p", "v")
+    main.bulkInsert(df(Seq(("a", "x", 1), ("b", "x", 2), ("c", "y", 3))))
+    val staging = main.cloneTo(tmpDir("wap-dv-stage") + "/s")
+    staging.delete(df(Seq(("a", "x", 0))))
+    assert(staging.manifest.dvs.nonEmpty, "the delete is vectored")
+    main.publishFrom(staging)
+    // the vector's sidecar lives under staging: main must read it there
+    val got = main.snapshot().select("id").as[String].collect().toSet
+    assert(got == Set("b", "c"), s"got $got")
+  }
+
+  test("a staging vectored delete in a staging-written file survives " +
+      "publish") {
+    val main = new CowTable(spark, tmpDir("wap-dv2-main"),
+      keyCols = Seq("id"), partitionCols = Seq("p"), deleteVectors = true)
+    def df(rows: Seq[(String, String, Double)]) = rows.toDF("id", "p", "v")
+    main.bulkInsert(df(Seq(("a", "x", 1), ("c", "y", 3))))
+    val staging = main.cloneTo(tmpDir("wap-dv2-stage") + "/s")
+    staging.upsert(df(Seq(("d", "y", 4), ("e", "y", 5))))
+    staging.delete(df(Seq(("d", "y", 0))))
+    assert(staging.manifest.dvs.keys.exists(f => !f.startsWith("/") &&
+      !f.contains(":")), "the vector is on a file staging wrote")
+    main.publishFrom(staging)
+    val got = main.snapshot().select("id").as[String].collect().toSet
+    assert(got == Set("a", "c", "e"), s"the deleted row came back: $got")
+    assert(main.fastCount().forall(_ == 3L), s"${main.fastCount()}")
+  }
 }

@@ -35,7 +35,7 @@ class WriteTrackerStatsSpec extends SparkSpec {
     }
     val trackerBytes = sidecars()
     // every sidecar (key and column blooms) is sized to its own file's
-    // row count, never to the table's fileIndexEntries
+    // row count; the index switch sizes nothing
     recorded.foreach { case (f, st) =>
       val want = BloomFilter.create(st.rows, CowTable.FileIndexFpp).bitSize()
       (st.bloomRef +: st.colBloomRefs.values.toSeq).foreach { r =>
@@ -60,7 +60,7 @@ class WriteTrackerStatsSpec extends SparkSpec {
   test("tracker stats == read-back stats on a full-featured table") {
     val t = new CowTable(spark, tmpDir("wt"),
       keyCols = Seq("id", "sub"), partitionCols = Seq("p"),
-      numBuckets = 2, fileIndexEntries = 100,
+      numBuckets = 2, fileIndex = true,
       statsCols = Seq("fk", "note"), bloomCols = Seq("fk"),
       trackCommitVersions = true)
     val rows = (1 to 500).map { i =>
@@ -89,7 +89,7 @@ class WriteTrackerStatsSpec extends SparkSpec {
     // Concurrent-writer mode forces it here; the commit records the
     // fallback as `stats_readback = 1`, a tracked commit records nothing.
     val t = new CowTable(spark, tmpDir("wt2"), keyCols = Seq("id"),
-      fileIndexEntries = 50)
+      fileIndex = true)
     t.bulkInsert((1 to 200).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
     assertParity(t)
     t.upsert(Seq((7L, "up")).toDF("id", "v"))
@@ -106,18 +106,15 @@ class WriteTrackerStatsSpec extends SparkSpec {
     assert(t.snapshot().count() == 200)
   }
 
-  test("bloom sizes do not depend on fileIndexEntries") {
-    for (entries <- Seq(1, 100000)) {
-      val t = new CowTable(spark, tmpDir("wt-size"),
-        keyCols = Seq("id"), partitionCols = Seq("p"),
-        fileIndexEntries = entries, statsCols = Seq("fk"),
-        bloomCols = Seq("fk"))
-      t.bulkInsert((1 to 300).map(i => (i.toLong, s"p${i % 3}",
-        (i % 40).toLong)).toDF("id", "p", "fk"))
-      assertParity(t)
-      t.upsert((1 to 30).map(i => (i.toLong, s"p${i % 3}", 99L))
-        .toDF("id", "p", "fk"))
-      assertParity(t)
-    }
+  test("bloom sizes follow each file's row count") {
+    val t = new CowTable(spark, tmpDir("wt-size"),
+      keyCols = Seq("id"), partitionCols = Seq("p"),
+      fileIndex = true, statsCols = Seq("fk"), bloomCols = Seq("fk"))
+    t.bulkInsert((1 to 300).map(i => (i.toLong, s"p${i % 3}",
+      (i % 40).toLong)).toDF("id", "p", "fk"))
+    assertParity(t)
+    t.upsert((1 to 30).map(i => (i.toLong, s"p${i % 3}", 99L))
+      .toDF("id", "p", "fk"))
+    assertParity(t)
   }
 }
