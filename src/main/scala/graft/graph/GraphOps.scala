@@ -133,7 +133,7 @@ object GraphOps {
         .groupBy("id").agg(sum(col("c")).as("s"))
         .select(col("id"),
           (lit(teleport) + expr("(85 * s) div 100")).as("rank"))
-      for (i <- 2 to iters) {
+      for (_ <- 2 to iters) {
         rs = rs.localCheckpoint()
         val rv = broadcast(rs)
         rs = ed

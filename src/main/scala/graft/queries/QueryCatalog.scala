@@ -5868,8 +5868,8 @@ object QueryCatalog {
         (col("c_custkey") % 8).cast("string").as("seg"))
       val path =
         java.nio.file.Files.createTempDirectory("graft-shardman").toString
-      val old = graft.table.CowTable.ManifestShardFileThreshold
-      graft.table.CowTable.ManifestShardFileThreshold = 8
+      val old = graft.table.ManifestCodec.ShardFileThreshold
+      graft.table.ManifestCodec.ShardFileThreshold = 8
       try {
         val tbl = new graft.table.CowTable(s, path,
           keyCols = Seq("c_custkey"), partitionCols = Seq("seg"))
@@ -5886,7 +5886,7 @@ object QueryCatalog {
           .select("c_custkey", "c_name", "cents", "seg")
           .orderBy("c_custkey")
       } finally {
-        graft.table.CowTable.ManifestShardFileThreshold = old
+        graft.table.ManifestCodec.ShardFileThreshold = old
       }
     },
     Some("""WITH cust AS (SELECT c_custkey, c_name,

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{GraftStreamShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{
-  Attribute, AttributeReference, AttributeSet, EqualNullSafe, EqualTo,
+  AttributeReference, AttributeSet, EqualNullSafe, EqualTo,
   Expression}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.plans.logical.{
@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.{col, expr, lit}
+import org.apache.spark.sql.functions.{expr, lit}
 
 import graft.table.CowTable
 

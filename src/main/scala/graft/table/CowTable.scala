@@ -1,14 +1,10 @@
 package graft.table
 
-import scala.collection.immutable.ListMap
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, NumericType, StructField, StructType, TimestampType}
-import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.cdc.CdcOps
 
@@ -157,8 +153,8 @@ final case class Manifest(
     /** When non-empty, the file-scale maps (`partitions`,
       * `logPartitions`, `fileStats`, `dvs`) of THIS version were
       * externalized into the named content-addressed shard files under
-      * `_commits/shards/` ([[CowTable.ManifestShardFileThreshold]]).
-      * [[CowTable.readManifestFile]] resolves them transparently — an
+      * `_commits/shards/` ([[ManifestCodec.ShardFileThreshold]]).
+      * [[ManifestCodec.readManifestFile]] resolves them transparently — an
       * in-memory Manifest ALWAYS carries the full maps; the refs remain
       * only for cleaner liveness and re-render. Untouched shards are
       * REUSED byte-identically across commits, so a small commit on a
@@ -492,7 +488,7 @@ class CowTable(
       throw new IllegalArgumentException(
         s"version $v is not retained at $basePath " +
           s"(cleaner keeps the latest $keepCommits commits)")
-    readManifestFile(fs, p)
+    ManifestCodec.readManifestFile(fs, p)
   }
 
   /** Newest retained version whose commit time is at or before `tsMs`
@@ -1588,7 +1584,7 @@ class CowTable(
     * new sidecar refs, positions recorded).
     */
   private def markDvPositions(m: Manifest, v: Long, candFiles: Seq[String],
-      probeKeys: DataFrame, parallelism: Int = 0)
+      probeKeys: DataFrame, parallelism: Int)
       : (Map[String, DvEntry], Seq[String], Long) = {
     if (candFiles.isEmpty) return (m.dvs, Nil, 0L)
     val idCols = mergeIdCols
@@ -3184,34 +3180,40 @@ class CowTable(
     // missing shard
     val tmp = new Path(commitsDir, s".v${m.version}.json." +
       s"${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(publishText(m).getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(s"commit rename failed: $dst")
+    try {
+      val out = fs.create(tmp, true)
+      try out.write(publishText(m).getBytes("UTF-8")) finally out.close()
+      if (!fs.rename(tmp, dst))
+        throw new IllegalStateException(s"commit rename failed: $dst")
+    } catch { case e: Throwable =>
+      // release the claim, or this handle's next commit waits out
+      // lockStaleMs on its own slot (only a crash needs the timeout)
+      scala.util.Try(fs.delete(tmp, false))
+      scala.util.Try(fs.delete(lock, false))
+      throw e
     }
     publishedSplitCache = pendingSplitCache // the publish landed
     true
   }
 
   /** The published root text: monolithic below
-    * [[CowTable.ManifestShardFileThreshold]] live files, sharded above
+    * [[ManifestCodec.ShardFileThreshold]] live files, sharded above
     * it. Shard files are CONTENT-ADDRESSED (`s{slot}-{hash}.json`), so a
     * slot whose entries did not change between commits resolves to the
     * SAME file and is skipped — a small commit on a huge table rewrites
-    * ~1/[[CowTable.ManifestShardCount]] of its metadata, and two
+    * ~1/[[ManifestCodec.ShardCount]] of its metadata, and two
     * concurrent writers rendering identical content converge on one
     * file (tmp + rename, loser's rename is a no-op).
     */
   private def publishText(m: Manifest): String = {
-    if (m.files.size < CowTable.ManifestShardFileThreshold) {
+    if (m.files.size < ManifestCodec.ShardFileThreshold) {
       pendingSplitCache = null
-      return CowTable.renderManifest(
+      return ManifestCodec.renderManifest(
         if (m.shardRefs.isEmpty) m else m.copy(shardRefs = Nil))
     }
     val dir = new Path(commitsDir, "shards")
     fs.mkdirs(dir)
-    val slots = CowTable.shardSplit(m)
+    val slots = ManifestCodec.shardSplit(m)
     // the previous head's canonical slots: an untouched slot reuses its
     // shard file WITHOUT rendering — the slot split is a cheap hash pass
     // while rendering is the expensive part, so a small commit's
@@ -3230,7 +3232,7 @@ class CowTable(
       val c = publishedSplitCache
       if (c != null && c.version == pm.version && c.names == pm.shardRefs)
         c.slots
-      else CowTable.shardSplit(pm)
+      else ManifestCodec.shardSplit(pm)
     }
     val prevName: Map[Int, String] = prev.map(_.shardRefs.flatMap { nm =>
       val digits = nm.stripPrefix("s").takeWhile(_.isDigit)
@@ -3240,7 +3242,7 @@ class CowTable(
       case (s, i) if !s.isEmpty =>
         prevSlots.flatMap(ps =>
           if (ps(i) == s) prevName.get(i) else None).getOrElse {
-          val bytes = CowTable.renderShardDoc(s).getBytes("UTF-8")
+          val bytes = ManifestCodec.renderShardDoc(s).getBytes("UTF-8")
           val md = java.security.MessageDigest.getInstance("MD5")
           val name = s"s$i-" +
             md.digest(bytes).take(8).map(b => f"$b%02x").mkString + ".json"
@@ -3267,8 +3269,8 @@ class CowTable(
           name
         }
     }
-    pendingSplitCache = CowTable.SplitCache(m.version, names, slots)
-    CowTable.renderManifest(m.copy(shardRefs = names))
+    pendingSplitCache = ManifestCodec.SplitCache(m.version, names, slots)
+    ManifestCodec.renderManifest(m.copy(shardRefs = names))
   }
 
   /** Slot split of the last manifest THIS handle successfully published
@@ -3278,8 +3280,8 @@ class CowTable(
     * cached names, so stale or failed-attempt caches fall back to a
     * fresh split.
     */
-  @volatile private var publishedSplitCache: CowTable.SplitCache = null
-  private var pendingSplitCache: CowTable.SplitCache = null
+  @volatile private var publishedSplitCache: ManifestCodec.SplitCache = null
+  private var pendingSplitCache: ManifestCodec.SplitCache = null
 
   /** Create-exclusive claim of a version slot. Hadoop's local-FS
     * `create(overwrite = false)` is check-then-act (two simultaneous
@@ -3796,16 +3798,6 @@ class CowTable(
       .flatMap(_.metrics.get(key))
       .maxOption
 
-  /** Roll back crashed commits: delete `files/c{v}` data directories that
-    * no retained manifest references AND that belong to no committed
-    * version — the debris of a writer that died after writing data but
-    * before publishing its manifest (data-before-manifest ordering makes
-    * such dirs invisible to readers, but nothing else ever reclaims them).
-    * The Hudi failed-commit rollback analog. MUST only run when no write
-    * is in flight (single-writer operation, like every write path here):
-    * a concurrent writer's not-yet-published commit dir looks exactly like
-    * an orphan. Returns the removed directory names.
-    */
   /** One-call housekeeping bundle (the OPTIMIZE-style maintenance pass a
     * scheduler runs): fold pending MOR delta logs, bin-pack small base
     * files toward the target size, apply commit retention, and reclaim
@@ -3856,6 +3848,16 @@ class CowTable(
       "orphan_dirs_removed" -> orphans.size.toLong)
   }
 
+  /** Roll back crashed commits: delete `files/c{v}` data directories that
+    * no retained manifest references AND that belong to no committed
+    * version — the debris of a writer that died after writing data but
+    * before publishing its manifest (data-before-manifest ordering makes
+    * such dirs invisible to readers, but nothing else ever reclaims them).
+    * The Hudi failed-commit rollback analog. MUST only run when no write
+    * is in flight (single-writer operation, like every write path here):
+    * a concurrent writer's not-yet-published commit dir looks exactly like
+    * an orphan. Returns the removed directory names.
+    */
   def vacuumOrphans(): Seq[String] = {
     val committed = listVersions(fs, commitsDir).toSet
     // reference tracking is by directory NAME: concurrent writers' dirs
@@ -4068,391 +4070,6 @@ object CowTable {
     else fs.listStatus(commitsDir).iterator.map(_.getPath.getName)
       .collect { case ManifestName(n) => n.toLong }.toSeq
 
-  /** Parsed-manifest cache. Version files are WRITE-ONCE (exclusive slot
-    * claim + rename in `tryPublish`; losers never overwrite), so a parsed
-    * manifest is immutable for the life of its file — the cache key adds
-    * (mtime, length) anyway so a table deleted and recreated at the same
-    * path (tests, reruns) can never serve stale state. Matters because
-    * `manifest` is read on EVERY table operation and parse cost is
-    * O(files × stats): at a 10k-file table each JSON parse is tens of ms,
-    * and a pipeline step does dozens of manifest reads. Bounded by entry
-    * count with full clear on overflow (manifests of big tables are MBs;
-    * an LRU would buy little over clearing a driver-side cache).
-    */
-  private val manifestCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), Manifest]()
-  private val ManifestCacheMax = 64
-
-  /** Test hook: drop the JVM-wide manifest cache so a spec can prove a
-    * genuinely cold re-read (the (path, mtime, len) key makes same-file
-    * re-reads warm by design).
-    */
-  private[graft] def clearManifestCacheForTest(): Unit =
-    manifestCache.clear()
-
-  private[table] def readManifestFile(fs: FileSystem, p: Path): Manifest = {
-    val st = fs.getFileStatus(p)
-    val key = (p.toString, st.getModificationTime, st.getLen)
-    val hit = manifestCache.get(key)
-    if (hit != null) return hit
-    // bulk byte read, not Source (char-iterator slurping is ~10x slower
-    // on multi-MB shard files)
-    def slurp(f: Path): String = {
-      val in = fs.open(f)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    }
-    val m0 = parseManifest(slurp(p))
-    // sharded root: resolve the externalized file-scale maps. Shards
-    // parse in PARALLEL (they are independent documents), which is what
-    // keeps a million-file cold open sub-second; the merged result is
-    // what gets cached, so warm re-reads stay O(1) regardless of size.
-    val m =
-      if (m0.shardRefs.isEmpty) m0
-      else {
-        import scala.concurrent.{Await, Future, blocking}
-        import scala.concurrent.duration._
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val dir = new Path(p.getParent, "shards")
-        // blocking{} marks the FS reads for the global pool's
-        // ManagedBlocker so concurrent manifest opens issued from pool
-        // threads spawn compensation threads instead of starving each
-        // other; the finite await turns a wedged filesystem into a
-        // diagnosable error rather than a forever-hang
-        val shards =
-          try Await.result(
-            Future.sequence(m0.shardRefs.toList.map(n => Future {
-              blocking {
-                val in = fs.open(new Path(dir, n))
-                val bytes = try in.readAllBytes() finally in.close()
-                parseShardBytes(bytes)
-              }
-            })),
-            10.minutes)
-          catch {
-            case _: java.util.concurrent.TimeoutException =>
-              throw new java.io.IOException(
-                s"graft: timed out reading ${m0.shardRefs.size} manifest " +
-                  s"shards under $dir after 10 minutes — filesystem wedged?")
-          }
-        mergeShards(m0, shards)
-      }
-    if (manifestCache.size >= ManifestCacheMax) manifestCache.clear()
-    manifestCache.put(key, m)
-    m
-  }
-
-  /** File-count threshold at which [[CowTable.writeManifest]]
-    * externalizes the manifest's file-scale maps (`partitions`,
-    * `logPartitions`, `fileStats`, `dvs`) into [[ManifestShardCount]]
-    * content-addressed shard files under `_commits/shards/` — the
-    * Iceberg manifest-list / Hudi metadata-table arrangement, sized for
-    * the limit measured in BASELINE.md ("Round-8 manifest scalability
-    * probe": ~72 MB / 0.5 s single-thread parse at 200k files → a
-    * 100-TB table at 128 MB files ≈ 800k files needs the split). Below
-    * the threshold the monolithic single-file manifest is strictly
-    * better (one read, one write, human-greppable). A `var` so specs
-    * exercise the sharded path at small sizes; every version
-    * self-describes, so mixed timelines read fine.
-    */
-  @volatile var ManifestShardFileThreshold: Int = 50000
-  val ManifestShardCount: Int = 32
-
-  private[table] def shardSlot(file: String): Int =
-    math.floorMod(
-      scala.util.hashing.MurmurHash3.stringHash(file), ManifestShardCount)
-
-  /** One shard's slice of the file-scale maps, with SORTED listings —
-    * the canonical content whose Jackson rendering is what gets
-    * content-addressed (sorted canonical form ⇒ logically-equal slots
-    * render byte-identically ⇒ untouched slots reuse their file).
-    */
-  /** A published manifest's slot split, memoized on the handle that
-    * published it: `names` are the root's shardRefs at `version`, the
-    * equality witness that `slots` really is the published content.
-    */
-  private[table] final case class SplitCache(
-      version: Long, names: Seq[String], slots: Array[ShardSlot])
-
-  private[table] final case class ShardSlot(
-      partitions: Map[String, Seq[String]],
-      logPartitions: Map[String, Seq[String]],
-      fileStats: Map[String, FileStat],
-      dvs: Map[String, DvEntry]) {
-    def isEmpty: Boolean = partitions.isEmpty && logPartitions.isEmpty &&
-      fileStats.isEmpty && dvs.isEmpty
-  }
-
-  /** Split the file-scale maps into [[ManifestShardCount]] slots: every
-    * entry lands in the slot its FILE hashes to. Hashing by file (not
-    * partition) keeps shards balanced even for unpartitioned tables; a
-    * partition's listing may span shards and re-merges on read.
-    * Empty-listed partitions pin to slot 0 so their existence survives
-    * the round trip.
-    */
-  private[table] def shardSplit(m: Manifest): Array[ShardSlot] = {
-    val n = ManifestShardCount
-    def split(ps: Map[String, Seq[String]])
-        : Array[Map[String, Seq[String]]] = {
-      val arr = Array.fill(n)(scala.collection.mutable.LinkedHashMap
-        .empty[String, scala.collection.mutable.ArrayBuffer[String]])
-      ps.foreach { case (pk, fls) =>
-        if (fls.isEmpty) { arr(0).getOrElseUpdate(pk,
-          scala.collection.mutable.ArrayBuffer.empty[String]); () }
-        else fls.foreach { f =>
-          arr(shardSlot(f)).getOrElseUpdate(pk,
-            scala.collection.mutable.ArrayBuffer.empty[String]) += f
-        }
-      }
-      arr.map(_.iterator.map { case (k, v) =>
-        k -> (v.sortInPlace().toSeq: Seq[String])
-      }.toMap)
-    }
-    val parts = split(m.partitions)
-    val logs = split(m.logPartitions)
-    val stats = Array.fill(n)(
-      scala.collection.mutable.LinkedHashMap.empty[String, FileStat])
-    m.fileStats.foreach { case (f, st) => stats(shardSlot(f)).update(f, st) }
-    val dvs = Array.fill(n)(
-      scala.collection.mutable.LinkedHashMap.empty[String, DvEntry])
-    m.dvs.foreach { case (f, e) => dvs(shardSlot(f)).update(f, e) }
-    Array.tabulate(n)(i =>
-      ShardSlot(parts(i), logs(i), stats(i).toMap, dvs(i).toMap))
-  }
-
-  /** Render one shard slot as its canonical compact JSON document.
-    * Jackson STREAMING, not the json4s AST the (small, human-debugged)
-    * root uses: shard render/parse is the per-commit hot path at
-    * 100-TB file counts, and streaming is ~10× faster with a fraction
-    * of the allocation.
-    */
-  private[table] def renderShardDoc(s: ShardSlot): String = {
-    val sw = new java.io.StringWriter(1 << 16)
-    val g = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-    def listingField(name: String, ps: Map[String, Seq[String]]): Unit = {
-      g.writeObjectFieldStart(name)
-      ps.toSeq.sortBy(_._1).foreach { case (k, fls) =>
-        g.writeArrayFieldStart(k)
-        fls.foreach(g.writeString)
-        g.writeEndArray()
-      }
-      g.writeEndObject()
-    }
-    g.writeStartObject()
-    listingField("partitions", s.partitions)
-    listingField("logPartitions", s.logPartitions)
-    g.writeObjectFieldStart("fileStats")
-    s.fileStats.toSeq.sortBy(_._1).foreach { case (f, st) =>
-      g.writeObjectFieldStart(f)
-      g.writeStringField("keyMin", st.keyMin)
-      g.writeStringField("keyMax", st.keyMax)
-      g.writeStringField("bloomRef", st.bloomRef)
-      g.writeNumberField("rows", st.rows)
-      g.writeNumberField("bytes", st.bytes)
-      g.writeObjectFieldStart("colStats")
-      st.colStats.toSeq.sortBy(_._1).foreach { case (c, mm) =>
-        g.writeArrayFieldStart(c)
-        mm.foreach(g.writeString)
-        g.writeEndArray()
-      }
-      g.writeEndObject()
-      if (st.colBloomRefs.nonEmpty) {
-        g.writeObjectFieldStart("colBlooms")
-        st.colBloomRefs.toSeq.sortBy(_._1).foreach { case (c, r) =>
-          g.writeStringField(c, r)
-        }
-        g.writeEndObject()
-      }
-      g.writeEndObject()
-    }
-    g.writeEndObject()
-    if (s.dvs.nonEmpty) {
-      g.writeObjectFieldStart("dvs")
-      s.dvs.toSeq.sortBy(_._1).foreach { case (f, e) =>
-        g.writeObjectFieldStart(f)
-        g.writeArrayFieldStart("files")
-        e.files.foreach(g.writeString)
-        g.writeEndArray()
-        g.writeNumberField("rows", e.rows)
-        g.writeEndObject()
-      }
-      g.writeEndObject()
-    }
-    g.writeEndObject()
-    g.close()
-    sw.toString
-  }
-
-  /** The non-empty shard documents of a manifest, `(slot, canonical
-    * text)` — see [[shardSplit]]/[[renderShardDoc]].
-    */
-  private[table] def shardManifest(m: Manifest): Seq[(Int, String)] =
-    shardSplit(m).zipWithIndex.toSeq.collect {
-      case (s, i) if !s.isEmpty => i -> renderShardDoc(s)
-    }
-
-  /** Streaming parse of one [[renderShardDoc]] document. */
-  private[table] def parseShard(txt: String): (Map[String, Seq[String]],
-      Map[String, Seq[String]], Map[String, FileStat],
-      Map[String, DvEntry]) =
-    parseShard(
-      new com.fasterxml.jackson.core.JsonFactory().createParser(txt))
-
-  /** Byte-level variant: skips materializing a multi-MB String per
-    * shard (Jackson decodes UTF-8 inline) — measurably faster on the
-    * cold-open path.
-    */
-  private[table] def parseShardBytes(bytes: Array[Byte])
-      : (Map[String, Seq[String]], Map[String, Seq[String]],
-        Map[String, FileStat], Map[String, DvEntry]) =
-    parseShard(
-      new com.fasterxml.jackson.core.JsonFactory().createParser(bytes))
-
-  private def parseShard(p: com.fasterxml.jackson.core.JsonParser)
-      : (Map[String, Seq[String]], Map[String, Seq[String]],
-        Map[String, FileStat], Map[String, DvEntry]) = {
-    import com.fasterxml.jackson.core.JsonToken._
-    def expect(t: com.fasterxml.jackson.core.JsonToken): Unit = {
-      val got = p.nextToken()
-      require(got == t, s"shard parse: expected $t, got $got")
-    }
-    def readStrings(): Seq[String] = {
-      // caller is ON the START_ARRAY token
-      val b = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (p.nextToken() != END_ARRAY) b += p.getText
-      b.toSeq
-    }
-    def readListing(): Map[String, Seq[String]] = {
-      // caller is ON the START_OBJECT token
-      val out = scala.collection.mutable.LinkedHashMap
-        .empty[String, Seq[String]]
-      while (p.nextToken() != END_OBJECT) {
-        val k = p.currentName()
-        require(p.nextToken() == START_ARRAY, s"listing[$k]: not an array")
-        out.update(k, readStrings())
-      }
-      ListMap(out.toSeq: _*)
-    }
-    var parts = Map.empty[String, Seq[String]]
-    var logs = Map.empty[String, Seq[String]]
-    val stats = scala.collection.mutable.LinkedHashMap.empty[String, FileStat]
-    val dvs = scala.collection.mutable.LinkedHashMap.empty[String, DvEntry]
-    expect(START_OBJECT)
-    while (p.nextToken() != END_OBJECT) {
-      p.currentName() match {
-        case "partitions" =>
-          require(p.nextToken() == START_OBJECT, "partitions: not object")
-          parts = readListing()
-        case "logPartitions" =>
-          require(p.nextToken() == START_OBJECT, "logPartitions: not object")
-          logs = readListing()
-        case "fileStats" =>
-          require(p.nextToken() == START_OBJECT, "fileStats: not object")
-          while (p.nextToken() != END_OBJECT) {
-            val f = p.currentName()
-            require(p.nextToken() == START_OBJECT, s"fileStats[$f]")
-            var keyMin, keyMax, bloomRef = ""
-            var rows, bytes = -1L
-            var colStats = Map.empty[String, Seq[String]]
-            var colBlooms = Map.empty[String, String]
-            while (p.nextToken() != END_OBJECT) {
-              p.currentName() match {
-                case "keyMin" => p.nextToken(); keyMin = p.getText
-                case "keyMax" => p.nextToken(); keyMax = p.getText
-                case "bloomRef" => p.nextToken(); bloomRef = p.getText
-                case "rows" => p.nextToken(); rows = p.getLongValue
-                case "bytes" => p.nextToken(); bytes = p.getLongValue
-                case "colStats" =>
-                  require(p.nextToken() == START_OBJECT, "colStats")
-                  colStats = readListing()
-                case "colBlooms" =>
-                  require(p.nextToken() == START_OBJECT, "colBlooms")
-                  val b = scala.collection.mutable.LinkedHashMap
-                    .empty[String, String]
-                  while (p.nextToken() != END_OBJECT) {
-                    val c = p.currentName()
-                    p.nextToken()
-                    b.update(c, p.getText)
-                  }
-                  colBlooms = b.toMap
-                case other =>
-                  throw new IllegalArgumentException(
-                    s"shard fileStats[$f]: unknown field $other")
-              }
-            }
-            stats.update(f, FileStat(keyMin, keyMax, bloomRef, colStats,
-              rows, bytes, colBlooms))
-          }
-        case "dvs" =>
-          require(p.nextToken() == START_OBJECT, "dvs: not object")
-          while (p.nextToken() != END_OBJECT) {
-            val f = p.currentName()
-            require(p.nextToken() == START_OBJECT, s"dvs[$f]")
-            var fls = Seq.empty[String]
-            var rows = 0L
-            while (p.nextToken() != END_OBJECT) {
-              p.currentName() match {
-                case "files" =>
-                  require(p.nextToken() == START_ARRAY, "dv files")
-                  fls = readStrings()
-                case "rows" => p.nextToken(); rows = p.getLongValue
-                case other => throw new IllegalArgumentException(
-                  s"shard dvs[$f]: unknown field $other")
-              }
-            }
-            dvs.update(f, DvEntry(fls, rows))
-          }
-        case other => throw new IllegalArgumentException(
-          s"shard: unknown field $other")
-      }
-    }
-    p.close()
-    (parts, logs, stats.toMap, ListMap(dvs.toSeq: _*))
-  }
-
-  /** Merge parsed shards back into the root manifest. Listings combine
-    * per partition key and SORT (file identity is path-borne — bucket
-    * ids ride `__bucket=N` segments — so list order carries no
-    * semantics; sorting makes the merge deterministic regardless of
-    * shard order).
-    */
-  private[table] def mergeShards(root: Manifest,
-      shards: Seq[(Map[String, Seq[String]], Map[String, Seq[String]],
-        Map[String, FileStat], Map[String, DvEntry])]): Manifest = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    def mergeListing(ls: Seq[Map[String, Seq[String]]])
-        : Map[String, Seq[String]] = {
-      val out = scala.collection.mutable.LinkedHashMap
-        .empty[String, scala.collection.mutable.ArrayBuffer[String]]
-      ls.foreach(_.foreach { case (k, v) =>
-        out.getOrElseUpdate(k,
-          scala.collection.mutable.ArrayBuffer.empty[String]) ++= v
-      })
-      ListMap(out.toSeq.map { case (k, v) =>
-        k -> (v.sortInPlace().toSeq: Seq[String])
-      }.sortBy(_._1): _*)
-    }
-    // the shard maps are disjoint (each file's entries live in ONE
-    // slot), so the stats merge is a pure HAMT union of the maps the
-    // parallel parse already built — no per-entry rebuild; and the
-    // independent merges overlap on the pool
-    val fParts = Future(mergeListing(shards.map(_._1)))
-    val fLogs = Future(mergeListing(shards.map(_._2)))
-    val fStats = Future(shards.map(_._3)
-      .foldLeft(Map.empty[String, FileStat])(_ ++ _))
-    root.copy(
-      partitions = Await.result(fParts, Duration.Inf),
-      logPartitions = Await.result(fLogs, Duration.Inf),
-      fileStats = Await.result(fStats, Duration.Inf),
-      dvs = ListMap(shards.iterator.flatMap(_._4).toSeq.sortBy(_._1): _*))
-  }
-
-  /** Read a table's manifest given only its path — the entry point for
-    * integrations (e.g. [[graft.sources.GraftDataSource]]) that discover
-    * key/partition metadata FROM the manifest instead of requiring it.
-    */
   /** Whether a committed graft table exists at `basePath`. */
   def existsAt(spark: SparkSession, basePath: String): Boolean = {
     val commits = new Path(basePath, "_commits")
@@ -4568,6 +4185,10 @@ object CowTable {
         .flatMap(_.colStats.keysIterator).toSeq.distinct.sorted)
   }
 
+  /** Read a table's manifest given only its path — the entry point for
+    * integrations (e.g. [[graft.sources.GraftDataSource]]) that discover
+    * key/partition metadata FROM the manifest instead of requiring it.
+    */
   def openManifest(
       spark: SparkSession,
       basePath: String,
@@ -4583,7 +4204,7 @@ object CowTable {
     }
     val p = new Path(commits, s"v$v.json")
     require(fs.exists(p), s"version $v is not retained at $basePath")
-    readManifestFile(fs, p)
+    ManifestCodec.readManifestFile(fs, p)
   }
   val DirColPrefix = "__p_"
   val BucketCol = "__bucket"
@@ -5175,261 +4796,5 @@ object CowTable {
       } else { sb.append(c); i += 1 }
     }
     sb.toString
-  }
-
-  private def listing(ps: Map[String, Seq[String]]): JObject =
-    JObject(ps.toSeq.sortBy(_._1).map {
-      case (k, fsq) => k -> JArray(fsq.toList.map(JString(_)))
-    }.toList)
-
-  private def fileStatsJson(stats: Map[String, FileStat]): JValue =
-    JObject(stats.toSeq.sortBy(_._1).map {
-      case (f, st) => f -> (JObject(List(
-        "keyMin" -> JString(st.keyMin),
-        "keyMax" -> JString(st.keyMax),
-        "bloomRef" -> JString(st.bloomRef),
-        "rows" -> JInt(st.rows),
-        "bytes" -> JInt(st.bytes),
-        "colStats" -> JObject(st.colStats.toSeq.sortBy(_._1).map {
-          case (c, mm) =>
-            c -> (JArray(mm.toList.map(JString(_))): JValue)
-        }.toList),
-        // json4s drops JNothing at render: bloom-less entries unchanged
-        "colBlooms" -> (if (st.colBloomRefs.isEmpty) JNothing
-          else JObject(st.colBloomRefs.toSeq.sortBy(_._1).map {
-            case (c, ref) => c -> (JString(ref): JValue)
-          }.toList)))): JValue)
-    }.toList)
-
-  private def dvsJson(dvs: Map[String, DvEntry]): JValue =
-    if (dvs.isEmpty) JNothing
-    else JObject(dvs.toSeq.sortBy(_._1).map { case (f, e) =>
-      f -> (JObject(List(
-        "files" -> JArray(e.files.toList.map(JString(_))),
-        "rows" -> JInt(e.rows))): JValue)
-    }.toList)
-
-  private[table] def renderManifest(m: Manifest): String = {
-    // pretty JSON is for humans debugging small tables; past a few
-    // thousand file entries the indentation roughly doubles manifest
-    // bytes paid on every commit write + (cold) read, so render compact
-    val render: JValue => String =
-      if (m.files.size > 2000) JsonMethods.compact(_)
-      else JsonMethods.pretty(_)
-    render(JsonMethods.render(JObject(List(
-      "version" -> JInt(m.version),
-      "schemaJson" -> JString(m.schemaJson),
-      "keyCols" -> JArray(m.keyCols.toList.map(JString(_))),
-      "partitionCols" -> JArray(m.partitionCols.toList.map(JString(_))),
-      "precombineField" -> JString(m.precombineField),
-      // sharded root: the four file-scale maps live in the referenced
-      // content-addressed shard files instead of inline (see
-      // [[shardManifest]]); every version self-describes, so a table can
-      // cross the threshold in either direction at any commit
-      "shards" -> (if (m.shardRefs.isEmpty) JNothing
-        else JArray(m.shardRefs.toList.map(JString(_)))),
-      "partitions" -> (if (m.shardRefs.nonEmpty) JNothing
-        else listing(m.partitions)),
-      // merge-on-read state (empty/zero on COW tables; parse defaults keep
-      // old manifests readable)
-      "logPartitions" -> (if (m.shardRefs.nonEmpty) JNothing
-        else listing(m.logPartitions)),
-      "deltaCommits" -> JInt(m.deltaCommits),
-      "lastCompaction" -> JInt(m.lastCompaction),
-      "fileStats" -> (if (m.shardRefs.nonEmpty) JNothing
-        else fileStatsJson(m.fileStats)),
-      "operation" -> JString(m.operation),
-      "metrics" -> JObject(m.metrics.toSeq.sortBy(_._1).map {
-        case (k, v) => k -> (JInt(v): JValue)
-      }.toList),
-      "storageType" -> JString(m.storageType),
-      "keyEncoding" -> JInt(m.keyEncoding),
-      // json4s drops JNothing pairs at render: pre-stamp copies stay as-is
-      "commitTimeMs" -> (if (m.commitTimeMs > 0) JInt(m.commitTimeMs)
-        else JNothing),
-      "tombstones" -> listing(m.tombstones),
-      // json4s drops JNothing pairs at render: pre-DV copies stay as-is
-      "dvs" -> (if (m.shardRefs.nonEmpty) JNothing else dvsJson(m.dvs)),
-      // json4s drops JNothing pairs at render: ordered copies stay as-is
-      "unorderedFiles" -> (if (m.unorderedFiles.isEmpty) JNothing
-        else JArray(m.unorderedFiles.toList.sorted.map(JString(_)))),
-      // json4s drops JNothing pairs at render: un-analyzed copies as-is
-      "tableColStats" -> (if (m.tableColStats.isEmpty) JNothing
-        else JObject(m.tableColStats.toSeq.sortBy(_._1).map {
-          case (c, st) => c -> (JObject(List(
-            "ndv" -> JInt(st.ndv), "nulls" -> JInt(st.nulls),
-            "avgLen" -> JInt(st.avgLen),
-            "maxLen" -> JInt(st.maxLen),
-            "histoHeight" -> (if (st.histoHeight > 0)
-              JDouble(st.histoHeight) else JNothing),
-            "histogram" -> (if (st.histogram.isEmpty) JNothing
-              else JArray(st.histogram.toList.map { case (lo, hi, n) =>
-                JArray(List(JDouble(lo), JDouble(hi), JInt(n)))
-              })))): JValue)
-        }.toList)),
-      "tableColStatsVersion" -> (if (m.tableColStatsVersion > 0)
-        JInt(m.tableColStatsVersion) else JNothing),
-      // json4s drops JNothing pairs at render: pre-drop copies stay as-is
-      "droppedCols" -> (if (m.droppedCols.isEmpty) JNothing
-        else JArray(m.droppedCols.toList.map(JString(_)))),
-      // json4s drops JNothing pairs at render: pre-drops copies stay as-is
-      "drops" -> (if (m.drops.isEmpty) JNothing
-        else JObject(m.drops.toSeq.sortBy(_._1).map { case (v, r) =>
-          v -> (JObject(List(
-            "partitions" -> listing(r.partitions),
-            "logPartitions" -> listing(r.logPartitions))): JValue)
-        }.toList)),
-      // json4s drops JNothing pairs at render: pre-props copies stay as-is
-      "props" -> (m.props match {
-        case Some(p) => JObject(List(
-          "keepCommits" -> JInt(p.keepCommits),
-          "numBuckets" -> JInt(p.numBuckets),
-          "clusterCols" -> JArray(p.clusterCols.toList.map(JString(_))),
-          "trackCommitVersions" -> JBool(p.trackCommitVersions),
-          "fileIndex" -> JBool(p.fileIndex),
-          "statsCols" -> JArray(p.statsCols.toList.map(JString(_))),
-          "compactEvery" -> JInt(p.compactEvery),
-          "bloomCols" -> (if (p.bloomCols.isEmpty) JNothing
-            else JArray(p.bloomCols.toList.map(JString(_)))),
-          "checkConstraints" -> (if (p.checkConstraints.isEmpty) JNothing
-            else JArray(p.checkConstraints.toList.map(JString(_)))),
-          "deleteVectors" -> (if (p.deleteVectors) JBool(true)
-            else JNothing))): JValue
-        case None => JNothing
-      })))))
-  }
-
-  private def jStrs(v: JValue): Seq[String] =
-    v match { case JArray(xs) => xs.collect { case JString(s) => s }
-              case _ => Nil }
-  private def jLong(v: JValue, dflt: Long): Long = v match {
-    case JInt(n) => n.toLong; case JLong(n) => n; case _ => dflt
-  }
-  private def jListing(v: JValue): Map[String, Seq[String]] = v match {
-    case JObject(fs) => ListMap(fs.map { case (k, w) => k -> jStrs(w) }: _*)
-    case _ => ListMap.empty
-  }
-  private def jFileStats(v: JValue): Map[String, FileStat] = v match {
-    case JObject(fs) => fs.collect {
-      case (f, o: JObject) =>
-        def str(n: String) = (o \ n) match {
-          case JString(s) => s
-          case _ => throw new IllegalArgumentException(
-            s"fileStats[$f] missing $n")
-        }
-        val cs = (o \ "colStats") match {
-          case JObject(cols) => cols.collect {
-            case (c, JArray(mm)) =>
-              c -> mm.collect { case JString(w) => w }
-          }.toMap
-          case _ => Map.empty[String, Seq[String]]
-        }
-        val cb = (o \ "colBlooms") match {
-          case JObject(cols) => cols.collect {
-            case (c, JString(ref)) => c -> ref
-          }.toMap
-          case _ => Map.empty[String, String]
-        }
-        f -> FileStat(str("keyMin"), str("keyMax"), str("bloomRef"), cs,
-          rows = jLong(o \ "rows", -1L),
-          bytes = jLong(o \ "bytes", -1L),
-          colBloomRefs = cb)
-    }.toMap
-    case _ => Map.empty
-  }
-  private def jDvs(v: JValue): Map[String, DvEntry] = v match {
-    case JObject(ds) => ListMap(ds.map { case (f, o) =>
-      f -> DvEntry(jStrs(o \ "files"), jLong(o \ "rows", 0L))
-    }: _*)
-    case _ => ListMap.empty
-  }
-
-  private[graft] def parseManifest(txt: String): Manifest = {
-    val j = JsonMethods.parse(txt)
-    def strs(v: JValue): Seq[String] = jStrs(v)
-    def long(v: JValue, dflt: Long): Long = jLong(v, dflt)
-    def files(v: JValue): Map[String, Seq[String]] = jListing(v)
-    Manifest(
-      version = (j \ "version") match {
-        case JInt(n) => n.toLong; case JLong(n) => n
-        case other => throw new IllegalArgumentException(s"bad version $other")
-      },
-      schemaJson = (j \ "schemaJson").asInstanceOf[JString].s,
-      keyCols = strs(j \ "keyCols"),
-      partitionCols = strs(j \ "partitionCols"),
-      precombineField = (j \ "precombineField") match {
-        case JString(s) => s; case _ => "" },
-      partitions = files(j \ "partitions"),
-      logPartitions = files(j \ "logPartitions"),
-      deltaCommits = long(j \ "deltaCommits", 0L),
-      lastCompaction = long(j \ "lastCompaction", 0L),
-      fileStats = jFileStats(j \ "fileStats"),
-      operation = (j \ "operation") match {
-        case JString(s) => s; case _ => "" },
-      metrics = (j \ "metrics") match {
-        case JObject(fs) => fs.collect {
-          case (k, JInt(n)) => k -> n.toLong
-          case (k, JLong(n)) => k -> n
-        }.toMap
-        case _ => Map.empty
-      },
-      storageType = (j \ "storageType") match {
-        case JString(s) => s; case _ => "cow" }, // pre-round-6 manifests
-      keyEncoding = long(j \ "keyEncoding", 1L), // legacy = plain strings
-      commitTimeMs = long(j \ "commitTimeMs", 0L),
-      droppedCols = strs(j \ "droppedCols"),
-      tombstones = files(j \ "tombstones"),
-      dvs = jDvs(j \ "dvs"),
-      unorderedFiles = strs(j \ "unorderedFiles"),
-      shardRefs = strs(j \ "shards"),
-      tableColStats = (j \ "tableColStats") match {
-        case JObject(cs) => ListMap(cs.map { case (c, o) =>
-          val histo = (o \ "histogram") match {
-            case JArray(bins) => bins.collect {
-              case JArray(List(lo, hi, n)) =>
-                def d(v: JValue): Double = v match {
-                  case JDouble(x) => x; case JInt(x) => x.toDouble
-                  case JLong(x) => x.toDouble; case _ => 0.0
-                }
-                (d(lo), d(hi), long(n, 0L))
-            }
-            case _ => Nil
-          }
-          c -> ColStatRec(long(o \ "ndv", 0L), long(o \ "nulls", 0L),
-            long(o \ "avgLen", 0L), long(o \ "maxLen", 0L), histo,
-            histoHeight = (o \ "histoHeight") match {
-              case JDouble(x) => x; case JInt(x) => x.toDouble
-              case _ => 0.0
-            })
-        }: _*)
-        case _ => ListMap.empty
-      },
-      tableColStatsVersion = long(j \ "tableColStatsVersion", 0L),
-      drops = (j \ "drops") match {
-        case JObject(ds) => ListMap(ds.map { case (v, o) =>
-          v -> DropRecord(files(o \ "partitions"),
-            files(o \ "logPartitions"))
-        }: _*)
-        case _ => ListMap.empty
-      },
-      props = (j \ "props") match {
-        case o: JObject => Some(TableProps(
-          keepCommits = long(o \ "keepCommits", 10L).toInt,
-          numBuckets = long(o \ "numBuckets", 0L).toInt,
-          clusterCols = strs(o \ "clusterCols"),
-          trackCommitVersions = (o \ "trackCommitVersions") match {
-            case JBool(b) => b; case _ => false },
-          // a pre-switch manifest's integer entry count reads as `> 0`
-          fileIndex = (o \ "fileIndex") match {
-            case JBool(b) => b
-            case _ => long(o \ "fileIndexEntries", 0L) > 0 },
-          statsCols = strs(o \ "statsCols"),
-          compactEvery = long(o \ "compactEvery", 20L).toInt,
-          bloomCols = strs(o \ "bloomCols"),
-          checkConstraints = strs(o \ "checkConstraints"),
-          deleteVectors = (o \ "deleteVectors") match {
-            case JBool(b) => b; case _ => false }))
-        case _ => None // pre-round-7 manifests: open() infers
-      })
   }
 }

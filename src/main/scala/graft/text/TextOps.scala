@@ -3,7 +3,6 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.Hashing
 

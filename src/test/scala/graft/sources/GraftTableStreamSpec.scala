@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.streaming.GraftSink
-import graft.table.{CowTable, MorTable}
+import graft.table.{CowTable, ManifestCodec, MorTable}
 import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental table-as-stream reads (`spark.readStream.format("graft")`)
@@ -63,8 +63,8 @@ class GraftTableStreamSpec extends SparkSpec {
   }
 
   test("table-as-stream reads ride the sharded manifest format") {
-    val old = CowTable.ManifestShardFileThreshold
-    CowTable.ManifestShardFileThreshold = 2
+    val old = ManifestCodec.ShardFileThreshold
+    ManifestCodec.ShardFileThreshold = 2
     try {
       val pathA = tmpDir("tstream-sh-a"); val pathB = tmpDir("tstream-sh-b")
       val ckpt = tmpDir("tstream-sh-ckpt")
@@ -94,7 +94,7 @@ class GraftTableStreamSpec extends SparkSpec {
       assert(snap(openB()) == snap(a),
         "streamed chain must equal the sharded source after churn")
       assert(snap(openB())("k2") == 20.0 && !snap(openB()).contains("k3"))
-    } finally CowTable.ManifestShardFileThreshold = old
+    } finally ManifestCodec.ShardFileThreshold = old
   }
 
   test("stream-static enrichment join against a graft dim table") {

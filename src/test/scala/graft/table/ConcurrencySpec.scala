@@ -233,4 +233,29 @@ class ConcurrencySpec extends SparkSpec {
     assert(t.snapshot().filter($"id" === "a").select("v")
       .as[Double].collect().toSeq == Seq(42.0))
   }
+
+  test("a failed publish releases its slot: the next commit does not wait") {
+    val path = tmpDir("occ-failed-publish")
+    val t = new CowTable(spark, path, keyCols = Seq("id"),
+      partitionCols = Seq("p"), precombineField = "v")
+    t.bulkInsert(Seq(("a", "p1", 1.0)).toDF("id", "p", "v"))
+    val e = intercept[Throwable] {
+      graft.util.FailingLocalFs.failingCreates(spark, f =>
+          f.contains("/_commits/.v2.json.") && f.endsWith(".tmp")) {
+        t.upsert(Seq(("a", "p1", 2.0)).toDF("id", "p", "v"))
+      }
+    }
+    assert(graft.util.FailingLocalFs.injected(e), s"unexpected failure: $e")
+    val lock = new java.io.File(path, "_commits/.v2.lock")
+    assert(!lock.exists, "the failed publish left its slot claimed")
+    assert(t.manifest.version == 1L)
+    // the same handle, default lockStaleMs (60 s): without the release
+    // this commit waits out the timeout on its own stale lock
+    val t0 = System.nanoTime
+    t.upsert(Seq(("a", "p1", 3.0)).toDF("id", "p", "v"))
+    val secs = (System.nanoTime - t0) / 1e9
+    assert(t.manifest.version == 2L)
+    assert(secs < 10.0, f"next commit took $secs%.1f s")
+    assert(t.snapshot().select("v").as[Double].collect().toSeq == Seq(3.0))
+  }
 }

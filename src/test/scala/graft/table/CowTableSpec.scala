@@ -394,7 +394,7 @@ class CowTableSpec extends SparkSpec {
     assert(m1.props.contains(TableProps(keepCommits = 7, numBuckets = 4,
       trackCommitVersions = true, fileIndex = true,
       statsCols = Seq("v2"), compactEvery = 0)))
-    assert(CowTable.parseManifest(CowTable.renderManifest(m1)) == m1)
+    assert(ManifestCodec.parseManifest(ManifestCodec.renderManifest(m1)) == m1)
 
     // a path-only open must keep stamping commit versions and maintaining
     // the index — the round-6 regression was open() silently losing both
@@ -453,11 +453,11 @@ class CowTableSpec extends SparkSpec {
     val m = Manifest(3L, rows(("a", "p1", 1.0)).schema.json, Seq("id"),
       Seq("p"), "v", Map("p=p1" -> Seq("files/c3/x.parquet"), "" -> Nil),
       storageType = "mor")
-    assert(CowTable.parseManifest(CowTable.renderManifest(m)) == m)
+    assert(ManifestCodec.parseManifest(ManifestCodec.renderManifest(m)) == m)
     // pre-round-6 manifests lack storageType -> parse defaults to cow
-    val legacy = CowTable.renderManifest(m.copy(storageType = "cow"))
+    val legacy = ManifestCodec.renderManifest(m.copy(storageType = "cow"))
       .replaceAll(",?\\s*\"storageType\"\\s*:\\s*\"cow\"", "")
-    assert(CowTable.parseManifest(legacy).storageType == "cow")
+    assert(ManifestCodec.parseManifest(legacy).storageType == "cow")
   }
 
   test("unescapePathName handles hive escapes") {

@@ -77,11 +77,11 @@ class FileIndexSpec extends SparkSpec {
     val hit = t.lookupByKeys(Seq(150L).toDF("id"))
     assert(hit.inputFiles.length == 1 && hit.count() == 1)
     // manifest round-trip preserves the encoding; legacy JSON defaults to 1
-    val back = CowTable.parseManifest(CowTable.renderManifest(m))
+    val back = ManifestCodec.parseManifest(ManifestCodec.renderManifest(m))
     assert(back.keyEncoding == CowTable.CurrentKeyEncoding)
-    val legacy = CowTable.renderManifest(m)
+    val legacy = ManifestCodec.renderManifest(m)
       .replaceAll(",?\\s*\"keyEncoding\"\\s*:\\s*\\d+", "")
-    assert(CowTable.parseManifest(legacy).keyEncoding == 1L)
+    assert(ManifestCodec.parseManifest(legacy).keyEncoding == 1L)
   }
 
   test("snapshotForRange skips files outside a stat column's range") {
@@ -98,7 +98,8 @@ class FileIndexSpec extends SparkSpec {
     t.insertAppend(batch(300, 400), parallelism = 1)
     assert(t.manifest.fileStats.values.forall(_.colStats.contains("ts")))
     // manifest round-trips the column ranges
-    val back = CowTable.parseManifest(CowTable.renderManifest(t.manifest))
+    val back =
+      ManifestCodec.parseManifest(ManifestCodec.renderManifest(t.manifest))
     assert(back == t.manifest)
 
     val day2 = t.snapshotForRange("ts",
@@ -322,7 +323,7 @@ class FileIndexSpec extends SparkSpec {
       fileStats = Map("files/c3/x.parquet" ->
         FileStat("kA", "kB", "files/c3/x.parquet.bloom")),
       operation = "upsert", metrics = Map("files_added" -> 1L))
-    val back = CowTable.parseManifest(CowTable.renderManifest(m))
+    val back = ManifestCodec.parseManifest(ManifestCodec.renderManifest(m))
     assert(back == m)
   }
 

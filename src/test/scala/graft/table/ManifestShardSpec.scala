@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Sharded manifests: above [[CowTable.ManifestShardFileThreshold]] the
+/** Sharded manifests: above [[ManifestCodec.ShardFileThreshold]] the
   * file-scale maps externalize into content-addressed shard files.
   * Invariants: transparent round trip (readers always see full maps),
   * shard REUSE across commits (small commit rewrites ~1/32 of the
@@ -16,9 +16,9 @@ class ManifestShardSpec extends SparkSpec {
   import spark.implicits._
 
   private def withThreshold[A](t: Int)(body: => A): A = {
-    val old = CowTable.ManifestShardFileThreshold
-    CowTable.ManifestShardFileThreshold = t
-    try body finally CowTable.ManifestShardFileThreshold = old
+    val old = ManifestCodec.ShardFileThreshold
+    ManifestCodec.ShardFileThreshold = t
+    try body finally ManifestCodec.ShardFileThreshold = old
   }
 
   private def shardFiles(t: CowTable): Seq[String] = {
@@ -42,7 +42,7 @@ class ManifestShardSpec extends SparkSpec {
       assert(m.baseFiles.nonEmpty && m.fileStats.nonEmpty)
       assert(m.partitions.keySet == (0 until 5).map(i => s"p=p$i").toSet)
       // a cache-bypassing fresh open reads the same table
-      CowTable.clearManifestCacheForTest()
+      ManifestCodec.clearCacheForTest()
       val t2 = CowTable.open(spark, t.basePath)
       assert(t2.manifest.partitions.view.mapValues(_.toSet).toMap ==
         m.partitions.view.mapValues(_.toSet).toMap)
@@ -85,7 +85,7 @@ class ManifestShardSpec extends SparkSpec {
       t.delete(Seq(4L, 5L).toDF("id"))
       assert(t.manifest.shardRefs.nonEmpty)
       assert(t.manifest.dvs.nonEmpty, "dv entries must merge back")
-      CowTable.clearManifestCacheForTest()
+      ManifestCodec.clearCacheForTest()
       val t2 = CowTable.open(spark, t.basePath)
       assert(t2.snapshot().count() == 48L)
       assert(t2.changeFeed(1, t2.manifest.version)

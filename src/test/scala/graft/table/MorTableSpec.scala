@@ -27,7 +27,7 @@ class MorTableSpec extends SparkSpec {
       deltaCommits = 2L, lastCompaction = 1L,
       operation = "log_upsert",
       metrics = Map("files_added" -> 2L, "units_written" -> 1L))
-    val back = CowTable.parseManifest(CowTable.renderManifest(m))
+    val back = ManifestCodec.parseManifest(ManifestCodec.renderManifest(m))
     assert(back == m)
   }
 

@@ -90,7 +90,7 @@ class RenameColumnSpec extends SparkSpec {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(lt.basePath, "_commits",
         s"v${legacy.version}.json"),
-      CowTable.renderManifest(legacy))
+      ManifestCodec.renderManifest(legacy))
     val e = intercept[IllegalArgumentException] {
       CowTable.open(spark, lt.basePath).renameColumn("v", "x")
     }

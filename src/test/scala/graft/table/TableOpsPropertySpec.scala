@@ -184,12 +184,12 @@ class TableOpsPropertySpec extends SparkSpec {
       "model replay at every step") {
     // every commit in the sequence lands on the SHARDED manifest format —
     // change feed, diff, clone and services replayed against the model
-    val old = CowTable.ManifestShardFileThreshold
-    CowTable.ManifestShardFileThreshold = 3
+    val old = ManifestCodec.ShardFileThreshold
+    ManifestCodec.ShardFileThreshold = 3
     try drive(new CowTable(spark, tmpDir("props-cow-shard"),
       keyCols = Seq("id"), partitionCols = Seq("part"),
       precombineField = "v", fileIndex = true,
       trackCommitVersions = true), seed = 13, nOps = 22)
-    finally CowTable.ManifestShardFileThreshold = old
+    finally ManifestCodec.ShardFileThreshold = old
   }
 }
