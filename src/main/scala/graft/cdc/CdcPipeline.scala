@@ -44,15 +44,20 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
   def tablePath(cfg: TableConfig): String =
     s"$warehousePath/${cfg.relativePath}"
 
-  /** Table handle for a config — the `hudi_storage_type` routing
+  /** Table handle for a config. An existing table opens with the props
+    * its manifest records, so a batch keeps what `alterProps` or ALTER
+    * TABLE set. A new one is created by the `hudi_storage_type` routing
     * (reference: processData.py:150-155, 220-221): `mor` selects
     * merge-on-read (log-append writes, `_ro`/`_rt` views), anything else
     * copy-on-write.
     */
-  def tableFor(cfg: TableConfig): CowTable =
-    CowTable.create(spark, tablePath(cfg), cfg.pkCols, cfg.partitionCols,
+  def tableFor(cfg: TableConfig): CowTable = {
+    val path = tablePath(cfg)
+    if (CowTable.existsAt(spark, path)) CowTable.open(spark, path)
+    else CowTable.create(spark, path, cfg.pkCols, cfg.partitionCols,
       cfg.precombineField, cfg.storageType,
       TableProps(numBuckets = cfg.numBuckets))
+  }
 
   /** Session view name for a table — the `dl_<db>_<schema>.<table>` catalog
     * identity of the reference's hive sync, flattened for temp-view rules.

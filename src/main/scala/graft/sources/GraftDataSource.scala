@@ -13,7 +13,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.table.CowTable
+import graft.table.{CowTable, FileIndex}
 
 /** DataSource V2 read integration: any Spark job (SQL-only included) reads
   * a graft table through the standard source API —
@@ -194,7 +194,7 @@ object GraftDataSource {
     // (superset contract: stat-less files are kept; apply the row filter
     // on top, which the parquet scan then also pushes down.)
     val ranged = Option(options.get("rangeColumn")) match {
-      case Some(c) => CowTable.filesForRange(spark, m, c,
+      case Some(c) => FileIndex.filesForRange(spark, m, c,
         Option(options.get("rangeLo")), Option(options.get("rangeHi")))
       case None => m.baseFiles
     }

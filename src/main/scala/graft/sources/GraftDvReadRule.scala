@@ -9,9 +9,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{
   Project, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.functions.col
 
-import graft.table.CowTable
+import graft.table.FileIndex
 
 /** Read-path rewrite for tables with DELETION VECTORS (install via
   * [[graft.functions.GraftExtensions]]): a graft relation whose served
@@ -64,22 +64,8 @@ class GraftDvReadRule(session: SparkSession) extends Rule[LogicalPlan] {
     val clean = session.read.format("graft").options(opts).load(base)
     // DV'd branch: positional anti-join against the sidecars
     val names = r.output.map(_.name)
-    val fileC = CowTable.DvFileCol
-    val posC = CowTable.DvPosCol
-    // both sides join in CowTable.dvScanId/readDvPositions' absolute
-    // path space so a relocated or cloned table keeps matching its
-    // sidecars
-    val withMeta = session.read.schema(m.schema)
-      .parquet(dvd.map(f => CowTable.resolveFile(base, f)): _*)
-      .select(names.map(col) :+
-        CowTable.dvScanId(col("_metadata.file_path")).as(fileC) :+
-        col("_metadata.row_index").as(posC): _*)
-    val refs = dvd.flatMap(f => m.dvs(f).files).distinct
-    val dv0 = CowTable.readDvPositions(session, base, refs)
-    val dv = if (CowTable.dvBroadcastable(m, dvd)) broadcast(dv0) else dv0
-    val applied = withMeta.join(dv,
-      withMeta(fileC) === dv(fileC) && withMeta(posC) === dv(posC),
-      "left_anti").select(names.map(col): _*)
+    val applied = FileIndex.liveRows(session, base, m, m.schema, names, dvd)
+      .select(names.map(col): _*)
     val union = clean.select(names.map(col): _*).unionByName(applied)
       .queryExecution.analyzed
     // re-key the union's output to the original relation's attribute ids

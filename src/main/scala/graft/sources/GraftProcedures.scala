@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.table.{CowTable, MorTable}
+import graft.table.{CowTable, FileIndex, MorTable}
 
 /** Table-maintenance stored procedures (the Iceberg `CALL cat.system.…`
   * surface) over graft tables — SQL access to every table service, so an
@@ -218,12 +218,9 @@ private[sources] object GraftProcedures {
           val logs = m.logPartitions.getOrElse(k, Nil)
           // exact only when every file has a recorded stat; else null —
           // never a misleading partial sum
-          def sumStat(get: graft.table.FileStat => Long): Any = {
-            val vs = base.map(f => m.fileStats.get(f).map(get))
-            if (logs.isEmpty && vs.forall(_.exists(_ >= 0L)))
-              vs.flatten.sum
-            else null
-          }
+          def sumStat(get: graft.table.FileStat => Long): Any =
+            (if (logs.isEmpty) FileIndex.statTotal(m, base)(get) else None)
+              .getOrElse(null)
           new GenericInternalRow(Array[Any](
             UTF8String.fromString(if (k.isEmpty) "<unpartitioned>" else k),
             base.size.toLong, logs.size.toLong,
@@ -258,16 +255,9 @@ private[sources] object GraftProcedures {
         // masked), with the masked state surfaced in its own columns
         val dvRows = files.flatMap(m.dvs.get).map(_.rows).sum
         // exact only when every base file has stats and no logs pend
-        def total(get: graft.table.FileStat => Long): Any = {
-          val vs = files.map(f => m.fileStats.get(f).map(get))
-          if (m.logPartitions.valuesIterator.flatten.isEmpty &&
-            vs.forall(_.exists(_ >= 0L))) vs.flatten.sum
-          else null
-        }
-        def liveRows: Any = total(_.rows) match {
-          case n: Long => n - dvRows
-          case other => other
-        }
+        def total(get: graft.table.FileStat => Long): Option[Long] =
+          if (m.logPartitions.valuesIterator.flatten.nonEmpty) None
+          else FileIndex.statTotal(m, files)(get)
         val row = new GenericInternalRow(Array[Any](
           UTF8String.fromString(t.basePath),
           UTF8String.fromString(m.storageType),
@@ -277,7 +267,8 @@ private[sources] object GraftProcedures {
           p.numBuckets.toLong,
           files.size.toLong,
           m.logPartitions.valuesIterator.flatten.size.toLong,
-          liveRows, total(_.bytes),
+          total(_.rows).map(_ - dvRows).getOrElse(null),
+          total(_.bytes).getOrElse(null),
           m.dvSidecarFiles.size.toLong,
           dvRows,
           UTF8String.fromString(m.droppedCols.mkString(",")),
@@ -310,13 +301,9 @@ private[sources] object GraftProcedures {
           else t.manifest.version
         val m1 = t.manifestAt(from); val m2 = t.manifestAt(to)
         val f1 = m1.baseFiles.toSet; val f2 = m2.baseFiles.toSet
-        def stat(m: graft.table.Manifest, fs: Iterable[String],
-            get: graft.table.FileStat => Long): Any = {
-          val vs = fs.map(f => m.fileStats.get(f).map(get)).toSeq
-          if (vs.nonEmpty && vs.forall(_.exists(_ >= 0L))) vs.flatten.sum
-          else if (vs.isEmpty) 0L
-          else null // a file without stats: no misleading partial sum
-        }
+        // a file without stats: null, no misleading partial sum
+        def rows(m: graft.table.Manifest, fs: Iterable[String]): Any =
+          FileIndex.statTotal(m, fs)(_.rows).getOrElse(null)
         val schema = StructType(Seq(
           StructField("from_version", LongType, nullable = false),
           StructField("to_version", LongType, nullable = false),
@@ -333,7 +320,7 @@ private[sources] object GraftProcedures {
           from, to,
           added.size.toLong, removed.size.toLong,
           (f1 & f2).size.toLong,
-          stat(m2, added, _.rows), stat(m1, removed, _.rows),
+          rows(m2, added), rows(m1, removed),
           touched)): InternalRow
         (schema, Array(row))
       }),

@@ -8,9 +8,9 @@ import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{
   Batch, Scan, Statistics, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
-import graft.table.{CowTable, Manifest}
+import graft.table.{FileIndex, Manifest}
 
 /** Runtime file pruning for graft scans — the DSv2 analog of dynamic
   * partition pruning, extended to ANY column with recorded file stats.
@@ -21,8 +21,9 @@ import graft.table.{CowTable, Manifest}
   * [[filterAttributes]]. At execution, the build side's distinct join
   * keys arrive here as an `IN` runtime filter ([[filter]]); the file
   * listing is re-intersected with the manifest's per-file stats
-  * ([[CowTable.filesForValues]] for `statsCols`, rendered-segment match
-  * for string partition directories) and the inner parquet scan is
+  * ([[FileIndex.filesForValues]] for `statsCols` and a single-column
+  * key index, [[FileIndex.partitionFiles]] for string partition
+  * directories) and the inner parquet scan is
   * rebuilt over the survivors — with the original pushed filters and
   * column pruning re-applied, so row-group skipping and vectorized
   * reading are unchanged on top.
@@ -86,12 +87,7 @@ final class GraftRuntimeScan(
     // sizing. Only when every live file has a recorded count and no
     // row-level filter was pushed.
     val exact: Option[Long] =
-      if (!rowsExact) None
-      else {
-        val counts = files.map(f => m.fileStats.get(f).map(_.rows))
-        if (counts.forall(_.exists(_ >= 0L)))
-          Some(counts.flatten.sum) else None
-      }
+      if (!rowsExact) None else FileIndex.statTotal(m, files)(_.rows)
     // ANALYZE-computed column statistics, served ONLY while fresh
     // (recorded at the manifest's own version): NDV/null-count/lengths
     // feed CBO join estimation (spark.sql.cbo.enabled) — at 100 TB the
@@ -158,28 +154,14 @@ final class GraftRuntimeScan(
     * whole partition listings).
     */
   override def filterAttributes(): Array[NamedReference] = {
-    val statCols = m.fileStats.valuesIterator
-      .flatMap(_.colStats.keysIterator)
-      .filter(c => m.schema.fieldNames.contains(c)).toSet
     // PartitionPruning resolves each ref against the scan relation's
     // OUTPUT, which is the column-pruned schema — advertising a pruned
     // column is an analysis error, so intersect with what's still read
     val visible = inner.readSchema().fieldNames.toSet
-    (statCols ++ stringPartitionCols ++ indexedKeyCol)
-      .filter(visible).toArray.map(Expressions.column)
+    (FileIndex.statColumns(m) ++ FileIndex.stringPartitionCols(m) ++
+      FileIndex.keyIndexColumn(m)).filter(visible).toArray
+      .map(Expressions.column)
   }
-
-  /** Single-column record keys prune through the key index (range +
-    * sidecar bloom) even without a `statsCols` declaration.
-    */
-  private def indexedKeyCol: Set[String] =
-    if (m.keyCols.size == 1 && m.fileStats.nonEmpty) m.keyCols.toSet
-    else Set.empty
-
-  private def stringPartitionCols: Set[String] =
-    m.partitionCols.filter(c =>
-      m.schema.fields.exists(f => f.name == c && f.dataType == StringType))
-      .toSet
 
   override def filter(filters: Array[Filter]): Unit = {
     var keep = files
@@ -201,31 +183,12 @@ final class GraftRuntimeScan(
       current: Seq[String], column: String, values: Seq[Any]): Seq[String] = {
     if (values.isEmpty || values.size > GraftRuntimeScan.MaxRuntimeValues)
       return current
-    var keep = current
-    if (stringPartitionCols(column)) {
-      val rendered = values.map(String.valueOf).toSet
-      val live = m.partitions.filter { case (key, _) =>
-        key.split('/').forall { seg =>
-          val i = seg.indexOf('=')
-          i < 0 || seg.substring(0, i) != column ||
-            rendered(seg.substring(i + 1))
-        }
-      }.values.flatten.toSet
-      keep = keep.filter(live)
-    }
-    val hasStats = m.fileStats.valuesIterator
-      .exists(_.colStats.contains(column))
-    if (hasStats && m.schema.fieldNames.contains(column)) {
-      val live = CowTable.filesForValues(spark, m, column, values, base).toSet
-      keep = keep.filter(live)
-    } else if (indexedKeyCol(column)) {
-      // key-index (range + sidecar bloom) path only when the column has
-      // no recorded stats — when it does, the range check above already
-      // pruned on the same [min, max] without touching bloom bytes
-      val live = CowTable.filesForKeyValues(spark, base, m, values).toSet
-      keep = keep.filter(live)
-    }
-    keep
+    val byPartition =
+      if (!FileIndex.stringPartitionCols(m)(column)) current
+      else current.filter(FileIndex.partitionFiles(m, column,
+        values.map(String.valueOf).toSet))
+    byPartition.filter(
+      FileIndex.filesForValues(spark, base, m, column, values).toSet)
   }
 }
 

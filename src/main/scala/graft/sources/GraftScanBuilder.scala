@@ -16,7 +16,7 @@ import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.table.{CowTable, Manifest}
+import graft.table.{CowTable, FileIndex, Manifest}
 
 /** Scan builder that turns PUSHED-DOWN Catalyst filters into FILE-level
   * data skipping against the manifest's recorded per-file [min, max]
@@ -28,13 +28,15 @@ import graft.table.{CowTable, Manifest}
   * }}}
   *
   * The Delta/Hudi data-skipping analog: Spark's V2 pushdown rule hands the
-  * scan builder each WHERE conjunct; bounds on columns with recorded stats
-  * (`statsCols`, plus the record key via the file index) shrink the file
-  * list BEFORE any parquet footer is opened, and equality predicates on
-  * string partition columns prune whole partition listings. The inner
+  * scan builder each WHERE conjunct; bounds and value sets on columns with
+  * recorded column stats (`statsCols`, with their `bloomCols` blooms)
+  * shrink the file list BEFORE any parquet footer is opened, and equality
+  * predicates on string partition columns prune whole partition listings.
+  * The record-key index is not consulted here; key-equality joins prune
+  * through it at runtime ([[GraftRuntimeScan]]). The inner
   * builder is Spark's native parquet one rebuilt over the pruned listing,
   * so row-group pruning, column pruning, and vectorized reading are
-  * unchanged on top. Superset contract throughout ([[CowTable
+  * unchanged on top. Superset contract throughout ([[FileIndex
   * .filesForRange]]): stat-less files stay, non-order-preserving encodings
   * prune nothing, and Spark still evaluates every filter row-level.
   */
@@ -172,6 +174,9 @@ private[sources] class GraftScanBuilder(
 
   // ------------------------------------------------------- file pruning
 
+  /** Columns with recorded per-file stats: the prunable bound targets. */
+  private lazy val statCols = FileIndex.statColumns(m)
+
   /** Intersect the manifest listing with every extractable bound. */
   private def pruneFiles(filters: Seq[Expression]): Seq[String] = {
     val conjuncts = filters.flatMap(splitAnd)
@@ -179,25 +184,23 @@ private[sources] class GraftScanBuilder(
     val bounds = rangeBounds(conjuncts)
     val ranged = bounds.foldLeft(byPartition) {
       case (files, (column, (lo, hi))) =>
-        val keep = CowTable.filesForRange(spark, m, column, lo, hi).toSet
+        val keep = FileIndex.filesForRange(spark, m, column, lo, hi).toSet
         files.filter(keep)
     }
     valueSets(conjuncts).foldLeft(ranged) { case (files, (column, vals)) =>
-      val keep = CowTable.filesForValues(spark, m, column, vals, base).toSet
+      val keep = FileIndex.filesForValues(spark, base, m, column, vals).toSet
       files.filter(keep)
     }
   }
 
   /** IN-list conjuncts on stat columns → value-set skipping
-    * ([[CowTable.filesForValues]] — a file survives iff its [min, max]
-    * contains at least one listed value). Lists above the cap skip
+    * ([[FileIndex.filesForValues]] — a file survives iff its [min, max]
+    * and bloom admit at least one listed value). Lists above the cap skip
     * pruning (the literal-encode job grows with the list; at that size
     * stripes cover the table anyway).
     */
   private def valueSets(conjuncts: Seq[Expression])
       : Seq[(String, Seq[Any])] = {
-    val statCols = m.fileStats.valuesIterator
-      .flatMap(_.colStats.keysIterator).toSet
     val cap = 1000
     conjuncts.flatMap {
       case In(a: AttributeReference, list)
@@ -240,8 +243,6 @@ private[sources] class GraftScanBuilder(
     */
   private def rangeBounds(conjuncts: Seq[Expression])
       : Map[String, (Option[Any], Option[Any])] = {
-    val statCols = m.fileStats.valuesIterator
-      .flatMap(_.colStats.keysIterator).toSet
     def ext(lit: Literal): Any =
       CatalystTypeConverters.createToScalaConverter(lit.dataType)(lit.value)
     val perCol = conjuncts.flatMap {
@@ -286,9 +287,7 @@ private[sources] class GraftScanBuilder(
     * row-group stats).
     */
   private def partitionPrune(conjuncts: Seq[Expression]): Seq[String] = {
-    val stringParts = m.partitionCols.filter(c =>
-      m.schema.fields.exists(f => f.name == c && f.dataType == StringType))
-      .toSet
+    val stringParts = FileIndex.stringPartitionCols(m)
     val eqs: Map[String, String] = conjuncts.collect {
       case EqualTo(a: AttributeReference, Literal(v, StringType))
         if stringParts(a.name) && v != null =>
@@ -297,14 +296,8 @@ private[sources] class GraftScanBuilder(
         if stringParts(a.name) && v != null =>
         a.name -> v.toString
     }.toMap
-    if (eqs.isEmpty) return initialFiles
-    val keep = m.partitions.filter { case (key, _) =>
-      val segs = key.split('/').map { s =>
-        val i = s.indexOf('=')
-        s.substring(0, i) -> s.substring(i + 1)
-      }.toMap
-      eqs.forall { case (c, v) => segs.get(c).forall(_ == v) }
-    }.values.flatten.toSet
-    initialFiles.filter(keep)
+    eqs.foldLeft(initialFiles) { case (files, (c, v)) =>
+      files.filter(FileIndex.partitionFiles(m, c, Set(v)))
+    }
   }
 }

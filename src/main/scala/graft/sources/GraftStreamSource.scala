@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-import graft.table.CowTable
+import graft.table.{CowTable, FileIndex}
 
 /** Incremental TABLE-as-stream source: read a graft table's commits as a
   * Structured Streaming source —
@@ -130,12 +130,8 @@ final class GraftStreamSource(
         while (end < capped && acc < bound) {
           val m = CowTable.openManifest(spark, basePath, Some(end + 1))
           val added = m.files.filterNot(prev)
-          acc += added.iterator.map { f =>
-            m.fileStats.get(f).map(_.bytes).filter(_ >= 0L).getOrElse(
-              scala.util.Try(fs.getFileStatus(new org.apache.hadoop.fs
-                .Path(CowTable.resolveFile(basePath, f))).getLen)
-                .getOrElse(0L))
-          }.sum
+          acc += added.iterator.map(f =>
+            FileIndex.fileSize(fs, basePath, m, f).getOrElse(0L)).sum
           prev = m.files.toSet
           end += 1
         }

@@ -225,20 +225,6 @@ final case class DropRecord(
     (partitions.valuesIterator ++ logPartitions.valuesIterator).flatten.toSeq
 }
 
-/** One base file's record-key index entry: lexicographic min/max of the
-  * file's key strings, plus the basePath-relative path of a SIDECAR file
-  * holding an `org.apache.spark.util.sketch.BloomFilter` over them.
-  *
-  * The bloom lives next to the data (`files/c{v}/_index/…`), NOT inline in
-  * the manifest: embedding blooms made manifests O(total-bloom-bytes) — a
-  * measured 7 MB of JSON for 15 files of 200k keys, paid on EVERY
-  * manifest parse/render/clean — while the sidecar keeps the manifest
-  * O(files) and blooms load lazily, only for files that already passed
-  * the range phase (the same reason Hudi keeps blooms in file
-  * footers/metadata table rather than the timeline). Range checks are
-  * sound in ANY total order as long as probe keys use the SAME key-string
-  * encoding; blooms have no false negatives, so pruning never loses rows.
-  */
 /** A concurrent writer committed an overlapping change: the losing commit
   * was cleanly aborted with NO lost update — nothing it wrote is visible,
   * and its data directories are reclaimed (immediately best-effort, by
@@ -308,6 +294,20 @@ object TableProps {
     option(options, k).map(_.split(sep).map(_.trim).filter(_.nonEmpty).toSeq)
 }
 
+/** One base file's record-key index entry: lexicographic min/max of the
+  * file's key strings, plus the basePath-relative path of a SIDECAR file
+  * holding an `org.apache.spark.util.sketch.BloomFilter` over them.
+  *
+  * The bloom lives next to the data (`files/c{v}/_index/…`), NOT inline in
+  * the manifest: embedding blooms made manifests O(total-bloom-bytes) — a
+  * measured 7 MB of JSON for 15 files of 200k keys, paid on EVERY
+  * manifest parse/render/clean — while the sidecar keeps the manifest
+  * O(files) and blooms load lazily, only for files that already passed
+  * the range phase (the same reason Hudi keeps blooms in file
+  * footers/metadata table rather than the timeline). Range checks are
+  * sound in ANY total order as long as probe keys use the SAME key-string
+  * encoding; blooms have no false negatives, so pruning never loses rows.
+  */
 final case class FileStat(keyMin: String, keyMax: String, bloomRef: String,
     /** Optional per-column [min, max] (encoded order-preserving strings)
       * for the table's `statsCols` — file-level data skipping for range
@@ -838,7 +838,8 @@ class CowTable(
         s"got ${probe.columns.toSeq}")
     val probed = touchedPartitionKeys(probe, m.schema)
     val existing = probed.intersect(m.partitions.keySet)
-    val (candFiles, _) = pruneCandidateFiles(m, existing, probe)
+    val (candFiles, _) = FileIndex.pruneCandidateFiles(spark, basePath, m,
+      keyCols, fileIndex, existing, probe)
     // Identity is NON-GLOBAL (key + partition, matching the merge scope):
     // a record key present in two touched partitions must not match rows
     // the caller's partition never touched (e.g. IncrementalAgg would
@@ -868,30 +869,14 @@ class CowTable(
     if (m.dvs.isEmpty) readFilesWithSchema(m.schema, files)
     else {
       // Deletion-vector read: files WITHOUT a vector read natively (zero
-      // overhead); only DV'd files pay the positional anti-join. Both
-      // sides join in the absolute path space of [[CowTable.dvScanId]] /
-      // [[CowTable.readDvPositions]], so a relocated or cloned table
-      // keeps matching its sidecars.
+      // overhead); only DV'd files pay the positional anti-join.
       val (dvd, cleanFls) = files.partition(m.dvs.contains)
       val clean = readFilesWithSchema(m.schema, cleanFls)
       if (dvd.isEmpty) clean
       else {
-        val cols = m.schema.fieldNames.toIndexedSeq.map(col)
-        val withMeta = spark.read.schema(addDirCols(m.schema))
-          .parquet(dvd.map(f => CowTable.resolveFile(basePath, f)): _*)
-          .select(cols :+
-            CowTable.dvScanId(col("_metadata.file_path")).as(DvFileCol) :+
-            col("_metadata.row_index").as(DvPosCol): _*)
-        val refs = dvd.flatMap(f => m.dvs(f).files).distinct
-        val dv0 = CowTable.readDvPositions(spark, basePath, refs)
-        // the manifest knows the deleted-row count and path lengths:
-        // force-broadcast only while the estimated payload is small
-        val dv =
-          if (CowTable.dvBroadcastable(m, dvd)) broadcast(dv0) else dv0
-        clean.unionByName(withMeta.join(dv,
-          withMeta(DvFileCol) === dv(DvFileCol) &&
-            withMeta(DvPosCol) === dv(DvPosCol),
-          "left_anti").select(cols: _*))
+        val cols = m.schema.fieldNames.toIndexedSeq
+        clean.unionByName(FileIndex.liveRows(spark, basePath, m,
+          addDirCols(m.schema), cols, dvd).select(cols.map(col): _*))
       }
     }
 
@@ -1333,7 +1318,8 @@ class CowTable(
     try {
       val touched = touchedPartitionKeys(incoming, m.schema)
         .intersect(m.partitions.keySet)
-      val (candFiles, _) = pruneCandidateFiles(m, touched, incoming)
+      val (candFiles, _) = FileIndex.pruneCandidateFiles(spark, basePath,
+        m, keyCols, fileIndex, touched, incoming)
       val probeKeys =
         incoming.select(mergeIdCols.map(col): _*).distinct()
       val (newDvs, dvRefs, dvRows) = markDvPositions(m, v, candFiles,
@@ -1553,7 +1539,8 @@ class CowTable(
       val existing =
         touchedPartitionKeys(incoming, evolved)
           .intersect(m.partitions.keySet)
-      val (candFiles, _) = pruneCandidateFiles(m, existing, incoming)
+      val (candFiles, _) = FileIndex.pruneCandidateFiles(spark, basePath,
+        m, keyCols, fileIndex, existing, incoming)
       val probeKeys =
         incoming.select(mergeIdCols.map(col): _*).distinct()
       val (newDvs, dvRefs, dvRows) = markDvPositions(m, v, candFiles,
@@ -1590,32 +1577,11 @@ class CowTable(
     val idCols = mergeIdCols
     val idSchema = StructType(
       m.schema.fields.filter(f => idCols.contains(f.name)))
-    // column-pruned candidate scan: key/partition columns + the
-    // row's scan identity — never the payload
-    val cur0 = spark.read.schema(addDirCols(idSchema))
-      .parquet(candFiles.map(f =>
-        CowTable.resolveFile(basePath, f)): _*)
-      .select(idCols.toIndexedSeq.map(col) :+
-        CowTable.dvScanId(col("_metadata.file_path")).as(DvFileCol) :+
-        col("_metadata.row_index").as(DvPosCol): _*)
-    // positions already dead under an existing vector must not be
-    // re-recorded (counts would double)
-    val priorRefs = candFiles.flatMap(f =>
-      m.dvs.get(f).map(_.files).getOrElse(Nil)).distinct
-    val cur =
-      if (priorRefs.isEmpty) cur0
-      else {
-        val prior0 = CowTable.readDvPositions(spark, basePath, priorRefs)
-        // same size guard as the read path: bounded by estimated bytes
-        // so a long-uncompacted table never force-broadcasts an
-        // unbounded set
-        val dvdCand = candFiles.filter(m.dvs.contains)
-        val prior = if (CowTable.dvBroadcastable(m, dvdCand))
-          broadcast(prior0) else prior0
-        cur0.join(prior,
-          cur0(DvFileCol) === prior(DvFileCol) &&
-            cur0(DvPosCol) === prior(DvPosCol), "left_anti")
-      }
+    // column-pruned candidate scan: key/partition columns + the row's
+    // scan identity — never the payload. Positions already dead under an
+    // existing vector must not be re-recorded (counts would double).
+    val cur = FileIndex.liveRows(spark, basePath, m, addDirCols(idSchema),
+      idCols, candFiles)
     val hits = cur.join(probeKeys, idMatch(cur, probeKeys),
       "left_semi").select(DvFileCol, DvPosCol).persist()
     try {
@@ -1858,7 +1824,8 @@ class CowTable(
       // because blooms have no false negatives — a kept file provably
       // holds no incoming key, so the anti-join/merge result is identical.
       val (candFiles, keptListing) =
-        ph("prune")(pruneCandidateFiles(m, rewritten, incoming))
+        ph("prune")(FileIndex.pruneCandidateFiles(spark, basePath, m,
+          keyCols, fileIndex, rewritten, incoming))
       // tombstone passes that re-evaluate `cur` (a second join over the
       // candidate read): persist it so the replay comes from cache
       // instead of re-reading + re-shuffling the pruned files — bounded
@@ -1936,133 +1903,6 @@ class CowTable(
     } finally incoming.unpersist()
   }
 
-  /** Key-string encoding shared by the writer-side index and merge-side
-    * probes (composite keys joined with a non-printable separator).
-    * VERSIONED per table (`Manifest.keyEncoding`, fixed at creation — the
-    * stored ranges and bloom contents are in this encoding, so probes must
-    * match it forever):
-    *
-    *   - v1 (legacy): plain `cast(string)`. Sound, but numeric keys order
-    *     lexicographically ("999" > "10000"), so the RANGE phase passes
-    *     files a numeric range probe shouldn't touch, and multi-key
-    *     probes then amplify bloom fpp into false candidates.
-    *   - v2: integral/timestamp/date key columns are shifted to
-    *     non-negative decimal and zero-padded to fixed width — string
-    *     order == numeric order, so range pruning is as tight as the file
-    *     layout allows (measured in BASELINE.md's clustering probe).
-    */
-  private def keyStringExpr(enc: Long,
-      schemaOf: String => org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.Column =
-    concat_ws("\u0001",
-      keyCols.map(c => encodeCol(c, schemaOf(c), enc)): _*)
-
-  /** One column's order-preserving string encoding (see keyStringExpr). */
-  private def encodeCol(c: String,
-      dt: org.apache.spark.sql.types.DataType,
-      enc: Long): org.apache.spark.sql.Column =
-    CowTable.encodeColExpr(c, dt, enc)
-
-  /** Split the files of `parts` into (candidates, kept-by-partition):
-    * a file is a candidate iff it has no index entry, or at least one
-    * incoming key passes its range check AND its bloom probe. Two-phase,
-    * like Hudi's bloom index:
-    *   1. RANGE phase — distinct incoming key strings stream against the
-    *      broadcast (file, min, max) table (bounded by the file count of
-    *      the touched units, which partition/bucket scoping already
-    *      capped); only range-passing FILE NAMES are collected.
-    *   2. BLOOM phase — only the range-survivors' sidecar blooms are
-    *      loaded (lazily; bytes proportional to files we might read
-    *      anyway, not to the table) and probed the same way.
-    * With `fileIndex` off on this handle, or with no
-    * indexed file among `parts`, every file is a candidate, in sorted
-    * partition order, and nothing is kept.
-    */
-  private def pruneCandidateFiles(
-      m: Manifest, parts: Set[String], incoming: DataFrame)
-      : (Seq[String], Map[String, Seq[String]]) = {
-    val files: Seq[(String, String)] = parts.toSeq.sorted
-      .flatMap(p => m.partitions.getOrElse(p, Nil).map(p -> _))
-    val indexed = files.collect {
-      case (_, f) if m.fileStats.contains(f) => f
-    }
-    if (!fileIndex || indexed.isEmpty)
-      return (files.map(_._2), Map.empty)
-    import spark.implicits._
-    // NO key-side distinct and NO persist: the per-partition hit-set
-    // already dedups file answers (duplicate keys only re-probe an array),
-    // and the probe count rides a LongAccumulator — the range phase is
-    // ONE job with one tiny file-name shuffle, not three (range pass +
-    // count() + cache materialization). Commit latency is a job-round
-    // chain; every fused job is wall-clock off an IVM fold.
-    val keys = incoming.select(
-      keyStringExpr(m.keyEncoding, c => incoming.schema(c).dataType)
-        .as("k")).as[String]
-    val bRanges = spark.sparkContext.broadcast(indexed.map { f =>
-      val st = m.fileStats(f)
-      (f, st.keyMin, st.keyMax)
-    }.toArray)
-    val probeCount = spark.sparkContext.longAccumulator("prune_probes")
-    val inRange = keys.mapPartitions { it =>
-        val idx = bRanges.value
-        val hits = scala.collection.mutable.HashSet.empty[String]
-        it.foreach { k =>
-          probeCount.add(1L)
-          var i = 0
-          while (i < idx.length) {
-            val (f, mn, mx) = idx(i)
-            if (!hits.contains(f) && k >= mn && k <= mx) hits += f
-            i += 1
-          }
-        }
-        hits.iterator
-      }.distinct().collect().toSet
-      def materialize(hit: Set[String])
-          : (Seq[String], Map[String, Seq[String]]) = {
-        val candidates = files.collect {
-          case (_, f) if hit(f) || !m.fileStats.contains(f) => f
-        }
-        val kept = files.filterNot { case (_, f) => candidates.contains(f) }
-        (candidates,
-          kept.groupBy(_._1).map { case (p, fs) => p -> fs.map(_._2) })
-      }
-      // Bloom phase cost model: a file survives the bloom only if NONE of
-      // the K probe keys hits it — probability ~e^(-K/files) under spread
-      // keys. At K >= 20x the in-range file count that is ~zero: loading
-      // every sidecar bloom (MBs each) would prune nothing. Spread bulk
-      // churn takes the range-phase answer directly; sparse point probes
-      // (the lookup pattern the blooms exist for) still go through them.
-      // (keyCount is the raw probe count from the range pass's
-      // accumulator — duplicates inflate it, which is the RIGHT bias:
-      // probes, not identities, are what hit the blooms. Spark also does
-      // NOT dedupe accumulator updates from retried/speculative shuffle-map
-      // tasks, so retries can inflate it further — same direction, same
-      // consequence: skip the bloom pass and take the range answer, which
-      // is always sound, just less pruned. A heuristic input only; never
-      // feed this accumulator into anything correctness-bearing.)
-      val keyCount = probeCount.value
-      if (keyCount >= 20L * math.max(inRange.size, 1))
-        return materialize(inRange)
-      val bBlooms = spark.sparkContext.broadcast(
-        inRange.toSeq.sorted.map { f =>
-          f -> loadBloom(fs, new Path(basePath, m.fileStats(f).bloomRef))
-        }.toArray)
-      val hit = keys.mapPartitions { it =>
-        val idx = bBlooms.value
-        val hits = scala.collection.mutable.HashSet.empty[String]
-        it.foreach { k =>
-          var i = 0
-          while (i < idx.length) {
-            val (f, bloom) = idx(i)
-            if (!hits.contains(f) && bloom.mightContainString(k)) hits += f
-            i += 1
-          }
-        }
-        hits.iterator
-      }.distinct().collect().toSet
-    materialize(hit)
-  }
-
   /** Attach per-file key index entries for `newFiles` to a manifest about
     * to be committed, dropping entries for files no longer live. No-op
     * when the index is disabled.
@@ -2123,9 +1963,11 @@ class CowTable(
     val df = spark.read.schema(readSchema)
       .parquet(rel.map(f => s"$basePath/$f"): _*)
       .select(input_file_name().as("f") +:
-        keyStringExpr(enc, c => readSchema(c).dataType).as("k") +:
+        FileIndex.keyExpr(keyCols, enc, c => readSchema(c).dataType)
+          .as("k") +:
         liveStats.map(c =>
-          encodeCol(c, readSchema(c).dataType, enc).as(s"__st_$c")): _*)
+          FileIndex.encodeExpr(col(c), readSchema(c).dataType, enc)
+            .as(s"__st_$c")): _*)
     import spark.implicits._
     val nStats = liveStats.size
     // bloomCols ride the same pass: indices into the liveStats array of
@@ -2274,12 +2116,14 @@ class CowTable(
   def snapshotForRange(column: String, lo: Any, hi: Any): DataFrame = {
     val m = manifest
     readSnapshot(m,
-      CowTable.filesForRange(spark, m, column, Some(lo), Some(hi)))
+      FileIndex.filesForRange(spark, m, column, Some(lo), Some(hi)))
   }
 
   /** Data-skipping scan for a VALUE SET: the snapshot restricted to files
-    * whose recorded [min, max] for `column` contains at least one of
-    * `values` — the point-probe sibling of [[snapshotForRange]], same
+    * whose recorded [min, max] (and bloom) for `column` admits at least one
+    * of `values` — [[FileIndex.filesForValues]], over the column's stats
+    * or, for an unstatted single-column key, the key index. The
+    * point-probe sibling of [[snapshotForRange]], same
     * ALWAYS-a-superset contract (no stats / non-order-preserving encoding
     * / null probe values → no pruning). What makes a bounded fk-churn
     * probe against a fk-clustered view read the churn's file stripe, not
@@ -2288,7 +2132,7 @@ class CowTable(
   def snapshotForValues(column: String, values: Seq[Any]): DataFrame = {
     val m = manifest
     readSnapshot(m,
-      CowTable.filesForValues(spark, m, column, values, basePath))
+      FileIndex.filesForValues(spark, basePath, m, column, values))
   }
 
   /** Metadata-only EXACT `count(*)`: the sum of the per-file row counts
@@ -2307,14 +2151,10 @@ class CowTable(
     val m = manifest
     if (m.logPartitions.valuesIterator.exists(_.nonEmpty)) return None
     val fs = m.baseFiles
-    val known = fs.flatMap(f => m.fileStats.get(f).map(_.rows))
     // deletion vectors: physical rows minus the recorded deleted counts
     // (exact — vectored deletes never double-record a position)
-    val dvDeleted = fs.iterator.flatMap(m.dvs.get).map(_.rows).sum
-    if (known.size == fs.size && known.forall(_ >= 0L))
-      Some(known.sum - dvDeleted)
-    else if (fs.isEmpty) Some(0L)
-    else None
+    FileIndex.statTotal(m, fs)(_.rows)
+      .map(_ - fs.iterator.flatMap(m.dvs.get).map(_.rows).sum)
   }
 
   /** [[snapshotForValues]] pinned at a historical version (retention-
@@ -2326,7 +2166,7 @@ class CowTable(
       version: Long, column: String, values: Seq[Any]): DataFrame = {
     val m = manifestAt(version)
     readSnapshot(m,
-      CowTable.filesForValues(spark, m, column, values, basePath))
+      FileIndex.filesForValues(spark, basePath, m, column, values))
   }
 
   /** Additive schema evolution (Hudi-style): columns new in the batch are
@@ -2875,8 +2715,10 @@ class CowTable(
         dataSchema.fieldNames.contains(c))
       val bloomIdx = bloomCols.filter(liveStats.contains)
         .map(liveStats.indexOf).toArray
-      val cols = keyStringExpr(enc, c => dataSchema(c).dataType) +:
-        liveStats.map(c => encodeCol(c, dataSchema(c).dataType, enc))
+      val cols =
+        FileIndex.keyExpr(keyCols, enc, c => dataSchema(c).dataType) +:
+          liveStats.map(c =>
+            FileIndex.encodeExpr(col(c), dataSchema(c).dataType, enc))
       val bound = GraftWriteStats.resolveAndBind(spark, dataSchema, cols)
       val tracker =
         new GraftKeyStatsJobTracker(bound, liveStats.size, bloomIdx)
@@ -3500,10 +3342,9 @@ class CowTable(
       parallelism: Int = 0): Boolean = {
     val small = if (smallBytes > 0L) smallBytes else targetBytes / 2
     val m = manifest
+    // unstat-able: treat as big, keep
     def sizeOf(f: String): Long =
-      m.fileStats.get(f).map(_.bytes).filter(_ >= 0L).getOrElse(
-        scala.util.Try(fs.getFileStatus(new Path(basePath, f)).getLen)
-          .getOrElse(Long.MaxValue)) // unstat-able: treat as big, keep
+      FileIndex.fileSize(fs, basePath, m, f).getOrElse(Long.MaxValue)
     val toFold: Map[String, Seq[String]] = m.partitions.flatMap {
       case (k, fls) =>
         val smalls = fls.filter(sizeOf(_) < small)
@@ -4181,8 +4022,7 @@ object CowTable {
       numBuckets = if (bucketVals.isEmpty) 0 else bucketVals.max + 1,
       trackCommitVersions = m.schema.fieldNames.contains(CommitVerCol),
       fileIndex = m.fileStats.nonEmpty,
-      statsCols = m.fileStats.valuesIterator
-        .flatMap(_.colStats.keysIterator).toSeq.distinct.sorted)
+      statsCols = FileIndex.statColumns(m).toSeq.sorted)
   }
 
   /** Read a table's manifest given only its path — the entry point for
@@ -4218,19 +4058,13 @@ object CowTable {
   val DvFileCol = "_graft_dv_file"
   val DvPosCol = "_graft_dv_pos"
 
-  private val SchemePrefixRe = "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/+"
+  private[table] val SchemePrefixRe = "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/+"
 
   /** Scheme-stripped plain-path form of a path string: `file:///a/b`,
     * `file:/a/b` and `/a/b` all canonicalize to `/a/b`.
     */
   private[graft] def stripScheme(s: String): String =
     SchemePrefixRe.r.replaceFirstIn(s, "/")
-
-  /** DV positions join on SCHEME-STRIPPED ABSOLUTE path identity; this
-    * is the scan-side key for a `_metadata.file_path`.
-    */
-  private[graft] def dvScanId(c: Column): Column =
-    regexp_replace(c, SchemePrefixRe, "/")
 
   /** The store-side form for NEW sidecar rows: basePath-relative when
     * the (scheme-stripped absolute) scan path is under the table root,
@@ -4251,49 +4085,6 @@ object CowTable {
       .otherwise(c)
   }
 
-  /** Read DV sidecars and resolve each stored path to the shared
-    * ABSOLUTE join space ([[dvScanId]]): a RELATIVE stored value
-    * resolves against the sidecar file's OWN table root — derived from
-    * its fixed `<root>/files/dv{v}-uuid/part` layout via the sidecar's
-    * own `_metadata.file_path` — so the identity survives BOTH table
-    * relocation (the sidecar moves with the table, so its root tracks
-    * the new location) and clone-by-reference (the clone's manifest
-    * points at the source's sidecar, whose root stays the source —
-    * exactly where the shared data files live). Legacy absolute values
-    * pass through scheme-stripped, matching while the table has not
-    * moved (the pre-change behavior).
-    */
-  private[graft] def readDvPositions(
-      spark: SparkSession, basePath: String, refs: Seq[String])
-      : DataFrame = {
-    val raw = spark.read
-      .parquet(refs.map(f => resolveFile(basePath, f)): _*)
-      .select(col(DvFileCol), col(DvPosCol),
-        dvScanId(col("_metadata.file_path")).as("__graft_dv_sc"))
-    val sidecarRoot = regexp_replace(col("__graft_dv_sc"),
-      "/files/dv[0-9]+-[^/]*/[^/]*$", "")
-    val stored = col(DvFileCol)
-    val isAbs = stored.startsWith("/") ||
-      stored.rlike("^[a-zA-Z][a-zA-Z0-9+.\\-]*:/")
-    raw.select(
-      when(isAbs, regexp_replace(stored, SchemePrefixRe, "/"))
-        .otherwise(concat(sidecarRoot, lit("/"), stored)).as(DvFileCol),
-      col(DvPosCol))
-  }
-
-  /** Whether a DV position set is safe to force-broadcast: bounded by
-    * ESTIMATED BYTES (rows × per-row path+position payload), not raw row
-    * count — a row-count bound on long path strings could force hundreds
-    * of MB through the broadcast hint, bypassing
-    * `spark.sql.autoBroadcastJoinThreshold`.
-    */
-  private[graft] def dvBroadcastable(
-      m: Manifest, dvd: Seq[String]): Boolean = {
-    val bytes = dvd.iterator.map { f =>
-      m.dvs.get(f).map(e => e.rows * (f.length + 24L)).getOrElse(0L)
-    }.sum
-    bytes <= 64L * 1024 * 1024
-  }
   /** Quarantine-row label: the first CHECK constraint the row violated
     * (see [[CowTable.upsertQuarantine]]).
     */
@@ -4368,7 +4159,7 @@ object CowTable {
       val c = f.indexOf(':')
       c > 0 && { val s = f.indexOf('/'); s < 0 || c < s }
     }
-  /** Key-string encoding written by NEW tables (see keyStringExpr doc).
+  /** Key-string encoding written by NEW tables (see [[FileIndex.keyExpr]]).
     * 1 = plain cast(string); 2 = fixed-width offset-binary for integral/
     * timestamp/date; 3 = v2 + IEEE-754 sign-flip doubles and unscaled
     * fixed-scale decimals (float/double/decimal range skipping).
@@ -4501,282 +4292,6 @@ object CowTable {
     val rest = name.drop(pfx + digits.length)
     if (digits.isEmpty || !(rest.isEmpty || rest.startsWith("-"))) None
     else Some(digits.toLong)
-  }
-
-  /** Column-expression form of the versioned order-preserving encoding
-    * (shared by the instance index pass and path-level consumers).
-    */
-  private[table] def encodeColExpr(c: String,
-      dt: org.apache.spark.sql.types.DataType,
-      enc: Long): org.apache.spark.sql.Column =
-    encodeExpr(col(c), dt, enc)
-
-  /** [[encodeColExpr]] over an arbitrary input column — lets probe values
-    * encode as literal expressions (driver-side foldable) with the exact
-    * same byte-for-byte output as the stored stats.
-    */
-  private[table] def encodeExpr(in: org.apache.spark.sql.Column,
-      dt: org.apache.spark.sql.types.DataType,
-      enc: Long): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.GraftBridge
-    val asLong: Option[org.apache.spark.sql.Column] = dt match {
-      case ByteType | ShortType | IntegerType | LongType if enc >= 2 =>
-        Some(in.cast("long"))
-      case TimestampType | TimestampNTZType if enc >= 2 =>
-        Some(unix_micros(in))
-      case DateType if enc >= 2 => Some(in.cast("int").cast("long"))
-      // v3: IEEE-754 sign-flip bits — float/double keys and stats become
-      // order-preserving (see graft.functions.OrderedDoubleBits)
-      case FloatType | DoubleType if enc >= 3 =>
-        Some(GraftBridge.column(graft.functions.OrderedDoubleBits(
-          GraftBridge.expression(in.cast("double")))))
-      // v3: fixed-scale decimals up to 18 digits ride their exact unscaled
-      // long (decimal(12,2) money columns prune like integers)
-      case d: DecimalType if enc >= 3 && d.precision <= 18 =>
-        Some(GraftBridge.column(
-          org.apache.spark.sql.catalyst.expressions.UnscaledValue(
-            GraftBridge.expression(in))))
-      case _ => None
-    }
-    asLong match {
-      case Some(l) =>
-        // order-preserving fixed width: long + 2^63 fits decimal(20,0),
-        // zero-padded to 20 digits; null keys stay null (concat_ws skips)
-        lpad((l.cast(DecimalType(21, 0)) +
-            lit(new java.math.BigDecimal("9223372036854775808")))
-          .cast(DecimalType(20, 0)).cast("string"), 20, "0")
-      case None => in.cast("string")
-    }
-  }
-
-  /** Encode probe `values` exactly as stored stats for `column`, WITHOUT
-    * launching a Spark job: each chunk becomes one projection of literal
-    * encode expressions over a one-row LocalRelation, which the
-    * optimizer's ConvertToLocalRelation rule evaluates driver-side — so
-    * runtime join pruning and IN-list skipping cost microseconds, not a
-    * task-scheduling round trip. Throws if a value does not cast to the
-    * column type (callers treat probe values as trusted query constants).
-    */
-  private[table] def encodeValues(spark: SparkSession, column: String,
-      dt: org.apache.spark.sql.types.DataType, enc: Long,
-      values: Seq[Any]): Array[String] = {
-    import org.apache.spark.sql.types.{StructField, StructType}
-    // fast path: values as ROWS of a LocalRelation, one encode expression
-    // — the plan is constant-size regardless of |values|, and the
-    // optimizer's ConvertToLocalRelation rule evaluates the projection
-    // driver-side (no job, no codegen). Value types that don't match the
-    // column's external type (e.g. string-typed range-bound options)
-    // throw in row conversion and take the literal-cast path below.
-    try {
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row](
-        values.size)
-      values.foreach(v => rows.add(org.apache.spark.sql.Row(v)))
-      spark.createDataFrame(rows, StructType(Seq(StructField(column, dt))))
-        .select(encodeColExpr(column, dt, enc))
-        .collect().map(_.getString(0))
-    } catch { case scala.util.control.NonFatal(_) =>
-      val one = spark.createDataFrame(
-        java.util.Collections.singletonList(org.apache.spark.sql.Row.empty),
-        StructType(Nil))
-      // 512-wide chunks keep each projection's schema bounded
-      values.grouped(512).flatMap { chunk =>
-        val row = one.select(chunk.zipWithIndex.map { case (v, i) =>
-          encodeExpr(lit(v).cast(dt), dt, enc).as(s"_e$i")
-        }.toIndexedSeq: _*).head()
-        chunk.indices.map(row.getString)
-      }.toArray
-    }
-  }
-
-  /** Whether the stored stat strings for a column of type `dt` sort in the
-    * column's NUMERIC/temporal order under plain lexicographic comparison.
-    * Stats are lex min/max of [[encodeColExpr]] output, so range pruning is
-    * only sound when that encoding is order-preserving: integral/timestamp/
-    * date under encoding v2+ (fixed-width offset-binary), and strings (the
-    * encoding is the identity, so lex order IS the column's order).
-    * Floating point and decimal fall back to plain `cast(string)` where lex
-    * order diverges from numeric order ("9.5" > "10.2") — pruning on those
-    * could wrongly skip files, so they are never pruned. Booleans are safe
-    * ("false" < "true") but pruning them is pointless. Key-BLOOM range
-    * checks are unaffected: they only need a consistent total order, not
-    * the column's order (see [[FileStat]] doc).
-    */
-  private[table] def orderPreservingStats(
-      dt: org.apache.spark.sql.types.DataType, enc: Long): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType |
-           TimestampType | TimestampNTZType | DateType => enc >= 2
-      // v3 added sign-flip float bits and unscaled-decimal encodings
-      case FloatType | DoubleType => enc >= 3
-      case d: DecimalType => enc >= 3 && d.precision <= 18
-      case StringType | BooleanType => true
-      case _ => false
-    }
-  }
-
-  /** Data-skipping core: the subset of `m.baseFiles` whose recorded
-    * [min, max] for `column` intersects [lo, hi] (either bound optional =
-    * unbounded). Bounds are cast to the column's type, so string-typed
-    * option values ("2024-01-02", "42") encode exactly like stored stats.
-    * Files without a recorded range are always kept, and columns whose
-    * stored encoding is not order-preserving (float/double/decimal, or any
-    * numeric on legacy keyEncoding=1 tables) prune nothing — the result is
-    * ALWAYS a superset of every row matching the range.
-    */
-  def filesForRange(spark: SparkSession, m: Manifest, column: String,
-      lo: Option[Any], hi: Option[Any]): Seq[String] = {
-    val dt = m.schema(column).dataType
-    // Lex comparison of stats is meaningless for this type under the
-    // table's encoding: keep every file (superset contract over speed).
-    if (!orderPreservingStats(dt, m.keyEncoding)) return m.baseFiles
-    def enc(v: Any): String = {
-      val r = encodeValues(spark, column, dt, m.keyEncoding, Seq(v)).head
-      require(r != null, s"range bound $v does not cast to $dt")
-      r
-    }
-    val eLo = lo.map(enc); val eHi = hi.map(enc)
-    m.baseFiles.filter { f =>
-      m.fileStats.get(f).flatMap(_.colStats.get(column)) match {
-        case Some(Seq(mn, mx)) =>
-          eHi.forall(mn <= _) && eLo.forall(_ <= mx)
-        case _ => true // no stats -> cannot prune
-      }
-    }
-  }
-
-  /** Value-set data-skipping core: the subset of `m.baseFiles` whose
-    * recorded [min, max] for `column` contains at least one of `values`.
-    * Same superset contract and order-preserving-encoding guard as
-    * [[filesForRange]]. One Spark job encodes the whole set; a null probe
-    * value disables pruning entirely (stats are computed over non-null
-    * values, so a file of all-null rows may carry a range that excludes
-    * it — null-safe probes must see every file).
-    */
-  def filesForValues(spark: SparkSession, m: Manifest, column: String,
-      values: Seq[Any], basePath: String = null): Seq[String] = {
-    if (values.isEmpty) return Nil
-    if (values.exists(_ == null)) return m.baseFiles
-    val dt = m.schema(column).dataType
-    if (!orderPreservingStats(dt, m.keyEncoding)) return m.baseFiles
-    val encoded: Array[String] =
-      encodeValues(spark, column, dt, m.keyEncoding, values).sorted
-    // first encoded value >= mn (binary search start for the range scan)
-    def lowerBound(mn: String): Int = {
-      var lo = 0; var hi = encoded.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (encoded(mid) < mn) lo = mid + 1 else hi = mid
-      }
-      lo
-    }
-    // bloom phase (callers that pass basePath): probe the column's
-    // sidecar bloom with the in-range values only — loaded lazily, only
-    // for range survivors; no false negatives, so still a superset
-    lazy val bloomFs = new Path(basePath).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    def bloomHit(st: FileStat, from: Int, mx: String): Boolean =
-      (basePath == null) || (st.colBloomRefs.get(column) match {
-        case None => true
-        case Some(ref) =>
-          val bloom = loadBloom(bloomFs, new Path(basePath, ref))
-          var i = from; var hit = false
-          while (!hit && i < encoded.length && encoded(i) <= mx) {
-            if (bloom.mightContainString(encoded(i))) hit = true
-            i += 1
-          }
-          hit
-      })
-    m.baseFiles.filter { f =>
-      m.fileStats.get(f).flatMap(_.colStats.get(column)) match {
-        case Some(Seq(mn, mx)) =>
-          val from = lowerBound(mn)
-          from < encoded.length && encoded(from) <= mx &&
-            bloomHit(m.fileStats(f), from, mx)
-        case _ => true // no stats -> cannot prune
-      }
-    }
-  }
-
-  /** RECORD-KEY-index variant of [[filesForValues]] for single-column-key
-    * tables: the subset of `m.baseFiles` whose key index might contain at
-    * least one of `values` — range check against the per-file
-    * [keyMin, keyMax], then a sidecar-bloom probe loaded LAZILY for range
-    * survivors only (bytes ∝ files we might read anyway). Runtime join
-    * pruning uses this so key-equality joins skip files without the user
-    * declaring the key in `statsCols`. Superset contract: composite keys,
-    * null probe values, and unindexed files prune nothing.
-    */
-  def filesForKeyValues(spark: SparkSession, basePath: String, m: Manifest,
-      values: Seq[Any]): Seq[String] = {
-    if (m.keyCols.size != 1 || values.isEmpty) return m.baseFiles
-    if (values.exists(_ == null)) return m.baseFiles
-    val c = m.keyCols.head
-    val dt = m.schema(c).dataType
-    val encoded: Array[String] =
-      encodeValues(spark, c, dt, m.keyEncoding, values).sorted
-    val fs = new Path(basePath).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    m.baseFiles.filter { f =>
-      m.fileStats.get(f) match {
-        case Some(st) if st.keyMin != null && st.keyMax != null =>
-          var lo = 0; var hi = encoded.length
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (encoded(mid) < st.keyMin) lo = mid + 1 else hi = mid
-          }
-          lo < encoded.length && encoded(lo) <= st.keyMax && {
-            val bloom = loadBloom(fs, new Path(basePath, st.bloomRef))
-            var i = lo; var hit = false
-            while (!hit && i < encoded.length && encoded(i) <= st.keyMax) {
-              if (bloom.mightContainString(encoded(i))) hit = true
-              i += 1
-            }
-            hit
-          }
-        case _ => true // no usable index entry -> cannot prune
-      }
-    }
-  }
-
-  /** Diagnostic counter: sidecar blooms loaded since JVM start. Probes use
-    * the delta across a lookup to show index fan-out (files CONSULTED per
-    * lookup — the cost bucketing bounds at random keys).
-    */
-  val bloomLoads = new java.util.concurrent.atomic.AtomicLong
-
-  /** Read one sidecar bloom (see [[FileStat.bloomRef]]). */
-  /** Bloom sidecars are WRITE-ONCE (a rewritten file gets a new path
-    * under a fresh commit dir), so a path-keyed LRU is always coherent —
-    * no invalidation, ever. Bounded by entry count (~550 KB per
-    * 312k-entry bloom at the 1e-3 fpp → ≲70 MB at the cap); repeated
-    * probes against the same files (maintained-view refreshes, runtime
-    * join pruning, point-lookup loops) pay the sidecar read once.
-    * `bloomLoads` counts CONSULTATIONS (hit or miss) — the index-probe
-    * metric specs and probes assert on — not IO.
-    */
-  private val BloomCacheCap = 128
-  private val bloomCache = new java.util.LinkedHashMap[
-      String, org.apache.spark.util.sketch.BloomFilter](
-      BloomCacheCap, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        String, org.apache.spark.util.sketch.BloomFilter]): Boolean =
-      size() > BloomCacheCap
-  }
-
-  private[table] def loadBloom(
-      fs: FileSystem, p: Path): org.apache.spark.util.sketch.BloomFilter = {
-    bloomLoads.incrementAndGet()
-    val key = p.toString
-    val cached = bloomCache.synchronized(Option(bloomCache.get(key)))
-    cached.getOrElse {
-      val in = fs.open(p)
-      val b = try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-        finally in.close()
-      bloomCache.synchronized(bloomCache.put(key, b))
-      b
-    }
   }
 
   def dirCol(c: String): String = DirColPrefix + c

@@ -64,6 +64,16 @@ class CdcPipelineSpec extends SparkSpec {
       !later.head._2.keys.exists(_.startsWith("phase_")), s"$later")
   }
 
+  test("a batch keeps the props an ALTER set on the existing table") {
+    val (pipe, _) = loaded(cfg, "wh-props")
+    pipe.tableFor(cfg)
+      .alterProps(Map("keepCommits" -> "3", "fileIndex" -> "true"))
+    pipe.run(cfg, spark.read.parquet(cdcBatch))
+    val t = CowTable.open(spark, pipe.tablePath(cfg))
+    assert(t.keepCommits == 3 && t.fileIndex,
+      s"props reset by the batch: ${t.manifest.props}")
+  }
+
   test("RunSummary counts follow the reference's routing on the golden " +
       "batch (COW, cdc_split_upsert, MOR)") {
     // 120 events; after W1: 90 I (ids 210-299), 10 U (100-109), 10 D

@@ -3,7 +3,6 @@ package graft.cdc
 import graft.SparkSpec
 import graft.streaming.GraftSink
 import graft.table.CowTable
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 

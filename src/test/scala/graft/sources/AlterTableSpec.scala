@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.SparkSpec
 import graft.table.CowTable

@@ -246,7 +246,7 @@ class GraftSpjSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       t
     }
     val ta = mk("za", (1L to 500L).map(k => k -> (k % 7) * 1.0))
-    val tb = mk("zb", (300L to 700L).map(k => k -> k * 10.0))
+    mk("zb", (300L to 700L).map(k => k -> k * 10.0))
     // a 2-axis z-order on the clusterCols-declared table is LEGAL now:
     // the rewrite records its files as unordered instead of refusing
     assert(ta.reclusterZOrder("k", "v", parallelism = 4))

@@ -101,7 +101,6 @@ class CdcStreamSpec extends SparkSpec {
 
   test("watermarked tumbling window over a file stream") {
     val dir = tmpDir("events")
-    import spark.implicits._
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.queries.QueryCatalog.normalizeEventsTs)
     ev.write.mode("overwrite").parquet(dir)

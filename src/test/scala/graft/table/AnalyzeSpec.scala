@@ -39,7 +39,6 @@ class AnalyzeSpec extends SparkSpec {
     t.analyze()
     def attrStats(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.optimizedPlan.stats.attributeStats
-    val olds = Seq("spark.sql.cbo.enabled" -> "true")
     spark.conf.set("spark.sql.cbo.enabled", "true")
     try {
       val df = spark.read.format("graft").load(t.basePath)

@@ -1,7 +1,5 @@
 package graft.table
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** Write-time CHECK constraints: SQL semantics (TRUE/NULL pass, FALSE

@@ -1,7 +1,5 @@
 package graft.table
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** Zero-copy shallow clones: one manifest write, absolute file refs,

@@ -212,7 +212,7 @@ class FileIndexSpec extends SparkSpec {
     val m = t.manifest
     // v3: the [10.2, 10.9] file intersects [9.5, 10.5] and is KEPT; the
     // [2, 3] file does not and is PRUNED
-    val kept = CowTable.filesForRange(spark, m, "v", Some(9.5), Some(10.5))
+    val kept = FileIndex.filesForRange(spark, m, "v", Some(9.5), Some(10.5))
     assert(kept.size == 1, s"v3 must prune the non-intersecting file: $kept")
     val got = t.snapshotForRange("v", 9.5, 10.5)
       .filter(col("v") >= 9.5 && col("v") <= 10.5)
@@ -234,17 +234,17 @@ class FileIndexSpec extends SparkSpec {
       Double.PositiveInfinity) <
       graft.functions.OrderedDoubleBits.orderedBits(Double.NaN))
     // the encoding gates: legacy tables keep the no-pruning guard
-    assert(CowTable.orderPreservingStats(
+    assert(FileIndex.orderPreservingStats(
       org.apache.spark.sql.types.LongType, 2L))
-    assert(!CowTable.orderPreservingStats(
+    assert(!FileIndex.orderPreservingStats(
       org.apache.spark.sql.types.LongType, 1L), "legacy enc=1 numerics")
-    assert(!CowTable.orderPreservingStats(
+    assert(!FileIndex.orderPreservingStats(
       org.apache.spark.sql.types.DoubleType, 2L), "legacy enc=2 doubles")
-    assert(CowTable.orderPreservingStats(
+    assert(FileIndex.orderPreservingStats(
       org.apache.spark.sql.types.DoubleType, 3L))
-    assert(CowTable.orderPreservingStats(
+    assert(FileIndex.orderPreservingStats(
       org.apache.spark.sql.types.DecimalType(12, 2), 3L))
-    assert(!CowTable.orderPreservingStats(
+    assert(!FileIndex.orderPreservingStats(
       org.apache.spark.sql.types.DecimalType(20, 2), 3L),
       "wide decimals exceed the unscaled-long encoding")
   }
@@ -258,7 +258,7 @@ class FileIndexSpec extends SparkSpec {
     t.bulkInsert(batch((1L, "9.50"), (2L, "9.99")), parallelism = 1)
     t.insertAppend(batch((3L, "10.20"), (4L, "10.90")), parallelism = 1)
     val m = t.manifest
-    val kept = CowTable.filesForRange(spark, m, "price",
+    val kept = FileIndex.filesForRange(spark, m, "price",
       Some("10.00"), Some("10.50"))
     assert(kept.size == 1, s"only the [10.20, 10.90] file intersects: $kept")
     val got = t.snapshotForRange("price", "10.00", "10.50")
@@ -346,10 +346,10 @@ class FileIndexSpec extends SparkSpec {
 
     val probeKey = spark.range(1)
       .select(xxhash64(lit(42L)).as("k")).head().getLong(0)
-    val before = CowTable.bloomLoads.get()
+    val before = FileIndex.bloomLoads.get()
     val hit = t.lookupByKeys(Seq(probeKey).toDF("k"))
     assert(hit.count() == 1, "the key must be found")
-    val consulted = CowTable.bloomLoads.get() - before
+    val consulted = FileIndex.bloomLoads.get() - before
     assert(consulted <= filesPerBucket,
       s"lookup must consult ONE bucket's blooms: $consulted of $totalFiles")
     assert(hit.inputFiles.length == 1, "bloom narrows the read to one file")
@@ -372,5 +372,263 @@ class FileIndexSpec extends SparkSpec {
     // concatenation injective
     t.upsert(Seq(("a2", "", 9.0)).toDF("id", "sub", "v"))
     assert(t.snapshot().count() == 4)
+  }
+
+  // ------------------------------------------------- golden file lists
+
+  /** A stable name for a manifest file (or a scan URI ending in one):
+    * its partition key and the version of the commit that wrote it.
+    */
+  private def label(m: Manifest)(f: String): String = {
+    val rel = m.baseFiles.find(b => f == b || f.endsWith("/" + b)).get
+    val k = m.partitions.collectFirst {
+      case (k, fs) if fs.contains(rel) => k }.get
+    s"$k@${"files/c(\\d+)".r.findFirstMatchIn(rel).get.group(1)}"
+  }
+
+  /** `statsCols` fk (long, bloomed), x (double) and big (decimal(20,2),
+    * whose stats do not preserve order); the first file predates the
+    * index and has no entry. fk values interleave (every file's range
+    * spans the domain), x ranges are disjoint per file.
+    */
+  private def statsFixture(): CowTable = {
+    def batch(r: Int) = (0 until 50).map(i => (r * 100L + i, i * 8L + r,
+        r * 10 + i * 0.1, (r * 1000 + i).toString))
+      .toDF("id", "fk", "x", "b").select(col("id"), col("fk"), col("x"),
+        col("b").cast("decimal(20,2)").as("big"))
+    val t0 = new CowTable(spark, tmpDir("gold-stats"), keyCols = Seq("id"))
+    t0.bulkInsert(batch(0), parallelism = 1)
+    val t = t0.alterProps(Map("fileIndex" -> "true",
+      "statsCols" -> "fk,x,big", "bloomCols" -> "fk"))
+    (1 to 3).foreach(r => t.insertAppend(batch(r), parallelism = 1))
+    t
+  }
+
+  /** Key index only on a single-column long key: three files of even
+    * ids in disjoint blocks, then one file of odd ids spanning them all;
+    * w is an unstatted double.
+    */
+  private def keyFixture(): CowTable = {
+    val t = new CowTable(spark, tmpDir("gold-key"), keyCols = Seq("id"),
+      fileIndex = true)
+    def batch(ids: Seq[Long]) = ids.map(i => (i, i * 0.5)).toDF("id", "w")
+    t.bulkInsert(batch(0L until 100L by 2), parallelism = 1)
+    t.insertAppend(batch(100L until 200L by 2), parallelism = 1)
+    t.insertAppend(batch(200L until 300L by 2), parallelism = 1)
+    t.insertAppend(batch(1L until 300L by 2), parallelism = 1)
+    t
+  }
+
+  /** String partitions p in {a, b, c}, two commits each, key index on. */
+  private def partitionFixture(): CowTable = {
+    val t = new CowTable(spark, tmpDir("gold-part"), keyCols = Seq("id"),
+      partitionCols = Seq("p"), fileIndex = true)
+    def batch(lo: Long) = (lo until lo + 30).map(i =>
+      (i, Seq("a", "b", "c")((i % 3).toInt), i.toDouble)).toDF("id", "p", "v")
+    t.bulkInsert(batch(0), parallelism = 1)
+    t.insertAppend(batch(100), parallelism = 1)
+    t
+  }
+
+  /** Deletion vectors over two indexed files with fk stats. */
+  private def dvFixture(): CowTable = {
+    val t = new CowTable(spark, tmpDir("gold-dv"), keyCols = Seq("id"),
+      fileIndex = true, statsCols = Seq("fk"), deleteVectors = true)
+    def batch(lo: Long) = (lo until lo + 40).map(i => (i, i / 10, i * 1.0))
+      .toDF("id", "fk", "v")
+    t.bulkInsert(batch(0), parallelism = 1)
+    t.insertAppend(batch(40), parallelism = 1)
+    t.delete((5L until 75L by 7).map(i => (i, 0L, 0.0)).toDF("id", "fk", "v"))
+    t
+  }
+
+  private def runtimePrune(t: CowTable,
+      fs: org.apache.spark.sql.sources.Filter*): Seq[String] = {
+    val m = t.manifest
+    val scan = new graft.sources.GraftRuntimeScan(spark, t.basePath, m,
+      m.baseFiles, _ => null, null)
+    scan.filter(fs.toArray)
+    scan.currentFiles
+  }
+
+  /** A point read's data files (a DV'd read also lists its sidecars). */
+  private def dataFiles(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.inputFiles.toSeq.filterNot(_.contains("/files/dv"))
+
+  /** fastCount and the runtime scan's exact row count, as one entry. */
+  private def counts(t: CowTable): Seq[String] = {
+    val m = t.manifest
+    val n = new graft.sources.GraftRuntimeScan(spark, t.basePath, m,
+      m.baseFiles, _ => null, null, rowsExact = true)
+      .estimateStatistics().numRows()
+    Seq(s"fastCount=${t.fastCount()}",
+      s"numRows=${if (n.isPresent) n.getAsLong.toString else "none"}")
+  }
+
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.queryExecution.executedPlan.collectLeaves().collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        (b.scan match {
+          case g: graft.sources.GraftRuntimeScan => g.innerScan
+          case s => s
+        }).asInstanceOf[
+          org.apache.spark.sql.execution.datasources.v2.FileScan]
+          .fileIndex.inputFiles.toSeq
+    }.flatten
+
+  /** Every probe's file list on the four fixtures, as sorted labels. */
+  private def goldenLists(): Seq[(String, Seq[String])] = {
+    import org.apache.spark.sql.sources.{EqualTo, In}
+    val out = Seq.newBuilder[(String, Seq[String])]
+    def rec(name: String, m: Manifest, files: Seq[String]): Unit = {
+      val l = files.map(label(m))
+      assert(l.distinct.size == l.size, s"$name: labels collide")
+      out += name -> l.sorted
+    }
+    def values(t: CowTable, c: String, vs: Any*) =
+      FileIndex.filesForValues(spark, t.basePath, t.manifest, c, vs)
+    def range(m: Manifest, c: String, lo: Option[Any], hi: Option[Any]) =
+      FileIndex.filesForRange(spark, m, c, lo, hi)
+    val st = statsFixture(); val sm = st.manifest
+    def vals(c: String, vs: Any*) = values(st, c, vs: _*)
+    rec("stats.values fk 8", sm, vals("fk", 8L))
+    rec("stats.values fk 17,26", sm, vals("fk", 17L, 26L))
+    rec("stats.values fk 4 (bloom miss)", sm, vals("fk", 4L))
+    rec("stats.values fk 10000", sm, vals("fk", 10000L))
+    rec("stats.values fk empty", sm, vals("fk"))
+    rec("stats.values fk 8,null", sm, vals("fk", 8L, null))
+    rec("stats.values x 10.5", sm, vals("x", 10.5))
+    rec("stats.values x 22.0,30.1", sm, vals("x", 22.0, 30.1))
+    rec("stats.values big 1001", sm, vals("big", BigDecimal(1001)))
+    rec("stats.values id 150 (key)", sm, vals("id", 150L))
+    rec("stats.range x 10..12", sm, range(sm, "x", Some(10.0), Some(12.0)))
+    rec("stats.range x ..-1", sm, range(sm, "x", None, Some(-1.0)))
+    rec("stats.range fk 100..120", sm,
+      range(sm, "fk", Some(100L), Some(120L)))
+    rec("stats.range big 1000..1010", sm,
+      range(sm, "big", Some("1000"), Some("1010")))
+    rec("stats.range id 0..10", sm, range(sm, "id", Some(0L), Some(10L)))
+    rec("stats.runtime fk in 8,17", sm,
+      runtimePrune(st, In("fk", Array(8L, 17L))))
+    rec("stats.runtime x = 31.0", sm, runtimePrune(st, EqualTo("x", 31.0)))
+    rec("stats.runtime id in 5,305", sm,
+      runtimePrune(st, In("id", Array(5L, 305L))))
+    rec("stats.lookup 5,305", sm,
+      dataFiles(st.lookupByKeys(Seq(5L, 305L).toDF("id"))))
+    rec("stats.scan fk = 17", sm, scannedFiles(
+      spark.read.format("graft").load(st.basePath).filter(col("fk") === 17L)))
+    rec("stats.scan x in 2.0,35.0", sm, scannedFiles(
+      spark.read.format("graft").load(st.basePath)
+        .filter(col("x").isin(2.0, 35.0))))
+
+    val kt = keyFixture(); val km = kt.manifest
+    def kvals(vs: Any*) = values(kt, "id", vs: _*)
+    rec("key.values 42", km, kvals(42L))
+    rec("key.values 43", km, kvals(43L))
+    rec("key.values 150,251", km, kvals(150L, 251L))
+    rec("key.values 999", km, kvals(999L))
+    rec("key.values empty", km, kvals())
+    rec("key.values 42,null", km, kvals(42L, null))
+    rec("key.values w 21.0 (no stats)", km, values(kt, "w", 21.0))
+    rec("key.runtime id in 42,251", km,
+      runtimePrune(kt, In("id", Array(42L, 251L))))
+    rec("key.lookup 42,251", km,
+      dataFiles(kt.lookupByKeys(Seq(42L, 251L).toDF("id"))))
+    rec("key.lookup 999", km,
+      dataFiles(kt.lookupByKeys(Seq(999L).toDF("id"))))
+
+    val pt = partitionFixture(); val pm = pt.manifest
+    rec("part.runtime p in a,c", pm,
+      runtimePrune(pt, In("p", Array("a", "c"))))
+    rec("part.runtime p = b", pm, runtimePrune(pt, EqualTo("p", "b")))
+    rec("part.runtime p = z", pm, runtimePrune(pt, EqualTo("p", "z")))
+    rec("part.runtime p in a + id in 3,103", pm,
+      runtimePrune(pt, In("p", Array("a")), In("id", Array(3L, 103L))))
+    rec("part.scan p = a", pm, scannedFiles(
+      spark.read.format("graft").load(pt.basePath).filter(col("p") === "a")))
+    rec("part.scan p = c and v > 100", pm, scannedFiles(
+      spark.read.format("graft").load(pt.basePath)
+        .filter(col("p") === "c" && col("v") > 100.0)))
+    rec("part.lookup", pm, dataFiles(pt.lookupByKeys(
+      Seq((3L, "a"), (104L, "c")).toDF("id", "p"))))
+
+    val dt = dvFixture(); val dm = dt.manifest
+    rec("dv.values fk 2,6", dm, values(dt, "fk", 2L, 6L))
+    rec("dv.range fk 3..4", dm, range(dm, "fk", Some(3L), Some(4L)))
+    rec("dv.values id 12 (key)", dm, values(dt, "id", 12L))
+    rec("dv.lookup 12,47", dm,
+      dataFiles(dt.lookupByKeys(Seq(12L, 47L).toDF("id"))))
+    Seq(st, kt, pt, dt).zip(Seq("stats", "key", "part", "dv")).foreach {
+      case (t, n) => out += s"$n.counts" -> counts(t) }
+    out.result()
+  }
+
+  /** Each probe's file list as the pre-FileIndex functions returned it
+    * (the key cases from the record-key probe, with an empty set giving
+    * no files), recorded on the same fixtures.
+    */
+  private val goldenParent: Seq[(String, Seq[String])] = Seq(
+    "stats.values fk 8" -> Seq("@1"),
+    "stats.values fk 17,26" -> Seq("@1", "@3", "@4"),
+    "stats.values fk 4 (bloom miss)" -> Seq("@1"),
+    "stats.values fk 10000" -> Seq("@1"),
+    "stats.values fk empty" -> Seq(),
+    "stats.values fk 8,null" -> Seq("@1", "@3", "@4", "@5"),
+    "stats.values x 10.5" -> Seq("@1", "@3"),
+    "stats.values x 22.0,30.1" -> Seq("@1", "@4", "@5"),
+    "stats.values big 1001" -> Seq("@1", "@3", "@4", "@5"),
+    "stats.values id 150 (key)" -> Seq("@1"),
+    "stats.range x 10..12" -> Seq("@1", "@3"),
+    "stats.range x ..-1" -> Seq("@1"),
+    "stats.range fk 100..120" -> Seq("@1", "@3", "@4", "@5"),
+    "stats.range big 1000..1010" -> Seq("@1", "@3", "@4", "@5"),
+    "stats.range id 0..10" -> Seq("@1", "@3", "@4", "@5"),
+    "stats.runtime fk in 8,17" -> Seq("@1", "@3"),
+    "stats.runtime x = 31.0" -> Seq("@1", "@5"),
+    "stats.runtime id in 5,305" -> Seq("@1", "@5"),
+    "stats.lookup 5,305" -> Seq("@1", "@5"),
+    "stats.scan fk = 17" -> Seq("@1", "@3"),
+    "stats.scan x in 2.0,35.0" -> Seq("@1"),
+    "key.values 42" -> Seq("@1"),
+    "key.values 43" -> Seq("@4"),
+    "key.values 150,251" -> Seq("@2", "@4"),
+    "key.values 999" -> Seq(),
+    "key.values empty" -> Seq(),
+    "key.values 42,null" -> Seq("@1", "@2", "@3", "@4"),
+    "key.values w 21.0 (no stats)" -> Seq("@1", "@2", "@3", "@4"),
+    "key.runtime id in 42,251" -> Seq("@1", "@4"),
+    "key.lookup 42,251" -> Seq("@1", "@4"),
+    "key.lookup 999" -> Seq(),
+    "part.runtime p in a,c" -> Seq("p=a@1", "p=a@2", "p=c@1", "p=c@2"),
+    "part.runtime p = b" -> Seq("p=b@1", "p=b@2"),
+    "part.runtime p = z" -> Seq(),
+    "part.runtime p in a + id in 3,103" -> Seq("p=a@1"),
+    "part.scan p = a" -> Seq("p=a@1", "p=a@2"),
+    "part.scan p = c and v > 100" -> Seq("p=c@1", "p=c@2"),
+    "part.lookup" -> Seq("p=a@1", "p=c@2"),
+    "dv.values fk 2,6" -> Seq("@1", "@2"),
+    "dv.range fk 3..4" -> Seq("@1", "@2"),
+    "dv.values id 12 (key)" -> Seq("@1"),
+    "dv.lookup 12,47" -> Seq("@1", "@2"),
+    "stats.counts" -> Seq("fastCount=None", "numRows=none"),
+    "key.counts" -> Seq("fastCount=Some(300)", "numRows=300"),
+    "part.counts" -> Seq("fastCount=Some(60)", "numRows=60"),
+    "dv.counts" -> Seq("fastCount=Some(70)", "numRows=80"))
+
+  test("every probe returns the pre-FileIndex file list on each index shape") {
+    val got = goldenLists()
+    assert(got.map(_._1) == goldenParent.map(_._1))
+    got.zip(goldenParent).foreach { case ((n, l), (_, want)) =>
+      assert(l == want, s"$n")
+    }
+  }
+
+  test("a DV'd table reads the same live rows through every path") {
+    val t = dvFixture()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "fk", "v").as[(Long, Long, Double)].collect().toSet
+    val snap = rows(t.snapshot())
+    assert(snap.size == 70 && !snap.exists(_._1 == 12L))
+    assert(rows(spark.read.format("graft").load(t.basePath)) == snap)
   }
 }

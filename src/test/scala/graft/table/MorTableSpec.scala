@@ -3,7 +3,6 @@ package graft.table
 import graft.SparkSpec
 import graft.cdc.{CdcPipeline, GoldenFixtures, TableConfig}
 import org.apache.spark.QueryPlans
-import org.apache.spark.sql.functions._
 
 /** Merge-on-read semantics: log-append writes, `_ro`/`_rt` read modes,
   * read-time merge ordering, inline compaction cadence, manifest

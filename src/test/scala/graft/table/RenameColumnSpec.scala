@@ -53,7 +53,7 @@ class RenameColumnSpec extends SparkSpec {
     assert(m.fileStats.valuesIterator
       .forall(_.colStats.keySet == Set("bucketed_key")),
       "per-file stats must re-key to the new name")
-    val pruned = CowTable.filesForRange(spark, m, "bucketed_key",
+    val pruned = FileIndex.filesForRange(spark, m, "bucketed_key",
       Some(100L), Some(105L))
     assert(pruned.size == 1,
       s"stats under the new name must prune: ${pruned.size} of 2 kept")

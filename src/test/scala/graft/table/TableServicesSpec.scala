@@ -68,7 +68,7 @@ class TableServicesSpec extends SparkSpec {
     val total = t.manifest.baseFiles.size
     assert(total >= 4, s"need a multi-file layout, got $total")
     // a narrow (1/16-domain) range probe per axis
-    def cand(c: String): Int = CowTable.filesForRange(
+    def cand(c: String): Int = FileIndex.filesForRange(
       spark, t.manifest, c, Some(300L), Some(349L)).size
     assert(cand("a") == total && cand("b") == total,
       "shuffled files span both domains: nothing prunes")

@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.SparkSpec
-import graft.table.CowTable
+import graft.table.{CowTable, FileIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -77,8 +77,8 @@ class Bm25IndexSpec extends SparkSpec {
     assert(all >= 8, s"recluster must produce term stripes, got $all")
     // term-stat file skipping must narrow the read to the stripes that
     // can hold the query terms
-    val pruned = CowTable.filesForValues(spark, t.manifest, "term",
-      terms.map(x => x: Any))
+    val pruned = FileIndex.filesForValues(spark, t.basePath, t.manifest,
+      "term", terms.map(x => x: Any))
     assert(pruned.size < all,
       s"expected term-pruned read, got ${pruned.size} of $all files")
     assert(ranks(idx.topDocs(terms)) ==
