@@ -22,8 +22,8 @@ import graft.table.{FileIndex, Manifest}
   * keys arrive here as an `IN` runtime filter ([[filter]]); the file
   * listing is re-intersected with the manifest's per-file stats
   * ([[FileIndex.filesForValues]] for `statsCols` and a single-column
-  * key index, [[FileIndex.partitionFiles]] for string partition
-  * directories) and the inner parquet scan is
+  * key index, [[FileIndex.partitionFiles]] for string, date and integral
+  * partition directories) and the inner parquet scan is
   * rebuilt over the survivors — with the original pushed filters and
   * column pruning re-applied, so row-group skipping and vectorized
   * reading are unchanged on top.
@@ -51,7 +51,11 @@ final class GraftRuntimeScan(
       * row counts sum to an EXACT numRows (file/partition pruning only
       * narrows which files, never which rows of a file).
       */
-    rowsExact: Boolean = false)
+    rowsExact: Boolean = false,
+    /** The listing's size before any static pruning (the plan's
+      * `files=k/N`); -1 takes `files0`'s.
+      */
+    listed: Int = -1)
   extends Scan with SupportsRuntimeFiltering with SupportsReportStatistics {
 
   @volatile private var files: Seq[String] = files0
@@ -68,7 +72,8 @@ final class GraftRuntimeScan(
   override def readSchema(): StructType = inner.readSchema()
   override def toBatch: Batch = inner.toBatch
   override def description(): String =
-    s"GraftRuntimeScan(files=${files.size}/${files0.size}) " +
+    s"GraftRuntimeScan(files=${files.size}/" +
+      s"${if (listed < 0) files0.size else listed}) " +
       inner.description()
   override def supportedCustomMetrics(): Array[CustomMetric] =
     inner.supportedCustomMetrics()
@@ -149,19 +154,22 @@ final class GraftRuntimeScan(
   // ------------------------------------------------- runtime filtering
 
   /** Columns Spark may plant a DynamicPruningSubquery on: every column
-    * with recorded per-file [min, max] stats, plus string-typed hive
-    * partition columns (whose rendered `col=value` path segments prune
-    * whole partition listings).
+    * with recorded per-file [min, max] stats, the indexed single-column
+    * key, and the partition columns whose `col=value` segments render
+    * exactly ([[FileIndex.exactPartitionCols]]: string, date, integral),
+    * which prune whole partition listings.
     */
   override def filterAttributes(): Array[NamedReference] = {
     // PartitionPruning resolves each ref against the scan relation's
     // OUTPUT, which is the column-pruned schema — advertising a pruned
     // column is an analysis error, so intersect with what's still read
     val visible = inner.readSchema().fieldNames.toSet
-    (FileIndex.statColumns(m) ++ FileIndex.stringPartitionCols(m) ++
+    (FileIndex.statColumns(m) ++ partitionTypes.keySet ++
       FileIndex.keyIndexColumn(m)).filter(visible).toArray
       .map(Expressions.column)
   }
+
+  private lazy val partitionTypes = FileIndex.exactPartitionCols(m)
 
   override def filter(filters: Array[Filter]): Unit = {
     var keep = files
@@ -183,10 +191,15 @@ final class GraftRuntimeScan(
       current: Seq[String], column: String, values: Seq[Any]): Seq[String] = {
     if (values.isEmpty || values.size > GraftRuntimeScan.MaxRuntimeValues)
       return current
-    val byPartition =
-      if (!FileIndex.stringPartitionCols(m)(column)) current
-      else current.filter(FileIndex.partitionFiles(m, column,
-        values.map(String.valueOf).toSet))
+    // runtime values are external objects: render each through the
+    // column type; one that does not convert prunes no partition
+    val segments = partitionTypes.get(column).map(dt =>
+      values.map(FileIndex.externalSegment(_, dt)))
+    val byPartition = segments match {
+      case Some(segs) if segs.forall(_.isDefined) =>
+        current.filter(FileIndex.partitionFiles(m, column, segs.flatten.toSet))
+      case _ => current
+    }
     byPartition.filter(
       FileIndex.filesForValues(spark, base, m, column, values).toSet)
   }

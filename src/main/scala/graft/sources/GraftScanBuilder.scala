@@ -1,11 +1,14 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{
-  And, AttributeReference, EqualTo, Expression, GreaterThan,
-  GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal}
-import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
+  And, AttributeReference, EqualTo, Expression, GenericInternalRow,
+  GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, LessThan,
+  LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.connector.expressions.aggregate.{
+  Aggregation, CountStar}
 import org.apache.spark.sql.connector.read.{
   Scan, ScanBuilder, SupportsPushDownAggregates,
   SupportsPushDownRequiredColumns}
@@ -13,14 +16,15 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.FileScanBuilder
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{
+  BinaryType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.table.{CowTable, FileIndex, Manifest}
 
 /** Scan builder that turns PUSHED-DOWN Catalyst filters into FILE-level
-  * data skipping against the manifest's recorded per-file [min, max]
-  * stats — automatically, with no `rangeColumn` options:
+  * data skipping against the manifest — automatically, with no
+  * `rangeColumn` options:
   *
   * {{{
   *   spark.read.format("graft").load(p).filter($"ts" <= x)  // reads only
@@ -30,15 +34,22 @@ import graft.table.{CowTable, FileIndex, Manifest}
   * The Delta/Hudi data-skipping analog: Spark's V2 pushdown rule hands the
   * scan builder each WHERE conjunct; bounds and value sets on columns with
   * recorded column stats (`statsCols`, with their `bloomCols` blooms)
-  * shrink the file list BEFORE any parquet footer is opened, and equality
-  * predicates on string partition columns prune whole partition listings.
-  * The record-key index is not consulted here; key-equality joins prune
-  * through it at runtime ([[GraftRuntimeScan]]). The inner
-  * builder is Spark's native parquet one rebuilt over the pruned listing,
-  * so row-group pruning, column pruning, and vectorized reading are
-  * unchanged on top. Superset contract throughout ([[FileIndex
-  * .filesForRange]]): stat-less files stay, non-order-preserving encodings
-  * prune nothing, and Spark still evaluates every filter row-level.
+  * shrink the file list BEFORE any parquet footer is opened, and
+  * equality, IN and IS NOT NULL on partition columns prune whole
+  * partition listings. The record-key index is not consulted here;
+  * key-equality joins prune through it at runtime ([[GraftRuntimeScan]]).
+  * The inner builder is Spark's native parquet one rebuilt over the
+  * pruned listing, so row-group pruning, column pruning, and vectorized
+  * reading are unchanged on top.
+  *
+  * Stats pruning keeps the superset contract ([[FileIndex
+  * .filesForRange]]: stat-less files stay, non-order-preserving
+  * encodings prune nothing), so Spark evaluates those filters row-level.
+  * Partition pruning is EXACT where the segment rendering is
+  * ([[FileIndex.exactPartitionCols]]): every row of a kept file passes
+  * the conjunct, so it is not returned as a post-scan filter, and a
+  * `COUNT(*)` over such a scan is answered from metadata (see
+  * [[supportCompletePushDown]]).
   */
 private[sources] class GraftScanBuilder(
     spark: SparkSession,
@@ -70,7 +81,15 @@ private[sources] class GraftScanBuilder(
       classOf[ParquetFileFormat])
       .newScanBuilder(options).asInstanceOf[FileScanBuilder]
 
-  private var inner: FileScanBuilder = mkInner(initialFiles)
+  // Built on first use, over the listing as pruned by then: a parquet
+  // builder lists its files when made (a Spark job past 32 files), which
+  // a metadata count never needs.
+  private var innerBuilt: Option[FileScanBuilder] = None
+  private def inner: FileScanBuilder = innerBuilt.getOrElse {
+    val b = mkInner(currentFiles)
+    innerBuilt = Some(b)
+    b
+  }
 
   // captured push-down state so the runtime-filter scan can rebuild the
   // inner parquet scan over a SMALLER listing with identical semantics
@@ -78,14 +97,28 @@ private[sources] class GraftScanBuilder(
   private var savedPushed: Seq[Expression] = Nil
   private var savedRequired: Option[StructType] = None
 
+  // filters Spark still evaluates over the scan's rows
+  private var postScan: Seq[Expression] = Nil
+
+  /** Filters the partition prune made exact are consumed: neither
+    * returned nor pushed on. They hold for every row of the kept files,
+    * so row-group stats could skip nothing for them, and the parquet
+    * reader evaluates pushed predicates against the columns it READS —
+    * one on a column no longer read would drop every row group. Every
+    * other filter goes to the inner parquet builder (row-group skipping)
+    * and comes back as post-scan.
+    */
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
-    val pruned = pruneFiles(filters)
+    val conjuncts = filters.flatMap(splitAnd)
+    val (byPartition, exact) = partitionPrune(conjuncts)
+    val pruned = pruneFiles(conjuncts, byPartition)
     if (pruned.size < currentFiles.size) {
       currentFiles = pruned
-      inner = mkInner(pruned)
+      innerBuilt = None
     }
-    savedPushed = filters
-    inner.pushFilters(filters)
+    savedPushed = filters.filterNot(f => splitAnd(f).forall(exact))
+    postScan = inner.pushFilters(savedPushed)
+    postScan
   }
 
   override def pushedFilters
@@ -100,34 +133,58 @@ private[sources] class GraftScanBuilder(
   // ------------------------------------------- aggregate pushdown (DSv2)
 
   private var aggPushed = false
+  // the answer of a pushed metadata COUNT(*), one value per aggregate
+  private var counted: Option[Array[Long]] = None
 
-  /** MIN/MAX/COUNT/COUNT(*) answered from parquet FOOTER statistics —
-    * delegated to Spark's native parquet scan builder (gated by its
-    * `spark.sql.parquet.aggregatePushDown` conf; Spark only offers the
-    * aggregation when every filter was already pushed, and the parquet
-    * builder itself refuses when row-level data filters remain, so a
-    * pushed aggregate is always exact). Correctness is per-file: the
-    * listing IS the rows this scan would have produced, and footer
-    * stats summarize exactly those files — so version-pinned reads
-    * (`versionAsOf`) and bucket layouts push cleanly, while ANY user
-    * filter (even on a partition-valued column, which is a data column
-    * to the inner parquet scan) falls back to the exact row-level path.
-    * At 100 TB this turns full-table count/min/max into a
-    * metadata-only job: one footer read per file, zero data pages. The
-    * manifest-level sibling ([[graft.table.CowTable.fastCount]])
-    * answers plain `count(*)` with zero tasks.
+  /** Two answers, neither of which scans a data page:
+    *
+    *   - `COUNT(*)` alone, with no GROUP BY and no post-scan filter left
+    *     (so every row of the kept files is a served row), is the sum of
+    *     those files' row counts: the manifest's recorded count, else a
+    *     driver-side footer read. Past [[GraftScanBuilder.MaxFooterReads]]
+    *     files without a recorded count it declines (warning once per
+    *     table) and the aggregate runs as below. [[build]] then returns
+    *     a one-row `LocalScan`: no file scan, no shuffle.
+    *   - Any other MIN/MAX/COUNT shape delegates to Spark's parquet
+    *     builder (gated by its `spark.sql.parquet.aggregatePushDown` conf),
+    *     which answers from FOOTER statistics and refuses while any data
+    *     filter remains, so a pushed aggregate is always exact.
+    *
+    * Both count PHYSICAL rows: the no-DV-listing invariant above keeps
+    * them equal to served rows, and the listing is the version the scan
+    * reads (`versionAsOf` included). A MOR table served here is its
+    * read-optimized base files.
     */
   override def supportCompletePushDown(agg: Aggregation): Boolean =
-    inner match {
+    (countStarOnly(agg) && keptRows.isDefined) || (inner match {
       case b: SupportsPushDownAggregates => b.supportCompletePushDown(agg)
+      case _ => false
+    })
+
+  override def pushAggregation(agg: Aggregation): Boolean =
+    if (countStarOnly(agg) && keptRows.isDefined) {
+      counted =
+        keptRows.map(n => Array.fill(agg.aggregateExpressions.length)(n))
+      aggPushed = true
+      true
+    } else inner match {
+      case b: SupportsPushDownAggregates =>
+        aggPushed = b.pushAggregation(agg)
+        aggPushed
       case _ => false
     }
 
-  override def pushAggregation(agg: Aggregation): Boolean = inner match {
-    case b: SupportsPushDownAggregates =>
-      aggPushed = b.pushAggregation(agg)
-      aggPushed
-    case _ => false
+  private def countStarOnly(agg: Aggregation): Boolean =
+    postScan.isEmpty && agg.groupByExpressions.isEmpty &&
+      agg.aggregateExpressions.nonEmpty &&
+      agg.aggregateExpressions.forall(_.isInstanceOf[CountStar])
+
+  // Spark pushes filters before aggregates, so the listing is final here
+  private lazy val keptRows: Option[Long] = {
+    val n = FileIndex.rowTotal(spark, base, m, currentFiles,
+      GraftScanBuilder.MaxFooterReads)
+    if (n.isEmpty) GraftScanBuilder.countDeclined(base)
+    n
   }
 
   /** Serve the bucket-aware scan ([[GraftBucketScan]], storage-partitioned
@@ -137,7 +194,16 @@ private[sources] class GraftScanBuilder(
     * grouping key would need the partition values too, and the common
     * co-location layout for fact-to-fact joins is bucket-only.
     */
-  override def build(): Scan = {
+  override def build(): Scan = counted match {
+    case Some(ns) =>
+      GraftProcedureResult(
+        StructType(ns.indices.map(i => StructField(s"count_$i", LongType,
+          nullable = false))),
+        Array(new GenericInternalRow(ns.map(n => n: Any)): InternalRow))
+    case None => buildScan()
+  }
+
+  private def buildScan(): Scan = {
     val scan = inner.build()
     val spjEnabled = spark.sessionState.conf
       .getConfString("spark.sql.sources.v2.bucketing.enabled", "false")
@@ -167,7 +233,7 @@ private[sources] class GraftScanBuilder(
           b.build()
         }
         new GraftRuntimeScan(spark, base, m, currentFiles, rebuildScan,
-          scan, rowsExact = savedPushed.isEmpty)
+          scan, rowsExact = postScan.isEmpty, listed = initialFiles.size)
       case _ => scan
     }
   }
@@ -177,10 +243,11 @@ private[sources] class GraftScanBuilder(
   /** Columns with recorded per-file stats: the prunable bound targets. */
   private lazy val statCols = FileIndex.statColumns(m)
 
-  /** Intersect the manifest listing with every extractable bound. */
-  private def pruneFiles(filters: Seq[Expression]): Seq[String] = {
-    val conjuncts = filters.flatMap(splitAnd)
-    val byPartition = partitionPrune(conjuncts)
+  /** Intersect the partition-pruned listing with every extractable
+    * stats bound.
+    */
+  private def pruneFiles(conjuncts: Seq[Expression],
+      byPartition: Seq[String]): Seq[String] = {
     val bounds = rangeBounds(conjuncts)
     val ranged = bounds.foldLeft(byPartition) {
       case (files, (column, (lo, hi))) =>
@@ -237,67 +304,124 @@ private[sources] class GraftScanBuilder(
     case other => Seq(other)
   }
 
-  /** Column -> tightest (lo, hi) across all conjuncts. Bounds stay
-    * INCLUSIVE supersets (strict comparisons keep their literal as the
-    * bound — never wrong, at most one extra file).
+  /** Column -> tightest (lo, hi) across all conjuncts: the largest lower
+    * and the smallest upper bound under the column's own ordering, since
+    * [[FileIndex.filesForRange]] keeps files overlapping [lo, hi]. Bounds
+    * stay INCLUSIVE supersets (strict comparisons keep their literal as
+    * the bound — never wrong, at most one extra file).
     */
   private def rangeBounds(conjuncts: Seq[Expression])
       : Map[String, (Option[Any], Option[Any])] = {
-    def ext(lit: Literal): Any =
-      CatalystTypeConverters.createToScalaConverter(lit.dataType)(lit.value)
+    def lo(a: AttributeReference, l: Literal) = Seq((a, Some(l), None))
+    def hi(a: AttributeReference, l: Literal) = Seq((a, None, Some(l)))
     val perCol = conjuncts.flatMap {
-      case GreaterThan(a: AttributeReference, l: Literal)
-        if statCols(a.name) => Seq((a.name, Some(ext(l)), None))
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal)
-        if statCols(a.name) => Seq((a.name, Some(ext(l)), None))
-      case LessThan(a: AttributeReference, l: Literal)
-        if statCols(a.name) => Seq((a.name, None, Some(ext(l))))
-      case LessThanOrEqual(a: AttributeReference, l: Literal)
-        if statCols(a.name) => Seq((a.name, None, Some(ext(l))))
-      case EqualTo(a: AttributeReference, l: Literal)
-        if statCols(a.name) => Seq((a.name, Some(ext(l)), Some(ext(l))))
+      case GreaterThan(a: AttributeReference, l: Literal) => lo(a, l)
+      case GreaterThanOrEqual(a: AttributeReference, l: Literal) => lo(a, l)
+      case LessThan(a: AttributeReference, l: Literal) => hi(a, l)
+      case LessThanOrEqual(a: AttributeReference, l: Literal) => hi(a, l)
+      case EqualTo(a: AttributeReference, l: Literal) => lo(a, l) ++ hi(a, l)
       // literal-first spellings
-      case GreaterThan(l: Literal, a: AttributeReference)
-        if statCols(a.name) => Seq((a.name, None, Some(ext(l))))
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference)
-        if statCols(a.name) => Seq((a.name, None, Some(ext(l))))
-      case LessThan(l: Literal, a: AttributeReference)
-        if statCols(a.name) => Seq((a.name, Some(ext(l)), None))
-      case LessThanOrEqual(l: Literal, a: AttributeReference)
-        if statCols(a.name) => Seq((a.name, Some(ext(l)), None))
-      case EqualTo(l: Literal, a: AttributeReference)
-        if statCols(a.name) => Seq((a.name, Some(ext(l)), Some(ext(l))))
+      case GreaterThan(l: Literal, a: AttributeReference) => hi(a, l)
+      case GreaterThanOrEqual(l: Literal, a: AttributeReference) => hi(a, l)
+      case LessThan(l: Literal, a: AttributeReference) => lo(a, l)
+      case LessThanOrEqual(l: Literal, a: AttributeReference) => lo(a, l)
+      case EqualTo(l: Literal, a: AttributeReference) => lo(a, l) ++ hi(a, l)
       case _ => Nil
+    }.filter { case (a, l, h) =>
+      val lit = l.orElse(h).get
+      statCols(a.name) && lit.value != null && lit.dataType == a.dataType
     }
-    perCol.groupBy(_._1).map { case (c, bs) =>
-      // tightest window: filesForRange keeps files overlapping [lo, hi],
-      // so max(lo) / min(hi) narrows correctly for ANDed conjuncts.
-      // Values share the column's type; compare through their encoded
-      // form is unnecessary here — multiple bounds on one column are
-      // rare, so just fold pairwise keeping the later one when unsure.
-      val los = bs.flatMap(_._2)
-      val his = bs.flatMap(_._3)
-      c -> (los.lastOption, his.lastOption)
+    perCol.groupBy(_._1.name).map { case (c, bs) =>
+      val dt = bs.head._1.dataType
+      val ord = TypeUtils.getInterpretedOrdering(dt)
+      val ext = CatalystTypeConverters.createToScalaConverter(dt)
+      def pick(vs: Seq[Any])(first: (Any, Any) => Boolean) =
+        vs.reduceOption((x, y) => if (first(x, y)) x else y).map(ext)
+      c -> ((pick(bs.flatMap(_._2.map(_.value)))(ord.gteq),
+        pick(bs.flatMap(_._3.map(_.value)))(ord.lteq)))
     }
   }
 
-  /** Equality on a STRING partition column prunes whole partition
-    * listings (exact rendered-value match against the `col=value` key
-    * segments; other types render ambiguously, so they are left to the
-    * row-group stats).
+  /** Partition pruning by the rendered `col=value` segments
+    * ([[FileIndex.partitionSegment]]) of the exactly-rendered partition
+    * columns, plus the conjuncts that pruning made EXACT:
+    *
+    *   - `=`, IN on such a column with non-null literals keep the
+    *     partitions whose segment is one of the literals' renderings —
+    *     exact unless a literal renders as the default partition (the
+    *     empty string, or the literal default-partition name);
+    *   - IS NOT NULL on a partition column drops its default partition,
+    *     exact when no non-null value renders there (any type but string
+    *     and binary, whose empty value does) or when an exact `=`/IN on
+    *     the column already kept only non-default partitions.
+    *
+    * Conjuncts on other columns are left to the stats prune.
     */
-  private def partitionPrune(conjuncts: Seq[Expression]): Seq[String] = {
-    val stringParts = FileIndex.stringPartitionCols(m)
-    val eqs: Map[String, String] = conjuncts.collect {
-      case EqualTo(a: AttributeReference, Literal(v, StringType))
-        if stringParts(a.name) && v != null =>
-        a.name -> v.toString
-      case EqualTo(Literal(v, StringType), a: AttributeReference)
-        if stringParts(a.name) && v != null =>
-        a.name -> v.toString
-    }.toMap
-    eqs.foldLeft(initialFiles) { case (files, (c, v)) =>
-      files.filter(FileIndex.partitionFiles(m, c, Set(v)))
+  private def partitionPrune(conjuncts: Seq[Expression])
+      : (Seq[String], Set[Expression]) = {
+    val types = FileIndex.exactPartitionCols(m)
+    def segments(a: AttributeReference, dt: DataType, vs: Seq[Any])
+        : Option[(String, Set[String])] =
+      types.get(a.name).filter(t => t == a.dataType && t == dt &&
+          vs.nonEmpty && !vs.contains(null))
+        .map(t => a.name -> vs.map(FileIndex.partitionSegment(_, t)).toSet)
+    val valued: Seq[(Expression, (String, Set[String]))] =
+      conjuncts.flatMap { e =>
+        val seg = e match {
+          case EqualTo(a: AttributeReference, l: Literal) =>
+            segments(a, l.dataType, Seq(l.value))
+          case EqualTo(l: Literal, a: AttributeReference) =>
+            segments(a, l.dataType, Seq(l.value))
+          case In(a: AttributeReference, list) if list.forall {
+                case l: Literal => l.dataType == a.dataType
+                case _ => false
+              } =>
+            segments(a, a.dataType, list.map(_.asInstanceOf[Literal].value))
+          case InSet(a: AttributeReference, hset) =>
+            segments(a, a.dataType, hset.toSeq)
+          case _ => None
+        }
+        seg.map(e -> _)
+      }
+    val exactValued = valued.collect {
+      case (e, (c, segs)) if !segs(CowTable.HiveDefaultPartition) => e -> c
     }
+    val partCols = m.partitionCols.toSet
+    lazy val fields = m.schema.fields
+    val notNull = conjuncts.collect {
+      case e @ IsNotNull(a: AttributeReference) if partCols(a.name) =>
+        e -> a.name
+    }.filter { case (_, c) =>
+      fields.find(_.name == c).exists(f =>
+        !f.dataType.isInstanceOf[StringType] && f.dataType != BinaryType) ||
+        exactValued.exists(_._2 == c)
+    }
+    val files = valued.map(_._2).foldLeft(initialFiles) {
+      case (fs, (c, segs)) => fs.filter(FileIndex.partitionFiles(m, c, segs))
+    }
+    val kept = notNull.foldLeft(files) { case (fs, (_, c)) =>
+      fs.filter(FileIndex.partitionFiles(m, c,
+        (_: String) != CowTable.HiveDefaultPartition))
+    }
+    (kept, (exactValued ++ notNull).map(_._1).toSet)
   }
+}
+
+object GraftScanBuilder {
+  /** A metadata COUNT(*) reads at most this many footers (files without a
+    * recorded row count); past it the count scans like any aggregate.
+    */
+  private[sources] val MaxFooterReads = 128
+
+  private val log = org.apache.logging.log4j.LogManager
+    .getLogger("graft.sources.GraftScanBuilder")
+
+  /** Tables whose metadata count declined (diagnostic; driver-side). */
+  private[sources] val declinedTables = java.util.concurrent
+    .ConcurrentHashMap.newKeySet[String]()
+
+  private def countDeclined(base: String): Unit =
+    if (declinedTables.add(base))
+      log.warn(s"metadata COUNT(*) declined at $base: more than " +
+        s"$MaxFooterReads files lack a recorded row count; scanning instead")
 }

@@ -162,7 +162,10 @@ final case class Manifest(
       * of it.
       */
     shardRefs: Seq[String] = Nil) {
-  def schema: StructType =
+  /** Parsed once per manifest instance; a body member, not a field, so
+    * `equals`, `copy` and the codec see only `schemaJson`.
+    */
+  lazy val schema: StructType =
     org.apache.spark.sql.types.DataType.fromJson(schemaJson)
       .asInstanceOf[StructType]
   /** The table's creation config: the recorded [[props]], or the
@@ -2844,7 +2847,8 @@ class CowTable(
       val f = it.next().getPath
       if (f.getName.endsWith(".parquet")) {
         out += relativize(base, f)
-        rows += parquetRowCount(f)
+        rows += FileIndex.parquetRowCount(
+          spark.sparkContext.hadoopConfiguration, f)
       }
     }
     // Belt to the probe above: a delete of zero keys leaves no tombstone
@@ -2855,17 +2859,6 @@ class CowTable(
     // junk file + manifest entry per commit) for nothing. The count is
     // one driver-side footer read of the single part file, no job.
     if (rows == 0L) { fs.delete(dir, true); Nil } else out.toSeq
-  }
-
-  /** Row count from a parquet file's FOOTER (driver-side metadata read,
-    * no Spark job) — sums the row-group counts, which parquet maintains
-    * for zero-row files too.
-    */
-  private def parquetRowCount(f: Path): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(f, spark.sparkContext.hadoopConfiguration)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
   }
 
   /** Recursively list a commit dir's parquet files, keyed by partition. */

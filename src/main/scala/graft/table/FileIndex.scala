@@ -1,9 +1,15 @@
 package graft.table
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{
+  ByteType, DataType, DateType, IntegerType, LongType, ShortType,
+  StringType, StructType}
 
 /** Reads per-file metadata out of a manifest: key ranges and column stats
   * ([[FileStat]]), sidecar blooms, recorded sizes and row counts, and
@@ -147,27 +153,60 @@ object FileIndex {
     if (m.keyCols.size == 1 && m.fileStats.nonEmpty) m.keyCols.headOption
     else None
 
-  /** String-typed partition columns: their rendered `col=value` segments
-    * match probe values exactly (other types render ambiguously).
+  /** The `col=value` segment value Spark's partition writer gives a
+    * Catalyst value `v` of type `dt`: its cast to string (the cast
+    * [[CowTable]]'s unit keys use), with null and the empty string as
+    * [[CowTable.HiveDefaultPartition]]. Manifest keys hold segments
+    * unescaped, so no path escaping applies.
     */
-  private[graft] def stringPartitionCols(m: Manifest): Set[String] = {
-    lazy val fields = m.schema.fields
-    m.partitionCols.filter(c =>
-      fields.exists(f => f.name == c && f.dataType == StringType)).toSet
+  private[graft] def partitionSegment(v: Any, dt: DataType): String = {
+    val s = if (v == null) null else Cast(Literal(v, dt), StringType,
+      Some(SQLConf.get.sessionLocalTimeZone)).eval()
+    if (s == null || s.toString.isEmpty) CowTable.HiveDefaultPartition
+    else s.toString
   }
 
-  /** Files of every partition whose `column` segment renders as one of
-    * `values`; partitions without that segment keep all their files.
+  /** [[partitionSegment]] of an external Scala value (a runtime filter's
+    * `java.sql.Date`, `LocalDate`, `String`, ...), converted through the
+    * column type first; None when it does not convert to `dt`.
+    */
+  private[graft] def externalSegment(v: Any, dt: DataType): Option[String] =
+    scala.util.Try(partitionSegment(
+      CatalystTypeConverters.createToCatalystConverter(dt)(v), dt)).toOption
+
+  /** Partition columns whose [[partitionSegment]] is exact — one segment
+    * per value and one value per segment, bar the default partition:
+    * string (default collation), date and the integral types. Timestamp
+    * segments depend on the session time zone, floating and decimal ones
+    * on formatting, so those columns are left to the column stats.
+    */
+  private[graft] def exactPartitionCols(m: Manifest): Map[String, DataType] = {
+    lazy val fields = m.schema.fields
+    m.partitionCols.flatMap(c => fields.find(_.name == c).map(_.dataType)
+      .collect { case dt @ (StringType | DateType | ByteType | ShortType |
+        IntegerType | LongType) => c -> dt }).toMap
+  }
+
+  /** Files of every partition whose `column` segment value passes `keep`;
+    * partitions without that segment keep all their files. A segment
+    * value may itself hold '/': a piece that does not start a unit
+    * column's segment continues the previous one.
     */
   private[graft] def partitionFiles(m: Manifest, column: String,
-      values: Set[String]): Set[String] =
-    m.partitions.iterator.filter { case (key, _) =>
-      key.split('/').forall { seg =>
-        val i = seg.indexOf('=')
-        i < 0 || seg.substring(0, i) != column ||
-          values(seg.substring(i + 1))
+      keep: String => Boolean): Set[String] = {
+    val heads = (m.partitionCols :+ CowTable.BucketCol).map(_ + "=")
+    def value(key: String): Option[String] = {
+      val segs = scala.collection.mutable.ArrayBuffer.empty[String]
+      key.split('/').foreach { p =>
+        if (segs.isEmpty || heads.exists(p.startsWith)) segs += p
+        else segs(segs.size - 1) = segs.last + "/" + p
       }
-    }.flatMap(_._2).toSet
+      segs.collectFirst { case s if s.startsWith(column + "=") =>
+        s.substring(column.length + 1) }
+    }
+    m.partitions.iterator.filter { case (key, _) => value(key).forall(keep) }
+      .flatMap(_._2).toSet
+  }
 
   /** The sum of a per-file stat over `files`; None when any file has no
     * entry or records the stat as unknown (−1) — never a partial sum.
@@ -176,6 +215,42 @@ object FileIndex {
       get: FileStat => Long): Option[Long] = {
     val vs = files.iterator.map(f => m.fileStats.get(f).map(get)).toSeq
     if (vs.forall(_.exists(_ >= 0L))) Some(vs.flatten.sum) else None
+  }
+
+  /** Row count from a parquet file's FOOTER (driver-side metadata read,
+    * no Spark job) — sums the row-group counts, which parquet maintains
+    * for zero-row files too.
+    */
+  private[graft] def parquetRowCount(conf: Configuration, f: Path): Long = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try r.getRecordCount finally r.close()
+  }
+
+  /** The physical rows of `files`: each file's recorded count, else a
+    * footer read ([[parquetRowCount]]) on a pool of up to 8 threads. None,
+    * with no file opened, when more than `maxReads` files lack a count.
+    */
+  private[graft] def rowTotal(spark: SparkSession, basePath: String,
+      m: Manifest, files: Seq[String], maxReads: Int): Option[Long] = {
+    val (known, unknown) = files.partition(
+      f => m.fileStats.get(f).exists(_.rows >= 0L))
+    if (unknown.size > maxReads) return None
+    val recorded = known.iterator.map(m.fileStats(_).rows).sum
+    if (unknown.isEmpty) return Some(recorded)
+    val conf = spark.sessionState.newHadoopConf()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(8, unknown.size))
+    try {
+      val futs = unknown.map(f => pool.submit(
+        new java.util.concurrent.Callable[Long] {
+          override def call(): Long = parquetRowCount(conf,
+            new Path(CowTable.resolveFile(basePath, f)))
+        }))
+      Some(recorded + futs.iterator.map(_.get().longValue).sum)
+    } catch { case e: java.util.concurrent.ExecutionException =>
+      throw e.getCause
+    } finally pool.shutdownNow()
   }
 
   /** A file's size: the manifest's recorded bytes, else one FS stat;

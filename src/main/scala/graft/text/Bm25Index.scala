@@ -129,11 +129,12 @@ final class Bm25Index(spark: SparkSession, path: String) {
   def topDocs(queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
       topK: Int = 20): DataFrame = {
     require(queryTerms.nonEmpty, "bm25 index: empty query")
-    val dt = doclensTable()
-    val lens = dt.snapshot()
-    val n = dt.fastCount().getOrElse(lens.count())
-    val avgdl = lens.agg(sum(col("dl")).cast("double") / count(lit(1)))
-      .head.getDouble(0)
+    // corpus stats in one aggregate over one snapshot
+    val stats = doclensTable().snapshot()
+      .agg(count(lit(1)), sum(col("dl")).cast("double") / count(lit(1)))
+      .head
+    val n = stats.getLong(0)
+    val avgdl = stats.getDouble(1)
     val hits = postingsTable().snapshotForValues("term", queryTerms)
       .filter(col("term").isin(queryTerms: _*))
       .select(col("doc_id"), col("dl"), col("term"),

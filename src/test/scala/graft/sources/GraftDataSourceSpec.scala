@@ -246,6 +246,35 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(inq.count() == 200)
   }
 
+  test("stacked bounds on one column prune with the tightest window") {
+    val path = tmpDir("dsv2-tightest")
+    val t = new CowTable(spark, path, keyCols = Seq("id"),
+      fileIndex = true, statsCols = Seq("x"))
+    def stripe(lo: Int) = (lo until lo + 5)
+      .map(i => (i.toLong, i.toLong)).toDF("id", "x")
+    t.bulkInsert(stripe(0), parallelism = 1)
+    t.insertAppend(stripe(5), parallelism = 1)
+    t.insertAppend(stripe(10), parallelism = 1)
+    def scanned(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.executedPlan.collectLeaves().collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.scan.asInstanceOf[GraftRuntimeScan].currentFiles.size
+      }.sum
+    // both spellings keep only the [10, 14] file, whatever the order
+    for (cond <- Seq(col("x") >= 10L && col("x") >= 5L,
+        col("x") >= 5L && col("x") >= 10L)) {
+      val df = spark.read.format("graft").load(path).filter(cond)
+      assert(scanned(df) == 1, s"$cond must keep one file: ${scanned(df)}")
+      assert(df.count() == 5)
+    }
+    for (cond <- Seq(col("x") <= 4L && col("x") <= 9L,
+        col("x") <= 9L && col("x") <= 4L)) {
+      val df = spark.read.format("graft").load(path).filter(cond)
+      assert(scanned(df) == 1, s"$cond must keep one file: ${scanned(df)}")
+      assert(df.count() == 5)
+    }
+  }
+
   test("plain equality on a bloomCols column prunes through the bloom") {
     val path = tmpDir("dsv2-eqbloom")
     // fk values interleave mod 4 across three files: every file's

@@ -92,6 +92,35 @@ class GraftDppSpec extends SparkSpec {
       s"key index must keep only the 0-9 stripe's file, got $pruned")
   }
 
+  test("a join on a date partition column prunes partitions at runtime") {
+    // no statsCols and no key index on `d`: only the rendered partition
+    // segments can prune, through the column's date type
+    val t = new CowTable(spark, tmpDir("dpp-date"), keyCols = Seq("id"),
+      partitionCols = Seq("d"))
+    val days = (1 to 4).map(i => java.sql.Date.valueOf(s"2024-03-0$i"))
+    t.bulkInsert((0 until 40).map(i => (i.toLong, days(i % 4), i * 2.0))
+      .toDF("id", "d", "v"), parallelism = 1)
+    assert(t.manifest.baseFiles.size == 4)
+    GraftRuntimeScan.pruneLog.remove(t.basePath)
+    val p = tmpDir("dpp-date-dim")
+    Seq((days(1), "x"), (days(3), "y")).toDF("d", "flag")
+      .write.mode("overwrite").parquet(p)
+    val dim = spark.read.parquet(p)
+    val q = spark.read.format("graft").load(t.basePath)
+      .join(dim.filter($"flag" === "x"), Seq("d"))
+      .agg(sum($"v").as("s"), count(lit(1)).as("n"))
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.toLowerCase.contains("dynamicpruning"),
+      s"expected a planned runtime filter on the date partition:\n$plan")
+    val row = q.collect().head
+    val expect = (0 until 40).filter(_ % 4 == 1)
+    assert(row.getDouble(0) == expect.map(_ * 2.0).sum &&
+      row.getLong(1) == expect.size)
+    val pruned = GraftRuntimeScan.pruneLog.get(t.basePath)
+    assert(pruned == (4, 1),
+      s"runtime filter must keep only the matching date's file, got $pruned")
+  }
+
   test("superset contract: build keys missing from every stripe lose no rows") {
     val t = clusteredFact()
     val fact = spark.read.format("graft").load(t.basePath)

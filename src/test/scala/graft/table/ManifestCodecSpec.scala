@@ -35,6 +35,20 @@ class ManifestCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("a manifest parses its schema once, and a copy parses its own") {
+    val m = roots.head._2
+    assert(m.schema eq m.schema)
+    val other = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("z",
+        org.apache.spark.sql.types.LongType)))
+    val c = m.copy(schemaJson = other.json)
+    assert(c.schema == other && c.schema.fieldNames.toSeq == Seq("z"))
+    assert(m.schema != other)
+    // the cached schema is no field: equality and rendering see schemaJson
+    assert(m.copy() == m &&
+      ManifestCodec.renderManifest(m.copy()) == ManifestCodec.renderManifest(m))
+  }
+
   test("small roots print pretty, roots over 2,000 files print compact") {
     assert(fixture("root-minimal").contains("\"version\" : 1"))
     assert(large.files.size > 2000)

@@ -37,6 +37,17 @@ class Bm25IndexSpec extends SparkSpec {
     assert(fromIndex.nonEmpty)
   }
 
+  test("a query reads its corpus stats in one aggregate") {
+    val idx = new Bm25Index(spark, tmpDir("bm25idx-jobs"))
+    idx.ingest(docs)
+    idx.topDocs(terms) // warm the read path
+    // the count and the length sum were two aggregates of two jobs each
+    val (df, jobs) = org.apache.spark.JobCount(spark.sparkContext)(
+      idx.topDocs(terms))
+    assert(jobs == 2, s"corpus stats must cost one aggregate: $jobs jobs")
+    assert(ranks(df) == ranks(TextOps.bm25TopDocs(docs, terms)))
+  }
+
   test("split-batch incremental ingest equals one-shot; re-ingest idempotent") {
     val path = tmpDir("bm25idx-inc")
     val idx = new Bm25Index(spark, path)
